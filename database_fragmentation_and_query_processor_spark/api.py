@@ -26,6 +26,17 @@ Warehouse layout (one directory per logical table)::
     {warehouse}/{table}_rr/fragment_id=i/          # round-robin scheme
     {warehouse}/_frag_metadata.json                # catalogs + RR cursor
 
+Every read of a base or fragment dataset uses the declared schema
+(``RATINGS_SCHEMA``, or ``FRAGMENTED_SCHEMA`` via
+``fragmentation.read_fragmented``), never an inferred one. The
+relation's schema is fixed (Interface1.py:17), and inferring it costs a
+footer-reading Spark job per read before the DataFrame even exists; with
+the declared schema, building a point, range or key-lookup plan starts
+no job. A dataset written with other column types is not read under its
+own schema: most mismatches fail at the scan (``read_fragmented`` lists
+the exceptions). An existing but empty fragment directory reads as no
+rows.
+
 Invalid ``n`` (non-positive / non-int) is a no-op with a message, like
 the reference (Interface1.py:103-105).
 """
@@ -57,6 +68,10 @@ def _rr_path(warehouse: str, table: str) -> str:
     return os.path.join(warehouse, f"{table}_rr")
 
 
+def _read_base(spark: SparkSession, warehouse: str, table: str) -> DataFrame:
+    return spark.read.schema(RATINGS_SCHEMA).parquet(_base_path(warehouse, table))
+
+
 def _valid_n(n) -> bool:
     return isinstance(n, int) and not isinstance(n, bool) and n > 0
 
@@ -67,7 +82,7 @@ def load_ratings(
     """Distributed load of ``::`` text → parquet base table (op #1)."""
     df = read_ratings_text(spark, filepath)
     df.write.mode("overwrite").parquet(_base_path(warehouse, table))
-    return spark.read.parquet(_base_path(warehouse, table))
+    return _read_base(spark, warehouse, table)
 
 
 def range_partition(spark: SparkSession, table: str, n, warehouse: str) -> None:
@@ -76,7 +91,7 @@ def range_partition(spark: SparkSession, table: str, n, warehouse: str) -> None:
         print("Invalid number of partitions:", n)
         return
     lo, hi = RATING_DOMAIN
-    df = spark.read.parquet(_base_path(warehouse, table))
+    df = _read_base(spark, warehouse, table)
     frag.write_fragmented(
         frag.assign_range_fragments(df, "rating", n, lo, hi),
         _range_path(warehouse, table),
@@ -91,7 +106,7 @@ def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) ->
     if not _valid_n(n):
         print("Invalid number of partitions:", n)
         return
-    df = spark.read.parquet(_base_path(warehouse, table))
+    df = _read_base(spark, warehouse, table)
     # (userid, movieid) is the ratings natural key → JVM-side bucketed
     # numbering (operators/scaling.py), no Python RDD round-trip.
     assigned = frag.assign_round_robin_fragments(
@@ -187,7 +202,7 @@ def hash_partition(
     if not _valid_n(n):
         print("Invalid number of partitions:", n)
         return
-    df = spark.read.parquet(_base_path(warehouse, table))
+    df = _read_base(spark, warehouse, table)
     frag.write_fragmented(
         frag.assign_hash_fragments(df, key, n), _hash_path(warehouse, table)
     )
@@ -224,10 +239,8 @@ def hash_key_lookup(
     meta = FragmentCatalog(warehouse).hash_meta()
     if meta.n <= 0:
         raise ValueError("no hash partitions exist")
-    import hashlib
-
-    owner = int(hashlib.md5(str(int(key_value)).encode()).hexdigest()[:13], 16) % meta.n
-    df = spark.read.parquet(_hash_path(warehouse, table))
+    owner = q.hash_owner_fragment(key_value, meta.n)
+    df = frag.read_fragmented(spark, _hash_path(warehouse, table))
     return df.where(
         (F.col(FRAGMENT_COL) == owner) & (F.col(meta.key) == key_value)
     )
@@ -250,7 +263,7 @@ def catalog_report(
         if n <= 0 or not os.path.isdir(path):
             continue
         counts = (
-            spark.read.parquet(path)
+            frag.read_fragmented(spark, path)
             .groupBy(FRAGMENT_COL)
             .count()
             .collect()
@@ -282,7 +295,7 @@ def compact_fragments(
     }
     path = paths[scheme]
     wfs = fslib.fs_for(warehouse, spark)
-    df = spark.read.parquet(fslib.resolve_dataset(wfs, path))
+    df = frag.read_fragmented(spark, fslib.resolve_dataset(wfs, path))
     staged = fslib.stage_path(wfs, path, "compact")
     if target_files_per_fragment <= 1:
         # hash-cluster by fragment: each fragment lands whole in one

@@ -23,10 +23,10 @@ single-row inserts (Interface1.py:176-177, 205).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import FRAGMENT_COL
+from ..schema import FRAGMENT_COL, FRAGMENTED_SCHEMA
 
 
 def range_fragment_expr(
@@ -127,6 +127,28 @@ def write_fragmented(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     (Interface1.py:273-290).
     """
     df.write.mode(mode).partitionBy(FRAGMENT_COL).parquet(path)
+
+
+def read_fragmented(spark: SparkSession, path: str) -> DataFrame:
+    """Read a dataset written by ``write_fragmented`` with its declared
+    schema (``FRAGMENTED_SCHEMA``), never an inferred one.
+
+    Every fragment shares the relation's fixed schema (Interface1.py:17),
+    so there is nothing to infer: the read lists the fragment
+    directories and starts no Spark job, where an inferring read runs a
+    footer job before the plan exists. (Past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` fragments,
+    32 by default, Spark lists them with one job either way.) An empty
+    fragment directory reads as no rows.
+
+    The files are trusted to carry this schema; every writer in the
+    package produces it, and the schema-parity test pins that. Files
+    written with other column types are not adapted to: a string or
+    bigint column fails at the scan, a float column is widened to
+    double, and a decimal column can be misread (its unscaled integer
+    read as the double).
+    """
+    return spark.read.schema(FRAGMENTED_SCHEMA).parquet(path)
 
 
 def hash_fragment_expr(key: Column, n: int) -> Column:

@@ -18,10 +18,19 @@ Spark translation: the manual fragment walk becomes a predicate on the
 ``fragment_id`` partition column → Catalyst file-listing partition
 pruning; the per-fragment SQL unification becomes a single scan; the
 rating filter is pushed into the parquet scan (row-group min/max skip).
+
+Fragments are read with the declared schema (``read_fragmented``), not
+an inferred one. The relation's schema is fixed (Interface1.py:17), so
+building a plan here needs only the catalog and a directory listing: no
+parquet footer is opened and no Spark job runs until the result is
+executed. A dataset written with other column types is not read under
+its own schema: most mismatches fail at the scan (see
+``read_fragmented`` for the exceptions).
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import FragmentCatalog
 from ..schema import FRAGMENT_COL, RANGE_PREFIX, RR_PREFIX
+from .fragmentation import read_fragmented
 
 
 def range_owner_fragment(
@@ -41,6 +51,14 @@ def range_owner_fragment(
     if shifted <= interval:
         return 0
     return min(max(math.ceil(shifted / interval) - 1, 0), n - 1)
+
+
+def hash_owner_fragment(key: int, n: int) -> int:
+    """Python-side owner of an integer routing key under the hash
+    scheme: the same md5-prefix arithmetic as
+    ``fragmentation.hash_fragment_expr``, evaluated on the driver."""
+    h = int(hashlib.md5(str(int(key)).encode()).hexdigest()[:13], 16)
+    return h % n
 
 
 def _provenance(prefix: str) -> F.Column:
@@ -66,7 +84,7 @@ def range_query(
         lo = range_owner_fragment(min_rating, rmeta.n, rmeta.min_value, rmeta.max_value)
         hi = range_owner_fragment(max_rating, rmeta.n, rmeta.min_value, rmeta.max_value)
         rng = (
-            spark.read.parquet(range_path)
+            read_fragmented(spark, range_path)
             # fragment_id predicate → partition pruning (dir-level skip),
             # the Spark analogue of the selectMode walk.
             .where(F.col(FRAGMENT_COL).between(lo, hi))
@@ -81,7 +99,7 @@ def range_query(
     rrmeta = cat.round_robin_meta()
     if rrmeta.n > 0:
         rr = (
-            spark.read.parquet(rr_path)
+            read_fragmented(spark, rr_path)
             .where(F.col("rating").between(min_rating, max_rating))
             # reference scans RR fragments in ascending order
             # (Interface1.py:293-298); no intra-fragment order.
@@ -121,7 +139,7 @@ def point_query(
             rating_value, rmeta.n, rmeta.min_value, rmeta.max_value
         )
         rng = (
-            spark.read.parquet(range_path)
+            read_fragmented(spark, range_path)
             .where(F.col(FRAGMENT_COL) == owner)  # single-partition pruned read
             .where(F.col("rating") == rating_value)
             .select(_provenance(RANGE_PREFIX), "userid", "movieid", "rating")
@@ -131,7 +149,7 @@ def point_query(
     rrmeta = cat.round_robin_meta()
     if rrmeta.n > 0:
         rr = (
-            spark.read.parquet(rr_path)
+            read_fragmented(spark, rr_path)
             .where(F.col("rating") == rating_value)
             .select(_provenance(RR_PREFIX), "userid", "movieid", "rating")
         )

@@ -403,8 +403,11 @@ ratings AS (
 #: plan cache for the ratings derivation: stable_row_number runs two
 #: tiny prep jobs (key min/max, bucket counts) at plan-build time; the
 #: inputs are immutable parquet, so the built plan is reusable across
-#: the five fragmentation queries within a session.
-_RATINGS_PLANS: dict[tuple[int, str], DataFrame] = {}
+#: the five fragmentation queries within a session. Keyed on the Spark
+#: application id, not ``id(spark)``: a stopped session's object id can
+#: be reused by a new one, which would be handed a plan bound to a dead
+#: context.
+_RATINGS_PLANS: dict[tuple[str, str], DataFrame] = {}
 
 
 def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,7 +415,7 @@ def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment order) is computed with stable_row_number — bucketed,
     parallel, deterministic — NOT a no-PARTITION window, which would
     sort the whole relation in one task (operators/scaling.py)."""
-    key = (id(spark), sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
     if key in _RATINGS_PLANS:
         return _RATINGS_PLANS[key]
     li = _t(spark, sf_dir, "lineitem").select(

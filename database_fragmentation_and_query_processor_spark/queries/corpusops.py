@@ -3773,11 +3773,12 @@ def q_grid_density_clusters(spark, sf_dir):
     # O(diameter)-round relational CC loop AND its O(core²) non-equi
     # adjacency self-join): adjacency probes the 8 neighbor coordinates
     # of each cell in a dict — O(9·core) integer lookups, one driver
-    # pass, exact min-id component labels
-    core_rows = core.select("cell_id", "cx", "cy").collect()
+    # pass, exact min-id component labels. The collect is bounded: at
+    # most one row past the guard reaches the driver before it raises.
+    core_rows = core.select("cell_id", "cx", "cy").limit((1 << 18) + 1).collect()
     if len(core_rows) > (1 << 18):
         raise RuntimeError(
-            f"grid_density_clusters: {len(core_rows)} core cells exceed "
+            f"grid_density_clusters: more than {1 << 18} core cells break "
             f"the grid-bounded domain contract (GRID_SCALE={GRID_SCALE} "
             f"⇒ the occupied grid, not the corpus, bounds this set) — "
             f"the embedding coordinates are no longer range-bounded; "

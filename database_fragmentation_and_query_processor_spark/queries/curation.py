@@ -1944,6 +1944,7 @@ def q_frag_insert_routing(spark, sf_dir):
     import os as _os
 
     from .. import api as _api
+    from ..operators.fragmentation import read_fragmented as _read_fragmented
 
     wh = _artifact_cache_path(sf_dir, "insert_routing", "lineitem")
     marker = _os.path.join(wh, "_ROUTING_DONE")
@@ -1967,7 +1968,7 @@ def q_frag_insert_routing(spark, sf_dir):
         ("round_robin", "ratings_rr"),
         ("hash", "ratings_hash"),
     ):
-        df = spark.read.parquet(_os.path.join(wh, suffix))
+        df = _read_fragmented(spark, _os.path.join(wh, suffix))
         parts.append(
             df.groupBy("fragment_id").agg(
                 F.count("*").cast("bigint").alias("cnt"),

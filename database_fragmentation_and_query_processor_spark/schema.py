@@ -38,6 +38,12 @@ RATINGS_RAW_SCHEMA = StructType(
 #: Name of the computed physical-partition column for fragmented datasets.
 FRAGMENT_COL = "fragment_id"
 
+#: Every fragmented dataset (range, round-robin, hash): the relation plus
+#: its ``fragment_id`` partition column, in the order Spark reads it back.
+FRAGMENTED_SCHEMA = StructType(
+    RATINGS_SCHEMA.fields + [StructField(FRAGMENT_COL, IntegerType())]
+)
+
 #: Fragment-name prefixes, mirroring Interface1.py:6-7.
 RANGE_PREFIX = "range_ratings_part"
 RR_PREFIX = "round_robin_ratings_part"

@@ -59,6 +59,10 @@ def main() -> int:
                 str(scan_split_bytes(sf_dir, int(cpus))))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # job counts below come from the status store, which forgets all
+        # but the last spark.ui.retainedJobs jobs (default 1000); set the
+        # cap far above any phase so a count cannot silently fall short
+        .config("spark.ui.retainedJobs", "100000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

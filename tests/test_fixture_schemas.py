@@ -111,3 +111,21 @@ def test_artifact_cache_invalidates_on_fixture_regen(tmp_path):
     os.utime(src, ns=(1, 1))  # same bytes, new generation timestamp
     p3 = _artifact_cache_path(str(tmp_path), "t", "events")
     assert p3 != p2
+
+
+def test_ratings_plan_cache_is_keyed_on_the_spark_application(spark, sf_dir, monkeypatch):
+    """The ratings-derivation plan cache must not outlive its session. A
+    new session can reuse a stopped one's Python object id; it must get
+    a fresh plan, not one bound to the dead context. Modeled by keeping
+    the session object and changing the application under it."""
+    from pyspark import SparkContext
+
+    from database_fragmentation_and_query_processor_spark.queries import common
+
+    monkeypatch.setattr(common, "_RATINGS_PLANS", {})
+    first = common._ratings(spark, sf_dir)
+    assert common._ratings(spark, sf_dir) is first
+    monkeypatch.setattr(
+        SparkContext, "applicationId", property(lambda self: "local-restarted")
+    )
+    assert common._ratings(spark, sf_dir) is not first

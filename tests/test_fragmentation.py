@@ -13,9 +13,17 @@ from pyspark.sql import functions as F
 from database_fragmentation_and_query_processor_spark import api
 from database_fragmentation_and_query_processor_spark.catalog import FragmentCatalog
 from database_fragmentation_and_query_processor_spark.operators.fragmentation import (
+    hash_fragment_expr,
     range_fragment_expr,
 )
-from database_fragmentation_and_query_processor_spark.schema import FRAGMENT_COL
+from database_fragmentation_and_query_processor_spark.operators.query import (
+    hash_owner_fragment,
+)
+from database_fragmentation_and_query_processor_spark.schema import (
+    FRAGMENT_COL,
+    FRAGMENTED_SCHEMA,
+    RATINGS_SCHEMA,
+)
 
 from .conftest import RATINGS_FIXTURE
 
@@ -189,3 +197,71 @@ def test_hash_key_lookup_prunes_partitions(spark, ratings_file, warehouse):
     df = api.hash_key_lookup(spark, 1, warehouse)
     pf = " ".join(partition_filters(df))
     assert "fragment_id" in pf, pf
+
+
+def test_hash_owner_fragment_matches_column_expression(spark):
+    """The driver-side owner (hash_key_lookup's routing) and the column
+    expression (hash_partition / hash_insert) are one rule: equal on
+    every key of the fixture, on 0, on negative keys and at the int
+    bounds, for several fragment counts."""
+    keys = sorted(
+        {u for u, _, _ in RATINGS_FIXTURE}
+        | {m for _, m, _ in RATINGS_FIXTURE}
+        | {0, -1, -7, -999, 2**31 - 1, -(2**31)}
+    )
+    ns = (1, 4, 5, 7)
+    df = spark.createDataFrame([(k,) for k in keys], "k int")
+    rows = df.select(
+        "k", *[hash_fragment_expr(F.col("k"), n).alias(f"n{n}") for n in ns]
+    ).collect()
+    got = {r["k"]: tuple(r[f"n{n}"] for n in ns) for r in rows}
+    assert got == {k: tuple(hash_owner_fragment(k, n) for n in ns) for k in keys}
+
+
+def _assert_declared_schemas(spark, warehouse):
+    """Inferred from every file (mergeSchema), each dataset must carry
+    the declared names and types that the package's reads assume."""
+
+    def names_types(path):
+        sch = spark.read.option("mergeSchema", "true").parquet(path).schema
+        return [(f.name, f.dataType) for f in sch.fields]
+
+    declared = {
+        "ratings/base": RATINGS_SCHEMA,
+        "ratings_range": FRAGMENTED_SCHEMA,
+        "ratings_rr": FRAGMENTED_SCHEMA,
+        "ratings_hash": FRAGMENTED_SCHEMA,
+    }
+    for sub, schema in declared.items():
+        want = [(f.name, f.dataType) for f in schema.fields]
+        assert names_types(f"{warehouse}/{sub}") == want, sub
+
+
+def test_written_schema_matches_declared_schema(spark, loaded):
+    """Warehouse reads use the declared schema instead of inferring it,
+    so every writer must produce exactly that schema: the load, each
+    scheme's bulk fragmentation and each routed insert."""
+    _, warehouse = loaded
+    api.range_partition(spark, "ratings", N, warehouse)
+    api.round_robin_partition(spark, "ratings", N, warehouse)
+    api.hash_partition(spark, "ratings", N, warehouse)
+    for insert in (api.range_insert, api.round_robin_insert, api.hash_insert):
+        insert(spark, "ratings", 100, 7, 3.0, warehouse)
+    _assert_declared_schemas(spark, warehouse)
+
+
+def test_insert_routing_warehouse_matches_declared_schema(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The registry's insert-routing warehouse writes its base from the
+    lineitem-derived ratings relation (queries.common._ratings), not
+    from load_ratings; it must carry the same declared schema."""
+    from database_fragmentation_and_query_processor_spark.entry_queries import (
+        _QUERIES_ALL,
+    )
+    from database_fragmentation_and_query_processor_spark.queries import curation
+
+    warehouse = str(tmp_path / "routing")
+    monkeypatch.setattr(curation, "_artifact_cache_path", lambda *_: warehouse)
+    assert _QUERIES_ALL["frag_insert_routing"](spark, sf_dir).count() > 0
+    _assert_declared_schemas(spark, warehouse)

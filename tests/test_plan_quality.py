@@ -10,6 +10,9 @@ the physical plan, not just in docstrings.
 
 from __future__ import annotations
 
+import time
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -95,6 +98,61 @@ def test_warehouse_range_query_partition_pruning(spark, ratings_file, warehouse)
     df = api.range_query(spark, 1.5, 3.5, warehouse)
     parts = " ".join(partition_filters(df))
     assert "fragment_id >= 1" in parts and "fragment_id <= 3" in parts, parts
+
+
+def _jobs_started(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, via the public job-group
+    API (as scripts/profile_query.py counts them). The status store is
+    filled asynchronously from the listener bus, so a one-task fence job
+    in its own group runs after ``fn``; once the fence is visible, every
+    earlier job event has been applied."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, fence = (f"plan-quality:{uuid.uuid4().hex}:{k}" for k in ("probe", "fence"))
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(fence, "job-count fence")
+        sc.parallelize([0], 1).count()
+        sc.setJobGroup(None, None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(fence):
+        assert time.monotonic() < deadline, "fence job never reached the status store"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_warehouse_plan_build_starts_no_spark_job(spark, ratings_file, warehouse):
+    """Fragments are read with the declared schema: building a point,
+    range or key-lookup plan needs the catalog and a directory listing,
+    never a footer-inference job."""
+    api.load_ratings(spark, "ratings", ratings_file, warehouse)
+    api.range_partition(spark, "ratings", 5, warehouse)
+    api.round_robin_partition(spark, "ratings", 5, warehouse)
+    api.hash_partition(spark, "ratings", 5, warehouse)
+    builds = {
+        "point_query": lambda: api.point_query(spark, 4.5, warehouse),
+        "range_query": lambda: api.range_query(spark, 1.5, 3.5, warehouse),
+        "hash_key_lookup": lambda: api.hash_key_lookup(spark, 1, warehouse),
+    }
+    jobs = {name: _jobs_started(spark, build) for name, build in builds.items()}
+    assert jobs == dict.fromkeys(builds, 0), jobs
+
+
+def test_range_and_hash_partition_start_only_their_write(spark, ratings_file, warehouse):
+    """Reading the base with its declared schema leaves the write as the
+    one job of range and hash fragmentation."""
+    api.load_ratings(spark, "ratings", ratings_file, warehouse)
+    jobs = {
+        "range_partition": _jobs_started(
+            spark, lambda: api.range_partition(spark, "ratings", 5, warehouse)
+        ),
+        "hash_partition": _jobs_started(
+            spark, lambda: api.hash_partition(spark, "ratings", 5, warehouse)
+        ),
+    }
+    assert jobs == {"range_partition": 1, "hash_partition": 1}, jobs
 
 
 def test_range_join_broadcasts(spark, sf_dir):
