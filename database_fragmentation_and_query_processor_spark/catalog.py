@@ -89,10 +89,23 @@ class FragmentCatalog:
         finally:
             fslib.release_writer_lock(self._fs, lock)
 
+    def _update(self, scheme: str, cls, **changes):
+        """One locked read-modify-write of ``scheme``'s section: read
+        the sidecar once, set every field whose change is not None,
+        write it back."""
+        with self._locked():
+            doc = self._read()
+            meta = _section(doc, scheme, cls)
+            for field, value in changes.items():
+                if value is not None:
+                    setattr(meta, field, value)
+            doc[scheme] = asdict(meta)
+            self._write(doc)
+        return meta
+
     # -- range ----------------------------------------------------------
     def range_meta(self) -> RangeMetadata:
-        doc = self._read().get("range")
-        return RangeMetadata(**doc) if doc else RangeMetadata()
+        return _section(self._read(), "range", RangeMetadata)
 
     def update_range(
         self,
@@ -103,57 +116,36 @@ class FragmentCatalog:
     ) -> RangeMetadata:
         """Partial update with the reference's ``>= 0`` sentinel semantics
         (Interface1.py:84-95): a negative argument means "don't touch"."""
-        with self._locked():
-            meta = self.range_meta()
-            if n >= 0:
-                meta.n = int(n)
-            if min_value >= 0:
-                meta.min_value = float(min_value)
-            if max_value >= 0:
-                meta.max_value = float(max_value)
-            if interval >= 0:
-                meta.interval = float(interval)
-            doc = self._read()
-            doc["range"] = asdict(meta)
-            self._write(doc)
-        return meta
+        return self._update(
+            "range",
+            RangeMetadata,
+            n=int(n) if n >= 0 else None,
+            min_value=float(min_value) if min_value >= 0 else None,
+            max_value=float(max_value) if max_value >= 0 else None,
+            interval=float(interval) if interval >= 0 else None,
+        )
 
     # -- round robin ----------------------------------------------------
     def round_robin_meta(self) -> RoundRobinMetadata:
-        doc = self._read().get("round_robin")
-        return RoundRobinMetadata(**doc) if doc else RoundRobinMetadata()
+        return _section(self._read(), "round_robin", RoundRobinMetadata)
 
     def update_round_robin(self, n: int = -1, last_inserted: int = -2) -> RoundRobinMetadata:
         """Partial update; ``last_inserted`` uses ``>= -1`` because -1 is a
         legal cursor value (reference guard at Interface1.py:66 is ``>= 0``
         but its init path writes -1 directly, Interface1.py:58)."""
-        with self._locked():
-            meta = self.round_robin_meta()
-            if n >= 0:
-                meta.n = int(n)
-            if last_inserted >= -1:
-                meta.last_inserted = int(last_inserted)
-            doc = self._read()
-            doc["round_robin"] = asdict(meta)
-            self._write(doc)
-        return meta
+        return self._update(
+            "round_robin",
+            RoundRobinMetadata,
+            n=int(n) if n >= 0 else None,
+            last_inserted=int(last_inserted) if last_inserted >= -1 else None,
+        )
 
     # -- hash [EXT] -----------------------------------------------------
     def hash_meta(self) -> HashMetadata:
-        doc = self._read().get("hash")
-        return HashMetadata(**doc) if doc else HashMetadata()
+        return _section(self._read(), "hash", HashMetadata)
 
     def update_hash(self, n: int = -1, key: str | None = None) -> HashMetadata:
-        with self._locked():
-            meta = self.hash_meta()
-            if n >= 0:
-                meta.n = int(n)
-            if key is not None:
-                meta.key = key
-            doc = self._read()
-            doc["hash"] = asdict(meta)
-            self._write(doc)
-        return meta
+        return self._update("hash", HashMetadata, n=int(n) if n >= 0 else None, key=key)
 
     def clear(self, scheme: str | None = None) -> None:
         with self._locked():
@@ -163,3 +155,10 @@ class FragmentCatalog:
             doc = self._read()
             doc.pop(scheme, None)
             self._write(doc)
+
+
+def _section(doc: dict, scheme: str, cls):
+    """``scheme``'s metadata from a sidecar document, or ``cls``'s
+    defaults when the scheme has none."""
+    fields = doc.get(scheme)
+    return cls(**fields) if fields else cls()

@@ -131,15 +131,6 @@ class LocalFS:
             )
         return out
 
-    def size(self, path: str) -> int:
-        return os.path.getsize(self._local(path))
-
-    def read_bytes(self, path: str, offset: int, length: int) -> bytes:
-        """One bounded range read — the splittable-source data primitive."""
-        with open(self._local(path), "rb") as f:
-            f.seek(offset)
-            return f.read(length)
-
     def create_exclusive(self, path: str, text: str) -> bool:
         """Create-if-absent (O_CREAT|O_EXCL — atomic on POSIX); False
         when the file already exists. The writer-lock primitive."""
@@ -166,7 +157,6 @@ class HadoopFS:
         jvm = spark._jvm
         self._Path = jvm.org.apache.hadoop.fs.Path
         self._jvm = jvm
-        self._gateway = spark.sparkContext._gateway
         conf = spark._jsc.hadoopConfiguration()
         self._fs = self._Path(base).getFileSystem(conf)
         scheme = self._fs.getUri().getScheme()
@@ -230,30 +220,6 @@ class HadoopFS:
             )
         out.sort(key=lambda t: t[0])
         return out
-
-    def size(self, path: str) -> int:
-        return int(self._fs.getFileStatus(self._Path(path)).getLen())
-
-    def read_bytes(self, path: str, offset: int, length: int) -> bytes:
-        """One bounded range read through FSDataInputStream. Driver-side
-        only (needs the py4j gateway); the splittable ratings source
-        uses this for PLANNING-adjacent reads — Python workers have no
-        JVM gateway, so their data path is LocalFS (file://) or Spark's
-        native scan."""
-        stream = self._fs.open(self._Path(path))
-        try:
-            stream.seek(int(offset))
-            arr = self._gateway.new_array(self._jvm.byte, int(length))
-            total = 0
-            while total < length:
-                n = stream.read(arr, total, int(length) - total)
-                if n < 0:
-                    break
-                total += n
-            # py4j byte[] -> Python bytes (signed -> unsigned)
-            return bytes(b & 0xFF for b in arr[:total])
-        finally:
-            stream.close()
 
     def create_exclusive(self, path: str, text: str) -> bool:
         """Create-if-absent via Hadoop ``create(path, overwrite=False)``
@@ -319,8 +285,7 @@ def commit_staged(
     Returns the path readers should scan (== ``target`` on
     rename-capable stores; the generation dir in pointer mode).
 
-    ``require_marker=True`` extends the ratings DataSource's
-    marker-gated commit discipline to this swap path: the staged
+    ``require_marker=True`` makes the commit marker-gated: the staged
     directory must contain a job-complete ``_SUCCESS`` marker (Spark's
     Hadoop committer writes one) or the commit is refused — a
     half-written staged directory (crashed or still-running write job)

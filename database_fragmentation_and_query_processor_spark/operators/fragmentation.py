@@ -16,9 +16,10 @@ domain fixed at [min_value, max_value] regardless of data; interval =
 every fragment i>0 owns the half-open (min + i*interval,
 min + (i+1)*interval]; the last fragment absorbs the exact upper bound.
 
-Round-robin semantics (Interface1.py:169-174): row k in scan order goes
-to fragment k mod n; a persisted cursor continues the rotation for later
-single-row inserts (Interface1.py:176-177, 205).
+Round-robin semantics (Interface1.py:169-174): row k goes to fragment
+k mod n; a persisted cursor continues the rotation for later single-row
+inserts (Interface1.py:176-177, 205). Rows are numbered by a unique key,
+not by physical scan order, so round-robin fragmentation needs one.
 """
 
 from __future__ import annotations
@@ -52,29 +53,9 @@ def range_fragment_expr(
     return F.least(F.greatest(bucket, F.lit(0)), F.lit(n - 1)).cast("int")
 
 
-def with_row_index(df: DataFrame, name: str = "_row_idx") -> DataFrame:
-    """Stable 0-based global row index in current partition/row order.
-
-    KEYLESS FALLBACK ONLY: ``zipWithIndex`` pickles every row through
-    Python workers and back — at 100 TB that round-trip dominates.
-    Prefer ``assign_round_robin_fragments(order_cols=[...])``, which
-    numbers rows JVM-side via ``scaling.stable_row_number``; use this
-    path only when no stable key exists and the *physical* scan order
-    must be preserved (the reference's Interface1.py:169 assumption:
-    ``SELECT *`` order == insertion order).
-    """
-    spark = df.sparkSession
-    schema = df.schema
-    rdd = df.rdd.zipWithIndex().map(lambda pair: (*pair[0], pair[1]))
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(list(schema.fields) + [StructField(name, LongType(), False)])
-    return spark.createDataFrame(rdd, out_schema)
-
-
-def round_robin_fragment_expr(row_index: Column, n: int, start: int = 0) -> Column:
-    """fragment = (start + row_index) % n  (Interface1.py:171-174, 205)."""
-    return ((row_index + F.lit(start)) % F.lit(n)).cast("int")
+def round_robin_fragment_expr(row_index: Column, n: int) -> Column:
+    """fragment = row_index % n  (Interface1.py:171-174)."""
+    return (row_index % F.lit(n)).cast("int")
 
 
 def assign_range_fragments(
@@ -90,7 +71,7 @@ def assign_range_fragments(
 
 
 def assign_round_robin_fragments(
-    df: DataFrame, n: int, start: int = 0, order_cols: list[str] | None = None
+    df: DataFrame, n: int, order_cols: list[str]
 ) -> DataFrame:
     """Deterministic (row k → k mod n) assignment.
 
@@ -101,20 +82,16 @@ def assign_round_robin_fragments(
     non-deterministic ``repartition(n)`` is NOT usable, but the
     numbering ORDER is free to be any stable total order.
 
-    When ``order_cols`` (a unique key) is given, rows are numbered with
-    ``scaling.stable_row_number`` — bucketed, JVM-side, no global sort,
-    no Python round-trip: the 100 TB path. Without a key, falls back to
-    ``with_row_index`` (zipWithIndex) to preserve physical scan order —
-    documented as the keyless fallback only.
+    ``order_cols`` must be a unique key: rows are numbered in key order
+    with ``scaling.stable_row_number`` — bucketed, JVM-side, no global
+    sort, no Python round-trip. A non-unique key leaves the numbering of
+    tied rows, and so their fragments, unspecified.
     """
-    if order_cols:
-        from .scaling import stable_row_number
+    from .scaling import stable_row_number
 
-        with_idx = stable_row_number(df, order_cols, out_col="_row_idx")
-    else:
-        with_idx = with_row_index(df, "_row_idx")
+    with_idx = stable_row_number(df, order_cols, out_col="_row_idx")
     return with_idx.withColumn(
-        FRAGMENT_COL, round_robin_fragment_expr(F.col("_row_idx"), n, start)
+        FRAGMENT_COL, round_robin_fragment_expr(F.col("_row_idx"), n)
     ).drop("_row_idx")
 
 

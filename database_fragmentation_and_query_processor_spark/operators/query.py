@@ -61,7 +61,9 @@ def hash_owner_fragment(key: int, n: int) -> int:
     return h % n
 
 
-def _provenance(prefix: str) -> F.Column:
+def provenance(prefix: str) -> F.Column:
+    """The result column naming each row's source fragment, e.g.
+    ``range_ratings_part2`` (Interface1.py:261-347)."""
     return F.concat(F.lit(prefix), F.col(FRAGMENT_COL).cast("string")).alias(
         "fragment_name"
     )
@@ -92,7 +94,7 @@ def range_query(
             # range side is rating-ascending per fragment; fragment-major
             # then rating reproduces the reference's concatenated order.
             .orderBy(FRAGMENT_COL, "rating")
-            .select(_provenance(RANGE_PREFIX), "userid", "movieid", "rating")
+            .select(provenance(RANGE_PREFIX), "userid", "movieid", "rating")
         )
         parts.append(rng)
 
@@ -104,7 +106,7 @@ def range_query(
             # reference scans RR fragments in ascending order
             # (Interface1.py:293-298); no intra-fragment order.
             .orderBy(FRAGMENT_COL)
-            .select(_provenance(RR_PREFIX), "userid", "movieid", "rating")
+            .select(provenance(RR_PREFIX), "userid", "movieid", "rating")
         )
         parts.append(rr)
 
@@ -142,7 +144,7 @@ def point_query(
             read_fragmented(spark, range_path)
             .where(F.col(FRAGMENT_COL) == owner)  # single-partition pruned read
             .where(F.col("rating") == rating_value)
-            .select(_provenance(RANGE_PREFIX), "userid", "movieid", "rating")
+            .select(provenance(RANGE_PREFIX), "userid", "movieid", "rating")
         )
         parts.append(rng)
 
@@ -151,7 +153,7 @@ def point_query(
         rr = (
             read_fragmented(spark, rr_path)
             .where(F.col("rating") == rating_value)
-            .select(_provenance(RR_PREFIX), "userid", "movieid", "rating")
+            .select(provenance(RR_PREFIX), "userid", "movieid", "rating")
         )
         parts.append(rr)
 

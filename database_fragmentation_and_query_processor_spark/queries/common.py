@@ -35,8 +35,14 @@ from ..operators import dedup as D
 from ..operators import merge as MergeOp
 from ..operators import sampling as SampleOp
 from ..operators import similarity as S
-from ..operators.fragmentation import range_fragment_expr
+from ..operators.fragmentation import (
+    hash_fragment_expr,
+    range_fragment_expr,
+    round_robin_fragment_expr,
+)
+from ..operators.query import provenance, range_owner_fragment
 from ..operators.scaling import stable_row_number, widen
+from ..schema import RANGE_PREFIX, RR_PREFIX
 
 # ---------------------------------------------------------------------------
 # shared constants (embedded into BOTH the Spark plans and the oracle SQL)
@@ -81,7 +87,6 @@ def _nonempty(value, query: str):
 
 RANGE_N = 5
 RANGE_MIN, RANGE_MAX = 0.0, 5.0
-RANGE_INTERVAL = (RANGE_MAX - RANGE_MIN) / RANGE_N
 RQ_LO, RQ_HI = 1.5, 3.5
 PQ_VALUE = 4.5
 Q1_CUTOFF = "2000-12-01"
@@ -432,12 +437,14 @@ def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _bucket_sql(col: str = "rating") -> str:
-    """SQL mirror of range_fragment_expr for the fixed [0,5] domain."""
+def _bucket_sql(col: str = "rating", n: int = RANGE_N) -> str:
+    """SQL mirror of range_fragment_expr for the fixed [0,5] domain
+    split into ``n`` fragments."""
+    iv = (RANGE_MAX - RANGE_MIN) / n
     return (
-        f"CAST(LEAST(GREATEST(CASE WHEN {col} - {RANGE_MIN} <= {RANGE_INTERVAL} "
-        f"THEN 0 ELSE CAST(CEIL(({col} - {RANGE_MIN}) / {RANGE_INTERVAL}) AS INTEGER) - 1 END, "
-        f"0), {RANGE_N - 1}) AS INTEGER)"
+        f"CAST(LEAST(GREATEST(CASE WHEN {col} - {RANGE_MIN} <= {iv} "
+        f"THEN 0 ELSE CAST(CEIL(({col} - {RANGE_MIN}) / {iv}) AS INTEGER) - 1 END, "
+        f"0), {n - 1}) AS INTEGER)"
     )
 
 

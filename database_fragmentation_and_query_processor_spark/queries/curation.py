@@ -1849,17 +1849,6 @@ FROM d GROUP BY c_mktsegment
 REBALANCE_N = 8
 
 
-def _bucket_sql_n(col: str, n: int) -> str:
-    """_bucket_sql generalized to any fragment count (same fixed-domain
-    closed/open boundary rule, Interface1.py:127-137)."""
-    iv = (RANGE_MAX - RANGE_MIN) / n
-    return (
-        f"CAST(LEAST(GREATEST(CASE WHEN {col} - {RANGE_MIN} <= {iv} "
-        f"THEN 0 ELSE CAST(CEIL(({col} - {RANGE_MIN}) / {iv}) AS INTEGER) - 1 END, "
-        f"0), {n - 1}) AS INTEGER)"
-    )
-
-
 def q_frag_rebalance(spark, sf_dir):
     """Fragmentation lifecycle: re-partition the 5-fragment range scheme
     to 8 fragments and report the movement matrix (old → new → rows).
@@ -1882,7 +1871,7 @@ def q_frag_rebalance(spark, sf_dir):
 SQL_FRAG_REBALANCE = f"""
 WITH {RATINGS_CTE}
 SELECT {_bucket_sql("rating")} AS old_fragment,
-       {_bucket_sql_n("rating", REBALANCE_N)} AS new_fragment,
+       {_bucket_sql("rating", REBALANCE_N)} AS new_fragment,
        CAST(COUNT(*) AS BIGINT) AS cnt
 FROM ratings GROUP BY 1, 2
 """
@@ -2359,9 +2348,8 @@ def q_frag_hash_counts(spark, sf_dir):
     Uniformity check rides along: per-fragment count plus the key
     checksum."""
     r = _ratings(spark, sf_dir)
-    h = F.conv(F.substring(F.md5(F.col("userid").cast("string")), 1, 13), 16, 10)
     return (
-        r.withColumn("fragment_id", (h.cast("bigint") % HASH_FRAG_N).cast("int"))
+        r.withColumn("fragment_id", hash_fragment_expr(F.col("userid"), HASH_FRAG_N))
         .groupBy("fragment_id")
         .agg(
             F.count("*").cast("bigint").alias("cnt"),

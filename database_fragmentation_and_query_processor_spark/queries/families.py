@@ -7,9 +7,13 @@ original single-module namespace for everything defined earlier.
 
 from __future__ import annotations
 
+import logging
+
 from ._fold import fold_upto
 
 fold_upto(globals(), 'families')
+
+_log = logging.getLogger(__name__)
 
 # 1-5: fragmentation family
 # ---------------------------------------------------------------------------
@@ -33,7 +37,7 @@ FROM ratings GROUP BY 1
 def q_frag_rr_counts(spark, sf_dir):
     return (
         _ratings(spark, sf_dir)
-        .withColumn("fragment_id", (F.col("rn") % RANGE_N).cast("int"))
+        .withColumn("fragment_id", round_robin_fragment_expr(F.col("rn"), RANGE_N))
         .groupBy("fragment_id")
         .agg(
             F.count("*").alias("cnt"),
@@ -51,29 +55,26 @@ FROM ratings GROUP BY 1
 """
 
 
+def _frag_both_schemes(spark, sf_dir, matches: F.Column):
+    """Rows matching ``matches`` from both schemes, range side first,
+    each named by its source fragment: a row matching in both schemes
+    appears twice (Interface1.py:261-347)."""
+    r = _ratings(spark, sf_dir)
+
+    def side(prefix, fragment):
+        return r.withColumn("fragment_id", fragment).where(matches).select(
+            provenance(prefix), "userid", "movieid", "rating"
+        )
+
+    return side(RANGE_PREFIX, _bucket_col()).unionAll(
+        side(RR_PREFIX, round_robin_fragment_expr(F.col("rn"), RANGE_N))
+    )
+
+
 def q_frag_range_query(spark, sf_dir):
     """Reference rangeQuery(1.5, 3.5): pruned range side + full RR side,
     provenance column, duplicate emission (Interface1.py:261-308)."""
-    r = _ratings(spark, sf_dir)
-    rng = (
-        r.withColumn("fragment_id", _bucket_col())
-        .where(F.col("rating").between(RQ_LO, RQ_HI))
-        .select(
-            F.concat(F.lit("range_ratings_part"), F.col("fragment_id").cast("string")
-                     ).alias("fragment_name"),
-            "userid", "movieid", "rating",
-        )
-    )
-    rr = (
-        r.withColumn("fragment_id", (F.col("rn") % RANGE_N).cast("int"))
-        .where(F.col("rating").between(RQ_LO, RQ_HI))
-        .select(
-            F.concat(F.lit("round_robin_ratings_part"),
-                     F.col("fragment_id").cast("string")).alias("fragment_name"),
-            "userid", "movieid", "rating",
-        )
-    )
-    return rng.unionAll(rr)
+    return _frag_both_schemes(spark, sf_dir, F.col("rating").between(RQ_LO, RQ_HI))
 
 
 SQL_FRAG_RANGE_QUERY = f"""
@@ -89,26 +90,7 @@ FROM ratings WHERE rating BETWEEN {RQ_LO} AND {RQ_HI}
 
 
 def q_frag_point_query(spark, sf_dir):
-    r = _ratings(spark, sf_dir)
-    rng = (
-        r.withColumn("fragment_id", _bucket_col())
-        .where(F.col("rating") == PQ_VALUE)
-        .select(
-            F.concat(F.lit("range_ratings_part"), F.col("fragment_id").cast("string")
-                     ).alias("fragment_name"),
-            "userid", "movieid", "rating",
-        )
-    )
-    rr = (
-        r.withColumn("fragment_id", (F.col("rn") % RANGE_N).cast("int"))
-        .where(F.col("rating") == PQ_VALUE)
-        .select(
-            F.concat(F.lit("round_robin_ratings_part"),
-                     F.col("fragment_id").cast("string")).alias("fragment_name"),
-            "userid", "movieid", "rating",
-        )
-    )
-    return rng.unionAll(rr)
+    return _frag_both_schemes(spark, sf_dir, F.col("rating") == PQ_VALUE)
 
 
 SQL_FRAG_POINT_QUERY = f"""
@@ -132,7 +114,7 @@ def q_frag_reconstruction(spark, sf_dir):
         F.count("*").alias("range_cnt"),
         F.countDistinct("fragment_id").alias("n_range_fragments"),
     )
-    rr = r.withColumn("rr_id", (F.col("rn") % RANGE_N).cast("int")).agg(
+    rr = r.withColumn("rr_id", round_robin_fragment_expr(F.col("rn"), RANGE_N)).agg(
         F.count("*").alias("rr_cnt"),
         F.countDistinct("rr_id").alias("n_rr_fragments"),
     )
@@ -1494,7 +1476,10 @@ STREAM_STATE_SHARDS = 8
 
 def _stream_join_shards(sf_dir: str) -> int:
     """State shards for stream-stream JOIN replays, derived from the
-    events fixture's row count (parquet FOOTER read — no Spark job).
+    events fixture's row count (parquet FOOTER reads — no Spark job;
+    a directory of parquet files sums its files' counts). Falls back to
+    ``STREAM_STATE_SHARDS``, with a warning, when the fixture is
+    missing or pyarrow is not installed.
 
     A stream-stream join opens FOUR state stores per shard per
     micro-batch (two sides × keyed/value stores), so its per-shard init
@@ -1505,11 +1490,16 @@ def _stream_join_shards(sf_dir: str) -> int:
     replay, while the AGGREGATION replays were flat-to-worse below 8,
     so only the join queries use this). A derived value: at warehouse
     scale the same rule yields hundreds of shards."""
+    path = f"{sf_dir}/events.parquet"
     try:
-        import pyarrow.parquet as pq
+        import pyarrow.dataset as pads
 
-        n = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    except Exception:
+        n = pads.dataset(path, format="parquet").count_rows()
+    except (FileNotFoundError, ImportError) as exc:
+        _log.warning(
+            "no row count for %s (%s); using %d state shards",
+            path, exc, STREAM_STATE_SHARDS,
+        )
         return STREAM_STATE_SHARDS
     return max(2, min(256, n // 50_000))
 

@@ -2652,16 +2652,9 @@ FRAG_PROBES = [
 ]
 
 
-def _bucket_py(x: float) -> int:
-    """Driver-side mirror of range_fragment_expr for LITERAL probe
-    endpoints (same closed/open rule, last-bucket absorb)."""
-    shifted = x - RANGE_MIN
-    b = (
-        0
-        if shifted <= RANGE_INTERVAL
-        else math.ceil(shifted / RANGE_INTERVAL) - 1
-    )
-    return min(max(b, 0), RANGE_N - 1)
+def _probe_fragment(x: float) -> int:
+    """Owning range fragment of a LITERAL probe endpoint."""
+    return range_owner_fragment(x, RANGE_N, RANGE_MIN, RANGE_MAX)
 
 
 def q_frag_pruning_report(spark, sf_dir):
@@ -2678,7 +2671,7 @@ def q_frag_pruning_report(spark, sf_dir):
     r = _ratings(spark, sf_dir).withColumn("fragment_id", _bucket_col())
     aggs = []
     for i, (lo, hi) in enumerate(FRAG_PROBES):
-        lf, hf = _bucket_py(lo), _bucket_py(hi)
+        lf, hf = _probe_fragment(lo), _probe_fragment(hi)
         aggs.append(
             F.sum(
                 F.when(F.col("fragment_id").between(lf, hf), 1).otherwise(0)
@@ -2693,7 +2686,7 @@ def q_frag_pruning_report(spark, sf_dir):
     total = int(head["total"])
     rows = []
     for i, (lo, hi) in enumerate(FRAG_PROBES):
-        lf, hf = _bucket_py(lo), _bucket_py(hi)
+        lf, hf = _probe_fragment(lo), _probe_fragment(hi)
         scanned = int(head[f"scan_{i}"])
         rows.append(
             (
@@ -2722,7 +2715,7 @@ def q_frag_pruning_report(spark, sf_dir):
 def _sql_frag_pruning_report() -> str:
     parts = []
     for i, (lo, hi) in enumerate(FRAG_PROBES):
-        lf, hf = _bucket_py(lo), _bucket_py(hi)
+        lf, hf = _probe_fragment(lo), _probe_fragment(hi)
         parts.append(f"""
 SELECT {i} AS probe_id, CAST({lo} AS DOUBLE) AS lo, CAST({hi} AS DOUBLE) AS hi,
        {lf} AS lo_frag, {hf} AS hi_frag,

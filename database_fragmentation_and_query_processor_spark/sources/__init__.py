@@ -1,4 +1,3 @@
-"""Sources: ``::``-delimited ratings text reader (plain CSV scan and a
-registered splittable Python DataSource), quarantining CSV/JSONL
+"""Sources: ``::``-delimited ratings text reader, quarantining CSV/JSONL
 loaders, binary-file ingest, incremental ledger, testdata parquet
 tables."""

@@ -6,6 +6,11 @@ round-trip per row. Here it is one distributed CSV scan with a
 multi-char separator (Spark >= 3 supports ``sep=':: '``-style strings)
 projected down to the 3 logical columns; Catalyst prunes the timestamp
 column at scan time.
+
+The scan is byte-range splittable: one large dump is read as many
+partitions (``spark.sql.files.maxPartitionBytes``), each split aligned
+to line boundaries, with no row lost or read twice
+(``tests/test_fragmentation.py::test_native_reader_splits_losslessly``).
 """
 
 from __future__ import annotations

@@ -44,6 +44,39 @@ def test_load_row_count_and_schema(loaded):
     assert rows == set(RATINGS_FIXTURE)
 
 
+def test_native_reader_splits_losslessly(spark, tmp_path):
+    """The ``::`` reader is a byte-range-splittable scan: a dump read
+    as many small splits yields exactly the rows of an unsplit read,
+    with the timestamp dropped."""
+    from collections import Counter
+
+    from database_fragmentation_and_query_processor_spark.sources.ratings import (
+        read_ratings_text,
+    )
+
+    written = [(1 + i % 97, 10 * i, (i % 11) / 2) for i in range(2000)]
+    path = tmp_path / "ratings.dat"
+    path.write_text(
+        "".join(f"{u}::{m}::{r}::{838983000 + m}\n" for u, m, r in written)
+    )
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    whole = rows(read_ratings_text(spark, str(path)))
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set(keys[0], "64")
+        spark.conf.set(keys[1], "0")
+        split = read_ratings_text(spark, str(path))
+        assert split.rdd.getNumPartitions() > 5
+        assert rows(split) == whole == Counter(written)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def _expected_range_fragment(rating: float, n: int = N) -> int:
     interval = 5.0 / n
     if rating <= interval:

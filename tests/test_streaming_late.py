@@ -351,3 +351,28 @@ def test_catalog_report_and_compaction(spark, ratings_file, warehouse):
     for d in frag_dirs:
         assert len(glob.glob(f"{d}/*.parquet")) == 1
     assert spark.read.parquet(f"{warehouse}/ratings_hash").count() == total_before
+
+
+def test_stream_join_shards_counts_a_parquet_directory(tmp_path):
+    """A Spark-written events.parquet is a directory: its row count is
+    the sum over its part files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_fragmentation_and_query_processor_spark.queries import families
+
+    events = tmp_path / "events.parquet"
+    events.mkdir()
+    pq.write_table(pa.table({"tus": list(range(120_000))}), events / "part-0.parquet")
+    pq.write_table(pa.table({"tus": list(range(80_000))}), events / "part-1.parquet")
+    (events / "_SUCCESS").write_text("")
+    assert families._stream_join_shards(str(tmp_path)) == 200_000 // 50_000
+
+
+def test_stream_join_shards_missing_fixture_falls_back_and_logs(tmp_path, caplog):
+    from database_fragmentation_and_query_processor_spark.queries import families
+
+    with caplog.at_level("WARNING", logger=families.__name__):
+        shards = families._stream_join_shards(str(tmp_path))
+    assert shards == families.STREAM_STATE_SHARDS
+    assert any("events.parquet" in r.getMessage() for r in caplog.records)
