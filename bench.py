@@ -25,9 +25,8 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
 from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.session import get_spark
 
 HEADLINE = [
     "frag_range_counts",
@@ -488,78 +487,6 @@ def compact_summary(out: dict) -> dict:
     return compact
 
 
-def _largest_row_group_bytes(sf_dir: str) -> int:
-    """Largest parquet row-group (compressed bytes) across the
-    warehouse — footer metadata only, no data read. A scan split
-    smaller than a row group cannot add parallelism: Spark assigns each
-    row group whole to the one split owning its midpoint, so sub-group
-    splits only add empty tasks (and, on Python-boundary scans, idle
-    worker launches). Returns 0 when pyarrow or the footers are
-    unavailable — callers fall back to their own floor."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return 0
-    largest = 0
-    for dirpath, _dirs, files in os.walk(sf_dir):
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            try:
-                md = pq.ParquetFile(os.path.join(dirpath, name)).metadata
-                for i in range(md.num_row_groups):
-                    rg = md.row_group(i)
-                    largest = max(
-                        largest,
-                        sum(
-                            rg.column(j).total_compressed_size
-                            for j in range(rg.num_columns)
-                        ),
-                    )
-            except Exception:
-                continue
-    return largest
-
-
-def scan_split_bytes(sf_dir: str, cpus: int) -> int:
-    """Scale-ADAPTIVE parquet split size (guide §6.1 + §2.2, r14;
-    r15 adds the row-group floor the r14 verdict ordered): aim for ~2
-    scan waves per core over the warehouse's total bytes, clamped to
-    [row-group floor, 128 MB].
-
-    The floor (r15): never split below the warehouse's largest parquet
-    row group. r14's flat 1 MB floor over-fragmented single-row-group
-    tables — a split below the row-group size cannot parallelize the
-    scan (the one split owning the group's midpoint reads ALL rows; the
-    rest are empty tasks), and the r15 A/B showed the empty tasks are
-    pure regression on Python-boundary and blob/text-decode scans
-    (multimodal_audio_windows 1.30s @1 MB vs 0.83s @128 MB;
-    containment_pairs 6.70s vs 3.62s — min of 3, c32). Multi-FILE
-    directories (warehouse fragments, artifact dirs) keep their
-    per-file parallelism at any floor ≤ openCostInBytes-packing size.
-    At warehouse scale total/(2·cores) saturates at the stock 128 MB
-    before any footer is read, so cluster plans are unchanged — a
-    derived value, not a local-mode constant."""
-    stock = 128 * 1024 * 1024
-    total = 0
-    try:
-        for dirpath, _dirs, files in os.walk(sf_dir):
-            for name in files:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, name))
-                except OSError:
-                    continue
-        if not os.path.isdir(sf_dir):
-            return stock
-    except OSError:
-        return stock
-    per_task = total // max(2 * cpus, 1)
-    if per_task >= stock:
-        return stock  # warehouse scale: stock split, skip footer walk
-    floor = max(1024 * 1024, min(_largest_row_group_bytes(sf_dir), stock))
-    return max(floor, min(per_task, stock))
-
-
 def _current_round(repo_dir: str) -> int:
     """The round currently being benched = 1 + the highest round whose
     driver artifact (BENCH_r<N>*.json) is already committed at the repo
@@ -579,26 +506,9 @@ def _current_round(repo_dir: str) -> int:
     return best + 1
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
-    spark = (
-        SparkSession.builder.appName("dfqp-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes",
-                str(scan_split_bytes(sf_dir, int(cpus))))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warmup: JIT + codegen + filesystem metadata, not measured
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed session warm-up shared by the bench and the profiler."""
+    # JIT + codegen + filesystem metadata, not measured
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(10).count()
     # percentile-path codegen warm-up (r13 verdict task 4): the
     # histogram-bisection conditional aggregates behind
@@ -639,6 +549,15 @@ def main() -> None:
         spark.catalog.clearCache()
     except Exception as exc:  # warm-up must never fail the bench
         print(f"bench: ANN index warm-up skipped: {exc}", file=sys.stderr)
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
+    spark = get_spark("dfqp-bench", sf_dir)
+    spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
+    warm_up(spark, sf_dir)
 
     # Fault-isolated: one broken query must never cost the whole run's
     # measurement — errors are recorded as "ERR <type>" and skipped in
@@ -727,7 +646,7 @@ def main() -> None:
         "queries": timings,
         "errors": errors,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "retimed": retimed,
         "first_pass": {k: first_pass[k] for k in retimed},
         "canary": canary,
@@ -754,7 +673,7 @@ def main() -> None:
     # driver runs so rounds stay diffable per query.
     repo = os.path.dirname(os.path.abspath(__file__))
     for fname in ("BENCH_FULL.json",
-                  f"BENCH_FULL_r{_current_round(repo)}_c{int(cpus)}.json"):
+                  f"BENCH_FULL_r{_current_round(repo)}_c{cpus}.json"):
         full_path = os.path.join(repo, fname)
         try:
             with open(full_path, "w") as f:

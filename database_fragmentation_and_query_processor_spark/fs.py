@@ -612,15 +612,8 @@ LOCK_TTL_SEC = 300
 
 #: Upper bound (seconds) of the randomized second read-back delay paid
 #: on stores WITHOUT atomic create-if-absent (see acquire_writer_lock's
-#: verify comment). Configurable because it is pure probabilistic
-#: narrowing — the lock is advisory on such stores either way — and a
-#: deployment whose store supports conditional PUT (where the shim
-#: should report atomic_rename=True anyway) or that prefers latency
-#: over narrowing can shrink or zero it via
-#: SPARK_GRAFT_LOCK_VERIFY_DELAY (0 skips the second read-back delay).
-LOCK_VERIFY_DELAY_SEC = float(
-    os.environ.get("SPARK_GRAFT_LOCK_VERIFY_DELAY", "0.05")
-)
+#: verify comment).
+LOCK_VERIFY_DELAY_SEC = 0.05
 
 
 class LockHeldError(RuntimeError):
@@ -655,11 +648,7 @@ def acquire_writer_lock(
             # on HDFS — both atomic_rename stores, no delay paid).
             try:
                 held = fs.read_text(lock) == payload
-                if (
-                    held
-                    and not getattr(fs, "atomic_rename", True)
-                    and LOCK_VERIFY_DELAY_SEC > 0
-                ):
+                if held and not getattr(fs, "atomic_rename", True):
                     time.sleep(
                         random.uniform(
                             LOCK_VERIFY_DELAY_SEC / 5, LOCK_VERIFY_DELAY_SEC

@@ -27,26 +27,12 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from database_fragmentation_and_query_processor_spark.session import get_spark
     from oracle_harness import compare, duck_connection
 
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "true")
-    from bench import scan_split_bytes  # same adaptive split as the bench
-
-    spark = (
-        SparkSession.builder.appName("dfqp-driver-sim")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.sql.files.maxPartitionBytes",
-                str(scan_split_bytes(sf_dir, int(cpus))))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("dfqp-driver-sim", sf_dir)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duck_connection(sf_dir)

@@ -45,17 +45,12 @@ def main() -> int:
     start = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     end = int(sys.argv[2]) if len(sys.argv) > 2 else 10**9
 
-    from pyspark.sql import SparkSession
-
     import database_fragmentation_and_query_processor_spark.entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("dfqp-empty-sweep")
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the empty warehouse is written by this session, so its scan split
+    # cannot be sized from it: no sf_dir, stock split
+    spark = get_spark("dfqp-empty-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = make_empty_dir(spark)
     names = list(EQ._QUERIES_ALL)[start:end]

@@ -41,48 +41,21 @@ def main() -> int:
     names = args
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    from bench import scan_split_bytes
-    from database_fragmentation_and_query_processor_spark import entry_queries as EQ
-
-    spark = (
-        SparkSession.builder.appName("dfqp-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes",
-                str(scan_split_bytes(sf_dir, int(cpus))))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        # job counts below come from the status store, which forgets all
-        # but the last spark.ui.retainedJobs jobs (default 1000); set the
-        # cap far above any phase so a count cannot silently fall short
-        .config("spark.ui.retainedJobs", "100000")
-        .getOrCreate()
+    # job counts below come from the status store, which forgets all
+    # but the last spark.ui.retainedJobs jobs (default 1000); set the
+    # cap far above any phase so a count cannot silently fall short
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.ui.retainedJobs=100000 pyspark-shell"
     )
+
+    from bench import warm_up
+    from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.session import get_spark
+
+    spark = get_spark("dfqp-profile", sf_dir)
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-
-    # warmup (same as bench.py)
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(10).count()
-    try:
-        from database_fragmentation_and_query_processor_spark.queries.common import (
-            _ann_ivfpq_index,
-            _ann_lsh_index,
-            _sq8_minmax,
-        )
-
-        _ann_ivfpq_index(spark, sf_dir)
-        _ann_lsh_index(spark, sf_dir)
-        _sq8_minmax(spark, sf_dir)
-        spark.catalog.clearCache()
-    except Exception as exc:
-        print(f"profile: ANN warm-up skipped: {exc}", file=sys.stderr)
+    warm_up(spark, sf_dir)
 
     # Job counting via the PUBLIC StatusTracker + job-group API (r14
     # ADVICE: the former sc._jsc.sc().dagScheduler().nextJobId() is a

@@ -3,10 +3,8 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import SparkSession
 
-# Keep local runs modest; CI container has 32 cpus.
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+from database_fragmentation_and_query_processor_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -24,21 +22,7 @@ RATINGS_FIXTURE = [
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    s = (
-        SparkSession.builder.appName("dfqp-tests")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # the single shared session survives ~900 tests; the default
-        # 1g driver heap eventually OOMs on accumulated plan/cache
-        # metadata (observed once at the 880-test mark)
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
-    yield s
+    yield get_spark("dfqp-tests", SF_DIR)
 
 
 @pytest.fixture(scope="session")

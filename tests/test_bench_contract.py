@@ -116,55 +116,3 @@ def test_quiet_record_covers_the_registry():
         - set(getattr(EQ, "_R14_ADDED", []))
     )
     assert not missing, missing
-
-
-def test_scan_split_bytes_is_scale_adaptive(tmp_path):
-    """r14: the bench derives the parquet split size from the
-    warehouse's total bytes (≈2 scan waves per core, clamped to
-    [1 MB, 128 MB]) — small fixtures parallelize their scan-stage map
-    work, while at warehouse scale the formula returns the stock
-    128 MB so cluster plans are untouched."""
-    import bench
-
-    mb = 1024 * 1024
-    # tiny fixture → floor clamp
-    (tmp_path / "t.parquet").write_bytes(b"x" * 1000)
-    assert bench.scan_split_bytes(str(tmp_path), 32) == mb
-    # mid-size: total/(2*cpus), inside the clamp band
-    (tmp_path / "big.parquet").write_bytes(b"x" * (256 * mb))
-    got = bench.scan_split_bytes(str(tmp_path), 32)
-    assert mb <= got <= 128 * mb
-    assert got == (256 * mb + 1000) // 64
-    # huge warehouse (simulated by cpus=1) → ceiling clamp = stock 128 MB
-    assert bench.scan_split_bytes(str(tmp_path), 1) == 128 * mb
-    # unreadable dir → stock default, never an exception
-    assert bench.scan_split_bytes(str(tmp_path / "nope"), 32) == 128 * mb
-
-
-def test_scan_split_bytes_floors_at_row_group(tmp_path):
-    """r15 (r14 verdict task 1): the split never drops below the
-    warehouse's largest parquet row group — a sub-row-group split adds
-    only empty scan tasks (the group is read whole by one split), which
-    the r15 A/B measured as pure regression on blob/text scans."""
-    import bench
-    import pytest
-
-    pa = pytest.importorskip("pyarrow")
-    pq = pytest.importorskip("pyarrow.parquet")
-
-    mb = 1024 * 1024
-    # one ~3 MB single-row-group parquet table (incompressible payload)
-    import random
-
-    rnd = random.Random(7)
-    payload = [bytes(rnd.getrandbits(8) for _ in range(3000)) for _ in range(1024)]
-    t = pa.table({"b": payload})
-    pq.write_table(t, tmp_path / "blob.parquet", row_group_size=1 << 20,
-                   compression="none")
-    rg = bench._largest_row_group_bytes(str(tmp_path))
-    assert rg > 2 * mb  # the single row group really is multi-MB
-    # total/(2*32) ≈ 48 KB — WITHOUT the floor the clamp would return
-    # 1 MB; with it, the split covers the whole row group
-    got = bench.scan_split_bytes(str(tmp_path), 32)
-    assert got >= rg
-    assert got <= 128 * mb
