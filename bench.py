@@ -21,12 +21,20 @@ stdout and the 160-query JSON line outgrew that window):
 from __future__ import annotations
 
 import json
+import logging
 import os
+import re
 import sys
 import time
 
+from py4j.protocol import Py4JError
+
+from database_fragmentation_and_query_processor_spark import artifacts
 from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.cache import release_all
 from database_fragmentation_and_query_processor_spark.session import get_spark
+
+log = logging.getLogger("bench")
 
 HEADLINE = [
     "frag_range_counts",
@@ -551,6 +559,22 @@ def warm_up(spark, sf_dir: str) -> None:
         print(f"bench: ANN index warm-up skipped: {exc}", file=sys.stderr)
 
 
+class ArtifactUse(logging.Handler):
+    """Collects the artifact store's records while one query runs, as
+    ``hit:<tag>`` and ``miss:<tag>:<build seconds>`` entries."""
+
+    _RECORD = re.compile(r"artifact (hit|miss): (\S+)(?: built in ([0-9.]+) s)?")
+
+    def __init__(self) -> None:
+        super().__init__(logging.INFO)
+        self.uses: list[str] = []
+
+    def emit(self, record: logging.LogRecord) -> None:
+        m = self._RECORD.match(record.getMessage())
+        if m:
+            self.uses.append(":".join(g for g in m.groups() if g is not None))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
@@ -559,11 +583,18 @@ def main() -> None:
     cpus = spark.sparkContext.defaultParallelism
     warm_up(spark, sf_dir)
 
+    # per query, the artifact-store hits and misses of its first run
+    artifact_use: dict[str, list[str]] = {}
+    art_log = logging.getLogger(artifacts.__name__)
+    art_log.setLevel(logging.INFO)
+
     # Fault-isolated: one broken query must never cost the whole run's
     # measurement — errors are recorded as "ERR <type>" and skipped in
     # the total, and the final JSON line is ALWAYS emitted.
     def run_once(spark, sf_dir, name) -> float | str:
         fn = EQ.QUERIES[name]
+        use = ArtifactUse()
+        art_log.addHandler(use)
         t0 = time.perf_counter()
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -571,15 +602,17 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — harness boundary
             result = f"ERR {type(exc).__name__}"
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
+        finally:
+            art_log.removeHandler(use)
+        if use.uses:
+            artifact_use.setdefault(name, use.uses)
         # each query timed cold: drop persisted intermediates (e.g. the
         # minhash shingle cache) so queries don't interfere
+        release_all()  # also empties the tracked-DataFrame registry
         try:
-            from database_fragmentation_and_query_processor_spark.cache import release_all
-
-            release_all()  # also empties the tracked-DataFrame registry
             spark.catalog.clearCache()
-        except Exception:
-            pass
+        except Py4JError as exc:  # the JVM gateway is gone
+            log.warning("bench: clearCache after %s failed: %s", name, exc)
         return result
 
     timings: dict[str, float | str] = {}
@@ -650,6 +683,7 @@ def main() -> None:
         "retimed": retimed,
         "first_pass": {k: first_pass[k] for k in retimed},
         "canary": canary,
+        "artifacts": artifact_use,
     }
     # apples-to-apples vs the round-1 baseline (52.738s / 53 queries):
     # the headline list has since grown, so also report the total over
@@ -661,8 +695,8 @@ def main() -> None:
             sum(v for k, v in timings.items()
                 if k in r1_names and isinstance(v, float)), 3)
         out["r1_subset_n"] = sum(1 for k in timings if k in r1_names)
-    except Exception:
-        pass
+    except (OSError, ValueError, KeyError) as exc:
+        log.warning("bench: no r1 subset total (BENCH_r01.json: %r)", exc)
     update_quiet(sf, timings, retimed)
     print(json.dumps(out))
     # Full per-query record, twice (r14 verdict task 2 — the PERF

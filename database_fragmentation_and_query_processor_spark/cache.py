@@ -18,7 +18,12 @@ shingle table pins executor storage memory for the life of the app.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+
+logger = logging.getLogger(__name__)
 
 _TRACKED: list[DataFrame] = []
 
@@ -32,13 +37,15 @@ def track(df: DataFrame) -> DataFrame:
 def release_all() -> int:
     """Unpersist every tracked DataFrame (blocking=False); returns how
     many were released. Safe to call repeatedly — already-unpersisted
-    frames are a no-op in Spark."""
+    frames are a no-op in Spark. A frame whose session is already
+    stopped cannot be unpersisted (the JVM call fails); that is logged
+    as a WARNING and the registry is still emptied."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
         try:
             df.unpersist()
             n += 1
-        except Exception:
-            pass  # session already stopped; nothing to release
+        except Py4JError as exc:
+            logger.warning("release_all: could not unpersist a frame: %s", exc)
     return n

@@ -48,9 +48,3 @@ def flr(x: Column | str, k: int = 6) -> Column:
         x = F.col(x)
     s = float(10**k)
     return F.floor(x.cast("double") * F.lit(s) + F.lit(0.5)) / F.lit(s)
-
-
-def flr_sql(expr: str, k: int = 6) -> str:
-    """The DuckDB-side mirror of :func:`flr` as SQL text."""
-    s = f"1e{k}"
-    return f"FLOOR(CAST(({expr}) AS DOUBLE) * {s} + 0.5) / {s}"

@@ -32,13 +32,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diff2 = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-    )
-    return F.sqrt(F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x))
-
-
 def make_cosine_pandas_udf(query_vec: list[float]):
     """Arrow-batched Pandas UDF cosine against a fixed query vector —
     the escape hatch for vector ops the expression DSL can't reach

@@ -308,15 +308,6 @@ def minhash_lsh_candidates(
     )
 
 
-def ngram_jaccard(text_a: Column, text_b: Column, n: int = 3) -> Column:
-    """Exact Jaccard over word n-gram shingle sets (verification stage)."""
-    sa = F.array_distinct(shingles(text_a, n))
-    sb = F.array_distinct(shingles(text_b, n))
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    union = F.size(F.array_union(sa, sb)).cast("double")
-    return inter / F.nullif(union, F.lit(0.0))
-
-
 def near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -507,7 +498,3 @@ def simhash(text: Column, bits: int = 32) -> Column:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))

@@ -3945,10 +3945,8 @@ def q_tokenizer_compare_audit(spark, sf_dir):
     learner into the word-frequency table, K vocabulary-domain steps),
     then ONE extra vocabulary-domain aggregate per learner over the
     K-fold replace expression — no additional corpus scan. The merge
-    tables come from the build-once artifact cache (_learned_merge_rows
-    — K-row results of the deterministic learners, content-keyed on
-    the corpus), so the audit never re-pays BPE + WordPiece training
-    the standalone learner queries already ran."""
+    tables are build-once artifacts (_learned_merge_rows), so the audit
+    never re-pays the BPE + WordPiece training the learners ran."""
     rows = []
     for algo, merges, k in (
         ("bpe", _learned_merge_rows(spark, sf_dir, "bpe"), BPE_MERGES),

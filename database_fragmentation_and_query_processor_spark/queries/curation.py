@@ -1616,13 +1616,10 @@ def q_streaming_sessionization(spark, sf_dir):
     independent of micro-batching, and the AvailableNow drain
     terminates without waiting on processing-time timers. The emitted
     set equals batch gap-sessionization exactly, which is the DuckDB
-    oracle. Build-once stream input is content-keyed on events.parquet
-    like the other derived artifacts. The drain runner stops the query
-    once progress covers the bounded input — applyInPandasWithState
-    never self-terminates under AvailableNow on this Spark line (see
-    run_stateful_drained)."""
-    import os as _os
-
+    oracle. The stream input is a build-once artifact. The drain
+    runner stops the query once progress covers the bounded input —
+    applyInPandasWithState never self-terminates under AvailableNow on
+    this Spark line (see run_stateful_drained)."""
     from ..streaming.events import (
         EVENTS_STREAM_SCHEMA,
         run_stateful_drained,
@@ -1630,8 +1627,8 @@ def q_streaming_sessionization(spark, sf_dir):
     )
 
     ev = _events(spark, sf_dir)
-    art = _artifact_cache_path(sf_dir, "sess_stream", "events")
-    if not _os.path.exists(_os.path.join(art, "_SUCCESS")):
+
+    def build(stage):
         mx = int(ev.agg(F.max("tsn")).head()[0])
         base = ev.select(
             "event_id", "user_id", "event_type", "value", "props", "tsn"
@@ -1647,7 +1644,9 @@ def q_streaming_sessionization(spark, sf_dir):
                 F.lit(mx + SESSION_GAP_US + 1_000_000).cast("long").alias("tsn"),
             )
         )
-        base.unionByName(flush).write.mode("overwrite").parquet(art)
+        base.unionByName(flush).write.mode("overwrite").parquet(stage)
+
+    art = build_once(sf_dir, "sess_stream", ["events"], build)
     n_input = spark.read.parquet(art).count()
     stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(art)
     sessions = run_stateful_drained(
@@ -1927,17 +1926,14 @@ def q_frag_insert_routing(spark, sf_dir):
     partitioned parquet. The DuckDB oracle replays the routing
     arithmetic independently — the range owner is HARDCODED to the
     reference's expected fragment, so a shared formula bug cannot pass.
-    The warehouse is a build-once content-keyed artifact; the marker
-    file is written only after the last insert, so a partial build
-    rebuilds from scratch (all partition writes are overwrite-mode)."""
+    The warehouse is a build-once artifact, published only after the
+    last insert, so a partial build is never served."""
     import os as _os
 
     from .. import api as _api
     from ..operators.fragmentation import read_fragmented as _read_fragmented
 
-    wh = _artifact_cache_path(sf_dir, "insert_routing", "lineitem")
-    marker = _os.path.join(wh, "_ROUTING_DONE")
-    if not _os.path.exists(marker):
+    def build(wh):
         base = _ratings(spark, sf_dir).drop("rn")
         base.write.mode("overwrite").parquet(_os.path.join(wh, "ratings", "base"))
         _api.range_partition(spark, "ratings", RANGE_N, wh)
@@ -1949,8 +1945,8 @@ def q_frag_insert_routing(spark, sf_dir):
                 INSERT_ROUTE_USERID, INSERT_ROUTE_MOVIEID, INSERT_ROUTE_RATING,
                 wh,
             )
-        with open(marker, "w") as f:
-            f.write("ok\n")
+
+    wh = build_once(sf_dir, "insert_routing", ["lineitem"], build)
     parts = []
     for scheme, suffix in (
         ("range", "ratings_range"),
@@ -2418,22 +2414,19 @@ FROM base
 
 def q_events_time_pruned(spark, sf_dir):
     """Hypertable read path as a checkable query: events are laid out
-    day-partitioned ONCE per sf_dir (build-once temp artifact, the same
-    convention as the materialized LSH index), then a 2-day range scan
+    day-partitioned ONCE (a build-once artifact), then a 2-day range scan
     prunes whole partitions at file listing (PartitionFilters —
     operators/timeseries.py, plan-asserted in tests/test_timeseries.py)
     and must equal the raw filter, which is the oracle. The probed
     window is derived from the data's own min day, so the result is
-    deterministic per fixture (and the artifact path is content-keyed
-    on events.parquet, so a fixture regen rebuilds the layout)."""
-    import os as _os
-
+    deterministic per fixture."""
     from ..operators.timeseries import read_time_range, write_time_partitioned
 
     ev = _events(spark, sf_dir)
-    path = _artifact_cache_path(sf_dir, "events_by_day", "events")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        write_time_partitioned(ev, path)
+    path = build_once(
+        sf_dir, "events_by_day", ["events"],
+        lambda stage: write_time_partitioned(ev, stage),
+    )
     d0 = ev.agg(F.min(F.to_date("event_time")).alias("d0")).head()["d0"]
     import datetime as _dt
 
@@ -2470,18 +2463,17 @@ def q_lineitem_zorder_skip(spark, sf_dir):
     tests/test_layout.py; this query pins that the clustered layout
     loses no rows. Bounds derive from the data's own key maxima
     (bottom decile of each), so the result is deterministic per
-    fixture (and the artifact path is content-keyed on
-    lineitem.parquet, so a fixture regen rebuilds the layout)."""
-    import os as _os
-
+    fixture."""
     from ..operators.layout import zorder_by
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
-    path = _artifact_cache_path(sf_dir, "lineitem_zorder", "lineitem")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        zorder_by(li, ["l_orderkey", "l_partkey"]).write.mode("overwrite").parquet(path)
+    path = build_once(
+        sf_dir, "lineitem_zorder", ["lineitem"],
+        lambda stage: zorder_by(li, ["l_orderkey", "l_partkey"])
+        .write.mode("overwrite").parquet(stage),
+    )
     m = li.agg(
         F.max("l_orderkey").alias("mo"), F.max("l_partkey").alias("mp")
     ).head()

@@ -331,15 +331,13 @@ def q_bucketed_join_revenue(spark, sf_dir):
     that tests/test_bucketing.py pins with broadcast disabled. At
     100 TB this is THE fact-fact join strategy — the shuffle is paid
     once at layout time, every subsequent join/agg on the key rides
-    it. Build-once artifacts are content-keyed like the
-    LSH index / hypertable / z-order layouts; table registration is
-    session-scoped, so a fresh session re-registers (cheap overwrite)
-    while repeated calls in one session reuse the catalog entry."""
+    it. Table registration is session-scoped, so a fresh session
+    re-registers (cheap overwrite) under the artifact-store path."""
     import os as _os
 
     from ..operators.bucketing import bucketed_equi_join, write_bucketed
 
-    art = _artifact_cache_path(sf_dir, "bucketed_oj", "orders", "lineitem")
+    art = artifact_path(sf_dir, "bucketed_oj", "orders", "lineitem")
     digest = art.rsplit("_", 1)[-1]
     t_orders, t_lineitem = f"dfqp_b_orders_{digest}", f"dfqp_b_li_{digest}"
     if not spark.catalog.tableExists(t_orders):
@@ -384,13 +382,13 @@ def q_streaming_upsert_latest(spark, sf_dir):
     The oracle derives the same rows with a per-user window over the
     batch table. Exercises the write path end-to-end: merge plan (one
     per-key window shuffle per micro-batch), write-then-swap commit,
-    and the read-back. Target is content-keyed per fixture; a re-run
-    over the same content re-merges identical data (idempotent)."""
+    and the read-back. A re-run over the same artifact-store target
+    re-merges identical data (idempotent)."""
     import os as _os
 
     from ..streaming.events import read_committed, read_events_stream, upsert_sink
 
-    art = _artifact_cache_path(sf_dir, "upsert_target", "events")
+    art = artifact_path(sf_dir, "upsert_target", "events")
     target = _os.path.join(art, "latest")
     q = upsert_sink(
         read_events_stream(spark, sf_dir),
@@ -453,17 +451,18 @@ def q_csv_quarantine_audit(spark, sf_dir):
 
     from ..sources.csv_src import quarantine_split, read_csv, write_csv
 
-    art = _artifact_cache_path(sf_dir, "csv_quarantine", "documents")
-    if not _os.path.exists(_os.path.join(art, "_SUCCESS")):
+    def build(stage):
         docs = _t(spark, sf_dir, "documents").select(
             "doc_id", "lang", "source", "n_chars"
         )
-        write_csv(docs, art)
+        write_csv(docs, stage)
         # a separate part file of malformed lines; first line is a dummy
         # header (the reader skips one header line PER FILE)
-        with open(_os.path.join(art, "part-corrupt.csv"), "w") as f:
+        with open(_os.path.join(stage, "part-corrupt.csv"), "w") as f:
             f.write("doc_id,lang,source,n_chars\n")
             f.write("\n".join(CSV_CORRUPT_LINES) + "\n")
+
+    art = build_once(sf_dir, "csv_quarantine", ["documents"], build)
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -550,14 +549,15 @@ def q_jsonl_quarantine_audit(spark, sf_dir):
 
     from ..sources.jsonl import quarantine_split, read_jsonl, write_jsonl
 
-    art = _artifact_cache_path(sf_dir, "jsonl_quarantine", "documents")
-    if not _os.path.exists(_os.path.join(art, "_SUCCESS")):
+    def build(stage):
         docs = _t(spark, sf_dir, "documents").select(
             "doc_id", "lang", "source", "n_chars"
         )
-        write_jsonl(docs, art)
-        with open(_os.path.join(art, "part-corrupt.json"), "w") as f:
+        write_jsonl(docs, stage)
+        with open(_os.path.join(stage, "part-corrupt.json"), "w") as f:
             f.write("\n".join(JSONL_CORRUPT_LINES) + "\n")
+
+    art = build_once(sf_dir, "jsonl_quarantine", ["documents"], build)
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -1288,18 +1288,17 @@ FROM groups GROUP BY n_docs, n_texts
 
 def q_orc_roundtrip_agg(spark, sf_dir):
     """ORC source/sink round-trip: documents written once to columnar
-    ORC (build-once artifact, content-keyed like the LSH index), read
+    ORC (a build-once artifact), read
     back through the ORC reader, and aggregated; the oracle computes
     the same aggregate from the original parquet, so a green row proves
     the round trip is byte-faithful (md5-prefix checksum over every
     text). ORC keeps the same predicate-pushdown/column-pruning
     contract as parquet in Spark, so this is the format-portability
     check for warehouses standardized on ORC."""
-    import os as _os
-
-    path = _artifact_cache_path(sf_dir, "orc_docs", "documents")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        _t(spark, sf_dir, "documents").write.mode("overwrite").orc(path)
+    path = build_once(
+        sf_dir, "orc_docs", ["documents"],
+        lambda stage: _t(spark, sf_dir, "documents").write.mode("overwrite").orc(stage),
+    )
     back = spark.read.orc(path)
     chk = F.conv(F.substring(F.md5(F.col("text")), 1, 13), 16, 10).cast("bigint")
     return back.groupBy("source").agg(
@@ -1332,19 +1331,19 @@ def q_schema_evolution_read(spark, sf_dir):
     scan itself stays pruned and pushed-down."""
     import os as _os
 
-    path = _artifact_cache_path(sf_dir, "schema_evo", "documents")
-    p1, p2 = _os.path.join(path, "b1"), _os.path.join(path, "b2")
-    if not _os.path.exists(_os.path.join(path, "_DONE")):
+    def build(stage):
         docs = _t(spark, sf_dir, "documents")
         docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
             "overwrite"
-        ).parquet(p1)
+        ).parquet(_os.path.join(stage, "b1"))
         docs.where(F.col("doc_id") % 2 == 1).select(
             "doc_id", "lang", "n_chars"
-        ).write.mode("overwrite").parquet(p2)
-        with open(_os.path.join(path, "_DONE"), "w") as f:
-            f.write("ok")
-    merged = spark.read.option("mergeSchema", "true").parquet(p1, p2)
+        ).write.mode("overwrite").parquet(_os.path.join(stage, "b2"))
+
+    path = build_once(sf_dir, "schema_evo", ["documents"], build)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        _os.path.join(path, "b1"), _os.path.join(path, "b2")
+    )
     return merged.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.count("n_chars").cast("bigint").alias("rows_with_chars"),
@@ -1661,12 +1660,6 @@ XL_LANGS = ("de", "en", "es", "fr", "zh")  # sorted; index = bias dim (0-based)
 XL_MATE_MAX_BLOCK = 65536
 
 
-def _xl_rot(lang_idx):
-    """Clone-language rotation: each language's translations land in
-    the next language of the fixed order."""
-    return (lang_idx + 1) % len(XL_LANGS)
-
-
 def q_crosslingual_dedup(spark, sf_dir):
     """Cross-lingual near-dedup (r11 verdict task 7b): find documents
     that are TRANSLATIONS of each other via embeddings, where each
@@ -1752,18 +1745,14 @@ def q_crosslingual_dedup(spark, sf_dir):
 
 def _xl_centered(spark, sf_dir) -> DataFrame:
     """The cross-lingual family's shared substrate: (vec_id, lang, c,
-    nrm), build-once / probe-many via the content-keyed artifact cache
-    (the lsh_index precedent) — three registry queries consume it, and
-    rebuilding the biased corpus + decimal-exact means per run was pure
-    rework. ALL runs, including the building one, read the parquet
-    artifact back, so every consumer ever sees the identical
-    roundtripped doubles (parquet roundtrips IEEE doubles losslessly;
-    serving one path removes even the theoretical cold/warm split)."""
-    import os as _os
-
-    art = _artifact_cache_path(sf_dir, "xl_centered", "documents", "embeddings")
-    if not _os.path.exists(_os.path.join(art, "_SUCCESS")):
-        _xl_centered_build(spark, sf_dir).write.mode("overwrite").parquet(art)
+    nrm), a build-once artifact that three registry queries consume.
+    ALL runs, including the building one, read the parquet artifact
+    back, so every consumer sees the identical roundtripped doubles."""
+    art = build_once(
+        sf_dir, "xl_centered", ["documents", "embeddings"],
+        lambda stage: _xl_centered_build(spark, sf_dir)
+        .write.mode("overwrite").parquet(stage),
+    )
     return spark.read.parquet(art)
 
 
@@ -2166,23 +2155,22 @@ def q_binaryfile_ingest(spark, sf_dir):
     source text). The scan parallelizes like any file source —
     pathGlobFilter prunes at listing time, maxPartitionBytes groups
     small blobs per task (sources/binary_files.py)."""
-    import os as _os
-
     from ..sources.binary_files import (
         read_binary_files,
         with_file_id,
         write_text_blobs,
     )
 
-    path = _artifact_cache_path(sf_dir, "blob_docs", "documents")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
+    def build(stage):
         rows = (
             _t(spark, sf_dir, "documents")
             .where(F.col("source") == BINARY_SOURCE)
             .select("doc_id", "text")
             .collect()  # bounded: one source = 1/20 of the corpus; test scaffolding only
         )
-        write_text_blobs([(r["doc_id"], r["text"]) for r in rows], path)
+        write_text_blobs([(r["doc_id"], r["text"]) for r in rows], stage)
+
+    path = build_once(sf_dir, "blob_docs", ["documents"], build)
     blobs = with_file_id(read_binary_files(spark, path, glob="*.bin"))
     chk = F.conv(F.substring(F.md5(F.col("content")), 1, 13), 16, 10).cast("bigint")
     return blobs.agg(
@@ -2614,8 +2602,6 @@ def q_streaming_louter_attribution(spark, sf_dir):
     and maxFilesPerTrigger=1 forces the post-sentinel micro-batch in
     which the evictions emit. Aggregated to one audit row; the oracle
     is the batch LEFT JOIN with the same horizon."""
-    import os as _os
-
     from ..streaming.events import (
         EVENTS_STREAM_SCHEMA,
         run_available_now_append,
@@ -2627,15 +2613,14 @@ def q_streaming_louter_attribution(spark, sf_dir):
     # artifact (1/3 of the event volume — the other types would be
     # filtered inside the stream anyway), in ONE base file so the
     # replay is exactly 3 micro-batches (base, sentinel, dummy)
-    art = _artifact_cache_path(sf_dir, "louter_stream_v2", "events")
-    if not _os.path.exists(_os.path.join(art, "_FILES_DONE")):
+    def build(stage):
         mx = int(ev.agg(F.max("tsn")).head()[0])
         base = (
             ev.where(F.col("event_type").isin("click", "purchase"))
             .select("event_id", "user_id", "event_type", "value", "props", "tsn")
             .coalesce(1)
         )
-        base.write.mode("overwrite").parquet(art)
+        base.write.mode("overwrite").parquet(stage)
 
         def sentinel(eid, etype, tsn):
             return spark.createDataFrame(
@@ -2644,12 +2629,12 @@ def q_streaming_louter_attribution(spark, sf_dir):
 
         sentinel(-1, "click", mx + 4 * US_PER_HOUR).unionByName(
             sentinel(-2, "purchase", mx + 4 * US_PER_HOUR)
-        ).coalesce(1).write.mode("append").parquet(art)
+        ).coalesce(1).write.mode("append").parquet(stage)
         sentinel(-3, "click", mx + 4 * US_PER_HOUR + 1_000_000).coalesce(
             1
-        ).write.mode("append").parquet(art)
-        with open(_os.path.join(art, "_FILES_DONE"), "w") as f:
-            f.write("ok")
+        ).write.mode("append").parquet(stage)
+
+    art = build_once(sf_dir, "louter_stream_v2", ["events"], build)
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -3234,6 +3219,21 @@ GROUP BY d.event_type
 """
 
 
+def _single_file(df, dest_dir, dest_name):
+    """Write ``df`` as the one parquet file ``dest_dir/dest_name`` (a
+    file stream's ordered commit): coalesce(1) into a sibling stage,
+    then move its part file into place."""
+    import os as _os
+    import shutil as _shutil
+
+    stage = dest_dir + "_stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    part = [f for f in _os.listdir(stage) if f.endswith(".parquet")][0]
+    _os.makedirs(dest_dir, exist_ok=True)
+    _os.replace(_os.path.join(stage, part), _os.path.join(dest_dir, dest_name))
+    _shutil.rmtree(stage)
+
+
 def q_streaming_cdc_apply(spark, sf_dir):
     """Streaming CDC pipeline end-to-end: an ordered change feed (two
     commit files — first updates ×2 + inserts, then deletes + a second
@@ -3244,28 +3244,19 @@ def q_streaming_cdc_apply(spark, sf_dir):
     read-back aggregate must equal the batch-algebra oracle of the
     FINAL state (m%10==0 deleted, m%10==1 at ×3 — proving cross-batch
     last-write-wins — and the shifted-key inserts present). Absolute
-    row images make re-runs over a cached artifact idempotent."""
+    row images make re-runs over a cached artifact idempotent. The
+    build-once artifact holds the change feed and the base target
+    snapshot; the sink then commits each state into the published
+    artifact."""
     import os as _os
-    import shutil as _shutil
 
     from ..streaming.events import cdc_sink, read_committed
 
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    art = _artifact_cache_path(sf_dir, "cdc_stream", "orders")
-    changes_dir = _os.path.join(art, "changes")
-    target = _os.path.join(art, "target")
 
-    def _single_file(df, dest_name):
-        stage = _os.path.join(art, "stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = [f for f in _os.listdir(stage) if f.endswith(".parquet")][0]
-        _os.makedirs(changes_dir, exist_ok=True)
-        _os.replace(_os.path.join(stage, part), _os.path.join(changes_dir, dest_name))
-        _shutil.rmtree(stage)
-
-    if not _os.path.exists(_os.path.join(art, "_FILES_DONE")):
+    def build(stage):
         m = F.col("o_orderkey") % CDC_MOD
         # commit 1: re-price ×2 + inserts under shifted keys
         c1 = (
@@ -3288,12 +3279,14 @@ def q_streaming_cdc_apply(spark, sf_dir):
                 .withColumn("op", F.lit("U"))
             )
         )
-        _single_file(c1, "commit-001.parquet")
-        _single_file(c2, "commit-002.parquet")
-        orders.write.mode("overwrite").parquet(target)
-        with open(_os.path.join(art, "_FILES_DONE"), "w") as f:
-            f.write("ok")
-    elif not _os.path.isdir(target):
+        _single_file(c1, _os.path.join(stage, "changes"), "commit-001.parquet")
+        _single_file(c2, _os.path.join(stage, "changes"), "commit-002.parquet")
+        orders.write.mode("overwrite").parquet(_os.path.join(stage, "target"))
+
+    art = build_once(sf_dir, "cdc_stream", ["orders"], build)
+    changes_dir = _os.path.join(art, "changes")
+    target = _os.path.join(art, "target")
+    if not _os.path.isdir(target):
         # a crash between the two swap renames can leave no live target;
         # absolute row images let recovery restart from the base snapshot
         # and idempotently replay every commit
@@ -3373,31 +3366,24 @@ def q_streaming_near_dup(spark, sf_dir):
 
     docs = _docs_with_dups(spark, sf_dir)
     res = (F.col("doc_id") % DUP_SALT) % STREAM_ND_MOD
-    art = _artifact_cache_path(sf_dir, "near_dup_stream", "documents")
-    batches_dir = _os.path.join(art, "batches")
-    index_path = _os.path.join(art, "index")
-    pairs_path = _os.path.join(art, "pairs")
 
-    def _single_file(df, dest_name):
-        stage = _os.path.join(art, "stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = [f for f in _os.listdir(stage) if f.endswith(".parquet")][0]
-        _os.makedirs(batches_dir, exist_ok=True)
-        _os.replace(
-            _os.path.join(stage, part), _os.path.join(batches_dir, dest_name)
-        )
-        _shutil.rmtree(stage)
-
-    if not _os.path.exists(_os.path.join(art, "_FILES_DONE")):
+    def build(stage):
         for b in range(STREAM_ND_BATCHES):
-            _single_file(docs.where(res == b), f"commit-{b:03d}.parquet")
+            _single_file(
+                docs.where(res == b),
+                _os.path.join(stage, "batches"),
+                f"commit-{b:03d}.parquet",
+            )
         # the standing index, materialized once (build_dedup_index);
         # the sink's committed updates land via the FS shim on top
         D.build_dedup_index(
             docs.where(res >= STREAM_ND_BATCHES), k=MINHASH_K
-        ).write.mode("overwrite").parquet(index_path)
-        with open(_os.path.join(art, "_FILES_DONE"), "w") as f:
-            f.write("ok")
+        ).write.mode("overwrite").parquet(_os.path.join(stage, "index"))
+
+    art = build_once(sf_dir, "near_dup_stream", ["documents"], build)
+    batches_dir = _os.path.join(art, "batches")
+    index_path = _os.path.join(art, "index")
+    pairs_path = _os.path.join(art, "pairs")
     # Persistent checkpoint (r13): resume semantics, not reprocess
     # semantics — an AvailableNow drain over input the checkpoint has
     # already processed commits zero micro-batches, which is exactly
@@ -3480,7 +3466,7 @@ def q_streaming_near_dup_compaction(spark, sf_dir):
     )
 
     q_streaming_near_dup(spark, sf_dir)  # ensure the ingest is committed
-    art = _artifact_cache_path(sf_dir, "near_dup_stream", "documents")
+    art = artifact_path(sf_dir, "near_dup_stream", "documents")
     compact_near_dup_index(spark, _os.path.join(art, "index"))
     pairs_path = _os.path.join(art, "pairs")
     compact_near_dup_pairs(spark, pairs_path)
@@ -3937,27 +3923,26 @@ def q_sql_interface_q1(spark, sf_dir):
 def q_xml_roundtrip_agg(spark, sf_dir):
     """XML source/sink round-trip through Spark 4's NATIVE xml format
     (no external package): documents written once as <doc> rows
-    (build-once artifact, content-keyed), read back with an EXPLICIT
+    (a build-once artifact), read back with an EXPLICIT
     schema (inference reads the input twice at scale and can flip
     types), and checksummed per language — a green row proves entity
     escaping and the full write→parse path are byte-faithful. Rounds
     out the format-portability set next to parquet, ORC, CSV, JSON
     lines, and binaryFile."""
-    import os as _os
-
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    path = _artifact_cache_path(sf_dir, "xml_docs", "documents")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        (
+    path = build_once(
+        sf_dir, "xml_docs", ["documents"],
+        lambda stage: (
             _t(spark, sf_dir, "documents")
             .select("doc_id", "lang", "text")
             .write.mode("overwrite")
             .format("xml")
             .option("rootTag", "docs")
             .option("rowTag", "doc")
-            .save(path)
-        )
+            .save(stage)
+        ),
+    )
     schema = StructType(
         [
             StructField("doc_id", LongType()),

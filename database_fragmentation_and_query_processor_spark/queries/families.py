@@ -1920,7 +1920,7 @@ def q_ann_sq8_topk(spark, sf_dir):
     training. Scoring is ASYMMETRIC (full-precision query against
     decoded codes), the standard SQ serving arrangement. The (min,
     max) table is build-once corpus metadata (common._sq8_minmax,
-    the `_artifact_cache_path` contract); the scan itself is one
+    an `artifacts.build_once` artifact); the scan itself is one
     stateless projection + top-k — at 100 TB the codes column is what
     sits on disk and the decode is expression-level arithmetic inside
     whole-stage codegen, no Python anywhere. Every step (affine code,

@@ -58,5 +58,3 @@ def write_text_blobs(rows: list[tuple[int, str]], path: str) -> None:
     for file_id, text in rows:
         with open(os.path.join(path, f"{file_id}.bin"), "wb") as f:
             f.write(text.encode("utf-8"))
-    with open(os.path.join(path, "_SUCCESS"), "w") as f:
-        f.write("")

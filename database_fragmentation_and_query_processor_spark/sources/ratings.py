@@ -28,8 +28,3 @@ def read_ratings_text(spark: SparkSession, path: str) -> DataFrame:
         .csv(path)
     )
     return raw.select("userid", "movieid", "rating")
-
-
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load driver testdata parquet tables by name."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -17,9 +17,7 @@ dropped so stale references fail loudly.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -33,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..artifacts import build_once
 
 #: canonical NORMALIZED stream schema (what read_events_stream emits and
 #: what the stateful operators below consume): tsn = micros since epoch.
@@ -73,18 +73,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the file stream source requires a DIRECTORY; expose the single
-    # parquet fixture through a symlinked temp dir
-    src = os.path.join(sf_dir, "events.parquet")
-    # stable digest (NOT built-in hash(): that is PYTHONHASHSEED-salted
-    # per process, which would leak a fresh stale dir every run)
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"dfqp_events_stream_{digest}")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if os.path.islink(link) and not os.path.exists(link):
-        os.unlink(link)  # dangling symlink from a deleted fixture dir
-    if not os.path.exists(link):
-        os.symlink(src, link)
+    # parquet fixture through a build-once dir holding a symlink to it
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    stream_dir = build_once(
+        sf_dir, "events_stream", ["events"],
+        lambda stage: os.symlink(src, os.path.join(stage, "events.parquet")),
+    )
     # schema probe: streams need an explicit schema; take the file's
     # ACTUAL one (footer metadata only) instead of hardcoding an
     # assumption that silently mis-reads the next fixture regeneration

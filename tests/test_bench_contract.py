@@ -116,3 +116,54 @@ def test_quiet_record_covers_the_registry():
         - set(getattr(EQ, "_R14_ADDED", []))
     )
     assert not missing, missing
+
+
+def test_release_all_logs_a_failed_unpersist_and_empties_registry(caplog):
+    """A frame whose session is gone cannot be unpersisted: release_all
+    logs that as a WARNING, keeps going, and still empties the
+    registry."""
+    from py4j.protocol import Py4JError
+
+    from database_fragmentation_and_query_processor_spark import cache
+
+    class Frame:
+        def __init__(self, fails: bool):
+            self.fails = fails
+
+        def unpersist(self):
+            if self.fails:
+                raise Py4JError("SparkContext was shut down")
+
+    cache.track(Frame(False))
+    cache.track(Frame(True))
+    with caplog.at_level("WARNING", logger=cache.__name__):
+        assert cache.release_all() == 1
+    assert cache._TRACKED == []
+    assert [r.levelname for r in caplog.records] == ["WARNING"]
+    assert "SparkContext was shut down" in caplog.records[0].getMessage()
+
+
+def test_artifact_use_reads_hit_and_miss_records(tmp_path, monkeypatch):
+    """The bench's per-query artifact map reads the store's own log
+    lines: ``miss:<tag>:<seconds>`` on a build, ``hit:<tag>`` after."""
+    import logging
+    import re
+    import tempfile
+
+    from database_fragmentation_and_query_processor_spark import artifacts
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    (tmp_path / "events.parquet").write_bytes(b"payload")
+    use = bench.ArtifactUse()
+    log = logging.getLogger(artifacts.__name__)
+    log.addHandler(use)
+    log.setLevel(logging.INFO)
+    try:
+        for _ in range(2):
+            artifacts.build_once(str(tmp_path), "t", ["events"], lambda stage: None)
+    finally:
+        log.removeHandler(use)
+        log.setLevel(logging.NOTSET)
+    assert len(use.uses) == 2
+    assert re.fullmatch(r"miss:t:[0-9]+\.[0-9]{3}", use.uses[0])
+    assert use.uses[1] == "hit:t"

@@ -89,30 +89,6 @@ def test_dedup_ann_stack_assumptions(sf_dir):
     assert len(lens) == 1, f"ragged embedding dims: {lens.to_pylist()}"
 
 
-def test_artifact_cache_invalidates_on_fixture_regen(tmp_path):
-    """Build-once artifacts (LSH index, day-partitioned events,
-    z-ordered lineitem) must re-key when the source parquet changes:
-    fixtures are regenerated IN PLACE between rounds, and a path keyed
-    on sf_dir alone would serve stale derived data against a fresh
-    oracle."""
-    import os
-
-    from database_fragmentation_and_query_processor_spark.entry_queries import _artifact_cache_path
-
-    src = tmp_path / "events.parquet"
-    src.write_bytes(b"v1-payload")
-    p1 = _artifact_cache_path(str(tmp_path), "t", "events")
-    assert p1 == _artifact_cache_path(str(tmp_path), "t", "events")
-
-    src.write_bytes(b"v2-payload-longer")  # size change
-    p2 = _artifact_cache_path(str(tmp_path), "t", "events")
-    assert p2 != p1
-
-    os.utime(src, ns=(1, 1))  # same bytes, new generation timestamp
-    p3 = _artifact_cache_path(str(tmp_path), "t", "events")
-    assert p3 != p2
-
-
 def test_ratings_plan_cache_is_keyed_on_the_spark_application(spark, sf_dir, monkeypatch):
     """The ratings-derivation plan cache must not outlive its session. A
     new session can reuse a stopped one's Python object id; it must get

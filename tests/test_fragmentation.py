@@ -289,12 +289,14 @@ def test_insert_routing_warehouse_matches_declared_schema(
     """The registry's insert-routing warehouse writes its base from the
     lineitem-derived ratings relation (queries.common._ratings), not
     from load_ratings; it must carry the same declared schema."""
+    import tempfile
+
+    from database_fragmentation_and_query_processor_spark.artifacts import artifact_path
     from database_fragmentation_and_query_processor_spark.entry_queries import (
         _QUERIES_ALL,
     )
-    from database_fragmentation_and_query_processor_spark.queries import curation
 
-    warehouse = str(tmp_path / "routing")
-    monkeypatch.setattr(curation, "_artifact_cache_path", lambda *_: warehouse)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    warehouse = artifact_path(sf_dir, "insert_routing", "lineitem")
     assert _QUERIES_ALL["frag_insert_routing"](spark, sf_dir).count() > 0
     _assert_declared_schemas(spark, warehouse)

@@ -46,7 +46,7 @@ def test_crosslingual_means_are_broadcast(spark, sf_dir):
     # r13: the build is behind the content-keyed artifact cache — every
     # consumer (cold AND warm) reads the same parquet back
     wrapper = inspect.getsource(EQ._xl_centered)
-    assert "_artifact_cache_path" in wrapper
+    assert "build_once" in wrapper
     assert "read.parquet" in wrapper
 
 
