@@ -19,7 +19,9 @@ from database_fragmentation_and_query_processor_spark import entry_queries as _E
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: dual-scheme pruned range query (reference semantics,
-    Interface1.py:261-308) over sf0.001."""
+    Interface1.py:261-308) over sf0.001, read through ``api.range_query``
+    from the lineitem-derived ratings relation fragmented once (range
+    side pruned to the fragments the range touches)."""
     return _EQ.q_frag_range_query(spark, "/root/testdata/sf0.001")
 
 

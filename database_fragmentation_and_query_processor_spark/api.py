@@ -107,8 +107,10 @@ def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) ->
         print("Invalid number of partitions:", n)
         return
     df = _read_base(spark, warehouse, table)
-    # (userid, movieid) is the ratings natural key → JVM-side bucketed
-    # numbering (operators/scaling.py), no Python RDD round-trip.
+    # (userid, movieid) is the ratings natural key: a MovieLens user rates
+    # a movie once (the registry's lineitem-derived relation repeats pairs,
+    # so queries.common._frag_warehouse numbers lineitem rows) → JVM-side
+    # bucketed numbering (operators/scaling.py), no Python RDD round-trip.
     assigned = frag.assign_round_robin_fragments(
         df, n, order_cols=["userid", "movieid"]
     )

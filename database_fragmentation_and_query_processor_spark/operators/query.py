@@ -30,6 +30,7 @@ its own schema: most mismatches fail at the scan (see
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 
@@ -67,6 +68,15 @@ def provenance(prefix: str) -> F.Column:
     return F.concat(F.lit(prefix), F.col(FRAGMENT_COL).cast("string")).alias(
         "fragment_name"
     )
+
+
+def _concat(spark: SparkSession, parts: list[DataFrame]) -> DataFrame:
+    """The scheme sides in order, range first; no rows if there are none."""
+    if not parts:
+        return spark.createDataFrame(
+            [], "fragment_name string, userid int, movieid int, rating double"
+        )
+    return functools.reduce(DataFrame.unionAll, parts)
 
 
 def range_query(
@@ -110,14 +120,7 @@ def range_query(
         )
         parts.append(rr)
 
-    if not parts:
-        return spark.createDataFrame(
-            [], "fragment_name string, userid int, movieid int, rating double"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    return _concat(spark, parts)
 
 
 def point_query(
@@ -157,14 +160,7 @@ def point_query(
         )
         parts.append(rr)
 
-    if not parts:
-        return spark.createDataFrame(
-            [], "fragment_name string, userid int, movieid int, rating double"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    return _concat(spark, parts)
 
 
 def write_result_file(df: DataFrame, output_path: str) -> int:

@@ -12,10 +12,10 @@ values are engineered to hash-match:
 - **Top-k/window queries carry explicit unique tie-breaks.**
 - Floating similarity scores are rounded to 6 digits on both sides.
 
-The fragmentation queries re-express the reference engine's semantics
+The fragmentation queries run the reference engine's semantics
 (fixed-domain range buckets, deterministic round-robin, provenance +
-dual-scheme emission — Interface1.py:122-140, 169-174, 261-347) over
-the driver's synthetic ``lineitem`` table, per FIXTURES.md §1.
+dual-scheme emission — Interface1.py:122-140, 169-174, 261-347) on the
+driver's synthetic ``lineitem`` fragmented once (``_frag_warehouse``).
 """
 
 from __future__ import annotations
@@ -27,8 +27,10 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import api
 from ..artifacts import artifact_path, build_once
 from ..cache import track as _track_cached
+from ..catalog import FragmentCatalog
 from ..functions import text as T
 from ..functions.lattice import flr as _flr
 from ..functions import vectors as V
@@ -37,13 +39,16 @@ from ..operators import merge as MergeOp
 from ..operators import sampling as SampleOp
 from ..operators import similarity as S
 from ..operators.fragmentation import (
+    assign_range_fragments,
+    assign_round_robin_fragments,
     hash_fragment_expr,
     range_fragment_expr,
-    round_robin_fragment_expr,
+    read_fragmented,
+    write_fragmented,
 )
-from ..operators.query import provenance, range_owner_fragment
+from ..operators.query import range_owner_fragment
 from ..operators.scaling import stable_row_number, widen
-from ..schema import RANGE_PREFIX, RR_PREFIX
+from ..schema import FRAGMENT_COL
 
 # ---------------------------------------------------------------------------
 # shared constants (embedded into BOTH the Spark plans and the oracle SQL)
@@ -334,8 +339,8 @@ PQ_CODES = 8   # codebook entries per subspace
 
 # ---------------------------------------------------------------------------
 # ratings derivation (FIXTURES.md §1): deterministic mapping of lineitem
-# into the reference's ratings(userid, movieid, rating) relation, with a
-# stable row number for round-robin assignment.
+# into the reference's ratings(userid, movieid, rating) relation. The
+# oracle's row number ``rn`` is the round-robin assignment order.
 # ---------------------------------------------------------------------------
 RATINGS_CTE = """
 ratings AS (
@@ -348,36 +353,51 @@ ratings AS (
 """
 
 
-#: plan cache for the ratings derivation: stable_row_number runs two
-#: tiny prep jobs (key min/max, bucket counts) at plan-build time; the
-#: inputs are immutable parquet, so the built plan is reusable across
-#: the five fragmentation queries within a session. Keyed on the Spark
-#: application id, not ``id(spark)``: a stopped session's object id can
-#: be reused by a new one, which would be handed a plan bound to a dead
-#: context.
-_RATINGS_PLANS: dict[tuple[str, str], DataFrame] = {}
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matches RATINGS_CTE exactly. The global row number (round-robin
-    assignment order) is computed with stable_row_number — bucketed,
-    parallel, deterministic — NOT a no-PARTITION window, which would
-    sort the whole relation in one task (operators/scaling.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RATINGS_PLANS:
-        return _RATINGS_PLANS[key]
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity", "l_linenumber"
-    )
-    li = stable_row_number(li, ["l_orderkey", "l_linenumber"], out_col="rn")
-    out = li.select(
+def _as_ratings(li: DataFrame, *keep: str) -> DataFrame:
+    """RATINGS_CTE's columns but ``rn``, from ``lineitem`` rows, plus ``keep``."""
+    return li.select(
         F.col("l_orderkey").cast("int").alias("userid"),
         F.col("l_partkey").cast("int").alias("movieid"),
         (F.round((F.col("l_quantity") % 5.5) * 2) / 2.0).alias("rating"),
-        "rn",
+        *keep,
     )
-    _RATINGS_PLANS[key] = out
-    return out
+
+
+def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _as_ratings(_t(spark, sf_dir, "lineitem"))
+
+
+def _frag_warehouse(spark: SparkSession, sf_dir: str) -> str:
+    """``_ratings`` fragmented RANGE_N ways under both reference schemes
+    in the ``api`` layout (``ratings_range/``, ``ratings_rr/``, catalog
+    sidecar), built once per corpus and code. Round-robin numbers
+    lineitem rows in the oracle's ``rn`` order: ``(userid, movieid)``
+    is not unique here, nor is ``(l_orderkey, l_linenumber)`` (1,161
+    tied pairs at sf0.001), whose ties DuckDB meets in file order, so
+    the file position breaks them (``_metadata`` survives a reshuffle)."""
+
+    def build(wh):
+        li = _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey", "l_quantity", "l_linenumber",
+            F.col("_metadata.file_path").alias("_file"),
+            F.col("_metadata.row_index").alias("_row"),
+        )
+        rng = assign_range_fragments(_as_ratings(li), "rating", RANGE_N, RANGE_MIN, RANGE_MAX)
+        write_fragmented(rng, f"{wh}/ratings_range")
+        rr = assign_round_robin_fragments(li, RANGE_N, ["l_orderkey", "l_linenumber", "_file", "_row"])
+        write_fragmented(_as_ratings(rr, FRAGMENT_COL), f"{wh}/ratings_rr")
+        total = li.count()
+        cat = FragmentCatalog(wh)  # what api.range/round_robin_partition record
+        cat.update_range(n=RANGE_N, min_value=RANGE_MIN, max_value=RANGE_MAX,
+                         interval=(RANGE_MAX - RANGE_MIN) / RANGE_N)
+        cat.update_round_robin(n=RANGE_N, last_inserted=(total - 1) % RANGE_N if total else -1)
+
+    return build_once(sf_dir, "frag_warehouse", ["lineitem"], build)
+
+
+def _frag_scheme(spark: SparkSession, sf_dir: str, scheme: str) -> DataFrame:
+    """The ``"range"`` or ``"rr"`` side of ``_frag_warehouse``."""
+    return read_fragmented(spark, f"{_frag_warehouse(spark, sf_dir)}/ratings_{scheme}")
 
 
 def _bucket_sql(col: str = "rating", n: int = RANGE_N) -> str:
@@ -389,10 +409,6 @@ def _bucket_sql(col: str = "rating", n: int = RANGE_N) -> str:
         f"THEN 0 ELSE CAST(CEIL(({col} - {RANGE_MIN}) / {iv}) AS INTEGER) - 1 END, "
         f"0), {n - 1}) AS INTEGER)"
     )
-
-
-def _bucket_col() -> F.Column:
-    return range_fragment_expr(F.col("rating"), RANGE_N, RANGE_MIN, RANGE_MAX)
 
 
 # ---------------------------------------------------------------------------

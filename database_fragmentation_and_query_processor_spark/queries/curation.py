@@ -1851,13 +1851,13 @@ REBALANCE_N = 8
 def q_frag_rebalance(spark, sf_dir):
     """Fragmentation lifecycle: re-partition the 5-fragment range scheme
     to 8 fragments and report the movement matrix (old → new → rows).
-    Both assignments are the same fixed-domain bucket expression — pure
-    narrow transformations, ONE shuffle for the matrix aggregate; no
-    data is rewritten to compute the plan, which is exactly how a
-    rebalance should be costed before committing to it."""
-    r = _ratings(spark, sf_dir)
+    Old = the stored range fragment, new = the fixed-domain bucket at 8
+    — narrow, ONE shuffle for the matrix aggregate; no data is
+    rewritten to compute the plan, which is exactly how a rebalance
+    should be costed before committing to it."""
+    r = _frag_scheme(spark, sf_dir, "range")
     return (
-        r.withColumn("old_fragment", _bucket_col())
+        r.withColumnRenamed("fragment_id", "old_fragment")
         .withColumn(
             "new_fragment",
             range_fragment_expr(F.col("rating"), REBALANCE_N, RANGE_MIN, RANGE_MAX),
@@ -1881,7 +1881,7 @@ def q_frag_skew_report(spark, sf_dir):
     actually observed, and the fragment's share of the table — the
     skew report that decides whether a range scheme needs rebalancing.
     One aggregate + a broadcast 1-row total."""
-    r = _ratings(spark, sf_dir).withColumn("fragment_id", _bucket_col())
+    r = _frag_scheme(spark, sf_dir, "range")
     per = r.groupBy("fragment_id").agg(
         F.count("*").cast("bigint").alias("cnt"),
         F.min("rating").alias("min_rating"),
@@ -1934,7 +1934,7 @@ def q_frag_insert_routing(spark, sf_dir):
     from ..operators.fragmentation import read_fragmented as _read_fragmented
 
     def build(wh):
-        base = _ratings(spark, sf_dir).drop("rn")
+        base = _ratings(spark, sf_dir)
         base.write.mode("overwrite").parquet(_os.path.join(wh, "ratings", "base"))
         _api.range_partition(spark, "ratings", RANGE_N, wh)
         _api.round_robin_partition(spark, "ratings", RANGE_N, wh)

@@ -20,8 +20,7 @@ _log = logging.getLogger(__name__)
 
 def q_frag_range_counts(spark, sf_dir):
     return (
-        _ratings(spark, sf_dir)
-        .withColumn("fragment_id", _bucket_col())
+        _frag_scheme(spark, sf_dir, "range")
         .groupBy("fragment_id")
         .agg(F.count("*").alias("cnt"))
     )
@@ -36,8 +35,7 @@ FROM ratings GROUP BY 1
 
 def q_frag_rr_counts(spark, sf_dir):
     return (
-        _ratings(spark, sf_dir)
-        .withColumn("fragment_id", round_robin_fragment_expr(F.col("rn"), RANGE_N))
+        _frag_scheme(spark, sf_dir, "rr")
         .groupBy("fragment_id")
         .agg(
             F.count("*").alias("cnt"),
@@ -55,26 +53,10 @@ FROM ratings GROUP BY 1
 """
 
 
-def _frag_both_schemes(spark, sf_dir, matches: F.Column):
-    """Rows matching ``matches`` from both schemes, range side first,
-    each named by its source fragment: a row matching in both schemes
-    appears twice (Interface1.py:261-347)."""
-    r = _ratings(spark, sf_dir)
-
-    def side(prefix, fragment):
-        return r.withColumn("fragment_id", fragment).where(matches).select(
-            provenance(prefix), "userid", "movieid", "rating"
-        )
-
-    return side(RANGE_PREFIX, _bucket_col()).unionAll(
-        side(RR_PREFIX, round_robin_fragment_expr(F.col("rn"), RANGE_N))
-    )
-
-
 def q_frag_range_query(spark, sf_dir):
-    """Reference rangeQuery(1.5, 3.5): pruned range side + full RR side,
-    provenance column, duplicate emission (Interface1.py:261-308)."""
-    return _frag_both_schemes(spark, sf_dir, F.col("rating").between(RQ_LO, RQ_HI))
+    """Reference rangeQuery(1.5, 3.5) on the fragmented warehouse
+    (api.range_query, Interface1.py:261-308)."""
+    return api.range_query(spark, RQ_LO, RQ_HI, _frag_warehouse(spark, sf_dir))
 
 
 SQL_FRAG_RANGE_QUERY = f"""
@@ -90,7 +72,8 @@ FROM ratings WHERE rating BETWEEN {RQ_LO} AND {RQ_HI}
 
 
 def q_frag_point_query(spark, sf_dir):
-    return _frag_both_schemes(spark, sf_dir, F.col("rating") == PQ_VALUE)
+    """Reference pointQuery(4.5) (api.point_query, Interface1.py:310-347)."""
+    return api.point_query(spark, PQ_VALUE, _frag_warehouse(spark, sf_dir))
 
 
 SQL_FRAG_POINT_QUERY = f"""
@@ -107,18 +90,17 @@ FROM ratings WHERE rating = {PQ_VALUE}
 
 def q_frag_reconstruction(spark, sf_dir):
     """Completeness/disjointness/reconstruction triple as one row
-    (testHelper1.py:116-150 style)."""
-    r = _ratings(spark, sf_dir).withColumn("fragment_id", _bucket_col())
-    base = r.agg(F.count("*").alias("base_cnt"))
-    rng = r.agg(
-        F.count("*").alias("range_cnt"),
-        F.countDistinct("fragment_id").alias("n_range_fragments"),
-    )
-    rr = r.withColumn("rr_id", round_robin_fragment_expr(F.col("rn"), RANGE_N)).agg(
-        F.count("*").alias("rr_cnt"),
-        F.countDistinct("rr_id").alias("n_rr_fragments"),
-    )
-    return base.crossJoin(rng).crossJoin(rr)
+    (testHelper1.py:116-150 style): the relation against each scheme's
+    fragments."""
+
+    def side(scheme):
+        return _frag_scheme(spark, sf_dir, scheme).agg(
+            F.count("*").alias(f"{scheme}_cnt"),
+            F.countDistinct("fragment_id").alias(f"n_{scheme}_fragments"),
+        )
+
+    base = _ratings(spark, sf_dir).agg(F.count("*").alias("base_cnt"))
+    return base.crossJoin(side("range")).crossJoin(side("rr"))
 
 
 SQL_FRAG_RECONSTRUCTION = f"""

@@ -2668,7 +2668,7 @@ def q_frag_pruning_report(spark, sf_dir):
     on the fixed [0,5] domain. This is the report a DBA reads to pick
     the partitioning scheme — pruned row fraction ≈ selectivity for
     range probes, always 1.0 for RR."""
-    r = _ratings(spark, sf_dir).withColumn("fragment_id", _bucket_col())
+    r = _frag_scheme(spark, sf_dir, "range")
     aggs = []
     for i, (lo, hi) in enumerate(FRAG_PROBES):
         lf, hf = _probe_fragment(lo), _probe_fragment(hi)

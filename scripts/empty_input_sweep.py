@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
-import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -26,19 +24,16 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 
 
 def make_empty_dir(spark, src="/root/testdata/sf0.001") -> str:
-    out = os.path.join(tempfile.gettempdir(), "dfqp_empty_sf")
-    marker = os.path.join(out, "_READY")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        df = spark.read.parquet(os.path.join(src, f"{t}.parquet")).limit(0)
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"{t}.parquet")
-        )
-    with open(marker, "w") as f:
-        f.write("ok")
-    return out
+    """Every fixture table of ``src`` with its schema and no rows, built
+    once in the artifact store, keyed on those tables."""
+    from database_fragmentation_and_query_processor_spark.artifacts import build_once
+
+    def build(out):
+        for t in TABLES:
+            df = spark.read.parquet(os.path.join(src, f"{t}.parquet")).limit(0)
+            df.coalesce(1).write.parquet(os.path.join(out, f"{t}.parquet"))
+
+    return build_once(src, "empty_sf", TABLES, build)
 
 
 def main() -> int:

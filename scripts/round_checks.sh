@@ -14,6 +14,7 @@ python -m compileall -q database_fragmentation_and_query_processor_spark \
 echo "== registry window tripwires =="
 python -m pytest tests/test_registry_window.py tests/test_bench_contract.py \
     tests/test_session.py tests/test_artifacts.py \
+    tests/test_partition_invariance.py::test_frag_warehouse_build_survives_repartition \
     -q -p no:cacheprovider
 
 echo "== driver-invocation dry run (first 50 + next 6, sf0.01) =="

@@ -12,35 +12,17 @@ of 321 at the r12 state); the guard lives at the registry boundary
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 
 from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from scripts.empty_input_sweep import TABLES, make_empty_dir
 
 from .oracle_harness import compare, duck_connection
-
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
 
 
 @pytest.fixture(scope="module")
 def empty_dir(spark):
-    out = os.path.join(tempfile.gettempdir(), "dfqp_empty_sf")
-    marker = os.path.join(out, "_READY")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
-        for t in TABLES:
-            df = spark.read.parquet(
-                f"/root/testdata/sf0.001/{t}.parquet"
-            ).limit(0)
-            df.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(out, f"{t}.parquet")
-            )
-        with open(marker, "w") as f:
-            f.write("ok")
-    return out
+    return make_empty_dir(spark)
 
 
 @pytest.fixture(scope="module")

@@ -87,21 +87,3 @@ def test_dedup_ann_stack_assumptions(sf_dir):
     assert emb["embedding"].null_count == 0
     lens = pc.unique(pc.list_value_length(emb["embedding"].combine_chunks()))
     assert len(lens) == 1, f"ragged embedding dims: {lens.to_pylist()}"
-
-
-def test_ratings_plan_cache_is_keyed_on_the_spark_application(spark, sf_dir, monkeypatch):
-    """The ratings-derivation plan cache must not outlive its session. A
-    new session can reuse a stopped one's Python object id; it must get
-    a fresh plan, not one bound to the dead context. Modeled by keeping
-    the session object and changing the application under it."""
-    from pyspark import SparkContext
-
-    from database_fragmentation_and_query_processor_spark.queries import common
-
-    monkeypatch.setattr(common, "_RATINGS_PLANS", {})
-    first = common._ratings(spark, sf_dir)
-    assert common._ratings(spark, sf_dir) is first
-    monkeypatch.setattr(
-        SparkContext, "applicationId", property(lambda self: "local-restarted")
-    )
-    assert common._ratings(spark, sf_dir) is not first

@@ -251,7 +251,15 @@ def test_hash_owner_fragment_matches_column_expression(spark):
     assert got == {k: tuple(hash_owner_fragment(k, n) for n in ns) for k in keys}
 
 
-def _assert_declared_schemas(spark, warehouse):
+_DECLARED = {
+    "ratings/base": RATINGS_SCHEMA,
+    "ratings_range": FRAGMENTED_SCHEMA,
+    "ratings_rr": FRAGMENTED_SCHEMA,
+    "ratings_hash": FRAGMENTED_SCHEMA,
+}
+
+
+def _assert_declared_schemas(spark, warehouse, subdirs=tuple(_DECLARED)):
     """Inferred from every file (mergeSchema), each dataset must carry
     the declared names and types that the package's reads assume."""
 
@@ -259,14 +267,8 @@ def _assert_declared_schemas(spark, warehouse):
         sch = spark.read.option("mergeSchema", "true").parquet(path).schema
         return [(f.name, f.dataType) for f in sch.fields]
 
-    declared = {
-        "ratings/base": RATINGS_SCHEMA,
-        "ratings_range": FRAGMENTED_SCHEMA,
-        "ratings_rr": FRAGMENTED_SCHEMA,
-        "ratings_hash": FRAGMENTED_SCHEMA,
-    }
-    for sub, schema in declared.items():
-        want = [(f.name, f.dataType) for f in schema.fields]
+    for sub in subdirs:
+        want = [(f.name, f.dataType) for f in _DECLARED[sub].fields]
         assert names_types(f"{warehouse}/{sub}") == want, sub
 
 
@@ -300,3 +302,16 @@ def test_insert_routing_warehouse_matches_declared_schema(
     warehouse = artifact_path(sf_dir, "insert_routing", "lineitem")
     assert _QUERIES_ALL["frag_insert_routing"](spark, sf_dir).count() > 0
     _assert_declared_schemas(spark, warehouse)
+
+
+def test_frag_warehouse_matches_declared_schema(spark, sf_dir, tmp_path, monkeypatch):
+    """The registry's fragmentation queries read a warehouse fragmented
+    from the lineitem-derived relation (queries.common._frag_warehouse);
+    both schemes must carry the declared schema."""
+    import tempfile
+
+    from database_fragmentation_and_query_processor_spark.queries import common
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    warehouse = common._frag_warehouse(spark, sf_dir)
+    _assert_declared_schemas(spark, warehouse, ("ratings_range", "ratings_rr"))

@@ -16,6 +16,13 @@ def _canon(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _scramble(df):
+    # different partition count AND different intra-partition order
+    return df.repartition(7).sortWithinPartitions(
+        F.md5(F.concat_ws("|", *df.columns))
+    )
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -187,21 +194,37 @@ def test_result_survives_repartition(spark, sf_dir, name, monkeypatch):
     from database_fragmentation_and_query_processor_spark.queries import common as CQ
 
     real_t, real_events = CQ._t_impl, CQ._events_impl
-
-    def scramble(df):
-        # different partition count AND different intra-partition order
-        return df.repartition(7).sortWithinPartitions(
-            F.md5(F.concat_ws("|", *df.columns))
-        )
-
-    monkeypatch.setattr(CQ, "_t_impl", lambda s, d, table: scramble(real_t(s, d, table)))
-    monkeypatch.setattr(CQ, "_events_impl", lambda s, d: scramble(real_events(s, d)))
+    monkeypatch.setattr(CQ, "_t_impl", lambda s, d, table: _scramble(real_t(s, d, table)))
+    monkeypatch.setattr(CQ, "_events_impl", lambda s, d: _scramble(real_events(s, d)))
     try:
         again = _canon(EQ.QUERIES[name](spark, sf_dir))
     finally:
         monkeypatch.setattr(CQ, "_t_impl", real_t)
         monkeypatch.setattr(CQ, "_events_impl", real_events)
     assert base == again, f"{name} is partition-order sensitive"
+
+
+def test_frag_warehouse_build_survives_repartition(spark, sf_dir, tmp_path, monkeypatch):
+    """The frag_* queries read one build-once warehouse, so running one
+    twice above compares an artifact hit with itself. Build the
+    warehouse twice instead, each into its own store, the second from
+    scrambled scans: every fragment of both schemes must hold the same
+    rows, and the catalogs must agree."""
+    import tempfile
+
+    from database_fragmentation_and_query_processor_spark.catalog import FragmentCatalog
+    from database_fragmentation_and_query_processor_spark.queries import common as CQ
+
+    def build(store):
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / store))
+        cat = FragmentCatalog(CQ._frag_warehouse(spark, sf_dir))
+        rows = {s: _canon(CQ._frag_scheme(spark, sf_dir, s)) for s in ("range", "rr")}
+        return rows, (cat.range_meta(), cat.round_robin_meta(), cat.hash_meta())
+
+    plain = build("plain")
+    real_t = CQ._t_impl
+    monkeypatch.setattr(CQ, "_t_impl", lambda s, d, table: _scramble(real_t(s, d, table)))
+    assert build("scrambled") == plain
 
 
 def test_pagerank_invariant_to_edge_partitioning(spark):

@@ -78,14 +78,22 @@ def test_q3_dimension_filters_pushed(spark, sf_dir):
     assert "o_orderdate" in pushed and "l_shipdate" in pushed
 
 
-def test_warehouse_point_query_partition_pruning(spark, ratings_file, warehouse):
+@pytest.mark.parametrize("source", ["api", "registry"])
+def test_warehouse_point_query_partition_pruning(
+    source, spark, sf_dir, ratings_file, warehouse
+):
     """The reference's 1-of-n fragment touch (Interface1.py:323-331)
     must appear as a PartitionFilters entry, i.e. Catalyst skips the
-    other fragment directories at file-listing time."""
-    api.load_ratings(spark, "ratings", ratings_file, warehouse)
-    api.range_partition(spark, "ratings", 5, warehouse)
-    api.round_robin_partition(spark, "ratings", 5, warehouse)
-    df = api.point_query(spark, 4.5, warehouse)
+    other fragment directories at file-listing time. The registry's
+    frag_point_query (value 4.5) reads its fragmented warehouse the same
+    way."""
+    if source == "api":
+        api.load_ratings(spark, "ratings", ratings_file, warehouse)
+        api.range_partition(spark, "ratings", 5, warehouse)
+        api.round_robin_partition(spark, "ratings", 5, warehouse)
+        df = api.point_query(spark, 4.5, warehouse)
+    else:
+        df = EQ.QUERIES["frag_point_query"](spark, sf_dir)
     parts = " ".join(partition_filters(df))
     assert "fragment_id = 4" in parts, parts
     # rating equality also pushed into the parquet scan
@@ -138,6 +146,15 @@ def test_warehouse_plan_build_starts_no_spark_job(spark, ratings_file, warehouse
     }
     jobs = {name: _jobs_started(spark, build) for name, build in builds.items()}
     assert jobs == dict.fromkeys(builds, 0), jobs
+
+
+def test_ratings_projection_starts_no_spark_job(spark, sf_dir):
+    """The registry's ratings relation is a projection of lineitem:
+    building it starts no job beyond reading lineitem."""
+    from database_fragmentation_and_query_processor_spark.queries import common
+
+    read = _jobs_started(spark, lambda: common._t(spark, sf_dir, "lineitem"))
+    assert _jobs_started(spark, lambda: common._ratings(spark, sf_dir)) == read
 
 
 def test_range_and_hash_partition_start_only_their_write(spark, ratings_file, warehouse):
