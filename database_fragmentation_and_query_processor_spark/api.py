@@ -24,7 +24,28 @@ Warehouse layout (one directory per logical table)::
     {warehouse}/{table}/base/                      # unfragmented parquet
     {warehouse}/{table}_range/fragment_id=i/       # range scheme
     {warehouse}/{table}_rr/fragment_id=i/          # round-robin scheme
+    {warehouse}/{table}_hash/fragment_id=i/        # hash scheme [EXT]
     {warehouse}/_frag_metadata.json                # catalogs + RR cursor
+    {warehouse}/_staging/                          # inserts' staged files
+    {warehouse}/_WRITER_LOCK                       # held while mutating
+
+A routed insert (``range_insert``, ``round_robin_insert``,
+``hash_insert``) runs no Spark job, like the reference's one-row
+PostgreSQL transaction (Interface1.py:183-259). Under the catalog's
+writer lock it reads the scheme's metadata (cursor included), routes
+the row on the driver, writes one one-row parquet file for the base
+and one for the owning fragment with pyarrow into ``_staging/``, and
+commits them with an intent record in the catalog sidecar
+(``catalog.FragmentCatalog.commit_insert``). Every mutation here (the
+load, the partitionings, the inserts, ``delete_tables`` of one table)
+first finishes an interrupted insert under the lock: it renames the
+staged files of a left-over intent into place and deletes staged files
+no intent names. So a crashed insert leaves either nothing visible or
+a torn insert (in base but not yet in its fragment) that the next
+mutation completes. Readers take no lock: between an insert's two
+renames, and from a crash until the next mutation, a reader can see
+the row in base but not in its fragment. Inserts, like the catalog,
+reach local and ``file://`` warehouses.
 
 Every read of a base or fragment dataset uses the declared schema
 (``RATINGS_SCHEMA``, or ``FRAGMENTED_SCHEMA`` via
@@ -44,12 +65,13 @@ the reference (Interface1.py:103-105).
 from __future__ import annotations
 
 import os
+from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs as fslib
-from .catalog import FragmentCatalog
+from .catalog import FragmentCatalog, section
 from .operators import fragmentation as frag
 from .operators import query as q
 from .schema import FRAGMENT_COL, RATINGS_SCHEMA
@@ -67,6 +89,9 @@ def _range_path(warehouse: str, table: str) -> str:
 def _rr_path(warehouse: str, table: str) -> str:
     return os.path.join(warehouse, f"{table}_rr")
 
+def _hash_path(warehouse: str, table: str) -> str:
+    return os.path.join(warehouse, f"{table}_hash")
+
 
 def _read_base(spark: SparkSession, warehouse: str, table: str) -> DataFrame:
     return spark.read.schema(RATINGS_SCHEMA).parquet(_base_path(warehouse, table))
@@ -80,6 +105,7 @@ def load_ratings(
     spark: SparkSession, table: str, filepath: str, warehouse: str
 ) -> DataFrame:
     """Distributed load of ``::`` text → parquet base table (op #1)."""
+    FragmentCatalog(warehouse, spark).recover()
     df = read_ratings_text(spark, filepath)
     df.write.mode("overwrite").parquet(_base_path(warehouse, table))
     return _read_base(spark, warehouse, table)
@@ -91,12 +117,14 @@ def range_partition(spark: SparkSession, table: str, n, warehouse: str) -> None:
         print("Invalid number of partitions:", n)
         return
     lo, hi = RATING_DOMAIN
+    cat = FragmentCatalog(warehouse)
+    cat.recover()
     df = _read_base(spark, warehouse, table)
     frag.write_fragmented(
         frag.assign_range_fragments(df, "rating", n, lo, hi),
         _range_path(warehouse, table),
     )
-    FragmentCatalog(warehouse).update_range(
+    cat.update_range(
         n=n, min_value=lo, max_value=hi, interval=(hi - lo) / n
     )
 
@@ -106,63 +134,104 @@ def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) ->
     if not _valid_n(n):
         print("Invalid number of partitions:", n)
         return
+    cat = FragmentCatalog(warehouse)
+    cat.recover()
     df = _read_base(spark, warehouse, table)
     # (userid, movieid) is the ratings natural key: a MovieLens user rates
     # a movie once (the registry's lineitem-derived relation repeats pairs,
     # so queries.common._frag_warehouse numbers lineitem rows) → JVM-side
     # bucketed numbering (operators/scaling.py), no Python RDD round-trip.
-    assigned = frag.assign_round_robin_fragments(
+    assigned, total = frag.assign_round_robin_fragments(
         df, n, order_cols=["userid", "movieid"]
     )
     frag.write_fragmented(assigned, _rr_path(warehouse, table))
-    total = df.count()
     # cursor = index of the last inserted row mod n (Interface1.py:176-177)
-    FragmentCatalog(warehouse).update_round_robin(
-        n=n, last_inserted=(total - 1) % n if total else -1
-    )
+    cat.update_round_robin(n=n, last_inserted=(total - 1) % n if total else -1)
 
 
-def _new_row(spark: SparkSession, userid: int, itemid: int, rating: float) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(userid), int(itemid), float(rating))], RATINGS_SCHEMA
+def _parquet_row(userid: int, itemid: int, rating: float) -> bytes:
+    """One row of the relation as the bytes of a parquet file, typed by
+    ``RATINGS_SCHEMA``. No Arrow schema is stored in the footer: the
+    parquet schema alone is what every reader of the warehouse uses."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    row = dict(zip(RATINGS_SCHEMA.names, (int(userid), int(itemid), float(rating))))
+    sink = pa.BufferOutputStream()
+    pq.write_table(
+        pa.Table.from_pylist([row], schema=to_arrow_schema(RATINGS_SCHEMA)),
+        sink, store_schema=False,
     )
+    return sink.getvalue().to_pybytes()
+
+
+def _route(scheme: str, meta, userid: int, itemid: int, rating: float) -> int:
+    """The fragment owning the row under ``scheme``'s metadata ``meta``,
+    by the rule its bulk partitioning applied."""
+    if scheme == "range":
+        return q.range_owner_fragment(rating, meta.n, meta.min_value, meta.max_value)
+    if scheme == "round_robin":
+        return (meta.last_inserted + 1) % meta.n
+    keys = {"userid": userid, "movieid": itemid}
+    if meta.key not in keys:
+        raise ValueError(
+            f"hash_insert routes on an integer key (userid or movieid); "
+            f"the hash scheme is keyed on {meta.key!r}"
+        )
+    return q.hash_owner_fragment(keys[meta.key], meta.n)
+
+
+def _routed_insert(
+    scheme: str, fragments: str, table: str, userid: int, itemid: int,
+    rating: float, warehouse: str,
+) -> None:
+    """Append one row to the base and to its owning fragment of
+    ``scheme`` (stored under ``fragments``) as one commit, with no Spark
+    job; the protocol, recovery and reader window are in the module
+    docstring. With no ``scheme`` partitions the row goes to base only,
+    and a message says so, as in the reference."""
+    data = _parquet_row(userid, itemid, rating)
+    cat = FragmentCatalog(warehouse)
+    with cat.mutation() as doc:
+        meta = section(doc, scheme)
+        owner = _route(scheme, meta, userid, itemid, rating) if meta.n > 0 else None
+        staged = [cat.stage(data, _base_path(warehouse, table))]
+        if owner is not None:
+            staged.append(cat.stage(data, fslib.join(fragments, f"{FRAGMENT_COL}={owner}")))
+            if scheme == "round_robin":
+                meta.last_inserted = owner
+                doc[scheme] = asdict(meta)
+        cat.commit_insert(doc, staged)
+    if owner is None:
+        print(f"There are no {scheme.replace('_', ' ')} partitions to insert")
 
 
 def range_insert(
     spark: SparkSession, table: str, userid: int, itemid: int, rating: float,
     warehouse: str,
 ) -> None:
-    """Dual-write: append to base AND to the owning range fragment
-    (op #5, Interface1.py:215-259)."""
-    row = _new_row(spark, userid, itemid, rating)
-    row.write.mode("append").parquet(_base_path(warehouse, table))
-    meta = FragmentCatalog(warehouse).range_meta()
-    if meta.n <= 0:
-        print("There are no range partitions to insert")
-        return
-    owner = q.range_owner_fragment(rating, meta.n, meta.min_value, meta.max_value)
-    row.withColumn(FRAGMENT_COL, F.lit(owner)).write.mode("append").partitionBy(
-        FRAGMENT_COL
-    ).parquet(_range_path(warehouse, table))
+    """Append to base AND to the owning range fragment (op #5,
+    Interface1.py:215-259), routed on the driver by the catalog's
+    domain bounds read under the writer lock. Starts no Spark job
+    (``spark`` is unused); one all-or-nothing commit, completed by the
+    next mutation after a crash (module docstring)."""
+    _routed_insert("range", _range_path(warehouse, table), table,
+                   userid, itemid, rating, warehouse)
 
 
 def round_robin_insert(
     spark: SparkSession, table: str, userid: int, itemid: int, rating: float,
     warehouse: str,
 ) -> None:
-    """Dual-write with rotating cursor (op #6, Interface1.py:183-213)."""
-    row = _new_row(spark, userid, itemid, rating)
-    row.write.mode("append").parquet(_base_path(warehouse, table))
-    cat = FragmentCatalog(warehouse)
-    meta = cat.round_robin_meta()
-    if meta.n <= 0:
-        print("There are no round robin partitions to insert")
-        return
-    owner = (meta.last_inserted + 1) % meta.n
-    row.withColumn(FRAGMENT_COL, F.lit(owner)).write.mode("append").partitionBy(
-        FRAGMENT_COL
-    ).parquet(_rr_path(warehouse, table))
-    cat.update_round_robin(last_inserted=owner)
+    """Append to base AND to fragment ``(cursor + 1) % n`` (op #6,
+    Interface1.py:183-213). The cursor is read and advanced under the
+    writer lock, in the same sidecar write that records the insert's
+    intent, so two inserters never pick the same owner and a torn
+    insert has already advanced it once. Starts no Spark job (``spark``
+    is unused); commit and recovery as in the module docstring."""
+    _routed_insert("round_robin", _rr_path(warehouse, table), table,
+                   userid, itemid, rating, warehouse)
 
 
 def range_query(
@@ -191,10 +260,6 @@ def point_query(
     return df
 
 
-def _hash_path(warehouse: str, table: str) -> str:
-    return os.path.join(warehouse, f"{table}_hash")
-
-
 def hash_partition(
     spark: SparkSession, table: str, n, warehouse: str, key: str = "userid"
 ) -> None:
@@ -204,30 +269,27 @@ def hash_partition(
     if not _valid_n(n):
         print("Invalid number of partitions:", n)
         return
+    cat = FragmentCatalog(warehouse)
+    cat.recover()
     df = _read_base(spark, warehouse, table)
     frag.write_fragmented(
         frag.assign_hash_fragments(df, key, n), _hash_path(warehouse, table)
     )
-    FragmentCatalog(warehouse).update_hash(n=n, key=key)
+    cat.update_hash(n=n, key=key)
 
 
 def hash_insert(
     spark: SparkSession, table: str, userid: int, itemid: int, rating: float,
     warehouse: str,
 ) -> None:
-    """[EXT] Dual-write routed by the catalog's hash scheme."""
-    row = _new_row(spark, userid, itemid, rating)
-    row.write.mode("append").parquet(_base_path(warehouse, table))
-    meta = FragmentCatalog(warehouse).hash_meta()
-    if meta.n <= 0:
-        print("There are no hash partitions to insert")
-        return
-    routed = row.withColumn(
-        FRAGMENT_COL, frag.hash_fragment_expr(F.col(meta.key), meta.n)
-    )
-    routed.write.mode("append").partitionBy(FRAGMENT_COL).parquet(
-        _hash_path(warehouse, table)
-    )
+    """[EXT] Append to base AND to the fragment owning the row's key
+    under the catalog's hash scheme: ``query.hash_owner_fragment``, the
+    driver-side twin of ``hash_fragment_expr``, so only an integer key
+    (userid or movieid) routes; another key raises before anything is
+    written. Starts no Spark job (``spark`` is unused); commit and
+    recovery as in the module docstring."""
+    _routed_insert("hash", _hash_path(warehouse, table), table,
+                   userid, itemid, rating, warehouse)
 
 
 def hash_key_lookup(
@@ -322,6 +384,9 @@ def delete_tables(spark: SparkSession, table_or_all: str, warehouse: str) -> Non
     if table_or_all.upper() == "ALL":
         wfs.delete(warehouse, recursive=True)
         return
+    if wfs.exists(warehouse):
+        # an interrupted insert must not land in the table after its drop
+        FragmentCatalog(warehouse, fs=wfs).recover()
     for p in (
         os.path.join(warehouse, table_or_all),
         _range_path(warehouse, table_or_all),

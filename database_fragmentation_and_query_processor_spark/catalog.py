@@ -16,17 +16,39 @@ the same concurrency model as the reference (one client connection).
 At 100 TB scale this sidecar stays O(1): it holds only the partitioning
 function's parameters (scheme, n, domain bounds, RR cursor), never any
 per-row or per-file state — fragment membership is a computed column and
-file layout, both handled by Spark's partitioned-dataset machinery.
+file layout, both handled by Spark's partitioned-dataset machinery. The
+one exception is bounded: while a routed insert commits, the sidecar
+also carries that insert's intent (``insert_intent``: its stage → final
+renames, at most two), and at most one intent exists at a time.
+
+Routed inserts commit through it (:meth:`FragmentCatalog.mutation`,
+:meth:`FragmentCatalog.stage`, :meth:`FragmentCatalog.commit_insert`):
+under the writer lock the insert stages its files in the hidden
+``{warehouse}/_staging/`` directory, writes the sidecar once with the
+intent (and, for round-robin, the advanced cursor), renames each staged
+file into place and writes the sidecar again without the intent. Every
+mutation enters the lock through :meth:`FragmentCatalog.mutation`, which
+first rolls a left-over intent forward (renaming each staged file whose
+final name is absent) and deletes staged files no intent names (a
+writer that died before its intent write). So an insert is all or
+nothing once the next writer has run: a crash leaves either no visible
+file or a torn insert that the next mutation completes.
 """
 
 from __future__ import annotations
 
+import posixpath
+import uuid
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 
 from . import fs as fslib
 
 METADATA_FILENAME = "_frag_metadata.json"
+#: Hidden warehouse directory where routed inserts stage their files.
+STAGING_DIR = "_staging"
+#: Sidecar key of the one pending insert: ``[[stage, final], ...]``.
+INTENT_KEY = "insert_intent"
 
 
 @dataclass
@@ -66,6 +88,7 @@ class FragmentCatalog:
         overrides both."""
         self.warehouse = warehouse
         self.path = fslib.join(warehouse, METADATA_FILENAME)
+        self.staging = fslib.join(warehouse, STAGING_DIR)
         self._fs = fs if fs is not None else fslib.fs_for(warehouse, spark)
 
     # -- raw IO (all through the warehouse FS shim) ---------------------
@@ -89,13 +112,12 @@ class FragmentCatalog:
         finally:
             fslib.release_writer_lock(self._fs, lock)
 
-    def _update(self, scheme: str, cls, **changes):
+    def _update(self, scheme: str, **changes):
         """One locked read-modify-write of ``scheme``'s section: read
         the sidecar once, set every field whose change is not None,
         write it back."""
-        with self._locked():
-            doc = self._read()
-            meta = _section(doc, scheme, cls)
+        with self.mutation() as doc:
+            meta = section(doc, scheme)
             for field, value in changes.items():
                 if value is not None:
                     setattr(meta, field, value)
@@ -103,9 +125,62 @@ class FragmentCatalog:
             self._write(doc)
         return meta
 
+    # -- routed-insert commit (module docstring) ------------------------
+    @contextmanager
+    def mutation(self):
+        """The writer lock, entered with any interrupted insert finished
+        (:meth:`_recover`); yields the sidecar document read under it."""
+        with self._locked():
+            yield self._recover()
+
+    def recover(self) -> None:
+        """Finish or clean up an interrupted insert; a no-op otherwise."""
+        with self.mutation():
+            pass
+
+    def _recover(self) -> dict:
+        """(Lock held.) Roll a left-over intent forward, then delete the
+        staged files that no intent names. Returns the sidecar."""
+        doc = self._read()
+        renames = doc.pop(INTENT_KEY, None)
+        if renames:
+            self._publish(renames)
+            self._write(doc)
+        if self._fs.exists(self.staging):
+            for path, _is_dir, _size, _mtime in self._fs.list_status(self.staging):
+                self._fs.delete(path, recursive=True)
+        return doc
+
+    def _publish(self, renames) -> None:
+        for stage, final in renames:
+            if not self._fs.exists(final):
+                self._fs.makedirs(posixpath.dirname(final))
+                self._fs.rename(stage, final)
+
+    def stage(self, data: bytes, final_dir: str) -> tuple[str, str]:
+        """(Under :meth:`mutation`.) Write ``data`` as a staged parquet
+        file bound for ``final_dir``; returns ``(stage, final)`` paths.
+        The final name is Spark-visible (``part-<uuid>-c000.parquet``);
+        the staged one is not, being under ``_staging/``."""
+        name = f"part-{uuid.uuid4()}-c000.parquet"
+        stage = fslib.join(self.staging, name)
+        self._fs.write_bytes(stage, data)
+        return stage, fslib.join(final_dir, name)
+
+    def commit_insert(self, doc: dict, staged: list[tuple[str, str]]) -> None:
+        """(Under :meth:`mutation`.) Publish ``staged`` files: write the
+        sidecar ``doc`` with the intent, rename each file into place in
+        order, write the sidecar again without the intent. A reader sees
+        the files appear one rename at a time."""
+        doc[INTENT_KEY] = [list(pair) for pair in staged]
+        self._write(doc)
+        del doc[INTENT_KEY]
+        self._publish(staged)
+        self._write(doc)
+
     # -- range ----------------------------------------------------------
     def range_meta(self) -> RangeMetadata:
-        return _section(self._read(), "range", RangeMetadata)
+        return section(self._read(), "range")
 
     def update_range(
         self,
@@ -118,7 +193,6 @@ class FragmentCatalog:
         (Interface1.py:84-95): a negative argument means "don't touch"."""
         return self._update(
             "range",
-            RangeMetadata,
             n=int(n) if n >= 0 else None,
             min_value=float(min_value) if min_value >= 0 else None,
             max_value=float(max_value) if max_value >= 0 else None,
@@ -127,7 +201,7 @@ class FragmentCatalog:
 
     # -- round robin ----------------------------------------------------
     def round_robin_meta(self) -> RoundRobinMetadata:
-        return _section(self._read(), "round_robin", RoundRobinMetadata)
+        return section(self._read(), "round_robin")
 
     def update_round_robin(self, n: int = -1, last_inserted: int = -2) -> RoundRobinMetadata:
         """Partial update; ``last_inserted`` uses ``>= -1`` because -1 is a
@@ -135,30 +209,31 @@ class FragmentCatalog:
         but its init path writes -1 directly, Interface1.py:58)."""
         return self._update(
             "round_robin",
-            RoundRobinMetadata,
             n=int(n) if n >= 0 else None,
             last_inserted=int(last_inserted) if last_inserted >= -1 else None,
         )
 
     # -- hash [EXT] -----------------------------------------------------
     def hash_meta(self) -> HashMetadata:
-        return _section(self._read(), "hash", HashMetadata)
+        return section(self._read(), "hash")
 
     def update_hash(self, n: int = -1, key: str | None = None) -> HashMetadata:
-        return self._update("hash", HashMetadata, n=int(n) if n >= 0 else None, key=key)
+        return self._update("hash", n=int(n) if n >= 0 else None, key=key)
 
     def clear(self, scheme: str | None = None) -> None:
-        with self._locked():
+        with self.mutation() as doc:
             if scheme is None:
                 self._fs.delete(self.path)
                 return
-            doc = self._read()
             doc.pop(scheme, None)
             self._write(doc)
 
 
-def _section(doc: dict, scheme: str, cls):
-    """``scheme``'s metadata from a sidecar document, or ``cls``'s
-    defaults when the scheme has none."""
-    fields = doc.get(scheme)
+_SECTIONS = {"range": RangeMetadata, "round_robin": RoundRobinMetadata, "hash": HashMetadata}
+
+
+def section(doc: dict, scheme: str):
+    """``scheme``'s metadata from a sidecar document, or its defaults
+    when the scheme has none."""
+    cls, fields = _SECTIONS[scheme], doc.get(scheme)
     return cls(**fields) if fields else cls()

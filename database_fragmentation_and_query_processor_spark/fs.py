@@ -96,6 +96,14 @@ class LocalFS:
         with open(self._local(path)) as f:
             return f.read()
 
+    def write_bytes(self, path: str, data: bytes) -> None:
+        """Create or overwrite ``path`` with ``data`` (not atomic: the
+        callers write under a hidden name and rename into place)."""
+        p = self._local(path)
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "wb") as f:
+            f.write(data)
+
     def write_text_atomic(self, path: str, text: str) -> None:
         p = self._local(path)
         os.makedirs(os.path.dirname(p), exist_ok=True)
@@ -181,15 +189,15 @@ class HadoopFS:
         self._jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, True)
         return baos.toString("UTF-8")
 
-    def _create(self, path: str, text: str) -> None:
+    def write_bytes(self, path: str, data: bytes) -> None:
         out = self._fs.create(self._Path(path), True)
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
         out.close()
 
     def write_text_atomic(self, path: str, text: str) -> None:
         if self.atomic_rename:
             tmp = f"{path}.tmp-{os.getpid()}"
-            self._create(tmp, text)
+            self.write_bytes(tmp, text.encode("utf-8"))
             # overwrite-rename: Hadoop rename won't clobber, delete first
             dst = self._Path(path)
             if self._fs.exists(dst):
@@ -198,7 +206,7 @@ class HadoopFS:
                 raise OSError(f"rename failed: {tmp} -> {path}")
         else:
             # object stores: a single PUT is atomic per object
-            self._create(path, text)
+            self.write_bytes(path, text.encode("utf-8"))
 
     def rename(self, src: str, dst: str) -> None:
         if not self._fs.rename(self._Path(src), self._Path(dst)):
@@ -660,10 +668,7 @@ def acquire_writer_lock(
             if held:
                 return lock
             continue
-        try:
-            doc = json.loads(fs.read_text(lock))
-        except Exception:
-            doc = {}
+        doc = _lock_doc(fs, lock)
         age_sec = (time.time_ns() - int(doc.get("acquired_ns", 0))) / 1e9
         if age_sec > float(doc.get("ttl_sec", ttl_sec)):
             # Break the stale lock by ATOMIC RENAME to a unique
@@ -685,6 +690,27 @@ def acquire_writer_lock(
             f"({age_sec:.0f}s old, ttl {doc.get('ttl_sec', ttl_sec)}s)"
         )
     raise LockHeldError(f"could not acquire writer lock on {dir_path}")
+
+
+def _lock_doc(fs, lock: str) -> dict:
+    """The lock file's payload. An empty or partial one belongs to a
+    contender between its create and its write (or one that died
+    there): it is dated by the file's mtime, so a live contender's lock
+    is not broken as stale while a dead one's still ages out. A lock
+    gone by now was just released; it reads as fresh, and the caller
+    fails fast as for any live lock."""
+    try:
+        return json.loads(fs.read_text(lock))
+    except Exception:
+        pass
+    name = posixpath.basename(lock)
+    try:
+        for path, _is_dir, _size, mtime_ns in fs.list_status(posixpath.dirname(lock)):
+            if posixpath.basename(path) == name:
+                return {"acquired_ns": mtime_ns}
+    except Exception:
+        pass
+    return {"acquired_ns": time.time_ns()}
 
 
 def release_writer_lock(fs, lock_path: str) -> None:

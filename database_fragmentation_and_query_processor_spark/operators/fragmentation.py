@@ -72,8 +72,9 @@ def assign_range_fragments(
 
 def assign_round_robin_fragments(
     df: DataFrame, n: int, order_cols: list[str]
-) -> DataFrame:
-    """Deterministic (row k → k mod n) assignment.
+) -> tuple[DataFrame, int]:
+    """Deterministic (row k → k mod n) assignment, and the row total
+    (for the insert cursor) from the numbering's own pre-pass.
 
     The reference's test oracle demands exact ``(rownum-1) % n``
     (testHelper1.py:95-99) — an oracle on per-fragment COUNTS, which any
@@ -89,10 +90,12 @@ def assign_round_robin_fragments(
     """
     from .scaling import stable_row_number
 
-    with_idx = stable_row_number(df, order_cols, out_col="_row_idx")
+    with_idx, total = stable_row_number(
+        df, order_cols, out_col="_row_idx", with_total=True
+    )
     return with_idx.withColumn(
         FRAGMENT_COL, round_robin_fragment_expr(F.col("_row_idx"), n)
-    ).drop("_row_idx")
+    ).drop("_row_idx"), total
 
 
 def write_fragmented(df: DataFrame, path: str, mode: str = "overwrite") -> None:

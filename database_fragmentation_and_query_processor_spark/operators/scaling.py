@@ -43,12 +43,15 @@ def stable_row_number(
     order_cols: list[str],
     out_col: str = "rn",
     n_buckets: int | None = None,
-) -> DataFrame:
+    with_total: bool = False,
+):
     """0-based global row number by ``order_cols`` without a global sort.
 
     Equivalent to ``ROW_NUMBER() OVER (ORDER BY order_cols) - 1`` when
     ``order_cols`` form a unique key. One eager *narrow* pre-pass
-    (min/max of the leading key — column-pruned scan), then ONE lazy
+    (min/max of the leading key and the row count — column-pruned
+    scan; ``with_total=True`` returns ``(frame, count)`` so a caller
+    needing the total runs no second scan), then ONE lazy
     plan: per-bucket counts → in-plan exclusive bases (bounded explode
     fan-out, broadcast-joined back) → a parallel window partitioned by
     bucket. Buckets are computed from fixed arithmetic on the leading
@@ -65,10 +68,10 @@ def stable_row_number(
     n = n_buckets or spark.sparkContext.defaultParallelism
     lead = order_cols[0]
 
-    lo_hi = df.agg(F.min(lead).alias("lo"), F.max(lead).alias("hi")).head()
-    lo, hi = lo_hi["lo"], lo_hi["hi"]
+    lo, hi, total = df.agg(F.min(lead), F.max(lead), F.count("*")).head()
     if lo is None:  # empty input
-        return df.withColumn(out_col, F.lit(0).cast("bigint"))
+        out = df.withColumn(out_col, F.lit(0).cast("bigint"))
+        return (out, total) if with_total else out
     span = max(int(hi) - int(lo) + 1, 1)
     width = -(-span // n)  # ceil — last bucket absorbs the remainder
     bucket = F.least(
@@ -97,7 +100,7 @@ def stable_row_number(
     )
 
     w = Window.partitionBy("_bk").orderBy(*order_cols)
-    return (
+    out = (
         b.join(F.broadcast(offs), F.col("_bk") == F.col("_rn_tb"), "left")
         .withColumn(
             out_col,
@@ -108,6 +111,7 @@ def stable_row_number(
         )
         .drop("_bk", "_rn_tb", "_rn_base")
     )
+    return (out, total) if with_total else out
 
 
 def stable_prefix_sum(

@@ -384,9 +384,8 @@ def _frag_warehouse(spark: SparkSession, sf_dir: str) -> str:
         )
         rng = assign_range_fragments(_as_ratings(li), "rating", RANGE_N, RANGE_MIN, RANGE_MAX)
         write_fragmented(rng, f"{wh}/ratings_range")
-        rr = assign_round_robin_fragments(li, RANGE_N, ["l_orderkey", "l_linenumber", "_file", "_row"])
+        rr, total = assign_round_robin_fragments(li, RANGE_N, ["l_orderkey", "l_linenumber", "_file", "_row"])
         write_fragmented(_as_ratings(rr, FRAGMENT_COL), f"{wh}/ratings_rr")
-        total = li.count()
         cat = FragmentCatalog(wh)  # what api.range/round_robin_partition record
         cat.update_range(n=RANGE_N, min_value=RANGE_MIN, max_value=RANGE_MAX,
                          interval=(RANGE_MAX - RANGE_MIN) / RANGE_N)

@@ -15,6 +15,8 @@ echo "== registry window tripwires =="
 python -m pytest tests/test_registry_window.py tests/test_bench_contract.py \
     tests/test_session.py tests/test_artifacts.py \
     tests/test_partition_invariance.py::test_frag_warehouse_build_survives_repartition \
+    tests/test_fragmentation.py::test_insert_torn_by_a_failed_rename_is_rolled_forward \
+    tests/test_fragmentation.py::test_insert_failing_before_its_intent_leaves_nothing_visible \
     -q -p no:cacheprovider
 
 echo "== driver-invocation dry run (first 50 + next 6, sf0.01) =="

@@ -6,15 +6,18 @@ re-implementation oracles, insert-routing expectations."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from database_fragmentation_and_query_processor_spark import api
+from database_fragmentation_and_query_processor_spark import fs as fslib
 from database_fragmentation_and_query_processor_spark.catalog import FragmentCatalog
 from database_fragmentation_and_query_processor_spark.operators.fragmentation import (
     hash_fragment_expr,
     range_fragment_expr,
+    read_fragmented,
 )
 from database_fragmentation_and_query_processor_spark.operators.query import (
     hash_owner_fragment,
@@ -174,6 +177,205 @@ def test_round_robin_insert_routing_and_cursor(spark, loaded):
     )
     assert len(hit2) == 1 and hit2[0][FRAGMENT_COL] == 1
     assert FragmentCatalog(warehouse).round_robin_meta().last_inserted == 1
+
+
+#: scheme -> (partitioning, insert, fragment dir under the warehouse)
+_SCHEMES = {
+    "range": (api.range_partition, api.range_insert, "ratings_range"),
+    "round_robin": (api.round_robin_partition, api.round_robin_insert, "ratings_rr"),
+    "hash": (api.hash_partition, api.hash_insert, "ratings_hash"),
+}
+
+
+def _visible_files(warehouse):
+    """Data files a Spark reader of the warehouse sees."""
+    out = set()
+    for dirpath, dirs, names in os.walk(warehouse):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out |= {os.path.join(dirpath, n) for n in names if not n.startswith(("_", "."))}
+    return out
+
+
+def _staged_files(warehouse):
+    staging = os.path.join(warehouse, "_staging")
+    return os.listdir(staging) if os.path.isdir(staging) else []
+
+
+def _stored_rows(spark, warehouse, fragments):
+    """(base rows, fragment rows) as a reader sees them now."""
+    base = spark.read.schema(RATINGS_SCHEMA).parquet(f"{warehouse}/ratings/base")
+    frags = read_fragmented(spark, f"{warehouse}/{fragments}")
+    return base.collect(), frags.collect()
+
+
+def test_inserts_take_the_writer_lock_before_reading(spark, loaded):
+    """With the writer lock held by another owner, every routed insert
+    fails fast and changes nothing: no visible file, nothing staged,
+    the round-robin cursor where it was."""
+    _, warehouse = loaded
+    for partition, _, _ in _SCHEMES.values():
+        partition(spark, "ratings", N, warehouse)
+    before = _visible_files(warehouse)
+    cursor = FragmentCatalog(warehouse).round_robin_meta()
+    shim = fslib.fs_for(warehouse)
+    lock = fslib.acquire_writer_lock(shim, warehouse, owner="other")
+    try:
+        for _, insert, _ in _SCHEMES.values():
+            with pytest.raises(fslib.LockHeldError, match="other"):
+                insert(spark, "ratings", 100, 7, 3.0, warehouse)
+    finally:
+        fslib.release_writer_lock(shim, lock)
+    assert _visible_files(warehouse) == before
+    assert _staged_files(warehouse) == []
+    assert FragmentCatalog(warehouse).round_robin_meta() == cursor
+
+
+def test_racing_round_robin_inserts_each_take_their_own_cursor(tmp_path):
+    """Inserters racing on one warehouse (more threads than cores, a
+    short switch interval) serialize on the writer lock: every insert
+    lands once in base and once in the rotation, which hands each
+    cursor value out once."""
+    import sys
+    import threading
+    import time
+
+    warehouse = str(tmp_path / "warehouse")
+    FragmentCatalog(warehouse).update_round_robin(n=N, last_inserted=N - 1)
+    n_threads, per_thread, failures = 8, 5, []
+
+    def insert_all(t):
+        try:
+            for i in range(per_thread):
+                while True:
+                    try:
+                        api.round_robin_insert(None, "ratings", t, i, 1.0, warehouse)
+                        break
+                    except fslib.LockHeldError:
+                        time.sleep(0.001)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            failures.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=insert_all, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads) and not failures, failures
+    total = n_threads * per_thread
+    per_fragment = {
+        k: len(os.listdir(f"{warehouse}/ratings_rr/{FRAGMENT_COL}={k}")) for k in range(N)
+    }
+    assert per_fragment == dict.fromkeys(range(N), total // N)
+    assert len(os.listdir(f"{warehouse}/ratings/base")) == total
+    assert FragmentCatalog(warehouse).round_robin_meta().last_inserted == (total - 1) % N
+
+
+def _routed_owner(scheme, warehouse, userid, rating):
+    """Where the reference semantics put a row inserted now."""
+    cat = FragmentCatalog(warehouse)
+    if scheme == "range":
+        return _expected_range_fragment(rating)
+    if scheme == "round_robin":
+        return (cat.round_robin_meta().last_inserted + 1) % N
+    return hash_owner_fragment(userid, N)
+
+
+@pytest.mark.parametrize("scheme", list(_SCHEMES))
+def test_insert_torn_by_a_failed_rename_is_rolled_forward(
+    spark, loaded, monkeypatch, scheme
+):
+    """A rename that fails after the base file is published leaves
+    base ≠ ∪ fragments on disk; the next insert first rolls that
+    insert's intent forward, so both rows end up in base and in their
+    routed fragments, and the cursor moved once per insert."""
+    _, warehouse = loaded
+    partition, insert, fragments = _SCHEMES[scheme]
+    partition(spark, "ratings", N, warehouse)
+    owner = _routed_owner(scheme, warehouse, 100, 3.0)
+    cursor = FragmentCatalog(warehouse).round_robin_meta().last_inserted
+
+    rename, published = fslib.LocalFS.rename, []
+
+    def fail_second(self, src, dst):
+        if published:
+            raise OSError("injected rename failure")
+        rename(self, src, dst)
+        published.append(dst)
+
+    monkeypatch.setattr(fslib.LocalFS, "rename", fail_second)
+    with pytest.raises(OSError, match="injected"):
+        insert(spark, "ratings", 100, 7, 3.0, warehouse)
+    monkeypatch.setattr(fslib.LocalFS, "rename", rename)
+    base, frags = _stored_rows(spark, warehouse, fragments)
+    assert (len(base), len(frags)) == (len(RATINGS_FIXTURE) + 1, len(RATINGS_FIXTURE))
+
+    insert(spark, "ratings", 101, 8, 1.0, warehouse)
+    base, frags = _stored_rows(spark, warehouse, fragments)
+    assert len(base) == len(frags) == len(RATINGS_FIXTURE) + 2
+    assert [r[FRAGMENT_COL] for r in frags if r.userid == 100] == [owner]
+    assert _staged_files(warehouse) == []
+    want_cursor = (cursor + 2) % N if scheme == "round_robin" else cursor
+    assert FragmentCatalog(warehouse).round_robin_meta().last_inserted == want_cursor
+
+
+@pytest.mark.parametrize("scheme", list(_SCHEMES))
+def test_insert_failing_before_its_intent_leaves_nothing_visible(
+    spark, loaded, monkeypatch, scheme
+):
+    """An insert that dies after staging its files but before the
+    sidecar records its intent publishes nothing; the next writer
+    deletes the staged orphans."""
+    _, warehouse = loaded
+    partition, insert, fragments = _SCHEMES[scheme]
+    partition(spark, "ratings", N, warehouse)
+    before = _visible_files(warehouse)
+    cursor = FragmentCatalog(warehouse).round_robin_meta()
+
+    def fail(*_):
+        raise OSError("injected sidecar failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(fslib, "write_json_atomic", fail)
+        with pytest.raises(OSError, match="injected"):
+            insert(spark, "ratings", 100, 7, 3.0, warehouse)
+    assert _visible_files(warehouse) == before
+    assert len(_staged_files(warehouse)) == 2
+    assert FragmentCatalog(warehouse).round_robin_meta() == cursor
+
+    insert(spark, "ratings", 101, 8, 1.0, warehouse)
+    assert _staged_files(warehouse) == []
+    base, frags = _stored_rows(spark, warehouse, fragments)
+    assert len(base) == len(frags) == len(RATINGS_FIXTURE) + 1
+    assert not [r for r in base + frags if r.userid == 100]
+
+
+@pytest.mark.parametrize("key", ["userid", "movieid"])
+def test_hash_insert_route_matches_column_expression(spark, loaded, key):
+    """The driver routes a hash insert where ``hash_fragment_expr``
+    (the bulk partitioning's rule) puts the same row."""
+    _, warehouse = loaded
+    api.hash_partition(spark, "ratings", N, warehouse, key=key)
+    rows = [(900 + i, 7_000 + 13 * i, 2.5) for i in range(8)]
+    for row in rows:
+        api.hash_insert(spark, "ratings", *row, warehouse)
+    want = {
+        (r.userid, r.movieid): r.f
+        for r in spark.createDataFrame(rows, RATINGS_SCHEMA)
+        .select("userid", "movieid", hash_fragment_expr(F.col(key), N).alias("f"))
+        .collect()
+    }
+    got = {
+        (r.userid, r.movieid): r[FRAGMENT_COL]
+        for r in read_fragmented(spark, f"{warehouse}/ratings_hash")
+        .where(F.col("userid") >= 900)
+        .collect()
+    }
+    assert got == want
 
 
 def test_bucket_expr_hits_every_boundary(spark):

@@ -172,6 +172,43 @@ def test_range_and_hash_partition_start_only_their_write(spark, ratings_file, wa
     assert jobs == {"range_partition": 1, "hash_partition": 1}, jobs
 
 
+def test_round_robin_partition_counts_rows_in_its_numbering_pass(
+    spark, ratings_file, warehouse
+):
+    """The cursor's row total comes from the numbering's min/max
+    pre-pass, not a second scan: round-robin fragmentation starts the
+    jobs of its numbering and write alone (7 at local[4]; a separate
+    ``count()`` after the write added 2 more)."""
+    from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag
+    from database_fragmentation_and_query_processor_spark.schema import RATINGS_SCHEMA
+
+    api.load_ratings(spark, "ratings", ratings_file, warehouse)
+    base = spark.read.schema(RATINGS_SCHEMA).parquet(f"{warehouse}/ratings/base")
+
+    def number_and_write():
+        assigned, _ = frag.assign_round_robin_fragments(base, 5, ["userid", "movieid"])
+        frag.write_fragmented(assigned, f"{warehouse}/numbered")
+
+    parts = _jobs_started(spark, number_and_write)
+    whole = _jobs_started(
+        spark, lambda: api.round_robin_partition(spark, "ratings", 5, warehouse)
+    )
+    assert whole == parts, (whole, parts)
+
+
+def test_routed_inserts_start_no_spark_job(spark, ratings_file, warehouse):
+    """A routed insert is routed and written on the driver."""
+    api.load_ratings(spark, "ratings", ratings_file, warehouse)
+    inserts = {}
+    for scheme in ("range", "round_robin", "hash"):
+        getattr(api, f"{scheme}_partition")(spark, "ratings", 5, warehouse)
+        insert = getattr(api, f"{scheme}_insert")
+        inserts[scheme] = _jobs_started(
+            spark, lambda: insert(spark, "ratings", 100, 7, 3.0, warehouse)
+        )
+    assert inserts == dict.fromkeys(inserts, 0), inserts
+
+
 def test_range_join_broadcasts(spark, sf_dir):
     df = EQ.QUERIES["range_join_price_bands"](spark, sf_dir)
     plan_has_bnlj = "BroadcastNestedLoopJoin" in __import__(
@@ -211,7 +248,7 @@ def test_round_robin_partition_path_has_no_python_rdd(spark, ratings_file, wareh
 
     api.load_ratings(spark, "ratings", ratings_file, warehouse)
     df = spark.read.parquet(f"{warehouse}/ratings/base")
-    assigned = frag.assign_round_robin_fragments(
+    assigned, _ = frag.assign_round_robin_fragments(
         df, 5, order_cols=["userid", "movieid"]
     )
     plan = assigned._jdf.queryExecution().analyzed().toString()
