@@ -30,8 +30,8 @@ import time
 from py4j.protocol import Py4JError
 
 from database_fragmentation_and_query_processor_spark import artifacts
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
 from database_fragmentation_and_query_processor_spark.cache import release_all
+from database_fragmentation_and_query_processor_spark.queries.registry import QUERIES
 from database_fragmentation_and_query_processor_spark.session import get_spark
 
 log = logging.getLogger("bench")
@@ -592,7 +592,7 @@ def main() -> None:
     # measurement — errors are recorded as "ERR <type>" and skipped in
     # the total, and the final JSON line is ALWAYS emitted.
     def run_once(spark, sf_dir, name) -> float | str:
-        fn = EQ.QUERIES[name]
+        fn = QUERIES[name]
         use = ArtifactUse()
         art_log.addHandler(use)
         t0 = time.perf_counter()

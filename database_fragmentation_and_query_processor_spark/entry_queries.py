@@ -1,27 +1,9 @@
-"""Compatibility facade over the queries/ package.
+"""``QUERIES`` and ``ORACLE_SQL``, re-exported from ``queries.registry``.
 
-The 25.6k-line registry module was split along its family seams into
-``queries/`` (r13 verdict task 6: common constants/helpers, the family
-modules, and ``queries/registry`` which assembles QUERIES/ORACLE_SQL).
-Every name the old module defined — query builders, oracle SQL strings,
-constants, private helpers — remains importable from here unchanged;
-``queries.registry``'s namespace IS the old module's namespace (the
-ordered fold reproduces single-file statement semantics exactly).
-
-NOTE for tests: monkeypatching attributes on THIS module no longer
-affects query behavior (functions resolve globals in their defining
-family module). Patch the defining module instead — e.g. the table
-readers via ``queries.common._t_impl`` / ``_events_impl``.
+Kept because ``perfbench/workloads.py`` reads these two names from
+here; everything else imports from the module that defines each name.
 """
 
-from __future__ import annotations
+from .queries.registry import ORACLE_SQL, QUERIES
 
-from .queries import registry as _registry
-
-globals().update(
-    {
-        k: v
-        for k, v in vars(_registry).items()
-        if not (k.startswith("__") and k.endswith("__"))
-    }
-)
+__all__ = ["ORACLE_SQL", "QUERIES"]

@@ -42,6 +42,7 @@ import random
 import re
 import shutil
 import time
+from dataclasses import dataclass
 
 POINTER_FILE = "_LATEST"
 #: How many committed generations to retain in pointer mode. 2 = the
@@ -628,18 +629,28 @@ class LockHeldError(RuntimeError):
     """Another writer currently holds the warehouse lock."""
 
 
+@dataclass(frozen=True)
+class WriterLock:
+    """A held writer lock: its path and the payload its holder wrote."""
+
+    path: str
+    owner: str
+    acquired_ns: int
+
+
 def acquire_writer_lock(
     fs, dir_path: str, owner: str | None = None, ttl_sec: int = LOCK_TTL_SEC
-) -> str:
+) -> WriterLock:
     """Acquire the advisory writer lock for ``dir_path``; returns the
-    lock path (pass to :func:`release_writer_lock`). A live lock by
+    held lock (pass to :func:`release_writer_lock`). A live lock by
     another owner raises :class:`LockHeldError`; a stale one (older
     than its TTL) is broken and re-acquired."""
     lock = join(dir_path, LOCK_FILENAME)
     owner = owner or f"pid-{os.getpid()}"
     for _attempt in range(2):
+        acquired_ns = time.time_ns()
         payload = json.dumps(
-            {"owner": owner, "acquired_ns": time.time_ns(), "ttl_sec": ttl_sec}
+            {"owner": owner, "acquired_ns": acquired_ns, "ttl_sec": ttl_sec}
         )
         if fs.create_exclusive(lock, payload):
             # Read-back verify: on stores where create-if-absent is
@@ -666,7 +677,7 @@ def acquire_writer_lock(
             except Exception:
                 held = False
             if held:
-                return lock
+                return WriterLock(lock, owner, acquired_ns)
             continue
         doc = _lock_doc(fs, lock)
         age_sec = (time.time_ns() - int(doc.get("acquired_ns", 0))) / 1e9
@@ -713,8 +724,16 @@ def _lock_doc(fs, lock: str) -> dict:
     return {"acquired_ns": time.time_ns()}
 
 
-def release_writer_lock(fs, lock_path: str) -> None:
-    fs.delete(lock_path)
+def release_writer_lock(fs, lock: WriterLock) -> None:
+    """Delete ``lock`` if its file still holds the caller's payload. A
+    holder that outlived its TTL may have had the lock broken and
+    re-taken by another writer; that writer's live lock stays."""
+    try:
+        doc = json.loads(fs.read_text(lock.path))
+    except Exception:
+        return  # already gone, or a contender's between create and write
+    if (doc.get("owner"), doc.get("acquired_ns")) == (lock.owner, lock.acquired_ns):
+        fs.delete(lock.path)
 
 
 # ---------------------------------------------------------------------------

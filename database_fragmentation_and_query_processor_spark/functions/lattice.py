@@ -19,7 +19,7 @@ final division of an integer-valued double by ``10^k`` is a single
 exactly-rounded IEEE op. Given bit-identical inputs the output is
 bit-identical — the lattice moves the entire divergence surface to
 "are the input doubles bit-identical", which the DECIMAL-sum /
-integer-ratio conventions of entry_queries already guarantee.
+integer-ratio conventions of the ``queries/`` modules already guarantee.
 
 Semantics: round-half-up (toward +inf at the boundary), identical to
 the old behavior for all non-negative values; negative exact-boundary

@@ -3,7 +3,7 @@ heuristic, quality scoring, fingerprinting.
 
 Every function here is a pure ``pyspark.sql.functions`` expression —
 JVM-side, vectorized, codegen-friendly. Each also has an exact ANSI-SQL
-mirror used by the DuckDB oracle (see ``entry_queries``), so the
+mirror used by the DuckDB oracle (see the ``queries/`` modules), so the
 semantics are pinned down to the arithmetic.
 """
 

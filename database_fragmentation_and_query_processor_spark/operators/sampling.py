@@ -7,7 +7,7 @@ keep/drop decision from a portable hash of a row key instead:
 
 - pure map-side filter — NO shuffle, no RNG state, scales linearly;
 - stable under repartitioning, retries, and engine swaps (the md5
-  arithmetic is mirrored in the DuckDB oracle, see ``entry_queries``);
+  arithmetic is mirrored in the DuckDB oracle, see ``queries.batteries``);
 - per-stratum rates compose with any downstream operator.
 
 The reference has no sampling surface (SURVEY.md §2.2); this is part

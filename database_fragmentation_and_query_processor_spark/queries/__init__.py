@@ -1,6 +1,4 @@
-"""The query registry, split from entry_queries.py along its family
-seams (r13 verdict task 6). ``registry`` holds the assembled QUERIES /
-ORACLE_SQL; the sibling modules hold the family definitions in the
-original statement order (see _fold)."""
-
-from . import registry  # noqa: F401 — assembles the full namespace
+"""The query registry. ``common`` holds the shared constants and table
+readers, the family modules (``families`` … ``corpusops``) hold the
+builders and their oracle SQL, and ``registry`` assembles
+``QUERIES`` / ``ORACLE_SQL``."""

@@ -1,15 +1,16 @@
-"""Grouping sets and scalar/array function batteries; deterministic sampling, TF-IDF, merge-upsert.
-
-Mechanical split of entry_queries.py lines 2130-3434 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""Grouping sets and scalar/array function batteries; deterministic sampling, TF-IDF, merge-upsert."""
 
 from __future__ import annotations
 
-from ._fold import fold_upto
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-fold_upto(globals(), 'batteries')
+from ..functions import text as T
+from ..functions.lattice import flr as _flr
+from ..operators import merge as MergeOp
+from ..operators import sampling as SampleOp
+from .common import _docs, _events, _t
+from .families import _QUALITY_SQL, TOKENS_SQL, _dec2
 
 # 46-48: grouping sets, scalar-function battery, array-function battery
 # ---------------------------------------------------------------------------

@@ -103,11 +103,11 @@ DUP_SALT = 100_000  # synthesized duplicate doc_id offset
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # delegates so a single patch point covers every family module: the
-    # namespace fold COPIES this function's binding into each module,
-    # but all copies are one object whose body resolves _t_impl here —
-    # tests (test_partition_invariance) patch common._t_impl and every
-    # query in every module sees the scrambled reader
+    # delegates so a single patch point covers every family module:
+    # each module imports this function, whose body resolves _t_impl
+    # here at call time — tests (test_partition_invariance) patch
+    # common._t_impl and every query in every module sees the
+    # scrambled reader
     return _t_impl(spark, sf_dir, name)
 
 
@@ -288,7 +288,7 @@ def _learned_merge_rows(spark: SparkSession, sf_dir: str, algo: str):
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same delegate pattern as _t: one patchable implementation point
-    # (common._events_impl) behind the binding the fold copies around
+    # (common._events_impl) behind the binding every module imports
     return _events_impl(spark, sf_dir)
 
 

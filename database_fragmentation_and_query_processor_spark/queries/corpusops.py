@@ -1,15 +1,39 @@
-"""Corpus-wide exact line dedup, KN bigram LM, NB/logreg classifiers, mixture math, WordPiece/unigram learning, cross-lingual dedup, streaming near-dup.
-
-Mechanical split of entry_queries.py lines 19065-24081 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""Corpus-wide exact line dedup, KN bigram LM, NB/logreg classifiers, mixture math, WordPiece/unigram learning, cross-lingual dedup, streaming near-dup."""
 
 from __future__ import annotations
 
-from ._fold import fold_upto
+import math
 
-fold_upto(globals(), 'corpusops')
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from ..cache import track as _track_cached
+from ..functions import text as T
+from ..functions.lattice import flr as _flr
+from ..operators import dedup as D
+from ..operators import sampling as SampleOp
+from .common import (
+    DUP_SALT, EMB_DIM, MINHASH_BANDS, MINHASH_K, NEAR_DUP_THRESHOLD, _docs,
+    _emb, _learned_merge_rows, _store_merge_rows, _t,
+)
+from .families import (
+    DOCS_WITH_DUPS_CTE, INCR_BATCH_MOD, SQL_MINHASH_NEAR_DUP_PAIRS, TOKENS_SQL,
+    _docs_with_dups,
+)
+from .batteries import SEQ_LEN
+from .curation import EMB_Q_SCALE, _word_grams
+from .docops import (
+    _COPURCHASE_EDGES_CTE, _SPLIT_BUCKET_SQL, SPLIT_SALT, SPLIT_TRAIN_PERMILLE,
+    SPLIT_VAL_PERMILLE, _copurchase_edges,
+)
+from .sequences import (
+    BM25_TERMS, BM25_TOPK, COOC_MAX_BASKET, DUPSPAN_L, SQL_BM25_SEARCH,
+    q_bm25_search,
+)
+from .selection import LOGREG_STEPS, _cramer3
+from .tokenlearn import (
+    BPE_MERGES, LINE_TOKENS, NLL_LATTICE, _bpe_wrap, _doc_lines,
+)
 
 # round-10 batch: corpus-wide exact line dedup, KN-smoothed bigram LM,
 # unigram-LM (SentencePiece-style) tokenizer vocabulary learning
@@ -1325,7 +1349,7 @@ def q_logreg_hash_text(spark, sf_dir):
     step is a single map-side-combinable aggregate of twelve
     decimal-cast moments, so driver state is 12 floats per step
     regardless of corpus size (the logreg_newton convention,
-    entry_queries.py:15708). Exactness: features are ratios of exact
+    selection.q_logreg_newton). Exactness: features are ratios of exact
     integers (bit-identical doubles both engines); the sigmoid is
     CLAMP-QUANTIZED onto the NLL_LATTICE before it enters any moment
     (p = clamp(floor(sigmoid·1e9), 1, 1e9-1)/1e9), so every moment is

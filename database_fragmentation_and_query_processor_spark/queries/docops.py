@@ -1,15 +1,30 @@
-"""Sub-document dedup-rewrite, information-theoretic quality, collocation mining, PII redaction, bucketed joins, dataset-management + sketch operators.
-
-Mechanical split of entry_queries.py lines 5869-10353 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""Sub-document dedup-rewrite, information-theoretic quality, collocation mining, PII redaction, bucketed joins, dataset-management + sketch operators."""
 
 from __future__ import annotations
 
-from ._fold import fold_upto
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
-fold_upto(globals(), 'docops')
+from ..artifacts import artifact_path, build_once
+from ..cache import track as _track_cached
+from ..functions import text as T
+from ..functions import vectors as V
+from ..functions.lattice import flr as _flr
+from ..operators import dedup as D
+from ..operators import sampling as SampleOp
+from ..operators import similarity as S
+from .common import (
+    ANN_PLANES, DUP_SALT, EMB_DIM, IVF_N_LISTS, MINHASH_BANDS, MINHASH_K,
+    NEAR_DUP_THRESHOLD, SESSION_GAP_US, US_PER_HOUR, _docs, _emb, _events,
+    _flr_py, _t,
+)
+from .families import (
+    DOCS_WITH_DUPS_CTE, SQL_MINHASH_NEAR_DUP_PAIRS, SQL_Q1,
+    STREAM_STATE_SHARDS, TOKENS_SQL, _dec2, _docs_with_dups, _plane_literal,
+    _stream_join_shards,
+)
+from .batteries import CDC_INS_OFFSET, CDC_MOD
+from .curation import ATTR_HORIZON_US, CHUNK_TOKENS, _word_grams
 
 # round-4 additions: sub-document dedup-rewrite, information-theoretic
 # quality, collocation mining, PII redaction, bucketed co-located join

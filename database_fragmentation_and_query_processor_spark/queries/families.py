@@ -1,17 +1,26 @@
-"""The numbered core families: fragmentation (reference surface), TPC-H relational, events, text analysis, MinHash dedup + similarity, multimodal / simhash / ANN / sessionization / as-of / range join / streaming, TPC-H revenue shapes, windows / quantiles / setops / pivot.
-
-Mechanical split of entry_queries.py lines 332-2129 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""The numbered core families: fragmentation (reference surface), TPC-H relational, events, text analysis, MinHash dedup + similarity, multimodal / simhash / ANN / sessionization / as-of / range join / streaming, TPC-H revenue shapes, windows / quantiles / setops / pivot."""
 
 from __future__ import annotations
 
 import logging
 
-from ._fold import fold_upto
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-fold_upto(globals(), 'families')
+from .. import api
+from ..functions import text as T
+from ..functions import vectors as V
+from ..functions.lattice import flr as _flr
+from ..operators import dedup as D
+from ..operators import similarity as S
+from .common import (
+    ANN_PLANES, DUP_SALT, EMB_DIM, EMB_DUP_THRESHOLD, IVF_N_LISTS, IVF_NPROBE,
+    KNN_K, LSH_INDEX_PREFIX_BITS, MINHASH_BANDS, MINHASH_K, NEAR_DUP_THRESHOLD,
+    PQ_VALUE, Q1_CUTOFF, Q3_DATE, Q3_SEGMENT, Q5_HI, Q5_LO, Q5_REGION, RANGE_N,
+    RATINGS_CTE, RQ_HI, RQ_LO, SESSION_GAP_US, SHINGLE_N, US_PER_HOUR,
+    _ann_ivfpq_index, _ann_lsh_index, _bucket_sql, _docs, _emb, _events,
+    _frag_scheme, _frag_warehouse, _ratings, _sq8_minmax, _t,
+)
 
 _log = logging.getLogger(__name__)
 

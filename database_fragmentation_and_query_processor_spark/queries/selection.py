@@ -1,15 +1,32 @@
-"""Data-selection and model-fitting operators: weighted medians, regression, PQ/IVF-PQ ANN, mixture and stationary analyses.
-
-Mechanical split of entry_queries.py lines 15501-18433 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""Data-selection and model-fitting operators: weighted medians, regression, PQ/IVF-PQ ANN, mixture and stationary analyses."""
 
 from __future__ import annotations
 
-from ._fold import fold_upto
+import math
 
-fold_upto(globals(), 'selection')
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from ..cache import track as _track_cached
+from ..functions import text as T
+from ..functions.lattice import flr as _flr
+from ..operators import dedup as D
+from ..operators import sampling as SampleOp
+from ..operators import similarity as S
+from ..operators.query import range_owner_fragment
+from .common import (
+    EMB_DIM, IVF_N_LISTS, IVF_NPROBE, KNN_K, MINHASH_BANDS, MINHASH_K,
+    NEAR_DUP_THRESHOLD, PQ_CODES, PQ_M, RANGE_MAX, RANGE_MIN, RANGE_N,
+    RATINGS_CTE, SHINGLE_N, _ann_ivfpq_index, _bucket_sql, _docs, _emb,
+    _events, _flr_py, _frag_scheme, _t,
+)
+from .families import (
+    _BPE_LEN_SQL, DOCS_WITH_DUPS_CTE, TOKENS_SQL, _docs_with_dups,
+    _near_dup_ctes, _sq_l2_sql,
+)
+from .curation import (
+    EMB_Q_SCALE, _emb_qstats, _sql_dedup_clusters, _word_grams,
+)
 
 def q_mase_seasonal_naive(spark, sf_dir):
     """Forecast-baseline evaluation on the daily revenue series: MAE of
@@ -1500,9 +1517,6 @@ FROM agg
 """
 
 
-GPD_TAIL_Q = 0.95  # peaks-over-threshold cutoff
-
-
 def q_gpd_tail_fit(spark, sf_dir):
     """Extreme-value tail model: fit a Generalized Pareto Distribution
     to order-value exceedances over the exact p95 (peaks-over-threshold
@@ -2736,7 +2750,6 @@ f AS (SELECT {_bucket_sql()} AS frag, rating FROM ratings)
 """
 
 
-MIX_ALPHA_SQRT = True  # sqrt(n) temperature smoothing (alpha = 0.5)
 MIX_SALT = "epoch_mix"
 
 

@@ -1,15 +1,20 @@
-"""Sequence modeling, winnowing span matches, embedding diagnostics, frequency-aware corpus balancing.
-
-Mechanical split of entry_queries.py lines 10354-12468 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""Sequence modeling, winnowing span matches, embedding diagnostics, frequency-aware corpus balancing."""
 
 from __future__ import annotations
 
-from ._fold import fold_upto
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-fold_upto(globals(), 'sequences')
+from ..cache import track as _track_cached
+from ..functions import text as T
+from ..functions.lattice import flr as _flr
+from ..operators import dedup as D
+from ..operators.scaling import stable_row_number
+from .common import (
+    NEAR_DUP_THRESHOLD, SHINGLE_N, US_PER_DAY, _docs, _emb, _events, _t,
+)
+from .families import DOCS_WITH_DUPS_CTE, TOKENS_SQL, _docs_with_dups
+from .curation import EMB_Q_SCALE, _emb_qstats, _word_grams
 
 # round-6 additions: sequence modeling, winnowing span matches,
 # embedding diagnostics, frequency-aware corpus balancing

@@ -1,15 +1,27 @@
-"""Statistical profiling: rank tests, calibration, correlation, drift, tail fits, ANN quality metrics.
-
-Mechanical split of entry_queries.py lines 12469-15500 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""Statistical profiling: rank tests, calibration, correlation, drift, tail fits, ANN quality metrics."""
 
 from __future__ import annotations
 
-from ._fold import fold_upto
+import math
 
-fold_upto(globals(), 'stats')
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from ..cache import track as _track_cached
+from ..functions import text as T
+from ..functions import vectors as V
+from ..functions.lattice import flr as _flr
+from ..operators import similarity as S
+from ..operators.scaling import stable_row_number
+from .common import (
+    ANN_PLANES, EMB_DIM, IVF_NPROBE, KNN_K, LSH_INDEX_PREFIX_BITS, US_PER_DAY,
+    _ann_ivfpq_index, _ann_lsh_index, _docs, _emb, _events, _t,
+)
+from .families import (
+    ANN_PROBE_HAMMING, SQL_ANN_IVF_TOPK, SQL_KNN_BRUTEFORCE, TOKENS_SQL,
+    _cosine_sql, _lsh_topk_sql, _sig_sql,
+)
+from .curation import _word_grams
 
 # round-7 additions: statistical profiling + data-selection operators
 # ---------------------------------------------------------------------------

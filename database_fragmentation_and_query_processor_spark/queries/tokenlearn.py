@@ -1,15 +1,16 @@
-"""Tokenizer-merge learning (BPE) and per-line quality rewrite.
-
-Mechanical split of entry_queries.py lines 18434-19064 (r13 verdict
-task 6); statement order preserved. The fold below reproduces the
-original single-module namespace for everything defined earlier.
-"""
+"""Tokenizer-merge learning (BPE) and per-line quality rewrite."""
 
 from __future__ import annotations
 
-from ._fold import fold_upto
+from fractions import Fraction
 
-fold_upto(globals(), 'tokenlearn')
+from pyspark.sql import functions as F
+
+from ..cache import track as _track_cached
+from ..functions import text as T
+from ..functions.lattice import flr as _flr
+from .common import _docs, _store_merge_rows
+from .families import TOKENS_SQL
 
 # round-9 additions: tokenizer-merge learning, per-line quality rewrite,
 # URL canonicalization + registrable-domain dedup (the web-corpus front

@@ -10,7 +10,7 @@ The fixture's physical ``ts`` encoding has drifted across generations
 timestamp[us] → TIMESTAMP_NTZ), so the stream reader is
 schema-adaptive: it probes the parquet's actual schema with a batch
 read (metadata-only, no data scan) and normalizes to the same two
-canonical columns the batch loader emits (entry_queries._events):
+canonical columns the batch loader emits (queries.common._events):
 ``event_time`` TIMESTAMP and ``tsn`` BIGINT micros. Raw ``ts`` is
 dropped so stale references fail loudly.
 """
@@ -51,7 +51,7 @@ EVENTS_STREAM_SCHEMA = StructType(
 def normalize_event_time(df: DataFrame) -> DataFrame:
     """Emit canonical ``tsn`` (bigint micros) + ``event_time``
     (timestamp) from whatever physical ``ts`` the source carries, and
-    drop ``ts``. Shared by the batch loader's mirror in entry_queries
+    drop ``ts``. Shared by the batch loader's mirror in queries.common
     and every streaming pipeline here — one schema source of truth."""
     ts_type = dict(df.dtypes).get("ts")
     if ts_type is None:  # already normalized

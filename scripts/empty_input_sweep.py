@@ -40,7 +40,9 @@ def main() -> int:
     start = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     end = int(sys.argv[2]) if len(sys.argv) > 2 else 10**9
 
-    import database_fragmentation_and_query_processor_spark.entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries.registry import (
+        _QUERIES_ALL,
+    )
     from database_fragmentation_and_query_processor_spark.session import get_spark
 
     # the empty warehouse is written by this session, so its scan split
@@ -48,11 +50,11 @@ def main() -> int:
     spark = get_spark("dfqp-empty-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = make_empty_dir(spark)
-    names = list(EQ._QUERIES_ALL)[start:end]
+    names = list(_QUERIES_ALL)[start:end]
     crashes: list[tuple[str, str]] = []
     for i, name in enumerate(names):
         try:
-            df = EQ._QUERIES_ALL[name](spark, sf_dir)
+            df = _QUERIES_ALL[name](spark, sf_dir)
             df.limit(5).collect()
             status = "ok"
         except Exception as exc:  # noqa: BLE001 - survey, not control flow

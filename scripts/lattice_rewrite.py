@@ -141,8 +141,7 @@ def sql_render(args):
 
 def main():
     base = "/root/repo/database_fragmentation_and_query_processor_spark"
-    # registry modules (entry_queries.py split into queries/ in r14):
-    # both python and SQL sites
+    # registry modules: both python and SQL sites
     import glob
 
     for p in sorted(glob.glob(f"{base}/queries/*.py")):
@@ -153,7 +152,7 @@ def main():
         print(f"{p.rsplit('/', 1)[-1]}: {n1} python rewrites, {n2} SQL rewrites")
         for s in sk1 + sk2:
             print("  SKIP:", s)
-    # similarity.py: python sites only (its oracles live in entry_queries)
+    # similarity.py: python sites only (its oracles live in queries/)
     p = f"{base}/operators/similarity.py"
     src = open(p).read()
     src, n3, sk3 = rewrite(src, "F.round(", py_render)

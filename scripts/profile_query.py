@@ -49,7 +49,7 @@ def main() -> int:
     )
 
     from bench import warm_up
-    from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries.registry import QUERIES
     from database_fragmentation_and_query_processor_spark.session import get_spark
 
     spark = get_spark("dfqp-profile", sf_dir)
@@ -70,7 +70,7 @@ def main() -> int:
 
     rows = []
     for name in names:
-        fn = EQ.QUERIES[name]
+        fn = QUERIES[name]
         best = None
         for it in range(repeat):
             gb = f"profile:{name}:build:{it}"

@@ -15,9 +15,26 @@ import sys
 sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
 
 import bench  # noqa: E402
-from database_fragmentation_and_query_processor_spark import (  # noqa: E402
-    entry_queries as EQ,
-)
+from database_fragmentation_and_query_processor_spark.queries import registry  # noqa: E402
+
+#: Queries added in rounds 13 and 14, after the last bench run that
+#: wrote QUIET_LINES.json.
+UNBENCHED_ADDITIONS = [
+    "streaming_near_dup_compaction",
+    "multimodal_real_resize",
+    "multimodal_real_audio",
+    "ann_index_balance_audit",
+    "sequence_packing_audit",
+    "ann_sq8_topk",
+    "mcv_stats_audit",
+    "sprt_ab_monitor",
+    "multimodal_real_frames",
+    "phrase_search_positional",
+    "frag_consistent_hash_ring",
+    "bitmap_index_intersection",
+    "neyman_allocation_audit",
+    "soft_dedup_weights",
+]
 
 
 def _fake_out(n_queries: int) -> dict:
@@ -59,7 +76,7 @@ def test_compact_line_survives_all_error_run():
 
 
 def test_headline_is_subset_of_registry():
-    missing = set(bench.HEADLINE) - set(EQ.QUERIES)
+    missing = set(bench.HEADLINE) - set(registry.QUERIES)
     assert not missing, missing
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
 
@@ -68,7 +85,7 @@ def test_every_registry_query_is_benched():
     """Reverse containment: a registry addition that forgets the
     HEADLINE append runs un-timed — exactly how the r14 second wave
     initially missed its first full-bench pass. Keep both sets equal."""
-    unbenched = set(EQ.QUERIES) - set(bench.HEADLINE)
+    unbenched = set(registry.QUERIES) - set(bench.HEADLINE)
     assert not unbenched, unbenched
 
 
@@ -106,15 +123,11 @@ def test_quiet_record_covers_the_registry():
     current once seeded; new queries gain their line on first bench)."""
     quiet = bench.load_quiet(0.1)
     known = set(quiet)
-    registered = set(EQ.QUERIES)
+    registered = set(registry.QUERIES)
     # newest additions gain their quiet line on the first bench run
-    # after registration; exclude only the CURRENT below-window batches
-    missing = (
-        registered
-        - known
-        - set(getattr(EQ, "_R13_ADDED", []))
-        - set(getattr(EQ, "_R14_ADDED", []))
-    )
+    # after registration; exclude only the round-13/14 additions, which
+    # no bench run has recorded yet
+    missing = registered - known - set(UNBENCHED_ADDITIONS)
     assert not missing, missing
 
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
 
-from database_fragmentation_and_query_processor_spark.entry_queries import (
+from database_fragmentation_and_query_processor_spark.queries.selection import (
     _cramer3,
 )
 

@@ -7,14 +7,17 @@ the real cause.
 
 The population was found by scripts/empty_input_sweep.py (44 raisers
 of 321 at the r12 state); the guard lives at the registry boundary
-(entry_queries._degenerate_guard) and costs nothing on the happy path.
+(queries.registry._degenerate_guard) and costs nothing on the happy path.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    common,
+    registry,
+)
 from scripts.empty_input_sweep import TABLES, make_empty_dir
 
 from .oracle_harness import compare, duck_connection
@@ -43,10 +46,10 @@ def empty_con(empty_dir):
 
 
 _MIRRORED = sorted(
-    n for n, s in EQ._DEGENERATE_EMPTY.items() if s is not None
+    n for n, s in registry._DEGENERATE_EMPTY.items() if s is not None
 )
 _NAMED_ERROR = sorted(
-    n for n, s in EQ._DEGENERATE_EMPTY.items() if s is None
+    n for n, s in registry._DEGENERATE_EMPTY.items() if s is None
 )
 # hardened individually (oracle parity without the guard)
 _PARITY_EXTRA = [
@@ -78,15 +81,15 @@ _PARITY_EXTRA = [
 
 @pytest.mark.parametrize("name", _MIRRORED + _PARITY_EXTRA)
 def test_empty_input_mirrors_oracle(name, spark, empty_dir, empty_con):
-    df = EQ._QUERIES_ALL[name](spark, empty_dir)
-    ok, msg = compare(df, empty_con, EQ._ORACLE_SQL_ALL[name], name)
+    df = registry._QUERIES_ALL[name](spark, empty_dir)
+    ok, msg = compare(df, empty_con, registry._ORACLE_SQL_ALL[name], name)
     assert ok, msg
 
 
 @pytest.mark.parametrize("name", _NAMED_ERROR)
 def test_empty_input_raises_named_error(name, spark, empty_dir):
-    with pytest.raises(EQ.EmptyInputError):
-        df = EQ._QUERIES_ALL[name](spark, empty_dir)
+    with pytest.raises(common.EmptyInputError):
+        df = registry._QUERIES_ALL[name](spark, empty_dir)
         df.collect()  # some pre-passes only trip at materialization
 
 
@@ -95,7 +98,7 @@ def test_preexisting_descriptive_raise_is_kept(spark, empty_dir):
     deliberate, descriptive ValueError before the r12 sweep; pin that
     it stays deliberate (any ValueError naming the empty column)."""
     with pytest.raises(ValueError, match="empty"):
-        EQ._QUERIES_ALL["approx_quantile_audit"](spark, empty_dir)
+        registry._QUERIES_ALL["approx_quantile_audit"](spark, empty_dir)
 
 
 def test_guard_is_exception_path_only():
@@ -104,8 +107,8 @@ def test_guard_is_exception_path_only():
     the original inspectable for the plan-shape tests)."""
     import inspect
 
-    for n in EQ._DEGENERATE_EMPTY:
-        fn = EQ._QUERIES_ALL[n]
+    for n in registry._DEGENERATE_EMPTY:
+        fn = registry._QUERIES_ALL[n]
         assert fn.__wrapped__ is not None
         src = inspect.getsource(fn)  # follows __wrapped__
         assert "def q_" in src

@@ -5,7 +5,7 @@ Round 2 regenerated events.parquet with ``ts`` as timestamp[us] where
 the previous generation stored TIMESTAMP(NANOS) — the streaming reader's
 hardcoded nanos-BIGINT schema then silently read micros as nanos and
 collapsed 30 days into ~2 hourly windows (wrong-but-running). The event
-loaders are now schema-adaptive (entry_queries._events,
+loaders are now schema-adaptive (queries.common._events,
 streaming/events.py:normalize_event_time), and this test pins the set of
 encodings they adapt to: any future regeneration outside that set fails
 HERE, loudly, instead of corrupting query output.

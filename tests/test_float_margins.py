@@ -52,11 +52,73 @@ import re
 import numpy as np
 import pytest
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    corpusops,
+    docops,
+    families,
+    registry,
+    sequences,
+    tokenlearn,
+)
 
 from .oracle_harness import duck_connection
 
-LAT = float(EQ.NLL_LATTICE)
+LAT = float(tokenlearn.NLL_LATTICE)
+
+#: The registry's first 50 queries as of round 12, the set these
+#: margin checks were calibrated on.
+ROUND12_HEAD = [
+    "frag_range_counts",
+    "frag_rr_counts",
+    "frag_range_query",
+    "frag_point_query",
+    "frag_insert_routing",
+    "line_quality_filter",
+    "logreg_hash_text",
+    "exact_substr_incremental",
+    "temperature_sampling_weights",
+    "dedup_bcubed_eval",
+    "heaps_law_fit",
+    "data_constrained_effective_tokens",
+    "shard_balance_audit",
+    "dedup_cluster_cohesion",
+    "rare_token_audit",
+    "t_closeness_audit",
+    "qlm_dirichlet_search",
+    "doremi_domain_weights",
+    "label_propagation_communities",
+    "kcenter_coreset",
+    "fellegi_sunter_linkage",
+    "unimax_budget_allocation",
+    "packing_truncation_audit",
+    "coverage_greedy_selection",
+    "wordpiece_learning",
+    "grid_density_clusters",
+    "tokenizer_compare_audit",
+    "burrows_delta_stylometry",
+    "dunning_g2_keyness",
+    "jsd_source_divergence",
+    "rbo_rank_agreement",
+    "adamic_adar_linkpred",
+    "degree_distribution_audit",
+    "rrf_fusion_topk",
+    "association_rules_lift",
+    "seasonal_decomposition_audit",
+    "line_dedup_exact",
+    "kn_bigram_perplexity",
+    "unigram_lm_learning",
+    "exact_substr_dedup",
+    "nb_quality_classifier",
+    "nb_calibration_audit",
+    "quality_budget_mix",
+    "nb_holdout_eval",
+    "k_anonymity_audit",
+    "pr_auc_by_source",
+    "bpe_merge_learning",
+    "url_domain_dedup",
+    "intrinsic_dim_twonn",
+    "embedding_covariance_topk",
+]
 
 _TRANSCENDENTAL_PAT = re.compile(r"\b(ln|exp|log|log10|log2)\s*\(", re.I)
 
@@ -128,8 +190,8 @@ def test_transcendental_queries_are_enumerated():
     fails here."""
     affected = {
         n
-        for n in EQ._QUERIES_ALL
-        if _TRANSCENDENTAL_PAT.search(EQ._ORACLE_SQL_ALL.get(n, ""))
+        for n in registry._QUERIES_ALL
+        if _TRANSCENDENTAL_PAT.search(registry._ORACLE_SQL_ALL.get(n, ""))
     }
     assert affected == set(TRANSCENDENTAL_REGISTRY), (
         affected ^ set(TRANSCENDENTAL_REGISTRY)
@@ -137,13 +199,12 @@ def test_transcendental_queries_are_enumerated():
 
 
 def test_every_windowed_lattice_query_is_classified():
-    """The current stamp window's transcendental queries are exactly
-    the classified ones that rotated in (sanity link between the
-    window and the registry above)."""
+    """The round-12 head's transcendental queries are all classified
+    (sanity link between that head and the registry above)."""
     win_affected = {
         n
-        for n in EQ._R12_WINDOW
-        if _TRANSCENDENTAL_PAT.search(EQ.ORACLE_SQL.get(n, ""))
+        for n in ROUND12_HEAD
+        if _TRANSCENDENTAL_PAT.search(registry.ORACLE_SQL.get(n, ""))
     }
     assert win_affected <= set(TRANSCENDENTAL_REGISTRY)
 
@@ -214,8 +275,8 @@ def test_lqf_word_lattice_margins(con):
     df = con.sql(
         f"""
         WITH tl AS (
-          SELECT {EQ.TOKENS_SQL} AS t FROM documents
-          WHERE len({EQ.TOKENS_SQL}) >= 1
+          SELECT {families.TOKENS_SQL} AS t FROM documents
+          WHERE len({families.TOKENS_SQL}) >= 1
         ),
         wx AS (SELECT unnest(t) AS w FROM tl),
         cw0 AS (SELECT w, COUNT(*) AS c FROM wx GROUP BY w),
@@ -238,10 +299,10 @@ def test_nb_llr_lattice_margins(con):
               SELECT doc_id,
                      CAST(CAST(regexp_extract(source, '(\\d+)', 1) AS INT)
                           % 2 AS INT) AS weak_label,
-                     CASE WHEN {EQ._SPLIT_BUCKET_SQL} < {EQ.SPLIT_TRAIN_PERMILLE}
+                     CASE WHEN {docops._SPLIT_BUCKET_SQL} < {docops.SPLIT_TRAIN_PERMILLE}
                           THEN 'train' ELSE 'other' END AS split,
-                     {EQ.TOKENS_SQL} AS t
-              FROM documents WHERE len({EQ.TOKENS_SQL}) >= 1
+                     {families.TOKENS_SQL} AS t
+              FROM documents WHERE len({families.TOKENS_SQL}) >= 1
             ),
             tw AS (
               SELECT doc_id, weak_label, split, w, COUNT(*) AS cnt
@@ -263,7 +324,7 @@ def test_nb_llr_lattice_margins(con):
             FROM cw0, stats
             """
         ).df()
-        a = EQ.NB_ALPHA
+        a = corpusops.NB_ALPHA
         llr = np.log((df["c1"] + a) / (df["t1"] + df["v"])) - np.log(
             (df["c0"] + a) / (df["t0"] + df["v"])
         )
@@ -281,7 +342,7 @@ def test_nb_calibration_sigmoid_lattice_margins(con):
     docs (exact values are excluded as safe by _int_margins), so the
     knife-edge population here should be tiny."""
     df = con.sql(
-        f"WITH {EQ._NB_SCORED_CTE_SQL} "
+        f"WITH {corpusops._NB_SCORED_CTE_SQL} "
         f"SELECT CAST(score_q AS DOUBLE) AS s FROM nbscored"
     ).df()
     with np.errstate(over="ignore"):
@@ -294,8 +355,8 @@ def test_kn_bigram_lattice_margins(con):
     df = con.sql(
         f"""
         WITH tl AS (
-          SELECT doc_id, {EQ.TOKENS_SQL} AS t FROM documents
-          WHERE len({EQ.TOKENS_SQL}) >= 2
+          SELECT doc_id, {families.TOKENS_SQL} AS t FROM documents
+          WHERE len({families.TOKENS_SQL}) >= 2
         ),
         big AS (
           SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
@@ -312,7 +373,7 @@ def test_kn_bigram_lattice_margins(con):
         FROM cb JOIN hist USING (w1) JOIN cont USING (w2), types
         """
     ).df()
-    d = EQ.KN_DISCOUNT
+    d = corpusops.KN_DISCOUNT
     p = np.maximum(df["c12"] - d, 0.0) / df["c1"] + d * df["n1f"] / df[
         "c1"
     ] * (df["n1b"] / df["nt"])
@@ -322,7 +383,7 @@ def test_kn_bigram_lattice_margins(con):
 def test_unigram_lattice_margins(con):
     """unigram_lm_learning's final -ln(cnt/t)·1e9 arguments, recovered
     from the oracle's own output (t = Σ cnt of the final count table)."""
-    df = con.sql(EQ.SQL_UNIGRAM_LM_LEARNING).df()
+    df = con.sql(corpusops.SQL_UNIGRAM_LM_LEARNING).df()
     t = float(df["cnt"].sum())
     y = -np.log(df["cnt"].to_numpy() / t) * LAT
     _assert_lattice_margins("unigram_lm_learning", y)
@@ -332,17 +393,17 @@ def test_qlm_lattice_margins(con):
     """qlm_dirichlet_search's two floor-argument families: the hit term
     ln(1 + tf·C/(μ·cf))·1e9 over distinct (tf, cf) pairs and the length
     term ln(μ/(dl+μ))·1e9 over distinct dl."""
-    terms = ", ".join(f"'{t}'" for t in EQ.BM25_TERMS)
+    terms = ", ".join(f"'{t}'" for t in sequences.BM25_TERMS)
     df = con.sql(
         f"""
         WITH lens AS (
-          SELECT doc_id, CAST(len({EQ.TOKENS_SQL}) AS BIGINT) AS dl
+          SELECT doc_id, CAST(len({families.TOKENS_SQL}) AS BIGINT) AS dl
           FROM documents
         ),
         stats AS (SELECT SUM(dl) AS c_total FROM lens),
         hits AS (
           SELECT doc_id, tok, COUNT(*) AS tf FROM (
-            SELECT doc_id, unnest({EQ.TOKENS_SQL}) AS tok FROM documents
+            SELECT doc_id, unnest({families.TOKENS_SQL}) AS tok FROM documents
           ) WHERE tok IN ({terms}) GROUP BY doc_id, tok
         ),
         cfs AS (SELECT tok, SUM(tf) AS cf FROM hits GROUP BY tok)
@@ -353,12 +414,12 @@ def test_qlm_lattice_margins(con):
         """
     ).df()
     hit = np.log(1.0 + df["tf"].to_numpy() * df["ct"].to_numpy()
-                 / (EQ.QLM_MU * df["cf"].to_numpy()))
+                 / (corpusops.QLM_MU * df["cf"].to_numpy()))
     dls = con.sql(
-        f"SELECT DISTINCT CAST(len({EQ.TOKENS_SQL}) AS BIGINT) AS dl "
+        f"SELECT DISTINCT CAST(len({families.TOKENS_SQL}) AS BIGINT) AS dl "
         f"FROM documents"
     ).df()["dl"].to_numpy()
-    length = np.log(EQ.QLM_MU / (dls + float(EQ.QLM_MU)))
+    length = np.log(corpusops.QLM_MU / (dls + float(corpusops.QLM_MU)))
     _assert_lattice_margins(
         "qlm_dirichlet_search", np.concatenate([hit, length]) * LAT
     )
@@ -372,7 +433,7 @@ def test_doremi_lattice_margins(con):
         f"""
         WITH tw AS (
           SELECT source, w, COUNT(*) AS cnt
-          FROM (SELECT source, unnest({EQ.TOKENS_SQL}) AS w FROM documents)
+          FROM (SELECT source, unnest({families.TOKENS_SQL}) AS w FROM documents)
           GROUP BY 1, 2
         ),
         gw AS (SELECT w, SUM(cnt) AS g FROM tw GROUP BY w),
@@ -394,7 +455,7 @@ def test_doremi_lattice_margins(con):
     per = df.groupby("source").agg(kl=("term", "sum"), n_s=("n_s", "max"))
     kl = per["kl"].to_numpy() / (per["n_s"].to_numpy() * LAT)
     _assert_lattice_margins(
-        "doremi_domain_weights[exp]", np.exp(EQ.DOREMI_ETA * kl) * LAT
+        "doremi_domain_weights[exp]", np.exp(corpusops.DOREMI_ETA * kl) * LAT
     )
 
 
@@ -403,9 +464,9 @@ def test_fellegi_sunter_lattice_margins(con):
     (agree/disagree per comparison field), recomputed from the table
     marginals."""
     vals = []
-    for f, m in EQ.FS_M:
+    for f, m in corpusops.FS_M:
         col = {"nat": "c_nationkey", "seg": "c_mktsegment",
-               "bal": f"CAST(FLOOR(c_acctbal / {EQ.FS_BAL_DIV}) AS BIGINT)"}[f]
+               "bal": f"CAST(FLOOR(c_acctbal / {corpusops.FS_BAL_DIV}) AS BIGINT)"}[f]
         df = con.sql(
             f"""
             WITH g AS (SELECT COUNT(*) AS nv FROM customer GROUP BY {col}),
@@ -432,7 +493,7 @@ def test_dunning_and_jsd_lattice_margins(con):
         f"""
         WITH sw AS (
           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS a
-          FROM (SELECT source, unnest({EQ.TOKENS_SQL}) AS w FROM documents)
+          FROM (SELECT source, unnest({families.TOKENS_SQL}) AS w FROM documents)
           GROUP BY 1, 2
         ),
         gw AS (SELECT w, SUM(a) AS g FROM sw GROUP BY w),
@@ -464,7 +525,7 @@ def test_dunning_and_jsd_lattice_margins(con):
         f"""
         WITH sw AS (
           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-          FROM (SELECT source, unnest({EQ.TOKENS_SQL}) AS w FROM documents)
+          FROM (SELECT source, unnest({families.TOKENS_SQL}) AS w FROM documents)
           GROUP BY 1, 2
         ),
         ns AS (SELECT source, SUM(c) AS n FROM sw GROUP BY source)
@@ -566,7 +627,7 @@ def _strip_rounds(sql: str) -> tuple[str, int]:
 
 _LEGACY_IN_WINDOW = [
     n
-    for n in EQ._R12_WINDOW
+    for n in ROUND12_HEAD
     if TRANSCENDENTAL_REGISTRY.get(n) == "legacy-margin"
 ]
 
@@ -578,7 +639,7 @@ def test_legacy_round_margins(name, con):
     every float output sits > 1e-9 from its 6dp round-half boundary —
     a libm divergence at the observed 1.5e-10 failure scale cannot
     flip the hashed value at this SF."""
-    sql, n_rounds = _strip_rounds(EQ.ORACLE_SQL[name])
+    sql, n_rounds = _strip_rounds(registry.ORACLE_SQL[name])
     if n_rounds == 0:
         pytest.skip(f"{name}: oracle has no ROUND — integer-only hash")
     df = con.sql(sql).df()

@@ -496,7 +496,7 @@ def test_insert_routing_warehouse_matches_declared_schema(
     import tempfile
 
     from database_fragmentation_and_query_processor_spark.artifacts import artifact_path
-    from database_fragmentation_and_query_processor_spark.entry_queries import (
+    from database_fragmentation_and_query_processor_spark.queries.registry import (
         _QUERIES_ALL,
     )
 

@@ -316,8 +316,30 @@ def test_writer_lock_break_leaves_no_tombstone(tmp_path):
     lock = fslib.acquire_writer_lock(shim, wh, owner="breaker")
     names = [p for p, _d, _s, _m in shim.list_status(wh)]
     assert not any(".broken-" in n for n in names)
-    assert _json.loads(shim.read_text(lock))["owner"] == "breaker"
+    assert _json.loads(shim.read_text(lock.path))["owner"] == "breaker"
     fslib.release_writer_lock(shim, lock)
+
+
+def test_writer_lock_release_keeps_a_successors_lock(tmp_path):
+    """A holder that outlived its TTL had its lock broken and re-taken
+    by a second writer; the first holder's late release must leave the
+    second writer's live lock in place."""
+    import time
+
+    from database_fragmentation_and_query_processor_spark import fs as fslib
+
+    wh = str(tmp_path / "wh")
+    shim = fslib.fs_for(wh)
+    shim.makedirs(wh)
+    a = fslib.acquire_writer_lock(shim, wh, owner="A", ttl_sec=0)
+    time.sleep(0.01)  # A's lock is now past its TTL
+    b = fslib.acquire_writer_lock(shim, wh, owner="B")
+    fslib.release_writer_lock(shim, a)
+    assert shim.exists(b.path)
+    with pytest.raises(fslib.LockHeldError, match="B"):
+        fslib.acquire_writer_lock(shim, wh, owner="C")
+    fslib.release_writer_lock(shim, b)
+    assert not shim.exists(b.path)
 
 
 def test_writer_lock_losing_breaker_does_not_steal(tmp_path):

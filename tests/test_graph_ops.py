@@ -94,14 +94,14 @@ def test_semantic_dedup_drops_exactly_the_perturbed_clones(spark, sf_dir):
     to their parents; with near-orthogonal base vectors (max pairwise
     cosine < 0.5 in the fixture) the dropped set must be exactly the
     clone set — each clone has its lower-id parent in-cluster."""
-    from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries import docops
 
-    out = EQ.q_semantic_dedup(spark, sf_dir).collect()
+    out = docops.q_semantic_dedup(spark, sf_dir).collect()
     n_vecs = sum(r["n_vecs"] for r in out)
     n_dropped = sum(r["n_dropped"] for r in out)
     checksum = sum(r["dropped_checksum"] for r in out)
     n_base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    clone_ids = [i + EQ.SEM_DUP_SALT for i in range(0, n_base, EQ.SEM_DUP_MOD)]
+    clone_ids = [i + docops.SEM_DUP_SALT for i in range(0, n_base, docops.SEM_DUP_MOD)]
     assert n_vecs == n_base + len(clone_ids)
     assert n_dropped == len(clone_ids)
     assert checksum == sum(clone_ids)

@@ -11,16 +11,19 @@ import math
 
 import pytest
 
-from database_fragmentation_and_query_processor_spark import (
-    cache,
-    entry_queries as EQ,
+from database_fragmentation_and_query_processor_spark import cache
+from database_fragmentation_and_query_processor_spark.queries import (
+    common,
+    registry,
+    selection,
+    stats,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def _rows(spark, name):
-    out = EQ.QUERIES[name](spark, SF).collect()
+    out = registry.QUERIES[name](spark, SF).collect()
     cache.release_all()
     return out
 
@@ -117,7 +120,7 @@ def test_srm_flag_is_consistent_with_chi2(spark):
     assert rows
     for r in rows:
         assert r["chi_sq"] >= 0.0
-        assert r["srm_flag"] == (r["chi_sq"] > EQ.SRM_CHI2_CRIT)
+        assert r["srm_flag"] == (r["chi_sq"] > stats.SRM_CHI2_CRIT)
 
 
 def test_jl_ratio_concentrates_around_one(spark):
@@ -151,7 +154,7 @@ def test_source_ablation_totals_consistent(spark):
 
 def test_feature_hash_histogram_accounts_all_buckets(spark):
     rows = _rows(spark, "feature_hash_collision_audit")
-    assert sum(r["n_buckets"] for r in rows) == EQ.FEATURE_HASH_BUCKETS
+    assert sum(r["n_buckets"] for r in rows) == stats.FEATURE_HASH_BUCKETS
 
 
 def test_ndcg_bounded_and_consistent_with_hits(spark):
@@ -164,7 +167,7 @@ def test_ndcg_bounded_and_consistent_with_hits(spark):
         if r["n_relevant"] == 0:
             assert r["ndcg"] == 0.0
         if r["ndcg"] >= 1.0 - 1e-9:
-            assert r["n_relevant"] == EQ.KNN_K
+            assert r["n_relevant"] == common.KNN_K
 
 
 def test_mase_components_positive(spark):
@@ -199,7 +202,7 @@ def test_bloom_fp_rate_near_textbook(spark):
 
 def test_hurst_is_a_valid_exponent(spark):
     rows = _rows(spark, "hurst_exponent")
-    assert len(rows) == len(EQ.HURST_SCALES)
+    assert len(rows) == len(selection.HURST_SCALES)
     h = rows[0]["hurst"]
     assert all(r["hurst"] == h for r in rows)
     assert 0.0 < h < 1.2  # R/S estimator can slightly exceed 1 on

@@ -251,13 +251,16 @@ def test_approx_distinct_error_bound(spark, sf_dir):
     bound violation shows the actual estimate, not just a False flag."""
     from pyspark.sql import functions as F
 
-    from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries import (
+        common,
+        registry,
+    )
 
-    flags = EQ.QUERIES["approx_distinct_users"](spark, sf_dir).collect()
+    flags = registry.QUERIES["approx_distinct_users"](spark, sf_dir).collect()
     assert flags and all(r["hll_within_5pct"] for r in flags), flags
 
     raw = (
-        EQ._events(spark, sf_dir)
+        common._events(spark, sf_dir)
         .groupBy("event_type")
         .agg(
             F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
@@ -552,9 +555,9 @@ def test_stream_stream_attribution_state_bounds(spark, sf_dir):
         ),
         spark,
     )
-    from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries import common
 
-    ev = EQ._events(spark, sf_dir).select(
+    ev = common._events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", F.col("tsn").alias("us")
     )
     c = ev.where(F.col("event_type") == "click").select(

@@ -8,7 +8,11 @@ import math
 
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    common,
+    curation,
+    sequences,
+)
 from database_fragmentation_and_query_processor_spark.functions import text as T
 
 
@@ -16,7 +20,7 @@ def test_transition_matrix_rows_normalize(spark, sf_dir):
     """Per-src probabilities sum to ~1 and transition counts total to
     (events - users-with-events): each user's chain of m events emits
     m-1 transitions."""
-    out = EQ.q_event_transition_matrix(spark, sf_dir)
+    out = sequences.q_event_transition_matrix(spark, sf_dir)
     rows = out.collect()
     by_src: dict[str, float] = {}
     total_n = 0
@@ -34,8 +38,8 @@ def test_transition_matrix_rows_normalize(spark, sf_dir):
 
 
 def test_user_path_topk_shape(spark, sf_dir):
-    out = EQ.q_user_path_topk(spark, sf_dir).collect()
-    assert 0 < len(out) <= EQ.PATH_TOPK
+    out = sequences.q_user_path_topk(spark, sf_dir).collect()
+    assert 0 < len(out) <= sequences.PATH_TOPK
     counts = [r["n_users"] for r in out]
     assert counts == sorted(counts, reverse=True)
     n_users = (
@@ -45,7 +49,7 @@ def test_user_path_topk_shape(spark, sf_dir):
     assert sum(counts) <= n_users
     for r in out:
         # head truncation bounds the path key width
-        assert 1 <= len(r["path"].split(">")) <= EQ.PATH_MAX_EVENTS
+        assert 1 <= len(r["path"].split(">")) <= sequences.PATH_MAX_EVENTS
 
 
 def test_winnowing_finds_synthesized_duplicates(spark, sf_dir):
@@ -53,13 +57,13 @@ def test_winnowing_finds_synthesized_duplicates(spark, sf_dir):
     (doc_id, doc_id+DUP_SALT) pair whose doc retains at least
     WINNOW_MIN_SHARED sub-cap fingerprints must be matched. Also pins
     pair canonicalization (doc_a < doc_b, no self-pairs)."""
-    rows = EQ.q_winnowing_span_matches(spark, sf_dir).collect()
+    rows = sequences.q_winnowing_span_matches(spark, sf_dir).collect()
     assert rows, "no span matches found on the duplicated corpus"
     pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
     for r in rows:
         assert r["doc_a"] < r["doc_b"]
-        assert r["shared_fps"] >= EQ.WINNOW_MIN_SHARED
-    dup_pairs = {p for p in pairs if p[1] - p[0] == EQ.DUP_SALT}
+        assert r["shared_fps"] >= sequences.WINNOW_MIN_SHARED
+    dup_pairs = {p for p in pairs if p[1] - p[0] == common.DUP_SALT}
     assert dup_pairs, "no synthesized exact-dup pair was recovered"
 
 
@@ -67,15 +71,15 @@ def test_winnowing_density_bound(spark, sf_dir):
     """The winnowing guarantee: a doc with g k-gram hashes keeps at
     most g - w + 1 window minima (and far fewer after dedup) — the
     fingerprint explosion stays sub-linear in document length."""
-    docs = EQ._docs(spark, sf_dir)
-    grams = EQ._word_grams(T.tokens(F.col("text")), EQ.WINNOW_K)
+    docs = common._docs(spark, sf_dir)
+    grams = curation._word_grams(T.tokens(F.col("text")), sequences.WINNOW_K)
     hashes = F.transform(grams, lambda g: T.token_hash(g))
     m = F.size(hashes)
     fps = F.when(m <= 0, F.array().cast("array<bigint>")).otherwise(
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.greatest(m - EQ.WINNOW_W + 1, F.lit(1))),
-                lambda i: F.array_min(F.slice(hashes, i, EQ.WINNOW_W)),
+                F.sequence(F.lit(1), F.greatest(m - sequences.WINNOW_W + 1, F.lit(1))),
+                lambda i: F.array_min(F.slice(hashes, i, sequences.WINNOW_W)),
             )
         )
     )
@@ -83,24 +87,24 @@ def test_winnowing_density_bound(spark, sf_dir):
         m.alias("g"), F.size(fps).alias("kept")
     ).where(
         (F.col("g") > 0)
-        & (F.col("kept") > F.greatest(F.col("g") - EQ.WINNOW_W + 1, F.lit(1)))
+        & (F.col("kept") > F.greatest(F.col("g") - sequences.WINNOW_W + 1, F.lit(1)))
     ).count()
     assert bad == 0
 
 
 def test_domain_soft_cap_ledger(spark, sf_dir):
-    rows = EQ.q_domain_soft_cap(spark, sf_dir).collect()
+    rows = sequences.q_domain_soft_cap(spark, sf_dir).collect()
     assert rows
     for r in rows:
-        expected_cap = math.ceil(EQ.SOFTCAP_K * math.sqrt(r["n_docs"]))
+        expected_cap = math.ceil(sequences.SOFTCAP_K * math.sqrt(r["n_docs"]))
         assert r["cap"] == expected_cap
         assert r["n_kept"] == min(r["cap"], r["n_docs"])
         assert r["n_dropped"] == r["n_docs"] - r["n_kept"]
 
 
 def test_embedding_dim_variance_shape(spark, sf_dir):
-    rows = EQ.q_embedding_dim_variance(spark, sf_dir).collect()
-    assert len(rows) == EQ.DIMVAR_TOPK
+    rows = sequences.q_embedding_dim_variance(spark, sf_dir).collect()
+    assert len(rows) == sequences.DIMVAR_TOPK
     vars_ = [r["var_x"] for r in rows]
     # ordering is by the exact integer numerator; the rounded doubles
     # must still be non-increasing up to rounding slack

@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import sequences
 from database_fragmentation_and_query_processor_spark.multimodal import (
     binary_ops as B,
 )
@@ -49,7 +49,7 @@ def test_snm_lead_is_order_preserving(spark):
     could overflow conv on multi-byte prefixes."""
     df = spark.createDataFrame(
         [(k,) for k in ADVERSARIAL_KEYS], ["snm_key"]
-    ).select("snm_key", EQ.snm_lead_expr("snm_key").alias("lead"))
+    ).select("snm_key", sequences.snm_lead_expr("snm_key").alias("lead"))
     rows = df.collect()
     by_key = sorted(rows, key=lambda r: r["snm_key"].encode("utf-8"))
     leads = [r["lead"] for r in by_key]
@@ -67,7 +67,7 @@ def test_snm_lead_is_order_preserving(spark):
 
 
 def test_snm_query_uses_the_tested_expr():
-    src = inspect.getsource(EQ.q_sorted_neighborhood_pairs)
+    src = inspect.getsource(sequences.q_sorted_neighborhood_pairs)
     assert "snm_lead_expr" in src
 
 
@@ -136,10 +136,10 @@ def test_cooc_totals_join_not_broadcast_hinted(spark):
     """Item cardinality is corpus-sized: the per-item totals join must
     carry NO hard broadcast hint (AQE may still choose broadcast at
     runtime from measured sizes — that is allowed and desirable)."""
-    src = inspect.getsource(EQ.q_item_cooccurrence_topk)
+    src = inspect.getsource(sequences.q_item_cooccurrence_topk)
     assert "F.broadcast" not in src
     analyzed = (
-        EQ.q_item_cooccurrence_topk(spark, SF)
+        sequences.q_item_cooccurrence_topk(spark, SF)
         ._jdf.queryExecution()
         .analyzed()
         .toString()
@@ -152,13 +152,13 @@ def test_cooc_basket_cap_fails_fast(spark, tmp_path):
     """A pathological mega-basket (more distinct items than
     COOC_MAX_BASKET in one order) must raise BEFORE the quadratic pair
     join is launched."""
-    n = EQ.COOC_MAX_BASKET + 1
+    n = sequences.COOC_MAX_BASKET + 1
     rows = [(1, pk) for pk in range(n)]
     spark.createDataFrame(rows, ["l_orderkey", "l_partkey"]).write.parquet(
         str(tmp_path / "lineitem.parquet")
     )
     with pytest.raises(ValueError, match="COOC_MAX_BASKET"):
-        EQ.q_item_cooccurrence_topk(spark, str(tmp_path))
+        sequences.q_item_cooccurrence_topk(spark, str(tmp_path))
 
 
 # ---------------------------------------------------------------------------

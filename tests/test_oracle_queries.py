@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import registry
 
 from .oracle_harness import compare, duck_connection
 
@@ -18,14 +18,14 @@ def con(sf_dir):
 
 
 def test_registry_consistency():
-    assert set(EQ.ORACLE_SQL) <= set(EQ.QUERIES)
+    assert set(registry.ORACLE_SQL) <= set(registry.QUERIES)
 
 
-@pytest.mark.parametrize("name", sorted(EQ.QUERIES))
+@pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, con):
-    if name not in EQ.ORACLE_SQL:
-        df = EQ.QUERIES[name](spark, sf_dir)
+    if name not in registry.ORACLE_SQL:
+        df = registry.QUERIES[name](spark, sf_dir)
         assert df.count() >= 0  # rows-only check, like the driver
         return
-    ok, msg = compare(EQ.QUERIES[name](spark, sf_dir), con, EQ.ORACLE_SQL[name], name)
+    ok, msg = compare(registry.QUERIES[name](spark, sf_dir), con, registry.ORACLE_SQL[name], name)
     assert ok, msg

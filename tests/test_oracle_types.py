@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import registry
 
 from .oracle_harness import duck_connection
 
@@ -40,9 +40,9 @@ def con(sf_dir):
     c.close()
 
 
-@pytest.mark.parametrize("name", sorted(EQ.ORACLE_SQL))
+@pytest.mark.parametrize("name", sorted(registry.ORACLE_SQL))
 def test_oracle_output_types_pandas_safe(name, con):
-    rel = con.sql(EQ.ORACLE_SQL[name])
+    rel = con.sql(registry.ORACLE_SQL[name])
     bad = [
         (col, str(typ))
         for col, typ in zip(rel.columns, rel.types)
@@ -57,7 +57,7 @@ def test_oracle_output_types_pandas_safe(name, con):
 
 def test_line_quality_filter_regression_pin(con):
     """The exact r10-r12 offender: n_kept / kept_tokens must be BIGINT."""
-    rel = con.sql(EQ.ORACLE_SQL["line_quality_filter"])
+    rel = con.sql(registry.ORACLE_SQL["line_quality_filter"])
     types = dict(zip(rel.columns, (str(t).upper() for t in rel.types)))
     assert types["n_kept"] == "BIGINT", types
     assert types["kept_tokens"] == "BIGINT", types

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import registry
 
 
 def _canon(df):
@@ -185,11 +185,10 @@ def test_result_survives_repartition(spark, sf_dir, name, monkeypatch):
     """Run the query normally, then again with every parquet scan
     rewritten to a shuffled, differently-partitioned copy of itself —
     results must be identical tuples."""
-    base = _canon(EQ.QUERIES[name](spark, sf_dir))
+    base = _canon(registry.QUERIES[name](spark, sf_dir))
 
     # patch the IMPLEMENTATION delegates in queries.common: the family
-    # modules each hold a copied binding of _t/_events (the namespace
-    # fold), but every copy is one function object whose body resolves
+    # modules each import _t/_events, whose bodies resolve
     # _t_impl/_events_impl in common's globals at call time
     from database_fragmentation_and_query_processor_spark.queries import common as CQ
 
@@ -197,7 +196,7 @@ def test_result_survives_repartition(spark, sf_dir, name, monkeypatch):
     monkeypatch.setattr(CQ, "_t_impl", lambda s, d, table: _scramble(real_t(s, d, table)))
     monkeypatch.setattr(CQ, "_events_impl", lambda s, d: _scramble(real_events(s, d)))
     try:
-        again = _canon(EQ.QUERIES[name](spark, sf_dir))
+        again = _canon(registry.QUERIES[name](spark, sf_dir))
     finally:
         monkeypatch.setattr(CQ, "_t_impl", real_t)
         monkeypatch.setattr(CQ, "_events_impl", real_events)

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from database_fragmentation_and_query_processor_spark import api
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import registry
 from database_fragmentation_and_query_processor_spark.plans import (
     broadcast_join_count,
     final_explain_formatted,
@@ -29,7 +29,7 @@ from database_fragmentation_and_query_processor_spark.plans import (
 
 
 def test_q1_pushdown_and_pruning(spark, sf_dir):
-    df = EQ.QUERIES["q1_pricing_summary"](spark, sf_dir)
+    df = registry.QUERIES["q1_pricing_summary"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "l_shipdate" in pushed, "shipdate filter must reach the scan"
     schemas = scan_read_schemas(df)
@@ -42,14 +42,14 @@ def test_q3_q5_aqe_broadcasts_no_sort_merge(spark, sf_dir):
     broadcast hints — at 1000x the data they must shuffle. AQE's FINAL
     plan proves they still broadcast at runtime when actually small."""
     for name in ("q3_top_revenue_orders", "q5_region_nation_revenue"):
-        df = EQ.QUERIES[name](spark, sf_dir)
+        df = registry.QUERIES[name](spark, sf_dir)
         plan = final_explain_formatted(df)
         assert plan.count("BroadcastHashJoin") >= 2, name
         assert "SortMergeJoin" not in plan, name
 
 
 def test_q6_all_predicates_pushed(spark, sf_dir):
-    df = EQ.QUERIES["q6_forecast_revenue"](spark, sf_dir)
+    df = registry.QUERIES["q6_forecast_revenue"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     for col in ("l_shipdate", "l_discount", "l_quantity"):
         assert col in pushed, (col, pushed)
@@ -62,7 +62,7 @@ def test_q19_disjunction_pushed_per_side(spark, sf_dir):
     """Catalyst must decompose the OR-of-conjuncts into per-side
     residuals pushed to BOTH scans (lineitem gets the quantity
     disjunction, part gets the brand/size disjunction)."""
-    df = EQ.QUERIES["q19_disjunctive_revenue"](spark, sf_dir)
+    df = registry.QUERIES["q19_disjunctive_revenue"](spark, sf_dir)
     pushed = pushed_filters(df)
     assert any("l_quantity" in p and "Or(" in p for p in pushed), pushed
     assert any("p_brand" in p and "Or(" in p for p in pushed), pushed
@@ -72,7 +72,7 @@ def test_q19_disjunction_pushed_per_side(spark, sf_dir):
 
 
 def test_q3_dimension_filters_pushed(spark, sf_dir):
-    df = EQ.QUERIES["q3_top_revenue_orders"](spark, sf_dir)
+    df = registry.QUERIES["q3_top_revenue_orders"](spark, sf_dir)
     pushed = " ".join(pushed_filters(df))
     assert "EqualTo(c_mktsegment,BUILDING)" in pushed
     assert "o_orderdate" in pushed and "l_shipdate" in pushed
@@ -93,7 +93,7 @@ def test_warehouse_point_query_partition_pruning(
         api.round_robin_partition(spark, "ratings", 5, warehouse)
         df = api.point_query(spark, 4.5, warehouse)
     else:
-        df = EQ.QUERIES["frag_point_query"](spark, sf_dir)
+        df = registry.QUERIES["frag_point_query"](spark, sf_dir)
     parts = " ".join(partition_filters(df))
     assert "fragment_id = 4" in parts, parts
     # rating equality also pushed into the parquet scan
@@ -210,7 +210,7 @@ def test_routed_inserts_start_no_spark_job(spark, ratings_file, warehouse):
 
 
 def test_range_join_broadcasts(spark, sf_dir):
-    df = EQ.QUERIES["range_join_price_bands"](spark, sf_dir)
+    df = registry.QUERIES["range_join_price_bands"](spark, sf_dir)
     plan_has_bnlj = "BroadcastNestedLoopJoin" in __import__(
         "database_fragmentation_and_query_processor_spark.plans.explain",
         fromlist=["explain_formatted"],
@@ -259,7 +259,7 @@ def test_bloom_probe_prunes_before_join(spark, sf_dir):
     """The Bloom bitset filter must sit BELOW the semi join (map-side,
     pre-shuffle) and its probe must be an O(1) bit test (shiftleft /
     element_at), never an array scan."""
-    df = EQ.QUERIES["bloom_pruned_revenue"](spark, sf_dir)
+    df = registry.QUERIES["bloom_pruned_revenue"](spark, sf_dir)
     plan = final_explain_formatted(df)
     assert "shiftleft" in plan, "bit-test probe missing from plan"
     assert "array_contains" not in plan, "probe degraded to an array scan"
@@ -274,7 +274,7 @@ def test_latest_event_per_user_no_window_sort(spark, sf_dir):
     the shuffle then moves one row per (task, user), not the raw
     events. (Struct max plans as SortAggregate, not HashAggregate —
     the sort is over the already-combined partials, which is fine.)"""
-    df = EQ.QUERIES["latest_event_per_user"](spark, sf_dir)
+    df = registry.QUERIES["latest_event_per_user"](spark, sf_dir)
     plan = final_explain_formatted(df)
     assert "Window" not in plan
     assert "partial_max" in plan, "map-side combine missing"
@@ -287,7 +287,7 @@ def test_sequence_packing_no_single_task_window(spark, sf_dir):
     sum: the physical plan's Window must be partitioned by (group,
     bucket) — never a per-language-only (or global) window that would
     serialize a whole language in one task."""
-    df = EQ.QUERIES["sequence_packing"](spark, sf_dir)
+    df = registry.QUERIES["sequence_packing"](spark, sf_dir)
     plan = final_explain_formatted(df)
     assert "Window" in plan
     # the bucket column participates in the window partitioning
@@ -299,7 +299,7 @@ def test_paragraph_dedup_window_on_chunk_hash(spark, sf_dir):
     chunk hash (uniform high-cardinality key) — never a global sort,
     and the text column must not survive past the scan projection
     (only doc_id + derived chunks travel)."""
-    df = EQ.QUERIES["paragraph_dedup"](spark, sf_dir)
+    df = registry.QUERIES["paragraph_dedup"](spark, sf_dir)
     plan = final_explain_formatted(df)
     assert "Window" in plan
     assert "md5" in plan, "chunk-hash window partitioning missing"
@@ -311,7 +311,7 @@ def test_paragraph_dedup_window_on_chunk_hash(spark, sf_dir):
 def test_pii_redaction_no_udf_single_agg(spark, sf_dir):
     """The scrub is pure JVM regex in one projection: no Python eval
     node, exactly one aggregation level (partial+final on source)."""
-    df = EQ.QUERIES["pii_redaction"](spark, sf_dir)
+    df = registry.QUERIES["pii_redaction"](spark, sf_dir)
     plan = final_explain_formatted(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "HashAggregate" in plan
@@ -321,7 +321,7 @@ def test_doc_char_entropy_map_side_combine(spark, sf_dir):
     """Char counting must partially aggregate BEFORE the exchange —
     the shuffle carries (doc, char) partials, never raw exploded
     characters (at 100 TB that difference is the whole design)."""
-    df = EQ.QUERIES["doc_char_entropy"](spark, sf_dir)
+    df = registry.QUERIES["doc_char_entropy"](spark, sf_dir)
     plan = final_explain_formatted(df)
     assert "partial_count" in plan, "map-side combine missing"
     assert plan.find("partial_count") > plan.find("Exchange"), \

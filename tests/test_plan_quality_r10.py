@@ -13,7 +13,10 @@ from __future__ import annotations
 import inspect
 import re
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    registry,
+    stats,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
@@ -33,10 +36,10 @@ def test_twonn_scans_embeddings_at_most_twice(spark, sf_dir):
     the corpus is read exactly twice (the two sides of the LSH
     self-join), never four times, and both aggregation branches read
     the cached pairs back via InMemoryTableScan."""
-    src = inspect.getsource(EQ.q_intrinsic_dim_twonn)
+    src = inspect.getsource(stats.q_intrinsic_dim_twonn)
     assert "_track_cached" in src and ".persist()" in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["intrinsic_dim_twonn"](spark, sf_dir)
+        registry._QUERIES_ALL["intrinsic_dim_twonn"](spark, sf_dir)
     )
     assert len(_distinct_parquet_scans(plan)) <= 2, plan
     assert "InMemoryTableScan" in plan

@@ -15,7 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    common,
+    docops,
+    families,
+    registry,
+)
 from database_fragmentation_and_query_processor_spark.operators import dedup as D
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
@@ -24,7 +29,7 @@ from database_fragmentation_and_query_processor_spark.plans import (
 
 def test_crosslingual_candidates_shuffle_on_bucket_keys(spark, sf_dir):
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir)
+        registry._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir)
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -39,13 +44,13 @@ def test_crosslingual_means_are_broadcast(spark, sf_dir):
     join and check the join strategy."""
     import inspect
 
-    src = inspect.getsource(EQ._xl_centered_build)  # the substrate build
+    src = inspect.getsource(docops._xl_centered_build)  # the substrate build
     assert "F.broadcast(means)" in src
     # and the checkpoint bounds recompute of the shared centered frame
     assert "localCheckpoint" in src
     # r13: the build is behind the content-keyed artifact cache — every
     # consumer (cold AND warm) reads the same parquet back
-    wrapper = inspect.getsource(EQ._xl_centered)
+    wrapper = inspect.getsource(docops._xl_centered)
     assert "build_once" in wrapper
     assert "read.parquet" in wrapper
 
@@ -54,15 +59,15 @@ def test_incremental_probe_keys_on_band_bucket(spark, sf_dir):
     """The streaming sink's per-batch work is incremental_near_dup_pairs;
     its candidate join must key on (band, bucket) — the O(batch) probe
     — with no cartesian product."""
-    docs = EQ._docs_with_dups(spark, sf_dir)
-    is_new = (F.col("doc_id") % EQ.DUP_SALT) % EQ.INCR_BATCH_MOD == 0
-    index = D.build_dedup_index(docs.where(~is_new), k=EQ.MINHASH_K)
+    docs = families._docs_with_dups(spark, sf_dir)
+    is_new = (F.col("doc_id") % common.DUP_SALT) % families.INCR_BATCH_MOD == 0
+    index = D.build_dedup_index(docs.where(~is_new), k=common.MINHASH_K)
     pairs, _ = D.incremental_near_dup_pairs(
         index,
         docs.where(is_new),
-        threshold=EQ.NEAR_DUP_THRESHOLD,
-        k=EQ.MINHASH_K,
-        bands=EQ.MINHASH_BANDS,
+        threshold=common.NEAR_DUP_THRESHOLD,
+        k=common.MINHASH_K,
+        bands=common.MINHASH_BANDS,
     )
     plan = final_explain_formatted(pairs)
     assert "CartesianProduct" not in plan

@@ -23,14 +23,14 @@ What each pin protects at 100 TB:
 
 from __future__ import annotations
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import registry
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
 
 
 def _plan(spark, sf_dir, name):
-    return final_explain_formatted(EQ._QUERIES_ALL[name](spark, sf_dir))
+    return final_explain_formatted(registry._QUERIES_ALL[name](spark, sf_dir))
 
 
 def test_sq8_probe_is_scan_plus_topk(spark, sf_dir):

@@ -3,14 +3,14 @@ in their docstrings must be visible in the physical plan."""
 
 from __future__ import annotations
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import registry
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
 
 
 def _plan(spark, sf_dir, name):
-    return final_explain_formatted(EQ.QUERIES[name](spark, sf_dir))
+    return final_explain_formatted(registry.QUERIES[name](spark, sf_dir))
 
 
 def test_doc_split_assign_no_join_no_expand(spark, sf_dir):
@@ -86,6 +86,6 @@ def test_boilerplate_offender_join_broadcasts(spark, sf_dir):
 def test_binaryfile_scan_is_binaryfile_source(spark, sf_dir):
     """The ingest query must actually read through the binaryFile
     format (not a parquet fallback)."""
-    df = EQ.QUERIES["binaryfile_ingest"](spark, sf_dir)
+    df = registry.QUERIES["binaryfile_ingest"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "binaryFile" in plan or "BinaryFile" in plan, plan[:500]

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    docops,
+    registry,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
@@ -17,7 +20,7 @@ def test_equi_depth_no_exact_percentile_aggregate(spark, sf_dir):
     aggregate anywhere — that aggregate's buffer is the O(n)-in-one-task
     state the r4 judge flagged. The final depths pass is conditional
     sums against broadcast literal boundaries only."""
-    df = EQ.QUERIES["equi_depth_histogram"](spark, sf_dir)
+    df = registry.QUERIES["equi_depth_histogram"](spark, sf_dir)
     # the returned frame is a literal rebuild; the scans happened in the
     # operator — assert on the operator's own scan shape instead:
     from database_fragmentation_and_query_processor_spark.operators.stats import (
@@ -37,7 +40,7 @@ def test_equi_depth_no_exact_percentile_aggregate(spark, sf_dir):
     for col in ("o_orderkey", "o_custkey", "o_orderdate", "o_comment"):
         assert col not in stats_plan, col
     # sanity on the query output itself
-    assert df.count() == EQ.EQUI_DEPTH_BUCKETS
+    assert df.count() == docops.EQUI_DEPTH_BUCKETS
     assert exact_order_stats(orders, "o_totalprice", [0])[0] == float(
         orders.agg(F.min("o_totalprice")).head()[0]
     )
@@ -86,6 +89,6 @@ def test_grouped_percentile_segment_join_broadcasts(spark):
 def test_frag_insert_routing_no_cartesian(spark, sf_dir):
     """The post-insert per-fragment report is three pruned scans + one
     union of tiny aggregates — no join at all in the read path."""
-    plan = final_explain_formatted(EQ.QUERIES["frag_insert_routing"](spark, sf_dir))
+    plan = final_explain_formatted(registry.QUERIES["frag_insert_routing"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan

@@ -5,7 +5,7 @@ aggregate buffers every (group's) value in one aggregation buffer —
 O(group) task state, the scale-killer the round-4/5 judges flagged.
 After round 6 every exact-percentile consumer in the registry goes
 through operators/stats.py's bounded-state selectors, so the literal
-aggregate must never reappear in entry_queries.py.
+aggregate must never reappear in the queries/ modules.
 """
 
 from __future__ import annotations
@@ -15,8 +15,7 @@ import re
 
 
 def _entry_source() -> str:
-    # the registry was split into the queries/ package (r13 verdict
-    # task 6): scan every module of it, so the ban still covers the
+    # scan every module of the queries/ package, so the ban covers the
     # full registry surface
     import glob
 

@@ -5,14 +5,14 @@ visible in the physical plans."""
 
 from __future__ import annotations
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import registry
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    return final_explain_formatted(EQ.QUERIES[name](spark, sf_dir))
+    return final_explain_formatted(registry.QUERIES[name](spark, sf_dir))
 
 
 def test_kmv_windows_are_keyed_and_pairing_is_not_cartesian(spark, sf_dir):

@@ -7,14 +7,19 @@ from __future__ import annotations
 
 import inspect
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    registry,
+    selection,
+    sequences,
+    stats,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    return final_explain_formatted(EQ.QUERIES[name](spark, sf_dir))
+    return final_explain_formatted(registry.QUERIES[name](spark, sf_dir))
 
 
 def test_grouped_mode_has_no_window(spark, sf_dir):
@@ -41,7 +46,7 @@ def test_revenue_autocorr_window_runs_on_daily_rollup(spark, sf_dir):
     input collapsed to one row per day first: the plan must aggregate
     (daily rollup) BEFORE the window, and the returned frame itself is
     a literal scan (the 7 ACF scalars), not a full-plan replay."""
-    src = inspect.getsource(EQ.q_revenue_autocorr)
+    src = inspect.getsource(stats.q_revenue_autocorr)
     assert "groupBy" in src.split("Window.orderBy")[0]
     plan = _plan(spark, sf_dir, "revenue_autocorr")
     # result is a 7-row local/literal relation
@@ -63,7 +68,7 @@ def test_gini_uses_bucketed_numbering_not_global_sort_window(spark, sf_dir):
     """Ranking must come from operators/scaling.stable_row_number (the
     bucketed two-phase numbering), never ROW_NUMBER over a
     SinglePartition window."""
-    src = inspect.getsource(EQ.q_gini_concentration)
+    src = inspect.getsource(stats.q_gini_concentration)
     assert "stable_row_number" in src
     assert "Window.orderBy" not in src
 
@@ -72,7 +77,7 @@ def test_unigram_kl_domain_is_bounded(spark, sf_dir):
     """The KL grid must be the (sources x K+1 symbols) cross of two
     TINY aggregates — the only cross join allowed — and the raw token
     stream must never hit a cartesian or nested-loop join."""
-    src = inspect.getsource(EQ.q_unigram_kl_divergence)
+    src = inspect.getsource(stats.q_unigram_kl_divergence)
     assert "limit(KL_TOPK)" in src.replace(" ", "").replace("\n", "") or (
         "limit(KL_TOPK)" in src
     )
@@ -99,7 +104,7 @@ def test_cooc_basket_guard_runs_before_pair_join():
     """The COOC_MAX_BASKET fail-fast must trigger during plan BUILD
     (a metadata-sized aggregate), before the quadratic pair join is
     even constructed."""
-    src = inspect.getsource(EQ.q_item_cooccurrence_topk)
+    src = inspect.getsource(sequences.q_item_cooccurrence_topk)
     assert src.index("COOC_MAX_BASKET") < src.index('join(items.alias("b")')
 
 
@@ -128,7 +133,7 @@ def test_theil_sen_pairs_live_on_the_daily_rollup():
     """The pairwise slope set must be built from the aggregated daily
     frame (days² pairs, calendar-bounded), never from raw orders — a
     raw-row self-join would be corpus-quadratic."""
-    src = inspect.getsource(EQ.q_theil_sen_trend)
+    src = inspect.getsource(stats.q_theil_sen_trend)
     assert src.index("groupBy") < src.index(".join(")
 
 
@@ -140,7 +145,7 @@ def test_theil_sen_selection_is_bucketed(spark, sf_dir):
     plan's dominant stage. n_days / n_pairs are arithmetic literals
     (daily is distinct by construction ⇒ n_pairs = C(n_days, 2)), so
     no count jobs run over the pair set either."""
-    src = inspect.getsource(EQ.q_theil_sen_trend)
+    src = inspect.getsource(stats.q_theil_sen_trend)
     assert "n_days * (n_days - 1) // 2" in src
     plan = _plan(spark, sf_dir, "theil_sen_trend")
     # the former shape: orderBy(...).limit(k) over all pairs → a
@@ -165,7 +170,7 @@ def test_quantile_normalize_has_no_single_partition_window(spark, sf_dir):
     """Both rank computations must be the bucketed two-phase helpers —
     a PARTITION BY event_type (or global ORDER BY) window would funnel
     a 100 TB type through one task."""
-    src = inspect.getsource(EQ.q_quantile_normalize_audit)
+    src = inspect.getsource(stats.q_quantile_normalize_audit)
     assert "stable_prefix_sum" in src and "stable_row_number" in src
     plan = _plan(spark, sf_dir, "quantile_normalize_audit")
     assert "SinglePartition" not in plan
@@ -175,7 +180,7 @@ def test_mann_whitney_ranks_are_two_phase(spark, sf_dir):
     """Midranks must come from distinct-value counts + the bucketed
     prefix sum — a global ORDER BY window over raw events would funnel
     100 TB through one task."""
-    src = inspect.getsource(EQ.q_mann_whitney_rank_test)
+    src = inspect.getsource(stats.q_mann_whitney_rank_test)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "mann_whitney_rank_test")
     assert "SinglePartition" not in plan
@@ -184,8 +189,8 @@ def test_mann_whitney_ranks_are_two_phase(spark, sf_dir):
 def test_ks_grid_is_bounded_and_no_cartesian(spark, sf_dir):
     """The KS evaluation grid is |types| x |distinct cents| with the
     tiny type dimension broadcast; per-type cumulatives are two-phase."""
-    src = inspect.getsource(EQ.q_ks_one_vs_rest) + inspect.getsource(
-        EQ._etype_value_cums
+    src = inspect.getsource(stats.q_ks_one_vs_rest) + inspect.getsource(
+        stats._etype_value_cums
     )
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "ks_one_vs_rest")
@@ -215,7 +220,7 @@ def test_spearman_ranks_are_two_phase(spark, sf_dir):
     """Both rank maps must come from distinct-value counts + the
     bucketed prefix sum and join back by key — never a per-group
     ROW_NUMBER over raw lineitem rows."""
-    src = inspect.getsource(EQ.q_spearman_corr_grouped)
+    src = inspect.getsource(stats.q_spearman_corr_grouped)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "spearman_corr_grouped")
     assert "SinglePartition" not in plan
@@ -226,10 +231,10 @@ def test_isotonic_grid_is_on_rolled_up_domain(spark, sf_dir):
     domain AFTER the keyed aggregate (the revenue_autocorr
     dispensation) — raw rows must collapse first, and the fit must be
     monotone nondecreasing."""
-    src = inspect.getsource(EQ.q_isotonic_calibration)
+    src = inspect.getsource(stats.q_isotonic_calibration)
     assert src.index('groupBy("x")') < src.index("Window.orderBy")
     rows = sorted(
-        EQ.QUERIES["isotonic_calibration"](spark, sf_dir).collect(),
+        registry.QUERIES["isotonic_calibration"](spark, sf_dir).collect(),
         key=lambda r: r["x"],
     )
     fits = [r["iso_fit"] for r in rows]
@@ -249,7 +254,7 @@ def test_dp_noisy_counts_prunes_text_column(spark, sf_dir):
 def test_roc_auc_ranks_are_two_phase(spark, sf_dir):
     """AUC midranks come from per-(source, length) counts + the
     bucketed prefix sum — and the documents scan must prune text."""
-    src = inspect.getsource(EQ.q_roc_auc_by_source)
+    src = inspect.getsource(stats.q_roc_auc_by_source)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "roc_auc_by_source")
     assert "SinglePartition" not in plan
@@ -260,7 +265,7 @@ def test_sax_collapses_to_day_domain_first(spark, sf_dir):
     """Symbolization must run on the daily rollup (groupBy before the
     scalar cross-join), and the scalar side of that join is a broadcast
     of one row — never a cartesian over raw orders."""
-    src = inspect.getsource(EQ.q_sax_daily_motifs)
+    src = inspect.getsource(stats.q_sax_daily_motifs)
     assert src.index('groupBy("d")') < src.index("crossJoin")
     plan = _plan(spark, sf_dir, "sax_daily_motifs")
     assert "CartesianProduct" not in plan
@@ -269,7 +274,7 @@ def test_sax_collapses_to_day_domain_first(spark, sf_dir):
 
 
 def test_hazard_prefix_is_two_phase(spark, sf_dir):
-    src = inspect.getsource(EQ.q_discrete_hazard_curve)
+    src = inspect.getsource(stats.q_discrete_hazard_curve)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "discrete_hazard_curve")
     assert "SinglePartition" not in plan
@@ -298,7 +303,7 @@ def test_mutual_information_runs_on_joint_domain(spark, sf_dir):
 def test_kendall_pairs_live_on_day_domain(spark, sf_dir):
     """The O(days²) self-join must be on the daily rollup (groupBy
     before the join) with the replicated side broadcast."""
-    src = inspect.getsource(EQ.q_kendall_tau_daily)
+    src = inspect.getsource(stats.q_kendall_tau_daily)
     assert src.index('groupBy("d")') < src.index(".join(")
     plan = _plan(spark, sf_dir, "kendall_tau_daily")
     assert "BroadcastNestedLoopJoin" in plan
@@ -309,7 +314,7 @@ def test_jl_audit_is_pure_projection(spark, sf_dir):
     """The JL audit is per-row arithmetic + one keyed aggregate — no
     joins, no windows, no shuffle other than the final group-by; the
     sign matrix must be baked as literals (no engine RNG)."""
-    src = inspect.getsource(EQ._jl_signs)
+    src = inspect.getsource(stats._jl_signs)
     assert "hashlib" in src and "random" not in src
     plan = _plan(spark, sf_dir, "jl_projection_audit")
     assert "Join" not in plan
@@ -321,7 +326,7 @@ def test_conformal_quantile_is_count_based(spark, sf_dir):
     (two-phase prefix over per-(type, residual) counts) — never a
     per-type sort window over raw residual rows; per-type scalars reach
     the big side as broadcasts."""
-    src = inspect.getsource(EQ.q_conformal_interval_calibration)
+    src = inspect.getsource(stats.q_conformal_interval_calibration)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "conformal_interval_calibration")
     assert "SinglePartition" not in plan
@@ -348,7 +353,7 @@ def test_wasserstein_gaps_avoid_global_lead(spark, sf_dir):
     """Consecutive-value gaps come from two-phase numbering + an rn+1
     self-join — a global LEAD window over the value domain would be a
     single task at 100 TB."""
-    src = inspect.getsource(EQ.q_wasserstein_one_vs_rest)
+    src = inspect.getsource(stats.q_wasserstein_one_vs_rest)
     assert "stable_row_number" in src and "F.lead" not in src
     plan = _plan(spark, sf_dir, "wasserstein_one_vs_rest")
     assert "CartesianProduct" not in plan
@@ -393,7 +398,7 @@ def test_pinball_quantiles_are_count_based(spark, sf_dir):
     """Both quantile predictors come from the count-based selection
     (two-phase prefix over per-(type, value) counts) and reach raw rows
     as a broadcast — never a per-type sort window."""
-    src = inspect.getsource(EQ.q_pinball_loss_eval)
+    src = inspect.getsource(stats.q_pinball_loss_eval)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "pinball_loss_eval")
     assert "SinglePartition" not in plan
@@ -401,7 +406,7 @@ def test_pinball_quantiles_are_count_based(spark, sf_dir):
 
 
 def test_median_ci_is_count_based(spark, sf_dir):
-    src = inspect.getsource(EQ.q_median_ci_binomial)
+    src = inspect.getsource(stats.q_median_ci_binomial)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "median_ci_binomial")
     assert "SinglePartition" not in plan
@@ -420,7 +425,7 @@ def test_ndcg_discounts_are_literals(spark, sf_dir):
     """No log() in either engine's NDCG plan — discounts and the IDCG
     are Python-computed literals; the rank window runs on a ≤k-row
     frame only (the rolled-up-domain dispensation)."""
-    src = inspect.getsource(EQ.q_ann_ndcg_eval)
+    src = inspect.getsource(stats.q_ann_ndcg_eval)
     assert "F.log" not in src and "log2" not in src.replace(
         "1/log₂", ""
     ).replace("log₂", "")
@@ -431,7 +436,7 @@ def test_ndcg_discounts_are_literals(spark, sf_dir):
 def test_mase_collapses_to_day_domain(spark, sf_dir):
     """Lag alignment is a self-join on the integer day key AFTER the
     daily rollup — no LAG window, no cartesian."""
-    src = inspect.getsource(EQ.q_mase_seasonal_naive)
+    src = inspect.getsource(selection.q_mase_seasonal_naive)
     assert src.index('groupBy("d")') < src.index(".join(")
     assert "F.lag" not in src and "F.lead" not in src
     plan = _plan(spark, sf_dir, "mase_seasonal_naive")
@@ -440,7 +445,7 @@ def test_mase_collapses_to_day_domain(spark, sf_dir):
 
 
 def test_weighted_median_is_count_based(spark, sf_dir):
-    src = inspect.getsource(EQ.q_weighted_median_exact)
+    src = inspect.getsource(selection.q_weighted_median_exact)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "weighted_median_exact")
     assert "SinglePartition" not in plan
@@ -460,7 +465,7 @@ def test_hurst_blocks_are_bounded_windows(spark, sf_dir):
     most 56 rows by construction, and the window partitions on the
     block id, never a global order; rows collapse to the day domain
     before any of it."""
-    src = inspect.getsource(EQ.q_hurst_exponent)
+    src = inspect.getsource(selection.q_hurst_exponent)
     assert src.index('groupBy("d")') < src.index("Window.partitionBy")
     plan = _plan(spark, sf_dir, "hurst_exponent")
     assert "CartesianProduct" not in plan
@@ -471,7 +476,7 @@ def test_cuped_variance_is_closed_form(spark, sf_dir):
     no second aggregation pass over per-user rows after θ is known
     (source computes vy_adj from vy/cv/vx columns), and the pooled
     scalars reach the 2-row arm table as a broadcast."""
-    src = inspect.getsource(EQ.q_abtest_cuped)
+    src = inspect.getsource(selection.q_abtest_cuped)
     assert "vy - 2.0 * theta * cv + theta * theta * vx" in src
     plan = _plan(spark, sf_dir, "abtest_cuped")
     assert "Window" not in plan
@@ -497,7 +502,7 @@ def test_logreg_driver_state_is_bounded(spark, sf_dir):
     """Each Newton step collects exactly twelve scalars (one .head()
     per step on an aggregate) — no per-row collect, no join, no window
     in the returned scoring plan; driver state is corpus-size-free."""
-    src = inspect.getsource(EQ.q_logreg_newton)
+    src = inspect.getsource(selection.q_logreg_newton)
     assert ".head()" in src and ".collect()" not in src
     plan = _plan(spark, sf_dir, "logreg_newton")
     assert "Join" not in plan and "Window" not in plan
@@ -510,7 +515,7 @@ def test_pca_iterates_on_covariance_domain(spark, sf_dir):
     against a 64-row vector, and the only windows are the per-step L1
     renormalizations over that CONSTANT d-row domain — never over
     corpus rows. No driver-side matrix."""
-    src = inspect.getsource(EQ.q_pca_power_iteration)
+    src = inspect.getsource(selection.q_pca_power_iteration)
     assert ".head()" not in src and ".collect()" not in src
     plan = _plan(spark, sf_dir, "pca_power_iteration")
     assert "CartesianProduct" not in plan
@@ -542,14 +547,14 @@ def test_negbin_is_two_keyed_aggregates(spark, sf_dir):
 
 
 def test_pareto_cutoff_is_count_based(spark, sf_dir):
-    src = inspect.getsource(EQ.q_pareto_topk_share)
+    src = inspect.getsource(selection.q_pareto_topk_share)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "pareto_topk_share")
     assert "Window" not in plan or "_bk" in plan
 
 
 def test_gpd_threshold_is_count_based(spark, sf_dir):
-    src = inspect.getsource(EQ.q_gpd_tail_fit)
+    src = inspect.getsource(selection.q_gpd_tail_fit)
     assert "stable_prefix_sum" in src
     plan = _plan(spark, sf_dir, "gpd_tail_fit")
     assert "Window" not in plan and "Join" not in plan
@@ -578,7 +583,7 @@ def test_stump_split_search_is_count_based(spark, sf_dir):
     two-phase prefix (both counts and class counts) with a struct-max
     reduce — never a per-candidate rescan or sort window, and the scan
     must prune the text column."""
-    src = inspect.getsource(EQ.q_decision_stump_split)
+    src = inspect.getsource(selection.q_decision_stump_split)
     assert src.count("stable_prefix_sum") >= 2
     plan = _plan(spark, sf_dir, "decision_stump_split")
     assert "text" not in plan

@@ -8,14 +8,18 @@ from __future__ import annotations
 
 import inspect
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    registry,
+    selection,
+    sequences,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    return final_explain_formatted(EQ._QUERIES_ALL[name](spark, sf_dir))
+    return final_explain_formatted(registry._QUERIES_ALL[name](spark, sf_dir))
 
 
 def test_embedding_dim_variance_two_phase_salted(spark, sf_dir):
@@ -25,14 +29,14 @@ def test_embedding_dim_variance_two_phase_salted(spark, sf_dir):
     2^63 ceiling at EMB_Q_SCALE quantization."""
     plan = _plan(spark, sf_dir, "embedding_dim_variance")
     assert "_salt" in plan
-    src = inspect.getsource(EQ.q_embedding_dim_variance)
+    src = inspect.getsource(sequences.q_embedding_dim_variance)
     assert "exact_group_sums" in src
 
 
 def test_embedding_covariance_two_phase_salted(spark, sf_dir):
     plan = _plan(spark, sf_dir, "embedding_covariance_topk")
     assert "_salt" in plan
-    src = inspect.getsource(EQ.q_embedding_covariance_topk)
+    src = inspect.getsource(sequences.q_embedding_covariance_topk)
     # both the pair sums and the per-dim variance numerators route
     # through the overflow-safe helper
     assert src.count("exact_group_sums(") >= 2
@@ -56,7 +60,7 @@ def test_weighted_median_single_lineitem_scan(spark, sf_dir):
     means the round-7 double-scan came back."""
     plan = _plan(spark, sf_dir, "weighted_median_exact")
     assert plan.count("lineitem") <= 1
-    src = inspect.getsource(EQ.q_weighted_median_exact)
+    src = inspect.getsource(selection.q_weighted_median_exact)
     assert 'vw.groupBy("g")' in src  # tot from vw, not from li
 
 
@@ -65,7 +69,7 @@ def test_bloom_probe_is_single_pass(spark, sf_dir):
     ONE groupBy over the marked left join (conditional countDistinct),
     and the bounded bit set (≤ 2^14 rows by construction) is broadcast.
     The fact/dim key frames are persisted across their reuses."""
-    src = inspect.getsource(EQ.q_bloom_fp_rate_audit)
+    src = inspect.getsource(selection.q_bloom_fp_rate_audit)
     assert src.count("positions(fact)") == 1
     assert "countDistinct" in src and "F.when" in src
     plan = _plan(spark, sf_dir, "bloom_fp_rate_audit")

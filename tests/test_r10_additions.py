@@ -17,7 +17,12 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    common,
+    corpusops,
+    registry,
+    tokenlearn,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
@@ -36,7 +41,7 @@ def test_line_dedup_conservation_and_nontriviality(spark, sf_dir):
     hashes; duplicate instances removed == copies owned by keepers
     (every removed instance is owned by exactly one keeper); the dedup
     must actually remove something."""
-    rows = EQ._QUERIES_ALL["line_dedup_exact"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["line_dedup_exact"](spark, sf_dir).collect()
     empty_md5 = "d41d8cd98f00b204e9800998ecf8427e"
     tot_lines = sum(r["n_lines"] for r in rows)
     tot_kept = sum(r["n_kept"] for r in rows)
@@ -45,7 +50,7 @@ def test_line_dedup_conservation_and_nontriviality(spark, sf_dir):
     assert tot_lines - tot_kept == tot_owned
     for r in rows:
         assert 0 <= r["n_kept"] <= r["n_lines"]
-        assert r["kept_tokens"] <= EQ.LINE_TOKENS * r["n_kept"]
+        assert r["kept_tokens"] <= tokenlearn.LINE_TOKENS * r["n_kept"]
         assert (r["rewrite_md5"] == empty_md5) == (r["n_kept"] == 0)
 
 
@@ -54,23 +59,23 @@ def test_line_dedup_first_occurrence_owner_rule(spark, sf_dir):
     lowest doc_id containing any duplicated line must keep it, and the
     global keeper count equals the distinct-hash count computed
     independently."""
-    lx = EQ._doc_lines(spark, sf_dir)
+    lx = tokenlearn._doc_lines(spark, sf_dir)
     n_distinct = (
         lx.select(F.md5(F.concat_ws(" ", F.col("lt"))).alias("h"))
         .agg(F.countDistinct("h"))
         .head()[0]
     )
-    rows = EQ._QUERIES_ALL["line_dedup_exact"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["line_dedup_exact"](spark, sf_dir).collect()
     assert sum(r["n_kept"] for r in rows) == n_distinct
 
 
 def test_line_dedup_plan_shapes(spark, sf_dir):
     """One corpus scan (the persisted shared line-explode), struct-min
     ownership (no window over the corpus line stream), no Python."""
-    src = inspect.getsource(EQ.q_line_dedup_exact)
+    src = inspect.getsource(corpusops.q_line_dedup_exact)
     assert "_doc_lines" in src and "F.min(F.struct" in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["line_dedup_exact"](spark, sf_dir)
+        registry._QUERIES_ALL["line_dedup_exact"](spark, sf_dir)
     )
     assert _distinct_parquet_scans(plan) <= 1, plan
     assert "InMemoryTableScan" in plan
@@ -94,12 +99,12 @@ def test_kn_perplexity_is_proper_and_differs_from_mle(spark, sf_dir):
 
     kn = {
         r["doc_id"]: r
-        for r in EQ._QUERIES_ALL["kn_bigram_perplexity"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["kn_bigram_perplexity"](spark, sf_dir)
         .collect()
     }
     mle = {
         r["doc_id"]: r
-        for r in EQ._QUERIES_ALL["doc_lm_perplexity"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["doc_lm_perplexity"](spark, sf_dir)
         .collect()
     }
     assert set(kn) == set(mle)
@@ -118,7 +123,7 @@ def test_kn_reserved_mass_is_positive(spark, sf_dir):
     """The backoff term must carry real probability: for every history
     w1, the discount reserves D·N1+(w1·)/c1 > 0 — spot-check the model
     identity Σ_observed p(w2|w1) < 1 on the most frequent history."""
-    docs = EQ._docs(spark, sf_dir)
+    docs = common._docs(spark, sf_dir)
     from database_fragmentation_and_query_processor_spark.functions import (
         text as T,
     )
@@ -143,7 +148,7 @@ def test_kn_reserved_mass_is_positive(spark, sf_dir):
         .orderBy(F.desc("c1"))
         .head()
     )
-    observed_mass = 1.0 - EQ.KN_DISCOUNT * top["n1f"] / top["c1"]
+    observed_mass = 1.0 - corpusops.KN_DISCOUNT * top["n1f"] / top["c1"]
     assert 0.0 < observed_mass < 1.0
 
 
@@ -152,10 +157,10 @@ def test_kn_plan_scans_corpus_twice_via_cached_type_table(spark, sf_dir):
     continuation / type-total aggregates and the scorer join — the
     corpus is read exactly twice (type-table build + scorer stream),
     never once per model table."""
-    src = inspect.getsource(EQ.q_kn_bigram_perplexity)
+    src = inspect.getsource(corpusops.q_kn_bigram_perplexity)
     assert "_track_cached" in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["kn_bigram_perplexity"](spark, sf_dir)
+        registry._QUERIES_ALL["kn_bigram_perplexity"](spark, sf_dir)
     )
     assert _distinct_parquet_scans(plan) <= 2, plan
     assert "InMemoryTableScan" in plan
@@ -175,10 +180,10 @@ def test_unigram_vocab_conserves_character_mass(spark, sf_dir):
         text as T,
     )
 
-    rows = EQ._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir).collect()
     assert rows
     seg_mass = sum(r["cnt"] * r["piece_len"] for r in rows)
-    docs = EQ._docs(spark, sf_dir)
+    docs = common._docs(spark, sf_dir)
     char_mass = (
         docs.select(F.explode(T.tokens(F.col("text"))).alias("w"))
         .agg(F.sum(F.length("w")))
@@ -193,12 +198,12 @@ def test_unigram_vocab_is_nontrivial_and_bounded(spark, sf_dir):
     equality because both engines share it), every piece must respect
     UNI_MAXLEN, and the reported neg_logp must be a positive
     6dp-rounded -ln(share)."""
-    rows = EQ._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir).collect()
     assert any(r["piece_len"] >= 2 for r in rows)
     assert any(r["piece_len"] == 1 for r in rows)
     total = sum(r["cnt"] for r in rows)
     for r in rows:
-        assert 1 <= r["piece_len"] <= EQ.UNI_MAXLEN
+        assert 1 <= r["piece_len"] <= corpusops.UNI_MAXLEN
         assert len(r["piece"]) == r["piece_len"]
         assert 0 < r["cnt"] <= total
         assert r["neg_logp"] > 0.0
@@ -207,12 +212,12 @@ def test_unigram_vocab_is_nontrivial_and_bounded(spark, sf_dir):
 def test_unigram_learning_is_deterministic(spark, sf_dir):
     a = sorted(
         tuple(r)
-        for r in EQ._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir)
         .collect()
     )
     b = sorted(
         tuple(r)
-        for r in EQ._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir)
         .collect()
     )
     assert a == b
@@ -223,11 +228,11 @@ def test_unigram_plan_touches_corpus_once_with_no_collects(spark, sf_dir):
     EM rounds run on the vocabulary domain inside a single lazy plan —
     no driver-side collects (unlike BPE's documented LIMIT-1 steps),
     no Python UDFs, no windows."""
-    src = inspect.getsource(EQ.q_unigram_lm_learning)
+    src = inspect.getsource(corpusops.q_unigram_lm_learning)
     assert ".collect()" not in src
     assert "_track_cached" in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir)
+        registry._QUERIES_ALL["unigram_lm_learning"](spark, sf_dir)
     )
     assert _distinct_parquet_scans(plan) <= 1, "corpus must be read once"
     assert "InMemoryTableScan" in plan
@@ -240,13 +245,11 @@ def test_unigram_plan_touches_corpus_once_with_no_collects(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def test_r10_additions_followed_the_add_then_rotate_lifecycle():
-    """The r10 additions registered BELOW the window in r10 and
-    rotated into the r11 stamp prefix (positions 6-15) for their first
-    driver stamps; as of r13 the window front-loads _R12_ADDED and
-    there is no below-window backlog (322/322 stamped after a green
-    r13)."""
-    names = list(EQ.QUERIES)
-    assert EQ._R10_ADDED == [
+    """The r10 additions registered BELOW the head in r10 and rotated
+    into the r11 head for their first driver stamps; the r11 and r12
+    additions sit inside the current 50-name head."""
+    names = list(registry.QUERIES)
+    r10_added = [
         "line_dedup_exact",
         "kn_bigram_perplexity",
         "unigram_lm_learning",
@@ -258,13 +261,50 @@ def test_r10_additions_followed_the_add_then_rotate_lifecycle():
         "k_anonymity_audit",
         "pr_auc_by_source",
     ]
-    for n in EQ._R10_ADDED:
+    r11_added = [
+        "logreg_hash_text",
+        "exact_substr_incremental",
+        "temperature_sampling_weights",
+        "dedup_bcubed_eval",
+        "heaps_law_fit",
+        "data_constrained_effective_tokens",
+        "shard_balance_audit",
+        "dedup_cluster_cohesion",
+        "rare_token_audit",
+        "t_closeness_audit",
+        "qlm_dirichlet_search",
+        "doremi_domain_weights",
+        "label_propagation_communities",
+        "kcenter_coreset",
+        "fellegi_sunter_linkage",
+        "unimax_budget_allocation",
+        "packing_truncation_audit",
+        "coverage_greedy_selection",
+        "wordpiece_learning",
+        "grid_density_clusters",
+        "tokenizer_compare_audit",
+        "burrows_delta_stylometry",
+        "dunning_g2_keyness",
+        "jsd_source_divergence",
+        "rbo_rank_agreement",
+        "adamic_adar_linkpred",
+        "degree_distribution_audit",
+        "rrf_fusion_topk",
+        "association_rules_lift",
+        "seasonal_decomposition_audit",
+    ]
+    r12_added = [
+        "streaming_near_dup",
+        "crosslingual_dedup",
+        "crosslingual_mate_retrieval",
+    ]
+    for n in r10_added:
         # stamped in the r11 window (CORRECTNESS_r11) — free to rotate
         # out once the evidence landed; only registration is pinned now
-        assert n in EQ.QUERIES and n in EQ.ORACLE_SQL
-    for n in EQ._R11_ADDED:
-        assert n in EQ.QUERIES and n in EQ.ORACLE_SQL
+        assert n in registry.QUERIES and n in registry.ORACLE_SQL
+    for n in r11_added:
+        assert n in registry.QUERIES and n in registry.ORACLE_SQL
         assert names.index(n) < 50  # r12-stamped; r13 re-certifies as refills
-    for n in EQ._R12_ADDED:
-        assert n in EQ.QUERIES and n in EQ.ORACLE_SQL
+    for n in r12_added:
+        assert n in registry.QUERIES and n in registry.ORACLE_SQL
         assert names.index(n) < 50  # rotated INTO the r13 stamp window

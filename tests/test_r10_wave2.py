@@ -8,7 +8,12 @@ import re
 
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    common,
+    corpusops,
+    registry,
+    sequences,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
@@ -30,17 +35,17 @@ def test_exact_substr_dedup_twin_docs_fully_removed(spark, sf_dir):
     are untouched."""
     rows = {
         r["doc_id"]: r
-        for r in EQ._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
         .collect()
     }
     empty_md5 = "d41d8cd98f00b204e9800998ecf8427e"
-    twins = [d for d in rows if d >= EQ.DUP_SALT]
+    twins = [d for d in rows if d >= common.DUP_SALT]
     assert twins
     n_fully_removed = 0
     for d in twins:
-        tw, orig = rows[d], rows[d - EQ.DUP_SALT]
+        tw, orig = rows[d], rows[d - common.DUP_SALT]
         assert tw["n_tokens"] == orig["n_tokens"]
-        if tw["n_tokens"] >= EQ.DUPSPAN_L:
+        if tw["n_tokens"] >= sequences.DUPSPAN_L:
             # twin text is 100% duplicated; every token is covered
             assert tw["n_removed"] == tw["n_tokens"]
             assert tw["rewrite_md5"] == empty_md5
@@ -64,10 +69,10 @@ def test_exact_substr_originals_keep_unshared_text(spark, sf_dir):
 
     rows = {
         r["doc_id"]: r
-        for r in EQ._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
         .collect()
     }
-    docs = EQ._docs(spark, sf_dir)
+    docs = common._docs(spark, sf_dir)
     own = {
         r["doc_id"]: r["h"]
         for r in docs.select(
@@ -87,10 +92,10 @@ def test_exact_substr_plan_shapes(spark, sf_dir):
     """The window table is persisted and shared by the owner table and
     the removal join (one corpus pass feeds both); ownership is a
     struct-min aggregation, not a corpus-wide window; no Python."""
-    src = inspect.getsource(EQ.q_exact_substr_dedup)
+    src = inspect.getsource(corpusops.q_exact_substr_dedup)
     assert "_track_cached" in src and "F.min(F.struct" in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
+        registry._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
     )
     assert "InMemoryTableScan" in plan
     assert "Window" not in plan
@@ -109,7 +114,7 @@ def test_nb_classifier_beats_chance_on_weak_labels(spark, sf_dir):
     distribution (token-level class TVD ≈ 2%), so the bar is a binomial
     z-test against 0.5, not a fixed accuracy: per-doc aggregation of
     the small per-token signal is exactly what NB is supposed to do."""
-    rows = EQ._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).collect()
     n = len(rows)
     assert n > 0
     acc = sum(1 for r in rows if r["pred_label"] == r["weak_label"]) / n
@@ -123,7 +128,7 @@ def test_nb_classifier_beats_chance_on_weak_labels(spark, sf_dir):
 def test_nb_classifier_score_is_prior_plus_likelihood(spark, sf_dir):
     """pred_label must be exactly the sign of log_odds (one shared
     expression, no separate threshold drift)."""
-    for r in EQ._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).collect():
+    for r in registry._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).collect():
         assert r["pred_label"] == (1 if r["log_odds"] > 0 else 0)
 
 
@@ -133,10 +138,10 @@ def test_nb_classifier_plan_shapes(spark, sf_dir):
     inference passes share one corpus read); scalars ride broadcast
     1-row frames; no Python, no windows."""
     # the shared train+score core persists its token substrate
-    src = inspect.getsource(EQ._nb_scored) + inspect.getsource(EQ._nb_tokens)
+    src = inspect.getsource(corpusops._nb_scored) + inspect.getsource(corpusops._nb_tokens)
     assert "_track_cached" in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir)
+        registry._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir)
     )
     assert _distinct_parquet_scans(plan) <= 1, "one corpus read"
     assert "InMemoryTableScan" in plan
@@ -153,18 +158,18 @@ def test_nb_calibration_bins_partition_the_corpus(spark, sf_dir):
     rates must be probabilities, bins must be valid deciles, and the
     audit must be NONTRIVIAL (more than one occupied bin — a sigmoid
     or binning bug collapses everything into one bucket)."""
-    rows = EQ._QUERIES_ALL["nb_calibration_audit"](spark, sf_dir).collect()
-    n_scored = EQ._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).count()
+    rows = registry._QUERIES_ALL["nb_calibration_audit"](spark, sf_dir).collect()
+    n_scored = registry._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).count()
     assert sum(r["n_docs"] for r in rows) == n_scored
     assert len(rows) >= 2
     for r in rows:
-        assert 0 <= r["bin"] < EQ.NB_CAL_BINS
+        assert 0 <= r["bin"] < corpusops.NB_CAL_BINS
         assert 0.0 <= r["mean_conf"] <= 1.0
         assert 0.0 <= r["emp_rate"] <= 1.0
         assert abs(r["abs_gap"] - abs(round(r["mean_conf"] - r["emp_rate"], 6))) < 1e-9
         # a decile's mean confidence lies inside the decile
-        assert r["bin"] / EQ.NB_CAL_BINS - 1e-9 <= r["mean_conf"] <= (
-            (r["bin"] + 1) / EQ.NB_CAL_BINS + 1e-9
+        assert r["bin"] / corpusops.NB_CAL_BINS - 1e-9 <= r["mean_conf"] <= (
+            (r["bin"] + 1) / corpusops.NB_CAL_BINS + 1e-9
         )
 
 
@@ -174,7 +179,7 @@ def test_quality_budget_mix_is_a_greedy_prefix_plan(spark, sf_dir):
     zeros), and the kept token mass must equal the budget share of the
     corpus exactly (up to the 6dp rounding of the one fraction)."""
     rows = sorted(
-        EQ._QUERIES_ALL["quality_budget_mix"](spark, sf_dir).collect(),
+        registry._QUERIES_ALL["quality_budget_mix"](spark, sf_dir).collect(),
         key=lambda r: r["rank"],
     )
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
@@ -185,7 +190,7 @@ def test_quality_budget_mix_is_a_greedy_prefix_plan(spark, sf_dir):
     assert n_partial <= 1
     total = sum(r["n_tokens"] for r in rows)
     kept = sum(r["n_tokens"] * r["keep_frac"] for r in rows)
-    want = total * EQ.MIX_BUDGET_PERMILLE / 1000.0
+    want = total * corpusops.MIX_BUDGET_PERMILLE / 1000.0
     assert abs(kept - want) <= max(r["n_tokens"] for r in rows) * 1e-5
     # ranking follows mean quality, best first
     means = [r["mean_score"] for r in rows]
@@ -198,7 +203,7 @@ def test_nb_consumers_share_one_corpus_read(spark, sf_dir):
     source-domain window only on the rolled-up frame."""
     for name in ("nb_calibration_audit", "quality_budget_mix"):
         plan = final_explain_formatted(
-            EQ._QUERIES_ALL[name](spark, sf_dir)
+            registry._QUERIES_ALL[name](spark, sf_dir)
         )
         assert _distinct_parquet_scans(plan) <= 1, name
         assert "InMemoryTableScan" in plan, name
@@ -211,9 +216,9 @@ def test_nb_holdout_confusion_is_complete_and_out_of_sample(spark, sf_dir):
     train-split predictions must differ from the in-sample model's
     somewhere (the model saw ~80% of the data, not all of it), while
     val/test rows exist to measure generalization."""
-    rows = EQ._QUERIES_ALL["nb_holdout_eval"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["nb_holdout_eval"](spark, sf_dir).collect()
     n_total = sum(r["n_docs"] for r in rows)
-    n_scored = EQ._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).count()
+    n_scored = registry._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).count()
     assert n_total == n_scored
     splits = {r["split"] for r in rows}
     assert splits == {"train", "val", "test"}
@@ -233,10 +238,10 @@ def test_nb_holdout_plan_keeps_single_corpus_read(spark, sf_dir):
     persisted token table feeds the train-filtered model build and the
     all-docs scoring join (now a LEFT join for open-vocabulary Laplace
     mass); still one parquet scan, no Python."""
-    src = inspect.getsource(EQ._nb_scored)
+    src = inspect.getsource(corpusops._nb_scored)
     assert '"left" if holdout else "inner"' in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["nb_holdout_eval"](spark, sf_dir)
+        registry._QUERIES_ALL["nb_holdout_eval"](spark, sf_dir)
     )
     assert _distinct_parquet_scans(plan) <= 1
     assert "InMemoryTableScan" in plan
@@ -247,13 +252,13 @@ def test_k_anonymity_bands_partition_groups_and_docs(spark, sf_dir):
     """Band rows must partition BOTH the QI equivalence classes and the
     corpus docs exactly; l-diversity is bounded by the source count;
     the audit is nontrivial (at least two occupied bands at test SFs)."""
-    rows = EQ._QUERIES_ALL["k_anonymity_audit"](spark, sf_dir).collect()
-    docs = EQ._docs(spark, sf_dir)
+    rows = registry._QUERIES_ALL["k_anonymity_audit"](spark, sf_dir).collect()
+    docs = common._docs(spark, sf_dir)
     n_docs = docs.count()
     qi = (
         docs.groupBy(
             "lang",
-            F.floor(F.col("n_chars") / EQ.KANON_CHAR_BUCKET),
+            F.floor(F.col("n_chars") / corpusops.KANON_CHAR_BUCKET),
         ).count()
     )
     n_groups = qi.count()
@@ -274,11 +279,11 @@ def test_pr_auc_bounds_and_consistency_with_roc(spark, sf_dir):
     prevalence)."""
     pr = {
         r["source"]: r
-        for r in EQ._QUERIES_ALL["pr_auc_by_source"](spark, sf_dir).collect()
+        for r in registry._QUERIES_ALL["pr_auc_by_source"](spark, sf_dir).collect()
     }
     roc = {
         r["source"]: r
-        for r in EQ._QUERIES_ALL["roc_auc_by_source"](spark, sf_dir).collect()
+        for r in registry._QUERIES_ALL["roc_auc_by_source"](spark, sf_dir).collect()
     }
     assert set(pr) == set(roc)
     n_off_baseline = 0
@@ -296,7 +301,6 @@ def test_pr_auc_is_exactly_one_for_a_perfect_predictor(spark):
     """Sanity oracle on a constructed frame: when every positive
     outranks every negative, AP must be exactly 1; when every score is
     tied, AP must equal the prevalence."""
-    import database_fragmentation_and_query_processor_spark.entry_queries as eq
     from database_fragmentation_and_query_processor_spark.queries import common as cq
 
     def run(rows):
@@ -308,7 +312,7 @@ def test_pr_auc_is_exactly_one_for_a_perfect_predictor(spark):
             cq._t_impl = lambda s, d, t: df
             return {
                 r["source"]: r
-                for r in eq._QUERIES_ALL["pr_auc_by_source"](
+                for r in registry._QUERIES_ALL["pr_auc_by_source"](
                     spark, "unused"
                 ).collect()
             }
@@ -326,10 +330,10 @@ def test_pr_auc_is_exactly_one_for_a_perfect_predictor(spark):
 def test_pr_auc_plan_uses_two_phase_prefix_not_window(spark, sf_dir):
     import inspect as _inspect
 
-    src = _inspect.getsource(EQ.q_pr_auc_by_source)
+    src = _inspect.getsource(corpusops.q_pr_auc_by_source)
     assert "stable_prefix_sum" in src
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["pr_auc_by_source"](spark, sf_dir)
+        registry._QUERIES_ALL["pr_auc_by_source"](spark, sf_dir)
     )
     assert "SinglePartition" not in plan
     assert "BatchEvalPython" not in plan
@@ -358,7 +362,7 @@ def test_r10_added_plan_hygiene(spark, sf_dir, name):
     """Every round-10 operator's final plan: at most two distinct
     parquet scans (shared intermediates are persisted, never
     re-derived), no Python row evaluation, no cartesian product."""
-    plan = final_explain_formatted(EQ._QUERIES_ALL[name](spark, sf_dir))
+    plan = final_explain_formatted(registry._QUERIES_ALL[name](spark, sf_dir))
     assert _distinct_parquet_scans(plan) <= 2, name
     assert "BatchEvalPython" not in plan, name
     assert "CartesianProduct" not in plan, name

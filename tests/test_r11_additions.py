@@ -12,7 +12,16 @@ from __future__ import annotations
 import math
 import re
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    batteries,
+    common,
+    corpusops,
+    docops,
+    families,
+    registry,
+    sequences,
+    tokenlearn,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
@@ -33,8 +42,8 @@ def test_logreg_hash_text_fits_and_partitions_the_corpus(spark, sf_dir):
     fitted betas is below the β=0 baseline loss ln 2 (a solver that
     returns zeros or diverges fails this, while both engines sharing
     it would pass the oracle compare); and the fit is deterministic."""
-    rows = EQ._QUERIES_ALL["logreg_hash_text"](spark, sf_dir).collect()
-    n_scored = EQ._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).count()
+    rows = registry._QUERIES_ALL["logreg_hash_text"](spark, sf_dir).collect()
+    n_scored = registry._QUERIES_ALL["nb_quality_classifier"](spark, sf_dir).count()
     assert {r["split"] for r in rows} == {"train", "val", "test"}
     assert sum(r["n_docs"] for r in rows) == n_scored
     for r in rows:
@@ -46,7 +55,7 @@ def test_logreg_hash_text_fits_and_partitions_the_corpus(spark, sf_dir):
     assert any(abs(b) > 1e-12 for b in next(iter(betas)))
     train = next(r for r in rows if r["split"] == "train")
     assert train["log_loss"] < math.log(2.0) + 1e-9
-    again = EQ._QUERIES_ALL["logreg_hash_text"](spark, sf_dir).collect()
+    again = registry._QUERIES_ALL["logreg_hash_text"](spark, sf_dir).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
@@ -56,7 +65,7 @@ def test_logreg_hash_text_plan_shapes(spark, sf_dir):
     plan reads the cache — at most the substrate's one corpus scan —
     with no Python eval and no window over the corpus."""
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["logreg_hash_text"](spark, sf_dir)
+        registry._QUERIES_ALL["logreg_hash_text"](spark, sf_dir)
     )
     assert _distinct_parquet_scans(plan) <= 1, plan
     assert "InMemoryTableScan" in plan
@@ -76,15 +85,15 @@ def test_incremental_equals_full_recompute_restricted_to_batch(
     batch docs, column for column (n_tokens, n_removed, rewrite_md5)."""
     inc = {
         r["doc_id"]: r
-        for r in EQ._QUERIES_ALL["exact_substr_incremental"](
+        for r in registry._QUERIES_ALL["exact_substr_incremental"](
             spark, sf_dir
         ).collect()
     }
     full = {
         r["doc_id"]: r
-        for r in EQ._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["exact_substr_dedup"](spark, sf_dir)
         .collect()
-        if (r["doc_id"] % EQ.DUP_SALT) % EQ.INCR_BATCH_MOD == 0
+        if (r["doc_id"] % common.DUP_SALT) % families.INCR_BATCH_MOD == 0
     }
     assert set(inc) == set(full) and inc
     for d, r in inc.items():
@@ -102,7 +111,7 @@ def test_incremental_substr_plan_shapes(spark, sf_dir):
     persisted (index build + probe + rewrite must not re-tokenize), no
     Python eval, no corpus-wide window function."""
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["exact_substr_incremental"](spark, sf_dir)
+        registry._QUERIES_ALL["exact_substr_incremental"](spark, sf_dir)
     )
     assert "InMemoryTableScan" in plan
     assert "BatchEvalPython" not in plan
@@ -120,7 +129,7 @@ def test_temperature_sampling_flattens_toward_uniform(spark, sf_dir):
     (the power map is monotone). A sign error in the exponent or a
     share/total swap breaks one of these while both engines would
     still agree."""
-    rows = EQ._QUERIES_ALL["temperature_sampling_weights"](
+    rows = registry._QUERIES_ALL["temperature_sampling_weights"](
         spark, sf_dir
     ).collect()
     assert len(rows) >= 2
@@ -146,7 +155,7 @@ def test_heaps_fit_is_sublinear_and_positive(spark, sf_dir):
     but sublinearly) and the intercept is finite — a swapped x/y or a
     count/distinct mix-up pushes β outside the unit interval while
     both engines would still agree."""
-    row = EQ._QUERIES_ALL["heaps_law_fit"](spark, sf_dir).head()
+    row = registry._QUERIES_ALL["heaps_law_fit"](spark, sf_dir).head()
     assert row["n_sources"] >= 3
     assert 0.0 < row["heaps_beta"] < 1.0, row
     assert math.isfinite(row["heaps_ln_k"])
@@ -158,7 +167,7 @@ def test_data_constrained_decay_bounds(spark, sf_dir):
     nothing), epochs ≥ 1, retention ∈ (0, 1]; sources with real
     repetition (the %7 twins) must show epochs > 1 AND retention < 1;
     a source with no duplicates keeps retention ≈ 1."""
-    rows = EQ._QUERIES_ALL["data_constrained_effective_tokens"](
+    rows = registry._QUERIES_ALL["data_constrained_effective_tokens"](
         spark, sf_dir
     ).collect()
     assert rows
@@ -183,14 +192,14 @@ def test_shard_balance_is_sane_and_hash_uniform(spark, sf_dir):
     conserve the corpus exactly, and be reasonably uniform (CV well
     under 1 and max/mean bounded — a broken hash that funnels docs
     into few shards explodes both while the engines still agree)."""
-    row = EQ._QUERIES_ALL["shard_balance_audit"](spark, sf_dir).head()
+    row = registry._QUERIES_ALL["shard_balance_audit"](spark, sf_dir).head()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert row["total_docs"] == docs.count()
-    assert 1 <= row["n_shards"] <= EQ.N_OUTPUT_SHARDS
+    assert 1 <= row["n_shards"] <= corpusops.N_OUTPUT_SHARDS
     assert row["min_tokens"] >= 0 and row["max_tokens"] >= row["min_tokens"]
     assert row["max_over_mean"] >= 1.0
-    if row["total_docs"] >= 10 * EQ.N_OUTPUT_SHARDS:
-        assert row["n_shards"] == EQ.N_OUTPUT_SHARDS
+    if row["total_docs"] >= 10 * corpusops.N_OUTPUT_SHARDS:
+        assert row["n_shards"] == corpusops.N_OUTPUT_SHARDS
         assert row["token_cv"] < 1.0
         assert row["max_over_mean"] < 3.0
 
@@ -200,11 +209,11 @@ def test_cluster_cohesion_twins_are_cliques(spark, sf_dir):
     produced by verified pairs is BY CONSTRUCTION a clique — so the
     clique band must exist and dominate; accounting must match the
     multi-doc clusters of dedup_clusters."""
-    rows = EQ._QUERIES_ALL["dedup_cluster_cohesion"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["dedup_cluster_cohesion"](spark, sf_dir).collect()
     assert rows
     bands = {r["cohesion_band"]: r for r in rows}
     assert "clique" in bands
-    cl = EQ._QUERIES_ALL["dedup_clusters"](spark, sf_dir).collect()
+    cl = registry._QUERIES_ALL["dedup_clusters"](spark, sf_dir).collect()
     multi = [r for r in cl if r["n_docs"] >= 2]
     assert sum(r["n_clusters"] for r in rows) == len(multi)
     assert sum(r["n_docs"] for r in rows) == sum(r["n_docs"] for r in multi)
@@ -214,7 +223,7 @@ def test_rare_token_audit_accounting(spark, sf_dir):
     """Per-source vocab/token accounting must be internally consistent
     and the rare tail NONTRIVIAL both ways (some rare mass exists;
     rare mass is a minority of total mass)."""
-    rows = EQ._QUERIES_ALL["rare_token_audit"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["rare_token_audit"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 <= r["rare_vocab"] <= r["n_vocab"]
@@ -234,7 +243,7 @@ def test_t_closeness_accounting_and_bounds(spark, sf_dir):
     cannot report max_t above 0.1 + rounding) — a numerator/denominator
     swap or a dropped absent-source term breaks one of these while
     both engines would still agree."""
-    rows = EQ._QUERIES_ALL["t_closeness_audit"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["t_closeness_audit"](spark, sf_dir).collect()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert sum(r["n_docs"] for r in rows) == docs.count()
     caps = {"t<=0.10": 0.10, "0.10-0.25": 0.25, ">0.25": 1.0}
@@ -254,9 +263,9 @@ def test_qlm_scores_are_proper_and_disjunctive(spark, sf_dir):
     length — and on this corpus the top-1 must hit at least one term.
     The ranking itself must come back sorted (a tie-break slip
     reorders it only in one engine)."""
-    rows = EQ._QUERIES_ALL["qlm_dirichlet_search"](spark, sf_dir).collect()
-    assert len(rows) == EQ.QLM_TOPK
-    assert all(0 <= r["n_terms_hit"] <= len(EQ.BM25_TERMS) for r in rows)
+    rows = registry._QUERIES_ALL["qlm_dirichlet_search"](spark, sf_dir).collect()
+    assert len(rows) == corpusops.QLM_TOPK
+    assert all(0 <= r["n_terms_hit"] <= len(sequences.BM25_TERMS) for r in rows)
     assert rows[0]["n_terms_hit"] >= 1
     scores = [r["qlm_score"] for r in rows]
     assert scores == sorted(scores, reverse=True)
@@ -264,9 +273,9 @@ def test_qlm_scores_are_proper_and_disjunctive(spark, sf_dir):
     # missing a term, but every bm25 top doc is scoreable here, so the
     # two rankings share at least one doc on any corpus where the
     # conjunctive set is nonempty
-    bm = {r["doc_id"] for r in EQ._QUERIES_ALL["bm25_search"](spark, sf_dir).collect()}
+    bm = {r["doc_id"] for r in registry._QUERIES_ALL["bm25_search"](spark, sf_dir).collect()}
     if bm:
-        assert any(r["n_terms_hit"] == len(EQ.BM25_TERMS) for r in rows)
+        assert any(r["n_terms_hit"] == len(sequences.BM25_TERMS) for r in rows)
 
 
 def test_doremi_weights_are_a_distribution_and_track_excess(spark, sf_dir):
@@ -276,10 +285,10 @@ def test_doremi_weights_are_a_distribution_and_track_excess(spark, sf_dir):
     the excess-loss order after controlling for share — implemented as:
     among sources, boost is monotone in excess_kl whenever shares are
     near-equal, checked via the normalized weight w/share ∝ e^{η·KL}."""
-    rows = EQ._QUERIES_ALL["doremi_domain_weights"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["doremi_domain_weights"](spark, sf_dir).collect()
     assert len(rows) >= 2
     assert abs(sum(r["doremi_weight"] for r in rows) - 1.0) < 1e-4
-    floor = EQ.DOREMI_SMOOTH / len(rows)
+    floor = corpusops.DOREMI_SMOOTH / len(rows)
     for r in rows:
         assert r["excess_kl"] >= 0.0, r
         assert r["doremi_weight"] >= floor - 1e-9, r
@@ -310,7 +319,7 @@ def test_wave4_plan_shapes(spark, sf_dir):
         ("doremi_domain_weights", 1, True),
         ("qlm_dirichlet_search", 2, False),
     ):
-        plan = final_explain_formatted(EQ._QUERIES_ALL[name](spark, sf_dir))
+        plan = final_explain_formatted(registry._QUERIES_ALL[name](spark, sf_dir))
         assert _distinct_parquet_scans(plan) <= max_scans, (name, plan)
         if want_cache:
             assert "InMemoryTableScan" in plan, name
@@ -330,11 +339,11 @@ def test_lpa_communities_coarsen_the_graph(spark, sf_dir):
         label_propagation,
     )
 
-    rows = EQ._QUERIES_ALL["label_propagation_communities"](
+    rows = registry._QUERIES_ALL["label_propagation_communities"](
         spark, sf_dir
     ).collect()
     assert rows
-    edges = EQ._copurchase_edges(spark, sf_dir)
+    edges = docops._copurchase_edges(spark, sf_dir)
     nodes = {
         r["n"]
         for r in edges.selectExpr("id_a AS n")
@@ -342,7 +351,7 @@ def test_lpa_communities_coarsen_the_graph(spark, sf_dir):
         .distinct()
         .collect()
     }
-    labels = label_propagation(edges, rounds=EQ.LPA_ROUNDS).collect()
+    labels = label_propagation(edges, rounds=corpusops.LPA_ROUNDS).collect()
     assert len(labels) == len(nodes)
     assert len({r["label"] for r in labels}) < len(nodes)
     for r in rows:
@@ -360,9 +369,9 @@ def test_kcenter_radii_decrease_and_picks_are_distinct(spark, sf_dir):
     seed row is (1, 0, 0), and every later pick's dist_sq is positive
     on this corpus (no duplicate-of-center point is ever the farthest
     while distinct points exist)."""
-    rows = EQ._QUERIES_ALL["kcenter_coreset"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["kcenter_coreset"](spark, sf_dir).collect()
     assert [r["pick_order"] for r in rows] == list(
-        range(1, EQ.KCENTER_PICKS + 1)
+        range(1, corpusops.KCENTER_PICKS + 1)
     )
     assert (rows[0]["vec_id"], rows[0]["dist_sq"]) == (0, 0)
     ids = [r["vec_id"] for r in rows]
@@ -378,11 +387,11 @@ def test_fellegi_sunter_bands_are_consistent(spark, sf_dir):
     max_weight < 0), pair accounting equals the blocked pair count,
     and full-agreement pairs outscore full-disagreement ones by
     construction (Σ ln(m/u) > Σ ln((1-m)/(1-u)) for u < m)."""
-    rows = EQ._QUERIES_ALL["fellegi_sunter_linkage"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["fellegi_sunter_linkage"](spark, sf_dir).collect()
     assert rows
     n_pairs = sum(r["n_pairs"] for r in rows)
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
-        "c_custkey", f"CAST(FLOOR(c_acctbal / {EQ.FS_BLOCK_DIV}) AS BIGINT) AS bkey"
+        "c_custkey", f"CAST(FLOOR(c_acctbal / {corpusops.FS_BLOCK_DIV}) AS BIGINT) AS bkey"
     )
     from pyspark.sql import functions as F
 
@@ -396,12 +405,12 @@ def test_fellegi_sunter_bands_are_consistent(spark, sf_dir):
     for r in rows:
         assert r["min_weight"] <= r["max_weight"]
         if r["fs_band"] == "match":
-            assert r["min_weight"] >= EQ.FS_UPPER - 1e-6
+            assert r["min_weight"] >= corpusops.FS_UPPER - 1e-6
         elif r["fs_band"] == "non-match":
             assert r["max_weight"] < 0.0
         else:
             assert 0.0 - 1e-6 <= r["min_weight"]
-            assert r["max_weight"] < EQ.FS_UPPER + 1e-6
+            assert r["max_weight"] < corpusops.FS_UPPER + 1e-6
 
 
 def test_wave5_plan_shapes(spark, sf_dir):
@@ -415,14 +424,14 @@ def test_wave5_plan_shapes(spark, sf_dir):
     its per-round jobs are covered by the oracle equality and the
     radii invariants instead.)"""
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["fellegi_sunter_linkage"](spark, sf_dir)
+        registry._QUERIES_ALL["fellegi_sunter_linkage"](spark, sf_dir)
     )
     assert _distinct_parquet_scans(plan) <= 1, plan
     assert "InMemoryTableScan" in plan
     assert "BatchEvalPython" not in plan
     assert "Window" not in plan
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["label_propagation_communities"](spark, sf_dir)
+        registry._QUERIES_ALL["label_propagation_communities"](spark, sf_dir)
     )
     assert "BatchEvalPython" not in plan
     assert "Window" not in plan
@@ -436,13 +445,13 @@ def test_unimax_waterfill_invariants(spark, sf_dir):
     the 5/2 cap, and on this corpus the cap actually BINDS (≥1 capped
     AND ≥1 uncapped) — a constants regression that makes the waterfall
     degenerate fails here while both engines still agree."""
-    rows = EQ._QUERIES_ALL["unimax_budget_allocation"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["unimax_budget_allocation"](spark, sf_dir).collect()
     assert len(rows) >= 2
     assert abs(sum(r["budget_share"] for r in rows) - 1.0) < 1e-4
     capped = [r for r in rows if r["capped"]]
     uncapped = [r for r in rows if not r["capped"]]
     assert capped and uncapped
-    cap_ratio = EQ.UNIMAX_CAP_NUM / EQ.UNIMAX_CAP_DEN
+    cap_ratio = corpusops.UNIMAX_CAP_NUM / corpusops.UNIMAX_CAP_DEN
     for r in rows:
         assert r["epochs"] <= cap_ratio + 1e-6, r
         assert r["alloc_tokens"] > 0.0
@@ -464,23 +473,23 @@ def test_packing_truncation_accounting(spark, sf_dir):
     where a language holds more than one sequence."""
     rows = {
         r["lang"]: r
-        for r in EQ._QUERIES_ALL["packing_truncation_audit"](
+        for r in registry._QUERIES_ALL["packing_truncation_audit"](
             spark, sf_dir
         ).collect()
     }
-    packed = EQ._QUERIES_ALL["sequence_packing"](spark, sf_dir).collect()
+    packed = registry._QUERIES_ALL["sequence_packing"](spark, sf_dir).collect()
     import collections
 
     direct = collections.Counter()
     for p in packed:
         if p["n_tokens"] >= 1:
             first = p["seq_id"]
-            last = (p["seq_offset"] + p["n_tokens"] - 1) // EQ.SEQ_LEN + first
+            last = (p["seq_offset"] + p["n_tokens"] - 1) // batteries.SEQ_LEN + first
             if last != first:
                 direct[p["lang"]] += 1
     for lang, r in rows.items():
         assert r["n_split_docs"] == direct.get(lang, 0), lang
-        assert r["seqs_used"] == -(-r["total_tokens"] // EQ.SEQ_LEN)
+        assert r["seqs_used"] == -(-r["total_tokens"] // batteries.SEQ_LEN)
         assert 0.0 <= r["split_rate"] <= 1.0
         assert r["avg_pieces"] >= 1.0
     if any(r["seqs_used"] > 1 for r in rows.values()):
@@ -491,9 +500,9 @@ def test_coverage_greedy_gains_diminish(spark, sf_dir):
     """Submodularity: greedy gains are non-increasing; covered_total is
     the running gain sum; picks are distinct docs; and the first pick
     is the doc with the most distinct bigrams (checked directly)."""
-    rows = EQ._QUERIES_ALL["coverage_greedy_selection"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["coverage_greedy_selection"](spark, sf_dir).collect()
     assert [r["pick_order"] for r in rows] == list(
-        range(1, EQ.COVERAGE_PICKS + 1)
+        range(1, corpusops.COVERAGE_PICKS + 1)
     )
     ids = [r["doc_id"] for r in rows]
     assert len(set(ids)) == len(ids)
@@ -510,7 +519,7 @@ def test_coverage_greedy_gains_diminish(spark, sf_dir):
         text as T,
     )
 
-    docs = EQ._docs(spark, sf_dir)
+    docs = common._docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - 1),
@@ -542,17 +551,17 @@ def test_wordpiece_merge_table_invariants(spark, sf_dir):
     (the first WordPiece pick is not the globally most frequent pair —
     if it ever were, the two algorithms would be indistinguishable
     here and the oracle equality would prove nothing extra)."""
-    rows = EQ._QUERIES_ALL["wordpiece_learning"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["wordpiece_learning"](spark, sf_dir).collect()
     assert [r["step"] for r in rows] == list(
-        range(1, EQ.WORDPIECE_MERGES + 1)
+        range(1, corpusops.WORDPIECE_MERGES + 1)
     )
     for r in rows:
         assert r["merged"] == r["left_sym"] + r["right_sym"]
         assert r["pair_count"] >= 1
-        assert 0 < r["score_q"] <= EQ.WORDPIECE_SCALE, r
-    again = EQ._QUERIES_ALL["wordpiece_learning"](spark, sf_dir).collect()
+        assert 0 < r["score_q"] <= corpusops.WORDPIECE_SCALE, r
+    again = registry._QUERIES_ALL["wordpiece_learning"](spark, sf_dir).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    bpe = EQ._QUERIES_ALL["bpe_merge_learning"](spark, sf_dir).collect()
+    bpe = registry._QUERIES_ALL["bpe_merge_learning"](spark, sf_dir).collect()
     assert (rows[0]["left_sym"], rows[0]["right_sym"]) != (
         bpe[0]["left_sym"], bpe[0]["right_sym"],
     )
@@ -567,16 +576,16 @@ def test_grid_density_cluster_invariants(spark, sf_dir):
     mean occupied density is ≥ 1); and the corpus produces MORE than
     one cluster (a degenerate always-adjacent grid would collapse to
     one and prove nothing)."""
-    rows = EQ._QUERIES_ALL["grid_density_clusters"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["grid_density_clusters"](spark, sf_dir).collect()
     assert len(rows) >= 2
     from pyspark.sql import functions as F
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cells = (
         emb.select(
-            F.floor(F.element_at("embedding", 1).cast("double") * EQ.GRID_SCALE)
+            F.floor(F.element_at("embedding", 1).cast("double") * corpusops.GRID_SCALE)
             .cast("bigint").alias("cx"),
-            F.floor(F.element_at("embedding", 2).cast("double") * EQ.GRID_SCALE)
+            F.floor(F.element_at("embedding", 2).cast("double") * corpusops.GRID_SCALE)
             .cast("bigint").alias("cy"),
         )
         .groupBy("cx", "cy").count()
@@ -584,7 +593,7 @@ def test_grid_density_cluster_invariants(spark, sf_dir):
     n = sum(r["count"] for r in cells)
     m = len(cells)
     n_core = sum(
-        1 for r in cells if r["count"] * m >= EQ.GRID_DENSITY_FACTOR * n
+        1 for r in cells if r["count"] * m >= corpusops.GRID_DENSITY_FACTOR * n
     )
     assert sum(r["n_cells"] for r in rows) == n_core
     for r in rows:
@@ -600,15 +609,15 @@ def test_tokenizer_compare_is_consistent_with_learners(spark, sf_dir):
     ratios are proper (0 < compression ≤ 1, tokens_per_word ≥ 1)."""
     rows = {
         r["algo"]: r
-        for r in EQ._QUERIES_ALL["tokenizer_compare_audit"](
+        for r in registry._QUERIES_ALL["tokenizer_compare_audit"](
             spark, sf_dir
         ).collect()
     }
     assert set(rows) == {"bpe", "wordpiece"}
     assert rows["bpe"]["total_words"] == rows["wordpiece"]["total_words"]
     assert rows["bpe"]["base_symbols"] == rows["wordpiece"]["base_symbols"]
-    assert rows["bpe"]["n_merges"] == EQ.BPE_MERGES
-    assert rows["wordpiece"]["n_merges"] == EQ.WORDPIECE_MERGES
+    assert rows["bpe"]["n_merges"] == tokenlearn.BPE_MERGES
+    assert rows["wordpiece"]["n_merges"] == corpusops.WORDPIECE_MERGES
     for r in rows.values():
         assert 0 < r["symbols_after"] < r["base_symbols"]
         assert 0.0 < r["compression_ratio"] <= 1.0
@@ -624,14 +633,14 @@ def test_burrows_delta_metric_properties(spark, sf_dir):
     a re-run pins the IEEE-exact no-lattice float path."""
     import math
 
-    rows = EQ._QUERIES_ALL["burrows_delta_stylometry"](spark, sf_dir).collect()
-    assert len(rows) == EQ.DELTA_TOPK
+    rows = registry._QUERIES_ALL["burrows_delta_stylometry"](spark, sf_dir).collect()
+    assert len(rows) == corpusops.DELTA_TOPK
     for r in rows:
         assert r["src_a"] < r["src_b"]
         assert r["delta"] >= 0.0 and math.isfinite(r["delta"])
     ds = [r["delta"] for r in rows]
     assert ds == sorted(ds)
-    again = EQ._QUERIES_ALL["burrows_delta_stylometry"](spark, sf_dir).collect()
+    again = registry._QUERIES_ALL["burrows_delta_stylometry"](spark, sf_dir).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in again]
 
 
@@ -642,8 +651,8 @@ def test_dunning_g2_keyness_properties(spark, sf_dir):
     both directions appear in the top-k on a multi-source corpus
     (a keyness list that only ever says 'over' has a broken o21/o22
     term while the engines could still agree)."""
-    rows = EQ._QUERIES_ALL["dunning_g2_keyness"](spark, sf_dir).collect()
-    assert len(rows) == EQ.G2_TOPK
+    rows = registry._QUERIES_ALL["dunning_g2_keyness"](spark, sf_dir).collect()
+    assert len(rows) == corpusops.G2_TOPK
     g2s = [r["g2"] for r in rows]
     assert g2s == sorted(g2s, reverse=True)
     assert all(g >= -1e-6 for g in g2s)
@@ -654,7 +663,7 @@ def test_dunning_g2_keyness_properties(spark, sf_dir):
         text as T,
     )
 
-    docs = EQ._docs(spark, sf_dir)
+    docs = common._docs(spark, sf_dir)
     tw = docs.select(
         "source", F.explode(T.tokens(F.col("text"))).alias("w")
     )
@@ -675,8 +684,8 @@ def test_jsd_bounds_and_ordering(spark, sf_dir):
     is NOT required (different bases), but both must be finite."""
     import math
 
-    rows = EQ._QUERIES_ALL["jsd_source_divergence"](spark, sf_dir).collect()
-    assert len(rows) == EQ.JSD_TOPK
+    rows = registry._QUERIES_ALL["jsd_source_divergence"](spark, sf_dir).collect()
+    assert len(rows) == corpusops.JSD_TOPK
     seen = set()
     for r in rows:
         assert r["src_a"] < r["src_b"]
@@ -694,16 +703,16 @@ def test_rbo_bounds_and_consistency(spark, sf_dir):
     queries); and RBO of a ranking with itself is the maximum
     truncated value (weights sum), computed here as the exact bound
     the score can never exceed."""
-    row = EQ._QUERIES_ALL["rbo_rank_agreement"](spark, sf_dir).head()
+    row = registry._QUERIES_ALL["rbo_rank_agreement"](spark, sf_dir).head()
     k = row["depth"]
-    assert k == min(EQ.BM25_TOPK, EQ.QLM_TOPK)
+    assert k == min(sequences.BM25_TOPK, corpusops.QLM_TOPK)
     assert 0 <= (row["overlap_at_k"] or 0) <= k
-    bm = {r["doc_id"] for r in EQ._QUERIES_ALL["bm25_search"](spark, sf_dir).collect()}
-    ql = {r["doc_id"] for r in EQ._QUERIES_ALL["qlm_dirichlet_search"](spark, sf_dir).collect()}
+    bm = {r["doc_id"] for r in registry._QUERIES_ALL["bm25_search"](spark, sf_dir).collect()}
+    ql = {r["doc_id"] for r in registry._QUERIES_ALL["qlm_dirichlet_search"](spark, sf_dir).collect()}
     shared = len(bm & ql) > 0
     assert (row["rbo"] is not None and row["rbo"] > 0.0) == shared
     max_rbo = sum(
-        (EQ.RBO_P_NUM ** (d - 1)) * d / ((EQ.RBO_P_DEN ** d) * d)
+        (corpusops.RBO_P_NUM ** (d - 1)) * d / ((corpusops.RBO_P_DEN ** d) * d)
         for d in range(1, k + 1)
     )
     if row["rbo"] is not None:
@@ -718,11 +727,11 @@ def test_adamic_adar_predicts_only_non_edges(spark, sf_dir):
     1/ln 2)."""
     import math
 
-    rows = EQ._QUERIES_ALL["adamic_adar_linkpred"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["adamic_adar_linkpred"](spark, sf_dir).collect()
     assert rows
     edges = {
         (r["id_a"], r["id_b"])
-        for r in EQ._copurchase_edges(spark, sf_dir).collect()
+        for r in docops._copurchase_edges(spark, sf_dir).collect()
     }
     scores = [r["aa_score"] for r in rows]
     assert scores == sorted(scores, reverse=True)
@@ -737,10 +746,10 @@ def test_degree_distribution_audit_moments(spark, sf_dir):
     """The audit's moments must match a direct recount of the
     bidirectional degree table, and the CCDF slope of a heavy-ish
     tail is negative (CCDF decreases in degree by definition)."""
-    row = EQ._QUERIES_ALL["degree_distribution_audit"](spark, sf_dir).head()
+    row = registry._QUERIES_ALL["degree_distribution_audit"](spark, sf_dir).head()
     from pyspark.sql import functions as F
 
-    edges = EQ._copurchase_edges(spark, sf_dir)
+    edges = docops._copurchase_edges(spark, sf_dir)
     bidir = edges.selectExpr("id_a AS s", "id_b AS d").union(
         edges.selectExpr("id_b AS s", "id_a AS d")
     )
@@ -758,11 +767,11 @@ def test_rrf_fusion_dominance_and_bounds(spark, sf_dir):
     directly); a doc ranked in BOTH systems outscores any doc whose
     single rank is no better than both of its ranks; output ordered
     descending with no duplicate docs."""
-    rows = EQ._QUERIES_ALL["rrf_fusion_topk"](spark, sf_dir).collect()
-    assert rows and len(rows) <= EQ.RRF_TOPK
-    bm = {r["doc_id"] for r in EQ._QUERIES_ALL["bm25_search"](spark, sf_dir).collect()}
-    ql = {r["doc_id"] for r in EQ._QUERIES_ALL["qlm_dirichlet_search"](spark, sf_dir).collect()}
-    cap = 2.0 / (EQ.RRF_K + 1)
+    rows = registry._QUERIES_ALL["rrf_fusion_topk"](spark, sf_dir).collect()
+    assert rows and len(rows) <= corpusops.RRF_TOPK
+    bm = {r["doc_id"] for r in registry._QUERIES_ALL["bm25_search"](spark, sf_dir).collect()}
+    ql = {r["doc_id"] for r in registry._QUERIES_ALL["qlm_dirichlet_search"](spark, sf_dir).collect()}
+    cap = 2.0 / (corpusops.RRF_K + 1)
     seen = set()
     for r in rows:
         assert r["doc_id"] not in seen
@@ -781,10 +790,10 @@ def test_association_rules_measures_cohere(spark, sf_dir):
     rule; both directed versions of a pair qualify together (c_ij is
     symmetric, so lhs↔rhs appears when in the top-k window by count
     parity); ordering respects (lift, confidence)."""
-    rows = EQ._QUERIES_ALL["association_rules_lift"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["association_rules_lift"](spark, sf_dir).collect()
     assert rows
     for r in rows:
-        assert r["c_ij"] >= EQ.RULES_MIN_PAIR
+        assert r["c_ij"] >= corpusops.RULES_MIN_PAIR
         assert 0.0 < r["support"] <= r["confidence"] <= 1.0 + 1e-9
         assert r["lift"] > 0.0
     keys = [(r["lift"], r["confidence"]) for r in rows]
@@ -808,7 +817,7 @@ def test_seasonal_decomposition_identities(spark, sf_dir):
     series has mean ≈ its DOW means' weighted mean by construction);
     seasonal strength is a proper variance share in [0, 1]; and every
     row reports the same strength scalar."""
-    rows = EQ._QUERIES_ALL["seasonal_decomposition_audit"](
+    rows = registry._QUERIES_ALL["seasonal_decomposition_audit"](
         spark, sf_dir
     ).collect()
     assert len(rows) == 7
@@ -829,7 +838,7 @@ def test_bcubed_scores_the_twin_structure(spark, sf_dir):
     pre-dup ids; and on this corpus the LSH clustering is GOOD (twins
     are identical texts, so recall must be high) but the score must
     not be trivially 1-vs-0 — F1 consistent with P and R."""
-    row = EQ._QUERIES_ALL["dedup_bcubed_eval"](spark, sf_dir).head()
+    row = registry._QUERIES_ALL["dedup_bcubed_eval"](spark, sf_dir).head()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n = docs.count()
     n_dup = docs.where((docs.doc_id % 7) == 0).count()

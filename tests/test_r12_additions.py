@@ -223,29 +223,33 @@ def test_crosslingual_banding_recall_is_total(spark, sf_dir):
     (4 bands x 4 planes => any-band recall ~0.998 per twin at
     cosine~0.99; the fixture's twin population is small enough that
     a miss would show)."""
-    import database_fragmentation_and_query_processor_spark.entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries import (
+        common,
+        docops,
+        registry,
+    )
 
-    out = EQ._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir)
+    out = registry._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir)
     rows = {(r["id_a"], r["id_b"]) for r in out.collect()}
     # every synthesized clone pair must be recovered: clone of v pairs
     # with v itself (rotated language, cosine ~0.99 after centering)
     emb_ids = {
         r["vec_id"]
-        for r in EQ._emb(spark, sf_dir).select("vec_id").collect()
+        for r in common._emb(spark, sf_dir).select("vec_id").collect()
     }
     expected_twins = {
-        (i, i + EQ.XL_SALT) for i in emb_ids if i % EQ.XL_MOD == 0
+        (i, i + docops.XL_SALT) for i in emb_ids if i % docops.XL_MOD == 0
     }
     assert expected_twins <= rows
     # and nothing below the verify threshold sneaks through
-    assert all(r >= EQ.XL_TAU for r in
+    assert all(r >= docops.XL_TAU for r in
                [x["cosine_sim"] for x in out.collect()])
 
 
 def test_crosslingual_pairs_are_cross_language(spark, sf_dir):
-    import database_fragmentation_and_query_processor_spark.entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries import registry
 
-    out = EQ._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir).collect()
+    out = registry._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir).collect()
     assert len(out) > 0
     assert all(r["lang_a"] != r["lang_b"] for r in out)
 
@@ -254,15 +258,15 @@ def test_crosslingual_partition_invariance(spark, sf_dir):
     """Same result under a different partitioning of the inputs — the
     means are decimal-exact sums (order-independent) and everything
     downstream is fixed-index-order arithmetic."""
-    import database_fragmentation_and_query_processor_spark.entry_queries as EQ
+    from database_fragmentation_and_query_processor_spark.queries import registry
 
-    base = EQ._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir)
+    base = registry._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir)
     rows1 = sorted(map(tuple, base.collect()))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         rows2 = sorted(
-            map(tuple, EQ._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir).collect())
+            map(tuple, registry._QUERIES_ALL["crosslingual_dedup"](spark, sf_dir).collect())
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

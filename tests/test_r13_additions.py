@@ -10,30 +10,29 @@ import inspect
 
 import pytest
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import docops
 
 
 def test_xl_mate_block_cap_fails_fast(spark, sf_dir, monkeypatch):
     """With the cap set below the fixture's language-block sizes the
     query must raise BEFORE launching the per-block exact join."""
-    from database_fragmentation_and_query_processor_spark.queries import docops
 
     monkeypatch.setattr(docops, "XL_MATE_MAX_BLOCK", 3)
     with pytest.raises(ValueError, match="XL_MATE_MAX_BLOCK"):
-        EQ.q_crosslingual_mate_retrieval(spark, sf_dir)
+        docops.q_crosslingual_mate_retrieval(spark, sf_dir)
 
 
 def test_xl_mate_cap_checked_before_join():
     """The guard must sit upstream of the exact per-language join in
     the source (same plan-build ordering pin as COOC_MAX_BASKET)."""
-    src = inspect.getsource(EQ.q_crosslingual_mate_retrieval)
+    src = inspect.getsource(docops.q_crosslingual_mate_retrieval)
     assert src.index("XL_MATE_MAX_BLOCK") < src.index('join(pool, "src_lang")')
 
 
 def test_xl_mate_cap_documented_for_scale():
     """The docstring must state the 100 TB bound (query-side sampling
     as the declared knob) — the judge reads this."""
-    doc = EQ.q_crosslingual_mate_retrieval.__doc__
+    doc = docops.q_crosslingual_mate_retrieval.__doc__
     assert "XL_MATE_MAX_BLOCK" in doc
     assert "100 TB" in doc
 
@@ -288,8 +287,8 @@ def test_near_dup_manifest_add_is_idempotent(spark, tmp_path):
 def test_xl_mate_runs_under_cap(spark, sf_dir):
     """At the test SF every language block is far under the cap; the
     audit must still produce one row per (src_lang, dst_lang) pair."""
-    df = EQ.q_crosslingual_mate_retrieval(spark, sf_dir)
+    df = docops.q_crosslingual_mate_retrieval(spark, sf_dir)
     rows = df.collect()
-    assert len(rows) == len(EQ.XL_LANGS)
+    assert len(rows) == len(docops.XL_LANGS)
     for r in rows:
         assert 0 <= r["n_correct"] <= r["n_queries"]

@@ -23,7 +23,12 @@ from database_fragmentation_and_query_processor_spark.multimodal.codecs import (
     encode_ppm,
     split_ppm_stream,
 )
-from database_fragmentation_and_query_processor_spark.queries import registry as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    corpusops,
+    curation,
+    registry,
+    stats,
+)
 
 
 def _frames(n, w=6, h=4, seed=0):
@@ -134,7 +139,7 @@ def test_mcv_decomposed_topk_matches_direct_window(spark, sf_dir):
 
     audited = sorted(
         tuple(r)
-        for r in EQ._QUERIES_ALL["mcv_stats_audit"](spark, sf_dir).collect()
+        for r in registry._QUERIES_ALL["mcv_stats_audit"](spark, sf_dir).collect()
     )
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -163,7 +168,7 @@ def test_mcv_decomposed_topk_matches_direct_window(spark, sf_dir):
     direct = sorted(
         tuple(r)
         for r in per_val.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= EQ.MCV_K)
+        .where(F.col("rk") <= curation.MCV_K)
         .join(F.broadcast(tot), "column_name")
         .select(
             "column_name",
@@ -180,9 +185,9 @@ def test_mcv_decomposed_topk_matches_direct_window(spark, sf_dir):
 
 
 def test_sequence_packing_audit_identities(spark, sf_dir):
-    rows = EQ._QUERIES_ALL["sequence_packing_audit"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["sequence_packing_audit"](spark, sf_dir).collect()
     assert rows, "fixture corpus has sources"
-    C = EQ.SEQ_PACK_LEN
+    C = corpusops.SEQ_PACK_LEN
     for r in rows:
         assert r["n_blocks"] * C == r["total_tokens"] + r["tail_pad_tokens"]
         assert 0 <= r["tail_pad_tokens"] < C
@@ -197,7 +202,7 @@ def test_consistent_hash_moves_only_to_added_node(spark, sf_dir):
     ONLY onto the added node (old ≠ new ⇒ new = 5), and the moved
     share stays near 1/6 — the minimality that makes ring hashing the
     elastic scheme (mod-N would remap ~5/6 of all keys)."""
-    rows = EQ._QUERIES_ALL["frag_consistent_hash_ring"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["frag_consistent_hash_ring"](spark, sf_dir).collect()
     moved = [r for r in rows if r["old_node"] != r["new_node"]]
     assert moved, "a 6th node must claim some ring ranges"
     assert all(r["new_node"] == 5 for r in moved)
@@ -209,7 +214,7 @@ def test_consistent_hash_moves_only_to_added_node(spark, sf_dir):
 def test_phrase_counts_bounded_by_proximity(spark, sf_dir):
     """An adjacent pair is also a within-window pair, so n_phrase ≤
     n_near on every row, and any phrase hit pins a first position."""
-    rows = EQ._QUERIES_ALL["phrase_search_positional"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["phrase_search_positional"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r["n_phrase"] <= r["n_near"]
@@ -220,17 +225,17 @@ def test_neyman_allocation_spends_the_budget(spark, sf_dir):
     """Rounded per-stratum allocations sum to the budget within the
     half-up rounding slack, and a stratum with higher N·S than another
     never receives fewer Neyman draws."""
-    rows = EQ._QUERIES_ALL["neyman_allocation_audit"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["neyman_allocation_audit"](spark, sf_dir).collect()
     assert rows
     total = sum(r["neyman_n"] for r in rows)
-    assert abs(total - EQ.NEYMAN_BUDGET) <= len(rows) / 2 + 1
+    assert abs(total - stats.NEYMAN_BUDGET) <= len(rows) / 2 + 1
     ranked = sorted(rows, key=lambda r: r["n_docs"] * r["std_chars"])
     alloc = [r["neyman_n"] for r in ranked]
     assert all(a <= b + 1 for a, b in zip(alloc, alloc[1:]))  # monotone ± rounding
 
 
 def test_soft_dedup_weights_identities(spark, sf_dir):
-    rows = EQ._QUERIES_ALL["soft_dedup_weights"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["soft_dedup_weights"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r["effective_docs"] <= r["n_docs"] + 1e-6

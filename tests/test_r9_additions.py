@@ -14,7 +14,10 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import (
+    registry,
+    tokenlearn,
+)
 from database_fragmentation_and_query_processor_spark.plans import (
     final_explain_formatted,
 )
@@ -31,7 +34,7 @@ def test_bpe_wrap_replace_is_greedy_left_to_right(spark):
     separator on runs — 'a a a a' with merge (a,a) must become
     'aa aa', not 'aa a a'. Pin it for Python (documentation), Spark,
     and the wrap convention itself."""
-    from database_fragmentation_and_query_processor_spark.entry_queries import (
+    from database_fragmentation_and_query_processor_spark.queries.tokenlearn import (
         _bpe_wrap,
     )
 
@@ -51,10 +54,10 @@ def test_bpe_merge_table_invariants(spark, sf_dir):
     rows = sorted(
         (r["step"], r["left_sym"], r["right_sym"], r["merged"],
          r["pair_count"])
-        for r in EQ._QUERIES_ALL["bpe_merge_learning"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["bpe_merge_learning"](spark, sf_dir)
         .collect()
     )
-    assert [s for s, *_ in rows] == list(range(1, EQ.BPE_MERGES + 1))
+    assert [s for s, *_ in rows] == list(range(1, tokenlearn.BPE_MERGES + 1))
     for _step, a, b, merged, cnt in rows:
         assert merged == a + b
         assert cnt >= 1
@@ -63,7 +66,7 @@ def test_bpe_merge_table_invariants(spark, sf_dir):
     again = sorted(
         (r["step"], r["left_sym"], r["right_sym"], r["merged"],
          r["pair_count"])
-        for r in EQ._QUERIES_ALL["bpe_merge_learning"](spark, sf_dir)
+        for r in registry._QUERIES_ALL["bpe_merge_learning"](spark, sf_dir)
         .collect()
     )
     assert rows == again
@@ -78,14 +81,14 @@ def test_line_quality_filter_actually_filters(spark, sf_dir):
     threshold bug that keeps or drops everything passes oracle equality
     because both engines share it), and the per-doc accounting must be
     internally consistent."""
-    df = EQ._QUERIES_ALL["line_quality_filter"](spark, sf_dir).collect()
+    df = registry._QUERIES_ALL["line_quality_filter"](spark, sf_dir).collect()
     empty_md5 = "d41d8cd98f00b204e9800998ecf8427e"  # md5("")
     tot_lines = sum(r["n_lines"] for r in df)
     tot_kept = sum(r["n_kept"] for r in df)
     assert 0 < tot_kept < tot_lines
     for r in df:
         assert 0 <= r["n_kept"] <= r["n_lines"]
-        assert r["kept_tokens"] <= EQ.LINE_TOKENS * r["n_kept"]
+        assert r["kept_tokens"] <= tokenlearn.LINE_TOKENS * r["n_kept"]
         assert (r["rewrite_md5"] == empty_md5) == (r["n_kept"] == 0)
         if r["n_kept"] > 0:
             assert r["kept_tokens"] >= r["n_kept"]  # ≥1 token per line
@@ -96,7 +99,7 @@ def test_line_quality_filter_plan_reuses_line_explode(spark, sf_dir):
     it must be persisted (InMemoryTableScan in the final plan), not
     recomputed from a second corpus scan."""
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["line_quality_filter"](spark, sf_dir)
+        registry._QUERIES_ALL["line_quality_filter"](spark, sf_dir)
     )
     assert "InMemoryTableScan" in plan
     assert "BatchEvalPython" not in plan  # no Python UDFs
@@ -107,7 +110,7 @@ def test_line_quality_filter_plan_reuses_line_explode(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def test_url_domain_dedup_accounting_and_nontriviality(spark, sf_dir):
-    rows = EQ._QUERIES_ALL["url_domain_dedup"](spark, sf_dir).collect()
+    rows = registry._QUERIES_ALL["url_domain_dedup"](spark, sf_dir).collect()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert sum(r["n_docs"] for r in rows) == docs.count()
     assert any(r["n_dup_docs"] > 0 for r in rows)  # dedup is nontrivial
@@ -135,7 +138,6 @@ def test_url_domain_dedup_canonicalization_collapses_variants(spark, sf_dir):
             )
         ]
     )
-    import database_fragmentation_and_query_processor_spark.entry_queries as eq
     from database_fragmentation_and_query_processor_spark.queries import common as cq
 
     real = cq._docs_impl
@@ -143,7 +145,7 @@ def test_url_domain_dedup_canonicalization_collapses_variants(spark, sf_dir):
         cq._docs_impl = lambda s, d: docs
         out = {
             r["registrable_domain"]: r
-            for r in eq._QUERIES_ALL["url_domain_dedup"](spark, sf_dir)
+            for r in registry._QUERIES_ALL["url_domain_dedup"](spark, sf_dir)
             .collect()
         }
     finally:
@@ -161,7 +163,7 @@ def test_url_domain_dedup_canonicalization_collapses_variants(spark, sf_dir):
 
 def test_url_domain_dedup_plan_is_map_side_then_two_aggs(spark, sf_dir):
     plan = final_explain_formatted(
-        EQ._QUERIES_ALL["url_domain_dedup"](spark, sf_dir)
+        registry._QUERIES_ALL["url_domain_dedup"](spark, sf_dir)
     )
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan

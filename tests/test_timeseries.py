@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from database_fragmentation_and_query_processor_spark import entry_queries as EQ
+from database_fragmentation_and_query_processor_spark.queries import common
 from database_fragmentation_and_query_processor_spark.operators.timeseries import (
     drop_before,
     read_time_range,
@@ -16,13 +16,13 @@ from database_fragmentation_and_query_processor_spark.plans import partition_fil
 
 def _write(spark, sf_dir, tmp_path) -> str:
     path = str(tmp_path / "events_by_day")
-    write_time_partitioned(EQ._events(spark, sf_dir), path)
+    write_time_partitioned(common._events(spark, sf_dir), path)
     return path
 
 
 def test_time_range_matches_unpartitioned_filter(spark, sf_dir, tmp_path):
     path = _write(spark, sf_dir, tmp_path)
-    ev = EQ._events(spark, sf_dir)
+    ev = common._events(spark, sf_dir)
     bounds = ev.agg(F.min("event_time").alias("lo")).head()
     lo = bounds["lo"]
     lo_s = lo.strftime("%Y-%m-%d %H:%M:%S")
@@ -97,7 +97,7 @@ def test_overwrite_day_touches_only_target_partition(spark, sf_dir, tmp_path):
         return out
 
     before = snapshot(target)
-    ev = EQ._events(spark, sf_dir)
+    ev = common._events(spark, sf_dir)
     corrected = ev.where(
         F.date_format("event_time", "yyyy-MM-dd") == target
     ).withColumn("value", F.col("value") * 2)
