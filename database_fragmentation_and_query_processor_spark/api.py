@@ -139,14 +139,17 @@ def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) ->
     df = _read_base(spark, warehouse, table)
     # (userid, movieid) is the ratings natural key: a MovieLens user rates
     # a movie once (the registry's lineitem-derived relation repeats pairs,
-    # so queries.common._frag_warehouse numbers lineitem rows) → JVM-side
-    # bucketed numbering (operators/scaling.py), no Python RDD round-trip.
-    assigned, total = frag.assign_round_robin_fragments(
+    # so queries.common._frag_warehouse numbers lineitem rows). A base no
+    # larger than one scan split is numbered by one row_number() window
+    # inside its one scan task, so the write is the only Spark job; a
+    # larger one by the bucketed operators/scaling.stable_row_number. The
+    # row total is counted on the write itself (an Observation), not by a
+    # second scan.
+    assigned, rows = frag.assign_round_robin_fragments(
         df, n, order_cols=["userid", "movieid"]
     )
     frag.write_fragmented(assigned, _rr_path(warehouse, table))
-    # cursor = index of the last inserted row mod n (Interface1.py:176-177)
-    cat.update_round_robin(n=n, last_inserted=(total - 1) % n if total else -1)
+    cat.update_round_robin(n=n, last_inserted=frag.round_robin_cursor(rows, n))
 
 
 def _parquet_row(userid: int, itemid: int, rating: float) -> bytes:

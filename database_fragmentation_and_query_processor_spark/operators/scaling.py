@@ -10,6 +10,12 @@ correct at any scale is *slow* at one of them.
     numbering with bounded per-task work: deterministically range-bucket
     on the leading key, count per bucket (tiny aggregate), turn counts
     into bucket offsets, then number within buckets in parallel.
+    The one exception is an input no larger than one scan split: it
+    already scans as one task, so the naive window costs nothing more
+    there, while this operator's pre-pass, exchanges and broadcast are
+    pure fixed cost. Round-robin fragmentation
+    (``fragmentation.assign_round_robin_fragments``) numbers such an
+    input with the one-task window and calls this operator otherwise.
 
 ``widen``
     A 600 KB parquet file scans as a single split, so CPU-heavy per-row
@@ -43,15 +49,12 @@ def stable_row_number(
     order_cols: list[str],
     out_col: str = "rn",
     n_buckets: int | None = None,
-    with_total: bool = False,
-):
+) -> DataFrame:
     """0-based global row number by ``order_cols`` without a global sort.
 
     Equivalent to ``ROW_NUMBER() OVER (ORDER BY order_cols) - 1`` when
     ``order_cols`` form a unique key. One eager *narrow* pre-pass
-    (min/max of the leading key and the row count — column-pruned
-    scan; ``with_total=True`` returns ``(frame, count)`` so a caller
-    needing the total runs no second scan), then ONE lazy
+    (min/max of the leading key — column-pruned scan), then ONE lazy
     plan: per-bucket counts → in-plan exclusive bases (bounded explode
     fan-out, broadcast-joined back) → a parallel window partitioned by
     bucket. Buckets are computed from fixed arithmetic on the leading
@@ -68,10 +71,9 @@ def stable_row_number(
     n = n_buckets or spark.sparkContext.defaultParallelism
     lead = order_cols[0]
 
-    lo, hi, total = df.agg(F.min(lead), F.max(lead), F.count("*")).head()
+    lo, hi = df.agg(F.min(lead), F.max(lead)).head()
     if lo is None:  # empty input
-        out = df.withColumn(out_col, F.lit(0).cast("bigint"))
-        return (out, total) if with_total else out
+        return df.withColumn(out_col, F.lit(0).cast("bigint"))
     span = max(int(hi) - int(lo) + 1, 1)
     width = -(-span // n)  # ceil — last bucket absorbs the remainder
     bucket = F.least(
@@ -100,7 +102,7 @@ def stable_row_number(
     )
 
     w = Window.partitionBy("_bk").orderBy(*order_cols)
-    out = (
+    return (
         b.join(F.broadcast(offs), F.col("_bk") == F.col("_rn_tb"), "left")
         .withColumn(
             out_col,
@@ -111,7 +113,6 @@ def stable_row_number(
         )
         .drop("_bk", "_rn_tb", "_rn_base")
     )
-    return (out, total) if with_total else out
 
 
 def stable_prefix_sum(

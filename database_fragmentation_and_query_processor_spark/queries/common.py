@@ -44,6 +44,7 @@ from ..operators.fragmentation import (
     hash_fragment_expr,
     range_fragment_expr,
     read_fragmented,
+    round_robin_cursor,
     write_fragmented,
 )
 from ..operators.query import range_owner_fragment
@@ -384,12 +385,12 @@ def _frag_warehouse(spark: SparkSession, sf_dir: str) -> str:
         )
         rng = assign_range_fragments(_as_ratings(li), "rating", RANGE_N, RANGE_MIN, RANGE_MAX)
         write_fragmented(rng, f"{wh}/ratings_range")
-        rr, total = assign_round_robin_fragments(li, RANGE_N, ["l_orderkey", "l_linenumber", "_file", "_row"])
+        rr, rows = assign_round_robin_fragments(li, RANGE_N, ["l_orderkey", "l_linenumber", "_file", "_row"])
         write_fragmented(_as_ratings(rr, FRAGMENT_COL), f"{wh}/ratings_rr")
         cat = FragmentCatalog(wh)  # what api.range/round_robin_partition record
         cat.update_range(n=RANGE_N, min_value=RANGE_MIN, max_value=RANGE_MAX,
                          interval=(RANGE_MAX - RANGE_MIN) / RANGE_N)
-        cat.update_round_robin(n=RANGE_N, last_inserted=(total - 1) % RANGE_N if total else -1)
+        cat.update_round_robin(n=RANGE_N, last_inserted=round_robin_cursor(rows, RANGE_N))
 
     return build_once(sf_dir, "frag_warehouse", ["lineitem"], build)
 

@@ -131,13 +131,16 @@ def test_quiet_record_covers_the_registry():
     assert not missing, missing
 
 
-def test_release_all_logs_a_failed_unpersist_and_empties_registry(caplog):
+def test_release_all_logs_a_failed_unpersist_and_empties_registry(caplog, monkeypatch):
     """A frame whose session is gone cannot be unpersisted: release_all
     logs that as a WARNING, keeps going, and still empties the
-    registry."""
+    registry. It starts from an empty registry of its own, whatever
+    earlier tests left tracked."""
     from py4j.protocol import Py4JError
 
     from database_fragmentation_and_query_processor_spark import cache
+
+    monkeypatch.setattr(cache, "_TRACKED", [])
 
     class Frame:
         def __init__(self, fails: bool):

@@ -112,3 +112,23 @@ def test_guard_is_exception_path_only():
         assert fn.__wrapped__ is not None
         src = inspect.getsource(fn)  # follows __wrapped__
         assert "def q_" in src
+
+
+def test_facts_emptiness_check_logs_an_unreadable_table(
+    spark, empty_dir, tmp_path, caplog, monkeypatch
+):
+    """The guard's emptiness check answers True on the empty warehouse.
+    A missing fact table is not an empty one: it answers False and says
+    why at WARNING. Any other error propagates."""
+    assert registry._all_facts_empty(spark, empty_dir)
+    with caplog.at_level("WARNING", logger=registry.__name__):
+        assert not registry._all_facts_empty(spark, str(tmp_path))
+    assert [r.levelname for r in caplog.records] == ["WARNING"]
+    assert "PATH_NOT_FOUND" in caplog.records[0].getMessage()
+
+    def broken(*_):
+        raise RuntimeError("not a missing table")
+
+    monkeypatch.setattr(registry, "_t", broken)
+    with pytest.raises(RuntimeError, match="not a missing table"):
+        registry._all_facts_empty(spark, empty_dir)

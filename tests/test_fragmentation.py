@@ -517,3 +517,72 @@ def test_frag_warehouse_matches_declared_schema(spark, sf_dir, tmp_path, monkeyp
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     warehouse = common._frag_warehouse(spark, sf_dir)
     _assert_declared_schemas(spark, warehouse, ("ratings_range", "ratings_rr"))
+
+
+def _round_robin_partition_on_path(spark, warehouse, bucketed, caplog):
+    """``api.round_robin_partition`` with the scan split left as it is
+    (the base fits one split: one-task numbering) or lowered below the
+    base's plan estimate (bucketed ``stable_row_number``); returns the
+    per-fragment row multisets and the cursor."""
+    from database_fragmentation_and_query_processor_spark.operators import fragmentation
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    if bucketed:
+        base = spark.read.schema(RATINGS_SCHEMA).parquet(f"{warehouse}/ratings/base")
+        est = int(base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        spark.conf.set(key, str(max(est // 4, 1)))
+    caplog.clear()
+    try:
+        with caplog.at_level("INFO", logger=fragmentation.__name__):
+            api.round_robin_partition(spark, "ratings", N, warehouse)
+    finally:
+        spark.conf.set(key, old)
+    [msg] = [r.getMessage() for r in caplog.records if "round-robin numbering" in r.getMessage()]
+    assert ("bucketed" in msg) == bucketed, msg
+    frags = {}
+    for r in read_fragmented(spark, f"{warehouse}/ratings_rr").collect():
+        frags.setdefault(r[FRAGMENT_COL], []).append((r.userid, r.movieid, r.rating))
+    cursor = FragmentCatalog(warehouse).round_robin_meta().last_inserted
+    return {f: sorted(rows) for f, rows in frags.items()}, cursor
+
+
+def test_round_robin_one_task_and_bucketed_numbering_agree(spark, tmp_path, caplog):
+    """A base within one scan split is numbered inside its one task; a
+    lower split sends the same base through the bucketed numbering. Both
+    put row k of the (userid, movieid) order in fragment k mod N and
+    leave the same cursor."""
+    rows = [(u, m, (u * m) % 11 / 2) for u in range(1, 21) for m in range(u, u + 9)]
+    text = tmp_path / "ratings.txt"
+    # file order is not key order: the numbering must sort
+    text.write_text("".join(
+        f"{u}::{m}::{r}::0\n" for u, m, r in sorted(rows, key=lambda t: (-t[1], t[0]))
+    ))
+    warehouse = str(tmp_path / "warehouse")
+    api.load_ratings(spark, "ratings", str(text), warehouse)
+
+    want = {}
+    for k, row in enumerate(sorted(rows)):
+        want.setdefault(k % N, []).append(row)
+    one_task = _round_robin_partition_on_path(spark, warehouse, False, caplog)
+    bucketed = _round_robin_partition_on_path(spark, warehouse, True, caplog)
+    assert one_task == bucketed == (want, (len(rows) - 1) % N)
+
+
+@pytest.mark.parametrize("bucketed", [False, True], ids=["one_task", "bucketed"])
+def test_round_robin_partition_of_an_empty_base(spark, tmp_path, caplog, bucketed):
+    """An empty base writes no rows and leaves cursor -1; the observed
+    row total arrives although no task saw a row."""
+    import threading
+
+    text = tmp_path / "ratings.txt"
+    text.write_text("")
+    warehouse = str(tmp_path / "warehouse")
+    api.load_ratings(spark, "ratings", str(text), warehouse)
+    got = []
+    run = threading.Thread(target=lambda: got.append(
+        _round_robin_partition_on_path(spark, warehouse, bucketed, caplog)), daemon=True)
+    run.start()
+    run.join(timeout=300)
+    assert not run.is_alive(), "round_robin_partition did not return"
+    assert got == [({}, -1)]

@@ -159,25 +159,26 @@ def test_ratings_projection_starts_no_spark_job(spark, sf_dir):
 
 def test_range_and_hash_partition_start_only_their_write(spark, ratings_file, warehouse):
     """Reading the base with its declared schema leaves the write as the
-    one job of range and hash fragmentation."""
+    one job of range and hash fragmentation. Round-robin fragmentation of
+    a base no larger than one scan split numbers it inside the write's
+    one task and counts its rows on the write, so it starts that one job
+    too."""
     api.load_ratings(spark, "ratings", ratings_file, warehouse)
     jobs = {
-        "range_partition": _jobs_started(
-            spark, lambda: api.range_partition(spark, "ratings", 5, warehouse)
-        ),
-        "hash_partition": _jobs_started(
-            spark, lambda: api.hash_partition(spark, "ratings", 5, warehouse)
-        ),
+        name: _jobs_started(
+            spark, lambda: getattr(api, name)(spark, "ratings", 5, warehouse)
+        )
+        for name in ("range_partition", "round_robin_partition", "hash_partition")
     }
-    assert jobs == {"range_partition": 1, "hash_partition": 1}, jobs
+    assert jobs == dict.fromkeys(jobs, 1), jobs
 
 
 def test_round_robin_partition_counts_rows_in_its_numbering_pass(
     spark, ratings_file, warehouse
 ):
-    """The cursor's row total comes from the numbering's min/max
-    pre-pass, not a second scan: round-robin fragmentation starts the
-    jobs of its numbering and write alone (7 at local[4]; a separate
+    """The cursor's row total is observed on the write, not counted by
+    a second scan: round-robin fragmentation starts the jobs of its
+    numbering and write alone (1 for this one-split base; a separate
     ``count()`` after the write added 2 more)."""
     from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag
     from database_fragmentation_and_query_processor_spark.schema import RATINGS_SCHEMA
