@@ -139,10 +139,10 @@ def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) ->
     df = _read_base(spark, warehouse, table)
     # (userid, movieid) is the ratings natural key: a MovieLens user rates
     # a movie once (the registry's lineitem-derived relation repeats pairs,
-    # so queries.common._frag_warehouse numbers lineitem rows). A base no
-    # larger than one scan split is numbered by one row_number() window
-    # inside its one scan task, so the write is the only Spark job; a
-    # larger one by the bucketed operators/scaling.stable_row_number. The
+    # so queries.common._frag_warehouse numbers lineitem rows).
+    # operators/scaling.stable_row_number numbers a base that scans as one
+    # task by one row_number() window inside that task, so the write is
+    # the only Spark job; a base of more scan splits by its buckets. The
     # row total is counted on the write itself (an Observation), not by a
     # second scan.
     assigned, rows = frag.assign_round_robin_fragments(

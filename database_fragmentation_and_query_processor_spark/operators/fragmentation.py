@@ -24,15 +24,11 @@ not by physical scan order, so round-robin fragmentation needs one.
 
 from __future__ import annotations
 
-import logging
-
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import FRAGMENT_COL, FRAGMENTED_SCHEMA
 from . import scaling
-
-log = logging.getLogger(__name__)
 
 
 def range_fragment_expr(
@@ -89,37 +85,13 @@ def assign_round_robin_fragments(
     non-deterministic ``repartition(n)`` is NOT usable, but the
     numbering ORDER is free to be any stable total order.
 
-    ``order_cols`` must be a unique key: row k is the k-th in key order.
-    A non-unique key leaves the numbering of tied rows, and so their
-    fragments, unspecified. How the rows are numbered follows the
-    input's bytes, read from the optimized plan's size estimate (no
-    job):
-
-    - at most one scan split (``spark.sql.files.maxPartitionBytes``):
-      the input already scans as one task, so one ``row_number()``
-      window numbers it inside that task (``coalesce(1)``, no exchange,
-      no pre-pass) and the write is the only job;
-    - larger: ``scaling.stable_row_number`` — bucketed, JVM-side, no
-      global sort, no Python round-trip.
-
-    Both give the same numbering while the leading key has no nulls
-    (``stable_row_number`` numbers null leading keys after its other
-    buckets, the window before every other row). The choice and its two
-    byte counts are logged at INFO.
+    ``order_cols`` must be a unique key: row k is the k-th in key order,
+    numbered by ``scaling.stable_row_number`` (one window inside the
+    input's one scan task when it runs as one, bucketed and JVM-side
+    otherwise; no Python round-trip). A non-unique key leaves the
+    numbering of tied rows, and so their fragments, unspecified.
     """
-    spark = df.sparkSession
-    plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    split_bytes = int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
-    if plan_bytes <= split_bytes:
-        log.info("round-robin numbering: one task (plan estimate %d <= scan "
-                 "split %d bytes)", plan_bytes, split_bytes)
-        with_idx = df.coalesce(1).withColumn(
-            "_row_idx", F.row_number().over(Window.orderBy(*order_cols)) - 1
-        )
-    else:
-        log.info("round-robin numbering: bucketed stable_row_number (plan "
-                 "estimate %d > scan split %d bytes)", plan_bytes, split_bytes)
-        with_idx = scaling.stable_row_number(df, order_cols, out_col="_row_idx")
+    with_idx = scaling.stable_row_number(df, order_cols, out_col="_row_idx")
     rows = Observation()
     assigned = with_idx.withColumn(
         FRAGMENT_COL, round_robin_fragment_expr(F.col("_row_idx"), n)

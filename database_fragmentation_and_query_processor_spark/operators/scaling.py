@@ -9,13 +9,11 @@ correct at any scale is *slow* at one of them.
     60k rows, dead at 100 TB. This operator computes the identical
     numbering with bounded per-task work: deterministically range-bucket
     on the leading key, count per bucket (tiny aggregate), turn counts
-    into bucket offsets, then number within buckets in parallel.
-    The one exception is an input no larger than one scan split: it
-    already scans as one task, so the naive window costs nothing more
-    there, while this operator's pre-pass, exchanges and broadcast are
-    pure fixed cost. Round-robin fragmentation
-    (``fragmentation.assign_round_robin_fragments``) numbers such an
-    input with the one-task window and calls this operator otherwise.
+    into bucket offsets, then number within buckets in parallel. An
+    input whose plan is one file scan split, under narrow operators
+    only, already runs as one task: there the naive window costs nothing
+    more, and the buckets' pre-pass, exchanges and broadcast would be
+    pure fixed cost, so the operator numbers it with the window.
 
 ``widen``
     A 600 KB parquet file scans as a single split, so CPU-heavy per-row
@@ -28,8 +26,12 @@ correct at any scale is *slow* at one of them.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def _reject_reserved(df: DataFrame, names: tuple[str, ...]) -> None:
@@ -44,6 +46,30 @@ def _reject_reserved(df: DataFrame, names: tuple[str, ...]) -> None:
         )
 
 
+def scan_tasks(df: DataFrame) -> int | None:
+    """The tasks ``df`` runs in when its physical plan is one file scan
+    under narrow operators (no exchange), else None. Read from the plan
+    and the file listing, without a job: Spark packs small files into,
+    and cuts large ones at, splits of min(maxPartitionBytes,
+    max(openCostInBytes, bytes / defaultParallelism)), so a multi-file
+    input or one larger than a split counts more than one."""
+    nodes, leaves = [df._jdf.queryExecution().executedPlan()], []
+    while nodes:
+        node = nodes.pop()
+        name = node.getClass().getSimpleName()
+        # an adaptive plan is a leaf that wraps its exchanges
+        if "Exchange" in name or name == "AdaptiveSparkPlanExec":
+            return None
+        kids = node.children()
+        if kids.isEmpty():
+            leaves.append(name)
+            scan = node
+        nodes.extend(kids.apply(i) for i in range(kids.length()))
+    if leaves != ["FileSourceScanExec"]:
+        return None
+    return scan.inputRDD().getNumPartitions()
+
+
 def stable_row_number(
     df: DataFrame,
     order_cols: list[str],
@@ -53,13 +79,18 @@ def stable_row_number(
     """0-based global row number by ``order_cols`` without a global sort.
 
     Equivalent to ``ROW_NUMBER() OVER (ORDER BY order_cols) - 1`` when
-    ``order_cols`` form a unique key. One eager *narrow* pre-pass
-    (min/max of the leading key — column-pruned scan), then ONE lazy
-    plan: per-bucket counts → in-plan exclusive bases (bounded explode
-    fan-out, broadcast-joined back) → a parallel window partitioned by
-    bucket. Buckets are computed from fixed arithmetic on the leading
-    key, so the assignment is deterministic across jobs and
-    re-executions (a data-sampled ``repartitionByRange`` would not be).
+    ``order_cols`` form a unique key; null leading keys come first, as
+    in the window. An input that runs as one scan task
+    (``scan_tasks``) is numbered by that window inside its task
+    (``coalesce(1)``: no exchange, no pre-pass). Any other input gets
+    one eager *narrow* pre-pass (min/max of the leading key —
+    column-pruned scan), then ONE lazy plan: per-bucket counts →
+    in-plan exclusive bases (bounded explode fan-out, broadcast-joined
+    back) → a parallel window partitioned by bucket. Buckets are
+    computed from fixed arithmetic on the leading key, so the
+    assignment is deterministic across jobs and re-executions (a
+    data-sampled ``repartitionByRange`` would not be). The path taken
+    is logged at INFO.
 
     Reserved column names (r14 ADVICE): the plan temporarily injects
     ``_bk``, ``_rn_c``, ``_rn_tb``, ``_rn_base`` into the caller's
@@ -67,19 +98,30 @@ def stable_row_number(
     so it is rejected loudly here.
     """
     _reject_reserved(df, ("_bk", "_rn_c", "_rn_tb", "_rn_base"))
+    tasks = scan_tasks(df)
+    if tasks is not None and tasks <= 1:
+        log.info("row numbering by %s: one window inside the input's one "
+                 "scan task", order_cols)
+        return df.coalesce(1).withColumn(
+            out_col,
+            (F.row_number().over(Window.orderBy(*order_cols)) - 1).cast("bigint"),
+        )
     spark = df.sparkSession
     n = n_buckets or spark.sparkContext.defaultParallelism
     lead = order_cols[0]
+    why = "not one file scan" if tasks is None else f"{tasks} scan tasks"
+    log.info("row numbering by %s: %d buckets (input: %s)", order_cols, n, why)
 
     lo, hi = df.agg(F.min(lead), F.max(lead)).head()
-    if lo is None:  # empty input
-        return df.withColumn(out_col, F.lit(0).cast("bigint"))
+    if lo is None:  # no rows, or only null leading keys: one bucket
+        lo = hi = 0
     span = max(int(hi) - int(lo) + 1, 1)
     width = -(-span // n)  # ceil — last bucket absorbs the remainder
-    bucket = F.least(
+    # null leads join the first bucket, whose window sorts them first
+    bucket = F.when(F.col(lead).isNull(), F.lit(0)).otherwise(F.least(
         F.floor((F.col(lead).cast("bigint") - F.lit(int(lo))) / F.lit(width)),
         F.lit(n - 1),
-    ).cast("int")
+    )).cast("int")
 
     b = df.withColumn("_bk", bucket)
     # Bucket base offsets computed IN-PLAN (r14 optimization): the

@@ -521,52 +521,90 @@ def test_frag_warehouse_matches_declared_schema(spark, sf_dir, tmp_path, monkeyp
 
 def _round_robin_partition_on_path(spark, warehouse, bucketed, caplog):
     """``api.round_robin_partition`` with the scan split left as it is
-    (the base fits one split: one-task numbering) or lowered below the
-    base's plan estimate (bucketed ``stable_row_number``); returns the
-    per-fragment row multisets and the cursor."""
-    from database_fragmentation_and_query_processor_spark.operators import fragmentation
+    (the base scans as one task: one window) or lowered to a third of
+    the base's file bytes (three scan tasks: bucketed numbering);
+    returns the per-fragment row multisets and the cursor."""
+    from database_fragmentation_and_query_processor_spark.operators import scaling
 
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
     if bucketed:
-        base = spark.read.schema(RATINGS_SCHEMA).parquet(f"{warehouse}/ratings/base")
-        est = int(base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        spark.conf.set(key, str(max(est // 4, 1)))
+        base_bytes = sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, files in os.walk(f"{warehouse}/ratings/base")
+            for f in files if f.endswith(".parquet")
+        )
+        spark.conf.set(key, str(max(-(-base_bytes // 3), 1)))
     caplog.clear()
     try:
-        with caplog.at_level("INFO", logger=fragmentation.__name__):
+        with caplog.at_level("INFO", logger=scaling.__name__):
             api.round_robin_partition(spark, "ratings", N, warehouse)
     finally:
         spark.conf.set(key, old)
-    [msg] = [r.getMessage() for r in caplog.records if "round-robin numbering" in r.getMessage()]
-    assert ("bucketed" in msg) == bucketed, msg
+    [msg] = [r.getMessage() for r in caplog.records if "row numbering" in r.getMessage()]
+    assert ("buckets" in msg) == bucketed, msg
+    return _round_robin_fragments(spark, warehouse)
+
+
+def _round_robin_fragments(spark, warehouse):
+    """The per-fragment row multisets (nulls first) and the cursor."""
     frags = {}
     for r in read_fragmented(spark, f"{warehouse}/ratings_rr").collect():
         frags.setdefault(r[FRAGMENT_COL], []).append((r.userid, r.movieid, r.rating))
     cursor = FragmentCatalog(warehouse).round_robin_meta().last_inserted
-    return {f: sorted(rows) for f, rows in frags.items()}, cursor
+    nulls_first = lambda row: tuple((v is not None, v) for v in row)  # noqa: E731
+    return {f: sorted(rows, key=nulls_first) for f, rows in frags.items()}, cursor
 
 
-def test_round_robin_one_task_and_bucketed_numbering_agree(spark, tmp_path, caplog):
-    """A base within one scan split is numbered inside its one task; a
-    lower split sends the same base through the bucketed numbering. Both
-    put row k of the (userid, movieid) order in fragment k mod N and
-    leave the same cursor."""
+def _load_unsorted_ratings(spark, tmp_path):
+    """A base whose file order is not its key order, with one row whose
+    malformed userid reads as null; returns the warehouse and the
+    fragments numbering by ``(userid, movieid)``, nulls first, must give."""
     rows = [(u, m, (u * m) % 11 / 2) for u in range(1, 21) for m in range(u, u + 9)]
     text = tmp_path / "ratings.txt"
-    # file order is not key order: the numbering must sort
-    text.write_text("".join(
+    text.write_text("x::3::1.5::0\n" + "".join(
         f"{u}::{m}::{r}::0\n" for u, m, r in sorted(rows, key=lambda t: (-t[1], t[0]))
     ))
     warehouse = str(tmp_path / "warehouse")
     api.load_ratings(spark, "ratings", str(text), warehouse)
-
     want = {}
-    for k, row in enumerate(sorted(rows)):
+    for k, row in enumerate([(None, 3, 1.5)] + sorted(rows)):
         want.setdefault(k % N, []).append(row)
+    return warehouse, want, len(rows)
+
+
+def test_round_robin_one_task_and_bucketed_numbering_agree(spark, tmp_path, caplog):
+    """A base that scans as one task is numbered inside it; a lower split
+    sends the same base through the bucketed numbering. Both put row k
+    of the (userid, movieid) order, a null userid first, in fragment
+    k mod N and leave the same cursor."""
+    warehouse, want, n_rows = _load_unsorted_ratings(spark, tmp_path)
     one_task = _round_robin_partition_on_path(spark, warehouse, False, caplog)
     bucketed = _round_robin_partition_on_path(spark, warehouse, True, caplog)
-    assert one_task == bucketed == (want, (len(rows) - 1) % N)
+    assert one_task == bucketed == (want, n_rows % N)
+
+
+def test_round_robin_partition_of_a_multi_file_base_is_bucketed(spark, tmp_path, caplog):
+    """Each file of a base is its own scan split, so a base of three
+    small files scans as three tasks and is numbered in buckets, into
+    the fragments the one-file base gets."""
+    import shutil
+
+    from database_fragmentation_and_query_processor_spark.operators import scaling
+
+    warehouse, want, n_rows = _load_unsorted_ratings(spark, tmp_path)
+    base = f"{warehouse}/ratings/base"
+    spark.read.schema(RATINGS_SCHEMA).parquet(base).repartition(3).write.parquet(f"{base}.3")
+    shutil.rmtree(base)
+    os.rename(f"{base}.3", base)
+    assert len([f for f in os.listdir(base) if f.endswith(".parquet")]) == 3
+
+    caplog.clear()
+    with caplog.at_level("INFO", logger=scaling.__name__):
+        api.round_robin_partition(spark, "ratings", N, warehouse)
+    [msg] = [r.getMessage() for r in caplog.records if "row numbering" in r.getMessage()]
+    assert "3 scan tasks" in msg, msg
+    assert _round_robin_fragments(spark, warehouse) == (want, n_rows % N)
 
 
 @pytest.mark.parametrize("bucketed", [False, True], ids=["one_task", "bucketed"])

@@ -160,9 +160,8 @@ def test_ratings_projection_starts_no_spark_job(spark, sf_dir):
 def test_range_and_hash_partition_start_only_their_write(spark, ratings_file, warehouse):
     """Reading the base with its declared schema leaves the write as the
     one job of range and hash fragmentation. Round-robin fragmentation of
-    a base no larger than one scan split numbers it inside the write's
-    one task and counts its rows on the write, so it starts that one job
-    too."""
+    a base that scans as one task numbers it inside the write's one task
+    and counts its rows on the write, so it starts that one job too."""
     api.load_ratings(spark, "ratings", ratings_file, warehouse)
     jobs = {
         name: _jobs_started(
@@ -178,7 +177,7 @@ def test_round_robin_partition_counts_rows_in_its_numbering_pass(
 ):
     """The cursor's row total is observed on the write, not counted by
     a second scan: round-robin fragmentation starts the jobs of its
-    numbering and write alone (1 for this one-split base; a separate
+    numbering and write alone (1 for this one-task base; a separate
     ``count()`` after the write added 2 more)."""
     from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag
     from database_fragmentation_and_query_processor_spark.schema import RATINGS_SCHEMA
@@ -195,6 +194,23 @@ def test_round_robin_partition_counts_rows_in_its_numbering_pass(
         spark, lambda: api.round_robin_partition(spark, "ratings", 5, warehouse)
     )
     assert whole == parts, (whole, parts)
+
+
+def test_scan_tasks_counts_splits_without_a_job(spark, tmp_path):
+    """``stable_row_number`` picks its path from the input's planned
+    scan tasks: one per small file, None for a plan with an exchange;
+    reading them starts no job."""
+    from database_fragmentation_and_query_processor_spark.operators.scaling import scan_tasks
+
+    df = spark.range(300).select((F.col("id") % 7).alias("k"), "id")
+    df.coalesce(1).write.parquet(str(tmp_path / "one"))
+    df.repartition(3).write.parquet(str(tmp_path / "three"))
+    one, three = (spark.read.parquet(str(tmp_path / d)) for d in ("one", "three"))
+    frames = {"one": one.where("id > 5"), "three": three, "agg": one.groupBy("k").count()}
+    got = {}
+    jobs = _jobs_started(spark, lambda: got.update(
+        (name, scan_tasks(frame)) for name, frame in frames.items()))
+    assert (got, jobs) == ({"one": 1, "three": 3, "agg": None}, 0)
 
 
 def test_routed_inserts_start_no_spark_job(spark, ratings_file, warehouse):
@@ -242,7 +258,7 @@ def test_lsh_index_probe_partition_prunes(spark, sf_dir, tmp_path):
 
 def test_round_robin_partition_path_has_no_python_rdd(spark, ratings_file, warehouse):
     """The bulk RR fragmentation path must stay JVM-side: numbering via
-    stable_row_number (bucketed window), never a zipWithIndex Python
+    stable_row_number (a JVM window), never a zipWithIndex Python
     round-trip. Asserted structurally: the assigned plan contains no
     RDD scan barrier (ExistingRDD / PythonEval nodes)."""
     from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag

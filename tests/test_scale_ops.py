@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from database_fragmentation_and_query_processor_spark.operators.scaling import (
     salted_join,
+    scan_tasks,
     stable_prefix_sum,
     stable_row_number,
     widen,
@@ -53,6 +54,26 @@ def test_stable_row_number_skewed_and_sparse_keys(spark):
 def test_stable_row_number_empty(spark):
     df = spark.createDataFrame([], "k long, tie int")
     assert stable_row_number(df, ["k", "tie"]).count() == 0
+
+
+def test_stable_row_number_puts_null_leads_first(spark, tmp_path):
+    """Null leading keys number first, as in ``ROW_NUMBER() OVER (ORDER
+    BY keys)``, on both paths: buckets (an in-memory frame is no file
+    scan) and one window (a one-file parquet input scans as one task).
+    A frame whose leading keys are all null is numbered too."""
+    df = spark.createDataFrame(
+        [(9, 3), (None, 5), (1, 1), (None, 4), (2, 2)], "k long, tie int"
+    )
+    path = str(tmp_path / "one_file")
+    df.coalesce(1).write.parquet(path)
+    want = {(None, 4): 0, (None, 5): 1, (1, 1): 2, (2, 2): 3, (9, 3): 4}
+    for frame, tasks in ((df, None), (spark.read.parquet(path), 1)):
+        assert scan_tasks(frame) == tasks
+        out = stable_row_number(frame, ["k", "tie"], n_buckets=4).collect()
+        assert {(r["k"], r["tie"]): r["rn"] for r in out} == want
+    nulls = spark.createDataFrame([(None, 2), (None, 1)], "k long, tie int")
+    out = stable_row_number(nulls, ["k", "tie"]).collect()
+    assert sorted((r["tie"], r["rn"]) for r in out) == [(1, 0), (2, 1)]
 
 
 def test_stable_prefix_sum_matches_global_window(spark):
