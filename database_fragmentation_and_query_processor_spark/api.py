@@ -15,37 +15,50 @@ roundRobinInsert     :183-213   round_robin_insert
 rangeQuery           :261-308   range_query
 pointQuery           :310-347   point_query
 deleteTables         :372-393   delete_tables
-delete_all_partitions :36-47    (implicit: overwrite of partition dirs)
+delete_all_partitions :36-47    (implicit: a new generation replaces them)
 update_*_metadata    :49-98     catalog.FragmentCatalog
 ==============================  =======================================
 
 Warehouse layout (one directory per logical table)::
 
-    {warehouse}/{table}/base/                      # unfragmented parquet
-    {warehouse}/{table}_range/fragment_id=i/       # range scheme
-    {warehouse}/{table}_rr/fragment_id=i/          # round-robin scheme
-    {warehouse}/{table}_hash/fragment_id=i/        # hash scheme [EXT]
-    {warehouse}/_frag_metadata.json                # catalogs + RR cursor
-    {warehouse}/_staging/                          # inserts' staged files
-    {warehouse}/_WRITER_LOCK                       # held while mutating
+    {warehouse}/{table}/base/gen-<token>/                  # unfragmented parquet
+    {warehouse}/{table}_range/gen-<token>/fragment_id=i/   # range scheme
+    {warehouse}/{table}_rr/gen-<token>/fragment_id=i/      # round-robin scheme
+    {warehouse}/{table}_hash/gen-<token>/fragment_id=i/    # hash scheme [EXT]
+    {warehouse}/_frag_metadata.json   # catalogs, RR cursor, live generations
+    {warehouse}/_staging/             # inserts' staged files
+    {warehouse}/_WRITER_LOCK          # held while a writer mutates
+
+Every writer here (``load_ratings``, the three partitionings,
+``compact_fragments``) publishes through the catalog (``catalog.py``):
+it holds the writer lock for its whole Spark write, writes a new
+generation, and flips the generation and the scheme's metadata in one
+atomic sidecar write; ``delete_tables`` of one table unpublishes the
+table's generations the same way before deleting them. Readers (``point_query``,
+``range_query``, ``hash_key_lookup``, ``catalog_report``) read the
+sidecar once per call and scan the generations it names, so a reader
+sees the whole old layout or the whole new one. Each call opens the
+catalog with the caller's session, so a ``file://``, ``hdfs://`` or
+``s3a://`` warehouse works like a local directory.
 
 A routed insert (``range_insert``, ``round_robin_insert``,
 ``hash_insert``) runs no Spark job, like the reference's one-row
-PostgreSQL transaction (Interface1.py:183-259). Under the catalog's
-writer lock it reads the scheme's metadata (cursor included), routes
-the row on the driver, writes one one-row parquet file for the base
-and one for the owning fragment with pyarrow into ``_staging/``, and
-commits them with an intent record in the catalog sidecar
-(``catalog.FragmentCatalog.commit_insert``). Every mutation here (the
-load, the partitionings, the inserts, ``delete_tables`` of one table)
-first finishes an interrupted insert under the lock: it renames the
-staged files of a left-over intent into place and deletes staged files
-no intent names. So a crashed insert leaves either nothing visible or
-a torn insert (in base but not yet in its fragment) that the next
-mutation completes. Readers take no lock: between an insert's two
-renames, and from a crash until the next mutation, a reader can see
-the row in base but not in its fragment. Inserts, like the catalog,
-reach local and ``file://`` warehouses.
+PostgreSQL transaction (Interface1.py:183-259). Under the writer lock
+it reads the scheme's metadata (cursor included) and the live
+generations, routes the row on the driver, writes one one-row parquet
+file for the base and one for the owning fragment with pyarrow into
+``_staging/``, and commits them into those generations with an intent
+record in the catalog sidecar (``catalog.FragmentCatalog.commit_insert``).
+Every mutation first finishes an interrupted insert under the lock: it
+renames the staged files of a left-over intent into place and deletes
+staged files no intent names. So a crashed insert leaves either nothing
+visible or a torn insert (in base but not yet in its fragment) that the
+next mutation completes. Readers take no lock: between an insert's two
+renames, and from a crash until the next mutation, a reader can see the
+row in base but not in its fragment. Because a partitioning or
+compaction holds the lock for its whole write, an insert that arrives
+meanwhile fails fast with ``fs.LockHeldError`` and can be retried; it is
+never lost under the rewrite.
 
 Every read of a base or fragment dataset uses the declared schema
 (``RATINGS_SCHEMA``, or ``FRAGMENTED_SCHEMA`` via
@@ -64,14 +77,19 @@ the reference (Interface1.py:103-105).
 
 from __future__ import annotations
 
-import os
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs as fslib
-from .catalog import FragmentCatalog, section
+from .catalog import (
+    FragmentCatalog,
+    HashMetadata,
+    RangeMetadata,
+    RoundRobinMetadata,
+    section,
+)
 from .operators import fragmentation as frag
 from .operators import query as q
 from .schema import FRAGMENT_COL, RATINGS_SCHEMA
@@ -80,21 +98,22 @@ from .sources.ratings import read_ratings_text
 RATING_DOMAIN = (0.0, 5.0)  # fixed regardless of data (Interface1.py:122-123)
 
 
-def _base_path(warehouse: str, table: str) -> str:
-    return os.path.join(warehouse, table, "base")
-
-def _range_path(warehouse: str, table: str) -> str:
-    return os.path.join(warehouse, f"{table}_range")
-
-def _rr_path(warehouse: str, table: str) -> str:
-    return os.path.join(warehouse, f"{table}_rr")
-
-def _hash_path(warehouse: str, table: str) -> str:
-    return os.path.join(warehouse, f"{table}_hash")
+def _datasets(table: str) -> dict[str, str]:
+    """The table's datasets, relative to the warehouse, by catalog
+    section (``base`` for the unfragmented relation)."""
+    return {
+        "base": f"{table}/base",
+        "range": f"{table}_range",
+        "round_robin": f"{table}_rr",
+        "hash": f"{table}_hash",
+    }
 
 
-def _read_base(spark: SparkSession, warehouse: str, table: str) -> DataFrame:
-    return spark.read.schema(RATINGS_SCHEMA).parquet(_base_path(warehouse, table))
+def _live(cat: FragmentCatalog, doc: dict, dataset: str) -> str:
+    path = cat.live(dataset, doc)
+    if path is None:
+        raise FileNotFoundError(f"{dataset} has no committed data in {cat.warehouse}")
+    return path
 
 
 def _valid_n(n) -> bool:
@@ -105,10 +124,39 @@ def load_ratings(
     spark: SparkSession, table: str, filepath: str, warehouse: str
 ) -> DataFrame:
     """Distributed load of ``::`` text → parquet base table (op #1)."""
-    FragmentCatalog(warehouse, spark).recover()
-    df = read_ratings_text(spark, filepath)
-    df.write.mode("overwrite").parquet(_base_path(warehouse, table))
-    return _read_base(spark, warehouse, table)
+    return write_base(spark, table, read_ratings_text(spark, filepath), warehouse)
+
+
+def write_base(
+    spark: SparkSession, table: str, df: DataFrame, warehouse: str
+) -> DataFrame:
+    """Publish ``df`` (``RATINGS_SCHEMA`` columns) as a new generation of
+    the table's base; returns it read back with the declared schema."""
+    dataset = _datasets(table)["base"]
+    cat = FragmentCatalog(warehouse, spark)
+    with cat.mutation() as doc:
+        gen = cat.new_generation(dataset, "load")
+        df.write.parquet(gen)
+        cat.publish(doc, {dataset: gen})
+    return spark.read.schema(RATINGS_SCHEMA).parquet(gen)
+
+
+def _fragment(
+    spark: SparkSession, table: str, warehouse: str, scheme: str, assign
+) -> None:
+    """Fragment the table's live base into a new generation of its
+    ``scheme`` dataset and publish it with the scheme's metadata, all
+    under the writer lock (module docstring). ``assign(base)`` returns
+    the fragmented frame and a thunk giving the metadata once that
+    frame is written."""
+    datasets = _datasets(table)
+    cat = FragmentCatalog(warehouse, spark)
+    with cat.mutation() as doc:
+        base = spark.read.schema(RATINGS_SCHEMA).parquet(_live(cat, doc, datasets["base"]))
+        fragmented, meta = assign(base)
+        gen = cat.new_generation(datasets[scheme], scheme)
+        frag.write_fragmented(fragmented, gen)
+        cat.publish(doc, {datasets[scheme]: gen}, **{scheme: meta()})
 
 
 def range_partition(spark: SparkSession, table: str, n, warehouse: str) -> None:
@@ -117,16 +165,10 @@ def range_partition(spark: SparkSession, table: str, n, warehouse: str) -> None:
         print("Invalid number of partitions:", n)
         return
     lo, hi = RATING_DOMAIN
-    cat = FragmentCatalog(warehouse)
-    cat.recover()
-    df = _read_base(spark, warehouse, table)
-    frag.write_fragmented(
+    _fragment(spark, table, warehouse, "range", lambda df: (
         frag.assign_range_fragments(df, "rating", n, lo, hi),
-        _range_path(warehouse, table),
-    )
-    cat.update_range(
-        n=n, min_value=lo, max_value=hi, interval=(hi - lo) / n
-    )
+        lambda: RangeMetadata(n, lo, hi, (hi - lo) / n),
+    ))
 
 
 def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) -> None:
@@ -134,9 +176,7 @@ def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) ->
     if not _valid_n(n):
         print("Invalid number of partitions:", n)
         return
-    cat = FragmentCatalog(warehouse)
-    cat.recover()
-    df = _read_base(spark, warehouse, table)
+
     # (userid, movieid) is the ratings natural key: a MovieLens user rates
     # a movie once (the registry's lineitem-derived relation repeats pairs,
     # so queries.common._frag_warehouse numbers lineitem rows).
@@ -145,11 +185,13 @@ def round_robin_partition(spark: SparkSession, table: str, n, warehouse: str) ->
     # the only Spark job; a base of more scan splits by its buckets. The
     # row total is counted on the write itself (an Observation), not by a
     # second scan.
-    assigned, rows = frag.assign_round_robin_fragments(
-        df, n, order_cols=["userid", "movieid"]
-    )
-    frag.write_fragmented(assigned, _rr_path(warehouse, table))
-    cat.update_round_robin(n=n, last_inserted=frag.round_robin_cursor(rows, n))
+    def assign(df):
+        assigned, rows = frag.assign_round_robin_fragments(
+            df, n, order_cols=["userid", "movieid"]
+        )
+        return assigned, lambda: RoundRobinMetadata(n, frag.round_robin_cursor(rows, n))
+
+    _fragment(spark, table, warehouse, "round_robin", assign)
 
 
 def _parquet_row(userid: int, itemid: int, rating: float) -> bytes:
@@ -186,21 +228,23 @@ def _route(scheme: str, meta, userid: int, itemid: int, rating: float) -> int:
 
 
 def _routed_insert(
-    scheme: str, fragments: str, table: str, userid: int, itemid: int,
+    spark: SparkSession, scheme: str, table: str, userid: int, itemid: int,
     rating: float, warehouse: str,
 ) -> None:
-    """Append one row to the base and to its owning fragment of
-    ``scheme`` (stored under ``fragments``) as one commit, with no Spark
-    job; the protocol, recovery and reader window are in the module
-    docstring. With no ``scheme`` partitions the row goes to base only,
-    and a message says so, as in the reference."""
+    """Append one row to the live base and to its owning fragment of
+    ``scheme``'s live generation as one commit, with no Spark job; the
+    protocol, recovery and reader window are in the module docstring.
+    With no ``scheme`` partitions the row goes to base only, and a
+    message says so, as in the reference."""
     data = _parquet_row(userid, itemid, rating)
-    cat = FragmentCatalog(warehouse)
+    datasets = _datasets(table)
+    cat = FragmentCatalog(warehouse, spark)
     with cat.mutation() as doc:
         meta = section(doc, scheme)
         owner = _route(scheme, meta, userid, itemid, rating) if meta.n > 0 else None
-        staged = [cat.stage(data, _base_path(warehouse, table))]
+        staged = [cat.stage(data, cat.insert_target(doc, datasets["base"]))]
         if owner is not None:
+            fragments = cat.insert_target(doc, datasets[scheme])
             staged.append(cat.stage(data, fslib.join(fragments, f"{FRAGMENT_COL}={owner}")))
             if scheme == "round_robin":
                 meta.last_inserted = owner
@@ -216,11 +260,10 @@ def range_insert(
 ) -> None:
     """Append to base AND to the owning range fragment (op #5,
     Interface1.py:215-259), routed on the driver by the catalog's
-    domain bounds read under the writer lock. Starts no Spark job
-    (``spark`` is unused); one all-or-nothing commit, completed by the
-    next mutation after a crash (module docstring)."""
-    _routed_insert("range", _range_path(warehouse, table), table,
-                   userid, itemid, rating, warehouse)
+    domain bounds read under the writer lock. Starts no Spark job; one
+    all-or-nothing commit, completed by the next mutation after a crash
+    (module docstring)."""
+    _routed_insert(spark, "range", table, userid, itemid, rating, warehouse)
 
 
 def round_robin_insert(
@@ -231,10 +274,23 @@ def round_robin_insert(
     Interface1.py:183-213). The cursor is read and advanced under the
     writer lock, in the same sidecar write that records the insert's
     intent, so two inserters never pick the same owner and a torn
-    insert has already advanced it once. Starts no Spark job (``spark``
-    is unused); commit and recovery as in the module docstring."""
-    _routed_insert("round_robin", _rr_path(warehouse, table), table,
-                   userid, itemid, rating, warehouse)
+    insert has already advanced it once. Starts no Spark job; commit
+    and recovery as in the module docstring."""
+    _routed_insert(spark, "round_robin", table, userid, itemid, rating, warehouse)
+
+
+def _query_sides(spark: SparkSession, warehouse: str, table: str) -> list:
+    """``[range, round_robin]``: each scheme's ``(metadata, live
+    generation)`` from ONE sidecar read, or None for a scheme without
+    partitions (the arguments of ``q.range_query``/``q.point_query``)."""
+    cat = FragmentCatalog(warehouse, spark)
+    doc = cat.read()
+    sides = []
+    for scheme in ("range", "round_robin"):
+        meta = section(doc, scheme)
+        live = _live(cat, doc, _datasets(table)[scheme]) if meta.n > 0 else None
+        sides.append((meta, live) if live else None)
+    return sides
 
 
 def range_query(
@@ -242,8 +298,7 @@ def range_query(
     output_path: str | None = None, table: str = "ratings",
 ) -> DataFrame:
     df = q.range_query(
-        spark, min_rating, max_rating, warehouse,
-        _range_path(warehouse, table), _rr_path(warehouse, table),
+        spark, min_rating, max_rating, *_query_sides(spark, warehouse, table)
     )
     if output_path:
         q.write_result_file(df, output_path)
@@ -254,10 +309,7 @@ def point_query(
     spark: SparkSession, rating_value: float, warehouse: str,
     output_path: str | None = None, table: str = "ratings",
 ) -> DataFrame:
-    df = q.point_query(
-        spark, rating_value, warehouse,
-        _range_path(warehouse, table), _rr_path(warehouse, table),
-    )
+    df = q.point_query(spark, rating_value, *_query_sides(spark, warehouse, table))
     if output_path:
         q.write_result_file(df, output_path)
     return df
@@ -272,13 +324,9 @@ def hash_partition(
     if not _valid_n(n):
         print("Invalid number of partitions:", n)
         return
-    cat = FragmentCatalog(warehouse)
-    cat.recover()
-    df = _read_base(spark, warehouse, table)
-    frag.write_fragmented(
-        frag.assign_hash_fragments(df, key, n), _hash_path(warehouse, table)
-    )
-    cat.update_hash(n=n, key=key)
+    _fragment(spark, table, warehouse, "hash", lambda df: (
+        frag.assign_hash_fragments(df, key, n), lambda: HashMetadata(n, key),
+    ))
 
 
 def hash_insert(
@@ -289,10 +337,9 @@ def hash_insert(
     under the catalog's hash scheme: ``query.hash_owner_fragment``, the
     driver-side twin of ``hash_fragment_expr``, so only an integer key
     (userid or movieid) routes; another key raises before anything is
-    written. Starts no Spark job (``spark`` is unused); commit and
-    recovery as in the module docstring."""
-    _routed_insert("hash", _hash_path(warehouse, table), table,
-                   userid, itemid, rating, warehouse)
+    written. Starts no Spark job; commit and recovery as in the module
+    docstring."""
+    _routed_insert(spark, "hash", table, userid, itemid, rating, warehouse)
 
 
 def hash_key_lookup(
@@ -300,14 +347,17 @@ def hash_key_lookup(
 ) -> DataFrame:
     """[EXT] Point lookup by routing key: computes the owning fragment
     from the catalog (driver-side arithmetic on the key literal) and
-    reads ONLY that fragment — partition pruning by construction, the
-    1-of-n scan the reference's pointQuery does for the range scheme
+    reads ONLY that fragment of the live generation named in the same
+    sidecar read — partition pruning by construction, the 1-of-n scan
+    the reference's pointQuery does for the range scheme
     (Interface1.py:310-347), here for the hash scheme."""
-    meta = FragmentCatalog(warehouse).hash_meta()
+    cat = FragmentCatalog(warehouse, spark)
+    doc = cat.read()
+    meta = section(doc, "hash")
     if meta.n <= 0:
         raise ValueError("no hash partitions exist")
     owner = q.hash_owner_fragment(key_value, meta.n)
-    df = frag.read_fragmented(spark, _hash_path(warehouse, table))
+    df = frag.read_fragmented(spark, _live(cat, doc, _datasets(table)["hash"]))
     return df.where(
         (F.col(FRAGMENT_COL) == owner) & (F.col(meta.key) == key_value)
     )
@@ -319,18 +369,18 @@ def catalog_report(
     """[EXT] One-stop catalog/layout report: every materialized scheme
     with its catalog parameters and per-fragment row counts — the
     operational view the reference never had. Counts come from pruned
-    per-scheme scans (one tiny agg per scheme)."""
-    cat = FragmentCatalog(warehouse)
+    per-scheme scans (one tiny agg per scheme) of the live generations
+    named in one sidecar read."""
+    cat = FragmentCatalog(warehouse, spark)
+    doc = cat.read()
     rows = []
-    for scheme, path, n in (
-        ("range", _range_path(warehouse, table), cat.range_meta().n),
-        ("round_robin", _rr_path(warehouse, table), cat.round_robin_meta().n),
-        ("hash", _hash_path(warehouse, table), cat.hash_meta().n),
-    ):
-        if n <= 0 or not os.path.isdir(path):
+    for scheme in ("range", "round_robin", "hash"):
+        n = section(doc, scheme).n
+        live = cat.live(_datasets(table)[scheme], doc)
+        if n <= 0 or live is None:
             continue
         counts = (
-            frag.read_fragmented(spark, path)
+            frag.read_fragmented(spark, live)
             .groupBy(FRAGMENT_COL)
             .count()
             .collect()
@@ -351,53 +401,45 @@ def compact_fragments(
     pathology — at scale, file-listing cost alone kills scans). Rewrite
     each fragment directory down to ``target_files_per_fragment`` files
     with a fragment-local repartition; fragment membership, row content
-    and partition pruning are unchanged. The commit goes through the
-    warehouse FS shim (fs.py): rename-swap on local/HDFS (old layout
-    readable until the new one is complete), generation-pointer flip on
-    object stores without atomic rename."""
-    paths = {
-        "range": _range_path(warehouse, table),
-        "round_robin": _rr_path(warehouse, table),
-        "hash": _hash_path(warehouse, table),
-    }
-    path = paths[scheme]
-    wfs = fslib.fs_for(warehouse, spark)
-    df = frag.read_fragmented(spark, fslib.resolve_dataset(wfs, path))
-    staged = fslib.stage_path(wfs, path, "compact")
-    if target_files_per_fragment <= 1:
-        # hash-cluster by fragment: each fragment lands whole in one
-        # task → exactly one file per fragment directory
-        clustered = df.repartition(F.col(FRAGMENT_COL))
-    else:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]),
-            F.lit(target_files_per_fragment),
-        )
-        clustered = df.repartition(F.col(FRAGMENT_COL), salt)
-    clustered.write.mode("overwrite").partitionBy(FRAGMENT_COL).parquet(staged)
-    fslib.commit_staged(wfs, staged, path, require_marker=True)
+    and partition pruning are unchanged. Like every writer here it holds
+    the writer lock for the whole rewrite, writes a new generation and
+    flips it in the catalog sidecar (module docstring): readers keep
+    the old layout until the flip, and an insert arriving during the
+    rewrite fails with ``fs.LockHeldError`` instead of being lost."""
+    dataset = _datasets(table)[scheme]
+    cat = FragmentCatalog(warehouse, spark)
+    with cat.mutation() as doc:
+        df = frag.read_fragmented(spark, _live(cat, doc, dataset))
+        gen = cat.new_generation(dataset, "compact")
+        if target_files_per_fragment <= 1:
+            # hash-cluster by fragment: each fragment lands whole in one
+            # task → exactly one file per fragment directory
+            clustered = df.repartition(F.col(FRAGMENT_COL))
+        else:
+            salt = F.pmod(
+                F.xxhash64(*[F.col(c) for c in df.columns]),
+                F.lit(target_files_per_fragment),
+            )
+            clustered = df.repartition(F.col(FRAGMENT_COL), salt)
+        clustered.write.partitionBy(FRAGMENT_COL).parquet(gen)
+        cat.publish(doc, {dataset: gen})
 
 
 def delete_tables(spark: SparkSession, table_or_all: str, warehouse: str) -> None:
     """Drop a named table's datasets, or everything (op #10).
 
     ``'ALL'`` is case-insensitive like the reference (Interface1.py:375).
+    One table is dropped under the writer lock (after any interrupted
+    insert is finished): its generation entries leave the sidecar in
+    one write, then its directories are deleted.
     """
     wfs = fslib.fs_for(warehouse, spark)
     if table_or_all.upper() == "ALL":
         wfs.delete(warehouse, recursive=True)
         return
-    if wfs.exists(warehouse):
-        # an interrupted insert must not land in the table after its drop
-        FragmentCatalog(warehouse, fs=wfs).recover()
-    for p in (
-        os.path.join(warehouse, table_or_all),
-        _range_path(warehouse, table_or_all),
-        _rr_path(warehouse, table_or_all),
-        _hash_path(warehouse, table_or_all),
-    ):
-        wfs.delete(p, recursive=True)
-        # also drop old-/staged siblings: a surviving marked stage
-        # after a drop is the target-missing-no-old state in which
-        # recovery would resurrect stale data for the next reader
-        fslib.purge_siblings(wfs, p)
+    if not wfs.exists(warehouse):
+        return
+    cat = FragmentCatalog(warehouse, fs=wfs)
+    datasets = _datasets(table_or_all)
+    with cat.mutation() as doc:
+        cat.drop(doc, [table_or_all, *(datasets[s] for s in ("range", "round_robin", "hash"))])

@@ -80,7 +80,7 @@ def build_once(
         logger.info("artifact hit: %s at %s", tag, path)
         return path
     fs = fslib.LocalFS()
-    stage = fslib.stage_path(fs, path, "stage")
+    stage = f"{path}.{fslib.new_token('stage')}"
     t0 = time.perf_counter()
     try:
         fs.makedirs(stage)

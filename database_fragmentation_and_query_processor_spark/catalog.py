@@ -10,29 +10,52 @@ Interface1.py:84-95).
 
 Here the same state lives in one JSON sidecar per warehouse
 (``_frag_metadata.json``). It must survive across sessions exactly like
-the Postgres singleton rows; writes are single-writer read-modify-write,
-the same concurrency model as the reference (one client connection).
+the Postgres singleton rows.
 
-At 100 TB scale this sidecar stays O(1): it holds only the partitioning
-function's parameters (scheme, n, domain bounds, RR cursor), never any
-per-row or per-file state — fragment membership is a computed column and
-file layout, both handled by Spark's partitioned-dataset machinery. The
-one exception is bounded: while a routed insert commits, the sidecar
-also carries that insert's intent (``insert_intent``: its stage → final
-renames, at most two), and at most one intent exists at a time.
+The sidecar is also the warehouse's one commit point. Data files are
+immutable: each dataset of a table (``<table>/base``,
+``<table>_range``, ``<table>_rr``, ``<table>_hash``) lives in
+generation directories ``<dataset>/gen-<token>/``, and the sidecar's
+``generations`` map names the live one of each. A writer
+(:meth:`FragmentCatalog.mutation`) holds the warehouse writer lock for
+its whole write: it writes a new generation that no reader looks at
+(:meth:`FragmentCatalog.new_generation`), then flips the generation
+together with the scheme's metadata in ONE atomic sidecar write
+(:meth:`FragmentCatalog.publish`) and prunes old generations
+(``fs.KEEP_GENERATIONS`` survive). A reader reads the sidecar once
+(:meth:`FragmentCatalog.read`) and takes ``n``, the bounds and the
+generation from that one document, so it sees the whole old layout or
+the whole new one, and its ``n`` matches the layout it reads. A writer
+that fails before its flip leaves its generation unpublished, and it is
+deleted.
 
-Routed inserts commit through it (:meth:`FragmentCatalog.mutation`,
-:meth:`FragmentCatalog.stage`, :meth:`FragmentCatalog.commit_insert`):
-under the writer lock the insert stages its files in the hidden
-``{warehouse}/_staging/`` directory, writes the sidecar once with the
-intent (and, for round-robin, the advanced cursor), renames each staged
-file into place and writes the sidecar again without the intent. Every
-mutation enters the lock through :meth:`FragmentCatalog.mutation`, which
-first rolls a left-over intent forward (renaming each staged file whose
-final name is absent) and deletes staged files no intent names (a
-writer that died before its intent write). So an insert is all or
-nothing once the next writer has run: a crash leaves either no visible
-file or a torn insert that the next mutation completes.
+At 100 TB scale this sidecar stays O(1): it holds the partitioning
+functions' parameters (scheme, n, domain bounds, RR cursor) and one
+generation name per dataset, never any per-row or per-file state —
+fragment membership is a computed column and file layout, both handled
+by Spark's partitioned-dataset machinery. The one exception is
+bounded: while a routed insert commits, the sidecar also carries that
+insert's intent (``insert_intent``: its stage → final renames, at most
+two), and at most one intent exists at a time.
+
+Routed inserts (:meth:`FragmentCatalog.stage`,
+:meth:`FragmentCatalog.commit_insert`) add files to the live
+generations they read under the lock: the insert stages its files in
+the hidden ``{warehouse}/_staging/`` directory, writes the sidecar once
+with the intent (and, for round-robin, the advanced cursor), renames
+each staged file into place and writes the sidecar again without the
+intent. Every mutation first rolls a left-over intent forward (renaming
+each staged file whose final name is absent) and deletes staged files
+no intent names (a writer that died before its intent write). So an
+insert is all or nothing once the next writer has run: a crash leaves
+either no visible file or a torn insert that the next mutation
+completes.
+
+Every sidecar write that publishes something (a generation flip, an
+insert intent) is fenced: it first checks that the writer still holds
+its lock (``fs.check_writer_lock``). A write that ran past
+``fs.LOCK_TTL_SEC`` and lost its lock raises ``LockHeldError``; the
+sidecar is left unchanged and the unpublished generation deleted.
 """
 
 from __future__ import annotations
@@ -49,6 +72,9 @@ METADATA_FILENAME = "_frag_metadata.json"
 STAGING_DIR = "_staging"
 #: Sidecar key of the one pending insert: ``[[stage, final], ...]``.
 INTENT_KEY = "insert_intent"
+#: Sidecar key naming each dataset's live generation:
+#: ``{dataset: "gen-<token>"}``, datasets relative to the warehouse.
+GENERATIONS_KEY = "generations"
 
 
 @dataclass
@@ -90,27 +116,23 @@ class FragmentCatalog:
         self.path = fslib.join(warehouse, METADATA_FILENAME)
         self.staging = fslib.join(warehouse, STAGING_DIR)
         self._fs = fs if fs is not None else fslib.fs_for(warehouse, spark)
+        self._lock: fslib.WriterLock | None = None
+        #: generations made in the current mutation and not yet published
+        self._minted: list[str] = []
 
     # -- raw IO (all through the warehouse FS shim) ---------------------
-    def _read(self) -> dict:
+    def read(self) -> dict:
+        """The sidecar document; a reader takes everything it needs from
+        one read (module docstring)."""
         return fslib.read_json(self._fs, self.path, default={})
 
     def _write(self, doc: dict) -> None:
-        self._fs.makedirs(self.warehouse)
+        """(Under :meth:`mutation`.) The fenced sidecar write: raises
+        ``LockHeldError``, writing nothing, once the lock is lost."""
+        fslib.check_writer_lock(self._fs, self._lock)
         fslib.write_json_atomic(self._fs, self.path, doc)
-
-    @contextmanager
-    def _locked(self):
-        """Advisory writer lock around every read-modify-write: the
-        single-writer assumption (module docstring) enforced rather
-        than hoped — a concurrent mutator fails fast with the holder's
-        identity instead of silently losing an update."""
-        self._fs.makedirs(self.warehouse)
-        lock = fslib.acquire_writer_lock(self._fs, self.warehouse)
-        try:
-            yield
-        finally:
-            fslib.release_writer_lock(self._fs, lock)
+        live = set(doc.get(GENERATIONS_KEY, {}).values())
+        self._minted = [p for p in self._minted if posixpath.basename(p) not in live]
 
     def _update(self, scheme: str, **changes):
         """One locked read-modify-write of ``scheme``'s section: read
@@ -125,13 +147,24 @@ class FragmentCatalog:
             self._write(doc)
         return meta
 
-    # -- routed-insert commit (module docstring) ------------------------
     @contextmanager
     def mutation(self):
-        """The writer lock, entered with any interrupted insert finished
-        (:meth:`_recover`); yields the sidecar document read under it."""
-        with self._locked():
+        """The writer lock, held for the whole block and entered with any
+        interrupted insert finished (:meth:`_recover`); yields the
+        sidecar document read under it. A block that raises deletes the
+        generations it made and did not publish."""
+        self._fs.makedirs(self.warehouse)
+        self._lock = fslib.acquire_writer_lock(self._fs, self.warehouse)
+        try:
             yield self._recover()
+        except BaseException:
+            for path in self._minted:
+                self._fs.delete(path, recursive=True)
+            raise
+        finally:
+            self._minted.clear()
+            lock, self._lock = self._lock, None
+            fslib.release_writer_lock(self._fs, lock)
 
     def recover(self) -> None:
         """Finish or clean up an interrupted insert; a no-op otherwise."""
@@ -141,7 +174,7 @@ class FragmentCatalog:
     def _recover(self) -> dict:
         """(Lock held.) Roll a left-over intent forward, then delete the
         staged files that no intent names. Returns the sidecar."""
-        doc = self._read()
+        doc = self.read()
         renames = doc.pop(INTENT_KEY, None)
         if renames:
             self._publish(renames)
@@ -150,6 +183,61 @@ class FragmentCatalog:
             for path, _is_dir, _size, _mtime in self._fs.list_status(self.staging):
                 self._fs.delete(path, recursive=True)
         return doc
+
+    # -- generations (module docstring) ---------------------------------
+    def live(self, dataset: str, doc: dict | None = None) -> str | None:
+        """Path of the live generation of ``dataset`` (relative to the
+        warehouse, e.g. ``ratings_range``) that ``doc`` names (the
+        sidecar read now when ``doc`` is None); None when it has none."""
+        doc = self.read() if doc is None else doc
+        name = doc.get(GENERATIONS_KEY, {}).get(dataset)
+        return fslib.join(self.warehouse, dataset, name) if name else None
+
+    def new_generation(self, dataset: str, tag: str) -> str:
+        """(Under :meth:`mutation`.) Path of a new, unpublished
+        generation of ``dataset`` to write."""
+        path = fslib.stage_path(self._fs, fslib.join(self.warehouse, dataset), tag)
+        self._minted.append(path)
+        return path
+
+    def publish(self, doc: dict, generations: dict[str, str], **sections) -> None:
+        """(Under :meth:`mutation`.) Make each ``generations`` entry
+        (dataset → written generation) live, and set each scheme
+        section (``range=RangeMetadata(...)``, ...), in one sidecar
+        write; then prune each dataset's old generations."""
+        for scheme, meta in sections.items():
+            doc[scheme] = asdict(meta)
+        live = doc.setdefault(GENERATIONS_KEY, {})
+        for dataset, path in generations.items():
+            live[dataset] = posixpath.basename(path)
+        self._write(doc)
+        for dataset in generations:
+            fslib.prune_generations(
+                self._fs, fslib.join(self.warehouse, dataset), live[dataset]
+            )
+
+    def drop(self, doc: dict, dirs) -> None:
+        """(Under :meth:`mutation`.) Unpublish every dataset in or under
+        the warehouse directories ``dirs`` in one sidecar write, then
+        delete the directories."""
+        live = doc.get(GENERATIONS_KEY, {})
+        for dataset in [d for d in live if any(d == x or d.startswith(x + "/") for x in dirs)]:
+            del live[dataset]
+        self._write(doc)
+        for d in dirs:
+            self._fs.delete(fslib.join(self.warehouse, d), recursive=True)
+
+    # -- routed-insert commit (module docstring) ------------------------
+    def insert_target(self, doc: dict, dataset: str) -> str:
+        """(Under :meth:`mutation`.) The live generation of ``dataset``
+        an insert adds to; a new empty one, named in ``doc`` and so
+        published by the insert's intent write, when it has none."""
+        path = self.live(dataset, doc)
+        if path is None:
+            path = self.new_generation(dataset, "insert")
+            self._fs.makedirs(path)
+            doc.setdefault(GENERATIONS_KEY, {})[dataset] = posixpath.basename(path)
+        return path
 
     def _publish(self, renames) -> None:
         for stage, final in renames:
@@ -180,7 +268,7 @@ class FragmentCatalog:
 
     # -- range ----------------------------------------------------------
     def range_meta(self) -> RangeMetadata:
-        return section(self._read(), "range")
+        return section(self.read(), "range")
 
     def update_range(
         self,
@@ -201,7 +289,7 @@ class FragmentCatalog:
 
     # -- round robin ----------------------------------------------------
     def round_robin_meta(self) -> RoundRobinMetadata:
-        return section(self._read(), "round_robin")
+        return section(self.read(), "round_robin")
 
     def update_round_robin(self, n: int = -1, last_inserted: int = -2) -> RoundRobinMetadata:
         """Partial update; ``last_inserted`` uses ``>= -1`` because -1 is a
@@ -215,17 +303,19 @@ class FragmentCatalog:
 
     # -- hash [EXT] -----------------------------------------------------
     def hash_meta(self) -> HashMetadata:
-        return section(self._read(), "hash")
+        return section(self.read(), "hash")
 
     def update_hash(self, n: int = -1, key: str | None = None) -> HashMetadata:
         return self._update("hash", n=int(n) if n >= 0 else None, key=key)
 
     def clear(self, scheme: str | None = None) -> None:
+        """Reset ``scheme``'s section, or the whole sidecar (generation
+        names included) when ``scheme`` is None."""
         with self.mutation() as doc:
             if scheme is None:
-                self._fs.delete(self.path)
-                return
-            doc.pop(scheme, None)
+                doc.clear()
+            else:
+                doc.pop(scheme, None)
             self._write(doc)
 
 

@@ -1,12 +1,11 @@
 """Warehouse filesystem shim: one small surface for every driver-side
 metadata/commit IO the engine performs outside of Spark jobs.
 
-Why this exists: the catalog sidecar, the compaction swap, the
-streaming upsert/CDC commit step and the ingestion ledger were written
-against POSIX (``open``/``os.replace``/``os.rename``). On the
-100 TB deployment the warehouse is HDFS or an object store, where
-``os.rename`` does not exist — and on S3-family stores no atomic
-directory rename exists AT ALL. This module abstracts both problems:
+Why this exists: the catalog sidecar, the dataset commits, the
+streaming upsert/CDC commit step and the ingestion ledger must run
+unchanged on a local directory, on HDFS and on an object store, where
+``os.rename`` does not exist and, on S3-family stores, no atomic
+directory rename exists at all.
 
 - ``LocalFS``: plain POSIX, used for bare local paths (no JVM needed —
   the catalog must work before any SparkSession exists).
@@ -15,21 +14,27 @@ directory rename exists AT ALL. This module abstracts both problems:
   the same code drives ``file://``, ``hdfs://`` and ``s3a://``
   warehouses. (Public API: org.apache.hadoop.fs.FileSystem — shipped
   with Spark.)
-- Commit protocol: ``stage_path``/``commit_staged`` re-express
-  write-then-swap. On rename-capable stores (local, HDFS) the commit
-  IS the classic rename swap, so on-disk layout is unchanged. On
-  stores without atomic rename (``s3/s3a/s3n/gs/oss/wasb``) data is
-  staged into a generation subdirectory and the commit is a single
-  atomic pointer-object PUT (``_LATEST``); ``resolve_dataset`` maps a
-  logical dataset path to its current generation for readers. Old
-  generations are pruned lazily, keeping ``KEEP_GENERATIONS`` so
-  in-flight readers on eventually-consistent stores never lose their
-  files mid-scan.
+- One commit rule for every store: data files are immutable. A writer
+  writes the next version of a dataset into a new generation directory
+  ``<dataset>/gen-<token>/`` that no reader looks at, then makes it
+  live with ONE atomic metadata write. For the fragment warehouse that
+  write is the catalog sidecar (``catalog.py``); for every other
+  dataset (streaming sinks, near-dup segments) it is the dataset's
+  ``_LATEST`` pointer (``stage_path``/``commit_staged``;
+  ``resolve_dataset`` maps a dataset to its live generation). No
+  directory is ever renamed over another, so a crash leaves at worst an
+  unreferenced generation. Old generations are pruned after each
+  commit, keeping ``KEEP_GENERATIONS`` so a reader that planned its
+  scan against the previous one can finish it.
 
-Single-writer semantics throughout (the reference's model: one client
-connection, Interface1.py's psycopg2 session); concurrent writers need
-an external lock or a table format (Delta/Iceberg), which is out of
-scope here.
+Concurrency: warehouse writers hold the advisory writer lock below for
+their whole write, and check that they still hold it right before
+their commit write (:func:`check_writer_lock`). A write that runs
+longer than ``LOCK_TTL_SEC`` can have its lock broken by the next
+writer; it then aborts at that check instead of committing. The lock is
+exclusive where create-if-absent is atomic (POSIX, HDFS) and advisory
+on object stores; true multi-writer needs a table format
+(Delta/Iceberg), which is out of scope here.
 """
 
 from __future__ import annotations
@@ -44,13 +49,19 @@ import shutil
 import time
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
+
 POINTER_FILE = "_LATEST"
-#: How many committed generations to retain in pointer mode. 2 = the
-#: live one plus the previous (still readable by in-flight scans).
+#: How many generations of a dataset survive a commit: the live one
+#: plus the previous (still readable by in-flight scans).
 KEEP_GENERATIONS = 2
 
 #: URI schemes whose rename is a server-side O(1) metadata move.
 _ATOMIC_RENAME_SCHEMES = {"file", "hdfs", "viewfs", "webhdfs", "har"}
+
+#: What a failed store call raises: OSError from LocalFS, the wrapped
+#: Java exception from HadoopFS.
+FS_ERRORS = (OSError, Py4JJavaError)
 
 _SCHEME_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://")
 
@@ -68,15 +79,10 @@ def join(base: str, *parts: str) -> str:
 
 
 class LocalFS:
-    """POSIX implementation. Accepts bare paths and ``file://`` URIs.
+    """POSIX implementation. Accepts bare paths and ``file://`` URIs."""
 
-    ``atomic_rename=False`` turns on the pointer-commit protocol on top
-    of the local filesystem — used by tests to exercise the object-store
-    code path without an object store.
-    """
-
-    def __init__(self, atomic_rename: bool = True):
-        self.atomic_rename = atomic_rename
+    #: POSIX rename (and O_EXCL create) is atomic.
+    atomic_rename = True
 
     @staticmethod
     def _local(path: str) -> str:
@@ -159,17 +165,26 @@ class HadoopFS:
 
     Resolved per base URI: ``HadoopFS(spark, "s3a://bucket/wh")`` talks
     to the S3A connector, ``HadoopFS(spark, "file:///tmp/wh")`` to the
-    local connector — same call sites either way.
+    raw local filesystem — same call sites either way.
     """
 
     def __init__(self, spark, base: str):
         jvm = spark._jvm
         self._Path = jvm.org.apache.hadoop.fs.Path
         self._jvm = jvm
-        conf = spark._jsc.hadoopConfiguration()
-        self._fs = self._Path(base).getFileSystem(conf)
-        scheme = self._fs.getUri().getScheme()
-        self.atomic_rename = (scheme or "file") in _ATOMIC_RENAME_SCHEMES
+        self._gateway = spark.sparkContext._gateway
+        self._conf = spark._jsc.hadoopConfiguration()
+        self._fs = self._Path(base).getFileSystem(self._conf)
+        scheme = self._fs.getUri().getScheme() or "file"
+        #: Is rename (and create-if-absent) atomic on this store?
+        self.atomic_rename = scheme in _ATOMIC_RENAME_SCHEMES
+        self._local = scheme == "file"
+        if self._local:
+            # The local connector's checksum layer keeps a .crc file
+            # beside each file and replaces the pair in several steps (a
+            # reader can meet a new file with an old checksum); the raw
+            # local filesystem under it renames with one rename(2).
+            self._fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(self._conf).getRaw()
 
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._Path(path)))
@@ -196,18 +211,26 @@ class HadoopFS:
         out.close()
 
     def write_text_atomic(self, path: str, text: str) -> None:
-        if self.atomic_rename:
-            tmp = f"{path}.tmp-{os.getpid()}"
-            self.write_bytes(tmp, text.encode("utf-8"))
-            # overwrite-rename: Hadoop rename won't clobber, delete first
-            dst = self._Path(path)
-            if self._fs.exists(dst):
-                self._fs.delete(dst, False)
-            if not self._fs.rename(self._Path(tmp), dst):
-                raise OSError(f"rename failed: {tmp} -> {path}")
-        else:
-            # object stores: a single PUT is atomic per object
+        """Replace ``path`` with ``text`` so a reader sees the old or the
+        new content, never no file. On rename-capable stores a temp
+        file is renamed over ``path``: by one rename(2) on the local
+        filesystem, by ``FileContext.rename`` with
+        ``Options.Rename.OVERWRITE`` elsewhere (``FileSystem.rename``
+        will not clobber). On object stores, one PUT."""
+        if not self.atomic_rename:
             self.write_bytes(path, text.encode("utf-8"))
+            return
+        tmp = f"{path}.tmp-{os.getpid()}"
+        self.write_bytes(tmp, text.encode("utf-8"))
+        if self._local:
+            self.rename(tmp, path)
+            return
+        hfs = self._jvm.org.apache.hadoop.fs
+        rename_opt = getattr(hfs, "Options$Rename")
+        overwrite = self._gateway.new_array(rename_opt, 1)
+        overwrite[0] = rename_opt.OVERWRITE
+        ctx = hfs.FileContext.getFileContext(self._fs.getUri(), self._conf)
+        ctx.rename(self._Path(tmp), self._Path(path), overwrite)
 
     def rename(self, src: str, dst: str) -> None:
         if not self._fs.rename(self._Path(src), self._Path(dst)):
@@ -237,8 +260,10 @@ class HadoopFS:
         it is ADVISORY (see :func:`acquire_writer_lock`)."""
         try:
             out = self._fs.create(self._Path(path), False)
-        except Exception:
-            return False
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getSimpleName() == "FileAlreadyExistsException":
+                return False
+            raise
         out.write(bytearray(text.encode("utf-8")))
         out.close()
         return True
@@ -266,7 +291,7 @@ def fs_for(path: str, spark=None):
 
 
 # ---------------------------------------------------------------------------
-# Dataset commit protocol (write-then-swap, object-store safe)
+# Dataset commit protocol: a new generation, made live by one metadata write
 # ---------------------------------------------------------------------------
 
 def new_token(tag: str) -> str:
@@ -274,289 +299,39 @@ def new_token(tag: str) -> str:
 
 
 def stage_path(fs, target: str, tag: str) -> str:
-    """Where a writer should stage the NEW version of dataset ``target``.
-
-    Rename-capable stores: a sibling directory (the classic pattern —
-    target layout stays exactly as before). Pointer stores: a
-    generation subdirectory under ``target``.
-    """
-    token = new_token(tag)
-    if fs.atomic_rename:
-        return f"{target}.{token}"
-    return join(target, f"gen-{token}")
+    """Where a writer stages the next version of dataset ``target``: a
+    new generation directory ``target/gen-<tag>-<token>``, which no
+    reader looks at until a commit names it."""
+    return join(target, f"gen-{new_token(tag)}")
 
 
 def commit_staged(
     fs, staged: str, target: str, require_marker: bool = False
 ) -> str:
-    """Atomically make ``staged`` the current content of ``target``.
+    """Make the generation ``staged`` the current content of ``target``
+    by one atomic write of its ``_LATEST`` pointer, then prune old
+    generations. Returns ``staged``, the directory readers now scan.
 
-    Returns the path readers should scan (== ``target`` on
-    rename-capable stores; the generation dir in pointer mode).
-
-    ``require_marker=True`` makes the commit marker-gated: the staged
-    directory must contain a job-complete ``_SUCCESS`` marker (Spark's
-    Hadoop committer writes one) or the commit is refused — a
-    half-written staged directory (crashed or still-running write job)
-    can then never be published. The compaction and streaming
-    write-then-swap callers all write via Spark and pass True; generic
-    shim users staging non-Spark content keep the unchecked default.
-
-    On rename stores the swap itself is two renames (current → old,
-    staged → current) — there is no atomic directory replace — so a
-    crash between them leaves ``target`` missing with the versions
-    parked in sibling dirs. That window is healed, not hidden:
-    :func:`recover_interrupted_commit` runs first (repairing any
-    interrupted PREDECESSOR commit), and the same function is exported
-    for readers that find the dataset missing."""
+    ``require_marker=True`` refuses a generation without the
+    job-complete ``_SUCCESS`` marker that Spark's committer writes, so
+    a half-written generation (crashed or still-running write) is never
+    published. The Spark-writing callers pass True; callers staging
+    non-Spark content keep the unchecked default."""
     if require_marker and not fs.exists(join(staged, "_SUCCESS")):
         raise IOError(
             f"commit_staged: {staged!r} has no _SUCCESS marker — the "
             f"staging write is incomplete (crashed, or still running); "
             f"refusing to publish it over {target!r}"
         )
-    if fs.atomic_rename:
-        recover_interrupted_commit(fs, target, exclude=staged)
-        committed_key = _token_key(posixpath.basename(staged.rstrip("/")))
-        if fs.exists(target):
-            old = begin_swap(fs, staged, target)
-            fs.rename(staged, target)
-            fs.delete(old, recursive=True)
-        else:
-            fs.rename(staged, target)
-        # the breadcrumb travelled into target with the rename; and a
-        # live target means every remaining old- sibling is a
-        # superseded version some earlier crash left behind, while any
-        # staged sibling OLDER than the stage that just landed is an
-        # abandoned write that must not outlive the data superseding
-        # it — GC both (single-writer model, the lock is held on this
-        # path)
-        try:
-            fs.delete(join(target, INTENT_FILE))
-        except Exception:
-            pass
-        _prune_old_siblings(fs, target, staged_older_than=committed_key)
-        return target
     gen_name = posixpath.basename(staged)
     fs.write_text_atomic(join(target, POINTER_FILE), gen_name)
-    _prune_generations(fs, target, keep=KEEP_GENERATIONS)
-    return join(target, gen_name)
+    prune_generations(fs, target, gen_name)
+    return staged
 
 
-def _token_key(name: str) -> tuple[int, int]:
-    """Numeric (time_ns, counter) ordering of a ``new_token`` suffix."""
-    parts = name.split("-")
-    try:
-        return (int(parts[-2]), int(parts[-1]))
-    except (ValueError, IndexError):
-        return (0, 0)
-
-
-#: Breadcrumb a committing writer drops INTO its staged directory just
-#: before parking the current version: the file names the exact old-
-#: sibling this commit is about to create. Recovery uses it to tell
-#: "the staged dir of THIS interrupted commit" (safe to promote —
-#: finishing the commit) from "a staged dir some earlier writer
-#: abandoned before ever calling commit_staged" (never safe to promote
-#: over a parked committed version — doing so silently reverts the
-#: dataset, the failure ADVICE r10 flagged).
-INTENT_FILE = "_COMMIT_INTENT"
-
-
-def begin_swap(fs, staged: str, target: str) -> str:
-    """First half of the two-rename swap: mint the old- sibling name,
-    record it as ``staged``'s :data:`INTENT_FILE` breadcrumb, and park
-    the current version there. Returns the old- path. Factored out so
-    crash-recovery tests can leave the world exactly as a writer dying
-    between the two renames would."""
-    old = f"{target}.{new_token('old')}"
-    base = posixpath.basename(target.rstrip("/"))
-    fs.write_text_atomic(
-        join(staged, INTENT_FILE),
-        posixpath.basename(old)[len(base) + 1:],
-    )
-    fs.rename(target, old)
-    return old
-
-
-def _read_intent(fs, staged: str) -> str | None:
-    try:
-        p = join(staged, INTENT_FILE)
-        if fs.exists(p):
-            return fs.read_text(p).strip()
-    except Exception:
-        return None
-    return None
-
-
-def _prune_old_siblings(
-    fs, target: str, staged_older_than: tuple[int, int] | None = None
-) -> None:
-    """GC parked ``target.old-*`` siblings once ``target`` is live
-    again. A crash between the swap's second rename and the delete
-    leaves one behind forever otherwise, and every survivor enlarges
-    the candidate set future recoveries must reason about. Safe under
-    the documented single-writer model: with the dataset present, any
-    old- sibling is a superseded version (only commit_staged creates
-    them, and its own delete runs before this).
-
-    ``staged_older_than`` (the :func:`_token_key` of the stage that
-    just committed) additionally GCs ABANDONED STAGED siblings with a
-    strictly older token — the ADVICE r10-medium closure: a marked
-    stage whose writer died before ever calling commit_staged must not
-    linger past the next successful commit, or a later
-    target-missing-no-old recovery (external loss, drop that missed
-    siblings) would resurrect its stale content over data that
-    superseded it. Token-bounded so a hypothetical in-flight stage
-    minted after this commit's own stage is never touched; a slow
-    pre-dating stager loses its dir and fails its eventual commit
-    LOUDLY (rename of a missing source), never silently."""
-    base = posixpath.basename(target.rstrip("/"))
-    parent = posixpath.dirname(target.rstrip("/"))
-    try:
-        listing = list(fs.list_status(parent))
-    except Exception:
-        return
-    for p, is_dir, _sz, _mt in listing:
-        name = posixpath.basename(p)
-        if not is_dir or not name.startswith(base + "."):
-            continue
-        token = name[len(base) + 1:]
-        stale = token.startswith("old-") or (
-            staged_older_than is not None
-            and _token_key(name) < staged_older_than
-        )
-        if stale:
-            try:
-                fs.delete(p, recursive=True)
-            except Exception:
-                pass
-
-
-def purge_siblings(fs, target: str) -> None:
-    """Delete EVERY ``target.*`` sibling dir — old- parks and staged
-    dirs alike. The drop path must call this alongside deleting the
-    dataset itself: a dropped dataset with a surviving marked stage is
-    exactly the target-missing-no-old state in which
-    :func:`recover_interrupted_commit`'s first-commit-liveness branch
-    would resurrect the stale stage for the next reader."""
-    base = posixpath.basename(target.rstrip("/"))
-    parent = posixpath.dirname(target.rstrip("/"))
-    try:
-        listing = list(fs.list_status(parent))
-    except Exception:
-        return
-    for p, is_dir, _sz, _mt in listing:
-        if is_dir and posixpath.basename(p).startswith(base + "."):
-            try:
-                fs.delete(p, recursive=True)
-            except Exception:
-                pass
-
-
-def recover_interrupted_commit(
-    fs, target: str, exclude: str | None = None
-) -> str | None:
-    """Heal a rename-store commit that crashed between its two renames.
-
-    Such a crash leaves ``target`` MISSING while the versions sit in
-    sibling dirs: ``target.old-<tok>`` (the pre-commit version, parked
-    by the first rename) and/or the staged ``target.<tag>-<tok>`` (the
-    new version that never landed). Recovery restores, in preference
-    order: the staged sibling that carries BOTH a job-complete
-    ``_SUCCESS`` marker AND a :data:`INTENT_FILE` breadcrumb naming the
-    newest parked ``old-`` sibling — i.e. the staged dir of exactly the
-    commit that parked it (finishing that interrupted commit) — else
-    the newest ``old-`` sibling (rolling back to the pre-commit
-    version). A marked staged dir WITHOUT a matching breadcrumb is a
-    stage some writer abandoned before ever calling commit_staged; it
-    is never promoted over a parked version (that would silently
-    revert the dataset to stale data — ADVICE r10). When no ``old-``
-    sibling exists at all there is no committed version to shadow, so
-    the newest marked staged dir is promoted (first-commit liveness).
-    No-op when ``target`` exists (nothing was interrupted — stray
-    siblings there belong to in-flight writers and are not touched) or
-    in pointer mode (that commit is a single atomic pointer write).
-    Returns the restored path, or None if nothing needed recovery.
-    Races are benign: rename is atomic, so of N concurrent recoverers
-    exactly one wins and the losers see the target present on
-    re-check. ``exclude`` names a staged dir that must not be promoted
-    (commit_staged passes its own staged input — the commit about to
-    land is not an interrupted predecessor)."""
-    if not getattr(fs, "atomic_rename", True):
-        return None
-    if fs.exists(target):
-        return None
-    base = posixpath.basename(target.rstrip("/"))
-    parent = posixpath.dirname(target.rstrip("/"))
-    try:
-        listing = list(fs.list_status(parent))
-    except Exception:
-        return None
-    staged_sibs: list[str] = []
-    old_sibs: list[str] = []
-    excl = posixpath.basename(exclude.rstrip("/")) if exclude else None
-    for p, is_dir, _sz, _mt in listing:
-        if not is_dir:
-            continue
-        name = posixpath.basename(p)
-        if not name.startswith(base + ".") or name == excl:
-            continue
-        token = name[len(base) + 1:]
-        (old_sibs if token.startswith("old-") else staged_sibs).append(p)
-
-    def newest_first(paths: list[str]) -> list[str]:
-        return sorted(
-            paths, key=lambda p: _token_key(posixpath.basename(p)),
-            reverse=True,
-        )
-
-    ordered_old = newest_first(old_sibs)
-    newest_old_token = (
-        posixpath.basename(ordered_old[0])[len(base) + 1:]
-        if ordered_old
-        else None
-    )
-
-    def _promote(cand: str) -> str | None:
-        try:
-            fs.rename(cand, target)
-        except Exception:
-            if fs.exists(target):  # lost a benign recovery race
-                return target
-            raise
-        try:  # the breadcrumb travelled into target with the rename
-            fs.delete(join(target, INTENT_FILE))
-        except Exception:
-            pass
-        return target
-
-    for cand in newest_first(staged_sibs):
-        if not fs.exists(join(cand, "_SUCCESS")):
-            continue
-        if newest_old_token is not None:
-            # promotable only as the completion of the exact commit
-            # that parked the newest old- sibling
-            if _read_intent(fs, cand) != newest_old_token:
-                continue
-        got = _promote(cand)
-        if got:
-            if ordered_old and fs.exists(target):
-                # the completed commit's parked predecessor is now
-                # superseded, exactly as its own delete would have done
-                try:
-                    fs.delete(ordered_old[0], recursive=True)
-                except Exception:
-                    pass
-            return got
-    for cand in ordered_old:
-        got = _promote(cand)
-        if got:
-            return got
-    return None
-
-
-def _prune_generations(fs, target: str, keep: int) -> None:
+def prune_generations(fs, target: str, current: str) -> None:
+    """Delete the generations of ``target`` older than the newest
+    ``KEEP_GENERATIONS``, never ``current`` (the live one's name)."""
     gens = [
         p
         for p, is_dir, _, _ in fs.list_status(target)
@@ -572,32 +347,34 @@ def _prune_generations(fs, target: str, keep: int) -> None:
             return (0, 0)
 
     gens.sort(key=_key)
-    current = None
-    ptr = join(target, POINTER_FILE)
-    if fs.exists(ptr):
-        current = join(target, fs.read_text(ptr).strip())
-    for p in gens[:-keep] if len(gens) > keep else []:
-        if p != current:
+    for p in gens[:-KEEP_GENERATIONS]:
+        if posixpath.basename(p) != current:
             fs.delete(p, recursive=True)
 
 
 def resolve_dataset(fs, target: str) -> str:
-    """Map a logical dataset path to the directory readers should scan
-    (the current generation in pointer mode; ``target`` itself
-    otherwise)."""
+    """The directory readers of dataset ``target`` scan: the generation
+    its ``_LATEST`` pointer names, or, with no pointer, ``target``
+    itself (a dataset written straight there, such as a sink's seed)."""
     ptr = join(target, POINTER_FILE)
     if fs.exists(ptr):
         return join(target, fs.read_text(ptr).strip())
     return target
 
 
+def committed(fs, target: str) -> str | None:
+    """:func:`resolve_dataset` when ``target`` holds a committed
+    generation or a seed (a Spark write straight to ``target``, its
+    ``_SUCCESS`` marker present); None when it holds neither."""
+    if dataset_exists(fs, target) or fs.exists(join(target, "_SUCCESS")):
+        return resolve_dataset(fs, target)
+    return None
+
+
 def dataset_exists(fs, target: str) -> bool:
-    """Has any version of the dataset been committed?"""
-    if fs.exists(join(target, POINTER_FILE)):
-        return True
-    if fs.atomic_rename:
-        return fs.is_dir(target)
-    return False
+    """Has a generation of the dataset been committed (its pointer
+    exists)?"""
+    return fs.exists(join(target, POINTER_FILE))
 
 
 # ---------------------------------------------------------------------------
@@ -606,12 +383,14 @@ def dataset_exists(fs, target: str) -> bool:
 #
 # The engine's documented concurrency model is single-writer (the
 # reference's one psycopg2 session). This lock turns that assumption
-# from hoped-for into enforced: catalog mutations acquire it, a second
-# concurrent writer fails fast with a clear owner message instead of
-# silently interleaving read-modify-writes. It is ADVISORY — atomic
-# where create-if-absent is (POSIX O_EXCL, HDFS create) and best-effort
-# on object stores without conditional PUT; true multi-writer needs a
-# table format (Delta/Iceberg), which stays out of scope.
+# from hoped-for into enforced: every catalog mutation holds it for its
+# whole write, so a second concurrent writer fails fast with a clear
+# owner message instead of interleaving with it, and the holder checks
+# it still holds the lock just before it commits. It is ADVISORY —
+# atomic where create-if-absent is (POSIX O_EXCL, HDFS create) and
+# best-effort on object stores without conditional PUT; true
+# multi-writer needs a table format (Delta/Iceberg), which stays out of
+# scope.
 
 LOCK_FILENAME = "_WRITER_LOCK"
 #: A holder that has not renewed within this window is presumed dead
@@ -667,14 +446,14 @@ def acquire_writer_lock(
             # on HDFS — both atomic_rename stores, no delay paid).
             try:
                 held = fs.read_text(lock) == payload
-                if held and not getattr(fs, "atomic_rename", True):
+                if held and not fs.atomic_rename:
                     time.sleep(
                         random.uniform(
                             LOCK_VERIFY_DELAY_SEC / 5, LOCK_VERIFY_DELAY_SEC
                         )
                     )
                     held = fs.read_text(lock) == payload
-            except Exception:
+            except FS_ERRORS:  # a rival broke or released it meanwhile
                 held = False
             if held:
                 return WriterLock(lock, owner, acquired_ns)
@@ -691,7 +470,7 @@ def acquire_writer_lock(
             tomb = f"{lock}.broken-{time.time_ns()}-{os.getpid()}"
             try:
                 fs.rename(lock, tomb)
-            except Exception:
+            except FS_ERRORS:
                 continue  # another contender broke it first; re-contend
             fs.delete(tomb)
             continue
@@ -710,29 +489,52 @@ def _lock_doc(fs, lock: str) -> dict:
     is not broken as stale while a dead one's still ages out. A lock
     gone by now was just released; it reads as fresh, and the caller
     fails fast as for any live lock."""
-    try:
-        return json.loads(fs.read_text(lock))
-    except Exception:
-        pass
+    doc = _payload(fs, lock)
+    if doc is not None:
+        return doc
     name = posixpath.basename(lock)
     try:
         for path, _is_dir, _size, mtime_ns in fs.list_status(posixpath.dirname(lock)):
             if posixpath.basename(path) == name:
                 return {"acquired_ns": mtime_ns}
-    except Exception:
+    except FS_ERRORS:
         pass
     return {"acquired_ns": time.time_ns()}
+
+
+def _payload(fs, lock: str) -> dict | None:
+    """The lock file's JSON payload; None when it is gone, or empty or
+    partial (a contender between its create and its write)."""
+    try:
+        return json.loads(fs.read_text(lock))
+    except (*FS_ERRORS, ValueError):
+        return None
+
+
+def _holds(fs, lock: WriterLock) -> bool:
+    doc = _payload(fs, lock.path) or {}
+    return (doc.get("owner"), doc.get("acquired_ns")) == (lock.owner, lock.acquired_ns)
+
+
+def check_writer_lock(fs, lock: WriterLock) -> None:
+    """The fence before a commit write: raise :class:`LockHeldError`
+    unless ``lock``'s file still carries its holder's payload. A write
+    that outlived ``LOCK_TTL_SEC`` may have had its lock broken and
+    re-taken by another writer; it must then abort, not commit."""
+    if not _holds(fs, lock):
+        doc = _payload(fs, lock.path) or {}
+        raise LockHeldError(
+            f"writer lock on {posixpath.dirname(lock.path)} was lost by "
+            f"{lock.owner} (now held by {doc.get('owner', '<nobody>')}); "
+            f"the write ran past the lock's ttl and is not committed"
+        )
 
 
 def release_writer_lock(fs, lock: WriterLock) -> None:
     """Delete ``lock`` if its file still holds the caller's payload. A
     holder that outlived its TTL may have had the lock broken and
     re-taken by another writer; that writer's live lock stays."""
-    try:
-        doc = json.loads(fs.read_text(lock.path))
-    except Exception:
-        return  # already gone, or a contender's between create and write
-    if (doc.get("owner"), doc.get("acquired_ns")) == (lock.owner, lock.acquired_ns):
+    if _holds(fs, lock):
         fs.delete(lock.path)
 
 

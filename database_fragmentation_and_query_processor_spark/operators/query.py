@@ -23,7 +23,9 @@ Fragments are read with the declared schema (``read_fragmented``), not
 an inferred one. The relation's schema is fixed (Interface1.py:17), so
 building a plan here needs only the catalog and a directory listing: no
 parquet footer is opened and no Spark job runs until the result is
-executed. A dataset written with other column types is not read under
+executed. The catalog is read by the caller (``api``), once per query:
+the metadata and the live generation each scheme side scans come from
+that one read. A dataset written with other column types is not read under
 its own schema: most mismatches fail at the scan (see
 ``read_fragmented`` for the exceptions).
 """
@@ -37,7 +39,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import FragmentCatalog
 from ..schema import FRAGMENT_COL, RANGE_PREFIX, RR_PREFIX
 from .fragmentation import read_fragmented
 
@@ -83,19 +84,21 @@ def range_query(
     spark: SparkSession,
     min_rating: float,
     max_rating: float,
-    warehouse: str,
-    range_path: str,
-    rr_path: str,
+    rng: tuple | None,
+    rr: tuple | None,
 ) -> DataFrame:
-    """Both-scheme range query with provenance + duplicate emission."""
-    cat = FragmentCatalog(warehouse)
+    """Both-scheme range query with provenance + duplicate emission.
+
+    ``rng`` / ``rr``: the range and round-robin schemes' ``(metadata,
+    live generation path)``, taken from one catalog read
+    (``api._query_sides``), or None for a scheme without partitions."""
     parts = []
 
-    rmeta = cat.range_meta()
-    if rmeta.n > 0:
+    if rng is not None:
+        rmeta, range_path = rng
         lo = range_owner_fragment(min_rating, rmeta.n, rmeta.min_value, rmeta.max_value)
         hi = range_owner_fragment(max_rating, rmeta.n, rmeta.min_value, rmeta.max_value)
-        rng = (
+        parts.append(
             read_fragmented(spark, range_path)
             # fragment_id predicate → partition pruning (dir-level skip),
             # the Spark analogue of the selectMode walk.
@@ -106,19 +109,16 @@ def range_query(
             .orderBy(FRAGMENT_COL, "rating")
             .select(provenance(RANGE_PREFIX), "userid", "movieid", "rating")
         )
-        parts.append(rng)
 
-    rrmeta = cat.round_robin_meta()
-    if rrmeta.n > 0:
-        rr = (
-            read_fragmented(spark, rr_path)
+    if rr is not None:
+        parts.append(
+            read_fragmented(spark, rr[1])
             .where(F.col("rating").between(min_rating, max_rating))
             # reference scans RR fragments in ascending order
             # (Interface1.py:293-298); no intra-fragment order.
             .orderBy(FRAGMENT_COL)
             .select(provenance(RR_PREFIX), "userid", "movieid", "rating")
         )
-        parts.append(rr)
 
     return _concat(spark, parts)
 
@@ -126,39 +126,35 @@ def range_query(
 def point_query(
     spark: SparkSession,
     rating_value: float,
-    warehouse: str,
-    range_path: str,
-    rr_path: str,
+    rng: tuple | None,
+    rr: tuple | None,
 ) -> DataFrame:
     """Both-scheme equality query; range side touches exactly 1 fragment.
+    ``rng`` / ``rr`` as in :func:`range_query`.
 
     Float equality is exact here: the rating domain is halves 0.0-5.0
     (FIXTURES.md §1), all representable in binary doubles.
     """
-    cat = FragmentCatalog(warehouse)
     parts = []
 
-    rmeta = cat.range_meta()
-    if rmeta.n > 0:
+    if rng is not None:
+        rmeta, range_path = rng
         owner = range_owner_fragment(
             rating_value, rmeta.n, rmeta.min_value, rmeta.max_value
         )
-        rng = (
+        parts.append(
             read_fragmented(spark, range_path)
             .where(F.col(FRAGMENT_COL) == owner)  # single-partition pruned read
             .where(F.col("rating") == rating_value)
             .select(provenance(RANGE_PREFIX), "userid", "movieid", "rating")
         )
-        parts.append(rng)
 
-    rrmeta = cat.round_robin_meta()
-    if rrmeta.n > 0:
-        rr = (
-            read_fragmented(spark, rr_path)
+    if rr is not None:
+        parts.append(
+            read_fragmented(spark, rr[1])
             .where(F.col("rating") == rating_value)
             .select(provenance(RR_PREFIX), "userid", "movieid", "rating")
         )
-        parts.append(rr)
 
     return _concat(spark, parts)
 

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from .. import api
 from ..artifacts import artifact_path, build_once
 from ..cache import track as _track_cached
-from ..catalog import FragmentCatalog
+from ..catalog import FragmentCatalog, RangeMetadata, RoundRobinMetadata
 from ..functions import text as T
 from ..functions.lattice import flr as _flr
 from ..functions import vectors as V
@@ -371,11 +371,13 @@ def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _frag_warehouse(spark: SparkSession, sf_dir: str) -> str:
     """``_ratings`` fragmented RANGE_N ways under both reference schemes
     in the ``api`` layout (``ratings_range/``, ``ratings_rr/``, catalog
-    sidecar), built once per corpus and code. Round-robin numbers
-    lineitem rows in the oracle's ``rn`` order: ``(userid, movieid)``
-    is not unique here, nor is ``(l_orderkey, l_linenumber)`` (1,161
-    tied pairs at sf0.001), whose ties DuckDB meets in file order, so
-    the file position breaks them (``_metadata`` survives a reshuffle)."""
+    sidecar naming their generations), published the way
+    ``api.range/round_robin_partition`` publish, built once per corpus
+    and code. Round-robin numbers lineitem rows in the oracle's ``rn``
+    order: ``(userid, movieid)`` is not unique here, nor is
+    ``(l_orderkey, l_linenumber)`` (1,161 tied pairs at sf0.001), whose
+    ties DuckDB meets in file order, so the file position breaks them
+    (``_metadata`` survives a reshuffle)."""
 
     def build(wh):
         li = _t(spark, sf_dir, "lineitem").select(
@@ -383,21 +385,28 @@ def _frag_warehouse(spark: SparkSession, sf_dir: str) -> str:
             F.col("_metadata.file_path").alias("_file"),
             F.col("_metadata.row_index").alias("_row"),
         )
-        rng = assign_range_fragments(_as_ratings(li), "rating", RANGE_N, RANGE_MIN, RANGE_MAX)
-        write_fragmented(rng, f"{wh}/ratings_range")
-        rr, rows = assign_round_robin_fragments(li, RANGE_N, ["l_orderkey", "l_linenumber", "_file", "_row"])
-        write_fragmented(_as_ratings(rr, FRAGMENT_COL), f"{wh}/ratings_rr")
-        cat = FragmentCatalog(wh)  # what api.range/round_robin_partition record
-        cat.update_range(n=RANGE_N, min_value=RANGE_MIN, max_value=RANGE_MAX,
-                         interval=(RANGE_MAX - RANGE_MIN) / RANGE_N)
-        cat.update_round_robin(n=RANGE_N, last_inserted=round_robin_cursor(rows, RANGE_N))
+        cat = FragmentCatalog(wh)
+        with cat.mutation() as doc:
+            rng_gen = cat.new_generation("ratings_range", "range")
+            rng = assign_range_fragments(_as_ratings(li), "rating", RANGE_N, RANGE_MIN, RANGE_MAX)
+            write_fragmented(rng, rng_gen)
+            rr_gen = cat.new_generation("ratings_rr", "round_robin")
+            rr, rows = assign_round_robin_fragments(li, RANGE_N, ["l_orderkey", "l_linenumber", "_file", "_row"])
+            write_fragmented(_as_ratings(rr, FRAGMENT_COL), rr_gen)
+            cat.publish(
+                doc, {"ratings_range": rng_gen, "ratings_rr": rr_gen},
+                range=RangeMetadata(RANGE_N, RANGE_MIN, RANGE_MAX, (RANGE_MAX - RANGE_MIN) / RANGE_N),
+                round_robin=RoundRobinMetadata(RANGE_N, round_robin_cursor(rows, RANGE_N)),
+            )
 
     return build_once(sf_dir, "frag_warehouse", ["lineitem"], build)
 
 
 def _frag_scheme(spark: SparkSession, sf_dir: str, scheme: str) -> DataFrame:
-    """The ``"range"`` or ``"rr"`` side of ``_frag_warehouse``."""
-    return read_fragmented(spark, f"{_frag_warehouse(spark, sf_dir)}/ratings_{scheme}")
+    """The ``"range"`` or ``"rr"`` side of ``_frag_warehouse``: its live
+    generation."""
+    cat = FragmentCatalog(_frag_warehouse(spark, sf_dir))
+    return read_fragmented(spark, cat.live(f"ratings_{scheme}"))
 
 
 def _bucket_sql(col: str = "rating", n: int = RANGE_N) -> str:

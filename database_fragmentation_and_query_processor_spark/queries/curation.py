@@ -1909,14 +1909,12 @@ def q_frag_insert_routing(spark, sf_dir):
     reference's expected fragment, so a shared formula bug cannot pass.
     The warehouse is a build-once artifact, published only after the
     last insert, so a partial build is never served."""
-    import os as _os
-
     from .. import api as _api
+    from ..catalog import FragmentCatalog as _FragmentCatalog
     from ..operators.fragmentation import read_fragmented as _read_fragmented
 
     def build(wh):
-        base = _ratings(spark, sf_dir)
-        base.write.mode("overwrite").parquet(_os.path.join(wh, "ratings", "base"))
+        _api.write_base(spark, "ratings", _ratings(spark, sf_dir), wh)
         _api.range_partition(spark, "ratings", RANGE_N, wh)
         _api.round_robin_partition(spark, "ratings", RANGE_N, wh)
         _api.hash_partition(spark, "ratings", RANGE_N, wh)
@@ -1927,14 +1925,15 @@ def q_frag_insert_routing(spark, sf_dir):
                 wh,
             )
 
-    wh = build_once(sf_dir, "insert_routing", ["lineitem"], build)
+    cat = _FragmentCatalog(build_once(sf_dir, "insert_routing", ["lineitem"], build))
+    doc = cat.read()
     parts = []
     for scheme, suffix in (
         ("range", "ratings_range"),
         ("round_robin", "ratings_rr"),
         ("hash", "ratings_hash"),
     ):
-        df = _read_fragmented(spark, _os.path.join(wh, suffix))
+        df = _read_fragmented(spark, cat.live(suffix, doc))
         parts.append(
             df.groupBy("fragment_id").agg(
                 F.count("*").cast("bigint").alias("cnt"),

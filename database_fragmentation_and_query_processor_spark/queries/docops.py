@@ -396,7 +396,7 @@ def q_streaming_upsert_latest(spark, sf_dir):
     is read back — one row per user, carrying that user's latest event.
     The oracle derives the same rows with a per-user window over the
     batch table. Exercises the write path end-to-end: merge plan (one
-    per-key window shuffle per micro-batch), write-then-swap commit,
+    per-key window shuffle per micro-batch), generation commit,
     and the read-back. A re-run over the same artifact-store target
     re-merges identical data (idempotent)."""
     import os as _os
@@ -3255,7 +3255,7 @@ def q_streaming_cdc_apply(spark, sf_dir):
     update wave ×3 that OVERRIDES the first) replayed through
     streaming/events.py:cdc_sink — foreachBatch applies each batch with
     apply_cdc over the evolving target, maxFilesPerTrigger=1 keeps the
-    commits in order, and write-then-swap commits each state. The
+    commits in order, and each state is committed as a new generation. The
     read-back aggregate must equal the batch-algebra oracle of the
     FINAL state (m%10==0 deleted, m%10==1 at ×3 — proving cross-batch
     last-write-wins — and the shifted-key inserts present). Absolute
@@ -3301,11 +3301,6 @@ def q_streaming_cdc_apply(spark, sf_dir):
     art = build_once(sf_dir, "cdc_stream", ["orders"], build)
     changes_dir = _os.path.join(art, "changes")
     target = _os.path.join(art, "target")
-    if not _os.path.isdir(target):
-        # a crash between the two swap renames can leave no live target;
-        # absolute row images let recovery restart from the base snapshot
-        # and idempotently replay every commit
-        orders.write.mode("overwrite").parquet(target)
     change_schema = spark.read.parquet(changes_dir).schema
     stream = (
         spark.readStream.schema(change_schema)
@@ -3353,7 +3348,7 @@ def q_streaming_near_dup(spark, sf_dir):
     (maxFilesPerTrigger=1) and streaming/near_dup.py:near_dup_sink
     probes each against the committed index via the O(batch)
     incremental path, committing the batch's verified-pair delta and
-    index delta write-then-swap (r13: deltas replaced the per-batch
+    index delta as new generations (r13: deltas replaced the per-batch
     full rewrite — ingest is now O(batch) end-to-end). The read-back pair set
     must equal the full batch recompute restricted to pairs touching
     any streamed doc — the same identity incremental_near_dup pins for
@@ -3459,7 +3454,7 @@ def q_streaming_near_dup_compaction(spark, sf_dir):
     """The maintenance half of the r13 delta-commit layout: run (or
     resume) the streaming ingest, FOLD the accumulated index deltas
     back into the base segment (streaming/near_dup.py:
-    compact_near_dup_index — write-then-swap union, atomic manifest
+    compact_near_dup_index — union committed as a new generation, atomic manifest
     clear, cache invalidation via refreshByPath, delta GC), then
     return the pair set read through the post-compaction segments.
     Identical output to streaming_near_dup by construction — what the

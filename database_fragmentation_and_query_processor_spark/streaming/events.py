@@ -322,9 +322,8 @@ def run_stateful_drained(
 
 
 def read_committed(spark: SparkSession, target_path: str) -> DataFrame:
-    """Read the current committed version of a sink target, resolving
-    the generation pointer when the target lives on an object store
-    (no-op indirection on rename-capable filesystems)."""
+    """Read the current committed version of a sink target: the
+    generation its ``_LATEST`` pointer names (``fs.resolve_dataset``)."""
     from .. import fs as fslib
 
     wfs = fslib.fs_for(target_path, spark)
@@ -344,7 +343,7 @@ def upsert_sink(
 ):
     """Streaming merge/upsert sink via foreachBatch: each micro-batch
     SCD-1-merges (last write wins by ``version_col``) into the parquet
-    target with write-then-swap. foreachBatch is the standard bridge
+    target, committed as a new generation. foreachBatch is the standard bridge
     from a stream to a batch-only sink operation; the merge itself is
     operators/merge.py:merge_upsert — one per-key window shuffle over
     target ∪ batch. Returns the started StreamingQuery.
@@ -361,10 +360,13 @@ def upsert_sink(
     query mid-stream deterministically.
 
     At real scale the target would be a transactional table format
-    (partition-level rewrite); the commit here goes through the
-    warehouse FS shim (fs.py) — rename-swap on local/HDFS,
-    generation-pointer flip on object stores — with the same merge
-    plan either way. Read the result back via
+    (partition-level rewrite); here each batch's merged state is
+    written to a new generation directory ``target/gen-<token>/`` and
+    published by one atomic write of ``target/_LATEST`` (fs.py), the
+    same on local, HDFS and object-store targets; old generations are
+    pruned to ``fs.KEEP_GENERATIONS``. A target holding a dataset
+    written straight to it (a seed, with Spark's ``_SUCCESS``) is the
+    first batch's starting state. Read the result back via
     ``fs.resolve_dataset`` (or this module's ``read_committed``).
     """
     from .. import fs as fslib
@@ -377,8 +379,9 @@ def upsert_sink(
         if batch_hook is not None:
             batch_hook(batch_df, batch_id)
         batch_df = batch_df.localCheckpoint(eager=True)
-        if fslib.dataset_exists(wfs, target_path):
-            current = spark.read.parquet(fslib.resolve_dataset(wfs, target_path))
+        current_path = fslib.committed(wfs, target_path)
+        if current_path is not None:
+            current = spark.read.parquet(current_path)
             merged = merge_upsert(current, batch_df, keys, order_cols)
         else:
             merged = merge_upsert(
@@ -410,7 +413,7 @@ def cdc_sink(
     """Streaming CDC application via foreachBatch: each micro-batch of
     I/U/D change rows is resolved against the current target with
     operators/merge.py:apply_cdc (union + one per-key window + tombstone
-    filter — no join) and committed write-then-swap. The batch side of
+    filter — no join) and committed as a new generation. The batch side of
     the window outranks the target, so batches must arrive in change
     order — which the file source guarantees under maxFilesPerTrigger
     when change files land in commit order (their modification times
@@ -421,9 +424,10 @@ def cdc_sink(
     commit per batch, so a crashed run resumes at its in-flight batch
     (retried idempotently) instead of replaying history.
     ``batch_hook(batch_df, batch_id)`` is the crash-recovery test's
-    fault-injection point. Commits go through the warehouse FS shim
-    (fs.py): rename-swap on local/HDFS, generation-pointer flip on
-    object stores. Returns the started StreamingQuery."""
+    fault-injection point. The target must hold a committed generation
+    or a seed written straight to it; each batch's result is written to
+    a new generation and published by one atomic ``_LATEST`` write
+    (fs.py), on every store. Returns the started StreamingQuery."""
     from .. import fs as fslib
     from ..operators.merge import apply_cdc
 

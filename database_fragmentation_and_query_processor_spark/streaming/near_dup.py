@@ -7,20 +7,21 @@ Composes two standing pieces (r11 verdict task 7a):
 - ``operators/dedup.py:incremental_near_dup_pairs`` — probe a NEW
   batch against the materialized index at O(batch) cost (the standing
   corpus is never re-shingled or self-joined);
-- ``fs.py`` write-then-swap commits — each micro-batch publishes its
-  contribution atomically, so readers never observe a half-written
-  state and crashes recover by replay.
+- ``fs.py`` generation commits — each micro-batch writes its
+  contribution into a new generation and publishes it with one pointer
+  write, so readers never observe a half-written state and crashes
+  recover by replay.
 
 Commit layout (r12 verdict task 6): per batch the sink commits only
 DELTAS — ``<path>__delta-<batch>`` sibling datasets registered in an
 atomically-written ``<path>__DELTAS`` manifest — never a rewrite of
 the accumulated state. That makes ingest O(batch) end-to-end: the
 probe is O(batch) (unchanged), and now the index/pairs maintenance is
-too, where the previous full write-then-swap re-shuffled and rewrote
+too, where the previous full-state commit re-shuffled and rewrote
 the whole corpus index every micro-batch (the one O(corpus)-per-batch
 step this module previously carried). ``read_near_dup_index`` /
 ``read_near_dup_pairs`` resolve base + committed deltas (and accept
-the legacy single-dataset layout as the base segment).
+a seed index written straight to ``<path>`` as the base segment).
 
 Crash/replay safety: a delta's content is a deterministic function of
 its batch and the OTHER committed segments (a batch's own delta is
@@ -41,7 +42,11 @@ re-shuffled, or rewritten.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
+
+logger = logging.getLogger(__name__)
 
 MANIFEST_SUFFIX = "__DELTAS"
 DELTA_SEP = "__delta-"
@@ -79,10 +84,11 @@ class MissingDeltaError(FileNotFoundError):
 def _segment_dirs(
     fs, path: str, *, exclude: str | None = None
 ) -> list[str]:
-    """Readable directories of the dataset: the base segment (a legacy
-    or pre-seeded single dataset at ``path``, if committed) plus every
-    manifest-registered delta, optionally excluding one delta name
-    (a batch's own delta must not feed its own probe on replay).
+    """Readable directories of the dataset: the base segment (its
+    committed generation, else a seed index written straight to
+    ``path``, which Spark's ``_SUCCESS`` marker shows complete) plus
+    every manifest-registered delta, optionally excluding one delta
+    name (a batch's own delta must not feed its own probe on replay).
 
     A manifest-listed delta that fails ``dataset_exists`` raises
     :class:`MissingDeltaError` — the manifest is written only AFTER
@@ -93,8 +99,9 @@ def _segment_dirs(
     from .. import fs as fslib
 
     dirs: list[str] = []
-    if fslib.dataset_exists(fs, path):
-        dirs.append(fslib.resolve_dataset(fs, path))
+    base = fslib.committed(fs, path)
+    if base is not None:
+        dirs.append(base)
     for name in _read_manifest(fs, path):
         if exclude is not None and name == exclude:
             continue
@@ -110,8 +117,9 @@ def _segment_dirs(
 
 
 def _commit_delta(fs, df: DataFrame, path: str, name: str) -> None:
-    """Write-then-swap ``df`` as delta ``name`` of dataset ``path`` and
-    register it in the manifest (both steps idempotent on replay)."""
+    """Commit ``df`` as a new generation of delta ``name`` of dataset
+    ``path`` and register it in the manifest (both steps idempotent on
+    replay)."""
     from .. import fs as fslib
 
     target = _delta_path(path, name)
@@ -142,7 +150,7 @@ def read_near_dup_pairs(
     spark: SparkSession, pairs_path: str, fs=None
 ) -> DataFrame:
     """The committed near-dup pair set: union of all committed pair
-    deltas (plus a legacy base dataset if one exists), deduplicated on
+    deltas (plus a base segment if one exists), deduplicated on
     the (id_a, id_b) key — replayed batches may contribute the same
     pair through different deltas; jaccard is deterministic, so either
     copy may win."""
@@ -160,8 +168,8 @@ def _compact_segmented(spark, path: str, reader, tag: str, fs=None) -> int:
 
     Commit order and crash safety:
 
-    1. write-then-swap the keyed-deduped UNION (base + deltas, via
-       ``reader``) as the new base — after this commit every row is in
+    1. commit the keyed-deduped UNION (base + deltas, via ``reader``)
+       as a new generation of the base — after this commit every row is in
        the base, and a reader that still sees the old manifest reads
        some rows twice (identical rows; both readers dedup on their
        keys);
@@ -184,7 +192,7 @@ def _compact_segmented(spark, path: str, reader, tag: str, fs=None) -> int:
     full.write.mode("overwrite").parquet(staged)
     fslib.commit_staged(wfs, staged, path, require_marker=True)
     wfs.write_text_atomic(_manifest_path(path), "")
-    # Invalidate this session's cached plan fragments over the swapped
+    # Invalidate this session's cached plan fragments over the replaced
     # paths: a still-persisted probe DataFrame from a prior sink run is
     # a cached relation over parquet(path), and Spark's CacheManager
     # SUBSTITUTES it into any later identical-path read — without the
@@ -196,8 +204,8 @@ def _compact_segmented(spark, path: str, reader, tag: str, fs=None) -> int:
         spark.catalog.refreshByPath(_delta_path(path, name))
         try:
             wfs.delete(_delta_path(path, name), recursive=True)
-        except Exception:
-            pass  # stale dirs are unreferenced; next ingest overwrites
+        except fslib.FS_ERRORS:  # unreferenced now; the next ingest replaces it
+            logger.warning("could not delete folded delta %s", name, exc_info=True)
     return len(names)
 
 

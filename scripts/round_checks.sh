@@ -17,6 +17,8 @@ python -m pytest tests/test_registry.py tests/test_bench_contract.py \
     tests/test_partition_invariance.py::test_frag_warehouse_build_survives_repartition \
     tests/test_fragmentation.py::test_insert_torn_by_a_failed_rename_is_rolled_forward \
     tests/test_fragmentation.py::test_insert_failing_before_its_intent_leaves_nothing_visible \
+    tests/test_fragmentation.py::test_insert_during_a_partitioning_is_refused_not_lost \
+    tests/test_fragmentation.py::test_insert_during_a_compaction_is_refused_not_lost \
     -q -p no:cacheprovider
 
 echo "== driver-invocation dry run (first 50 + next 6, sf0.01) =="

@@ -33,6 +33,11 @@ from .conftest import RATINGS_FIXTURE
 N = 5  # fragment count used throughout the reference tests (tester1.py)
 
 
+def _live(warehouse, dataset):
+    """The generation of ``dataset`` the warehouse's catalog names live."""
+    return FragmentCatalog(warehouse).live(dataset)
+
+
 @pytest.fixture()
 def loaded(spark, ratings_file, warehouse):
     df = api.load_ratings(spark, "ratings", ratings_file, warehouse)
@@ -90,7 +95,7 @@ def _expected_range_fragment(rating: float, n: int = N) -> int:
 def test_range_partition_counts_match_independent_oracle(spark, loaded):
     df, warehouse = loaded
     api.range_partition(spark, "ratings", N, warehouse)
-    frags = spark.read.parquet(f"{warehouse}/ratings_range")
+    frags = spark.read.parquet(_live(warehouse, "ratings_range"))
     got = {
         r[FRAGMENT_COL]: r["cnt"]
         for r in frags.groupBy(FRAGMENT_COL).agg(F.count("*").alias("cnt")).collect()
@@ -105,7 +110,7 @@ def test_range_partition_counts_match_independent_oracle(spark, loaded):
 def test_range_partition_property_triple(spark, loaded):
     df, warehouse = loaded
     api.range_partition(spark, "ratings", N, warehouse)
-    frags = spark.read.parquet(f"{warehouse}/ratings_range")
+    frags = spark.read.parquet(_live(warehouse, "ratings_range"))
     n_base = df.count()
     # completeness + disjointness + reconstruction == exact count match
     assert frags.count() == n_base
@@ -123,7 +128,7 @@ def test_range_partition_property_triple(spark, loaded):
 def test_round_robin_partition_matches_rownum_mod_oracle(spark, loaded):
     df, warehouse = loaded
     api.round_robin_partition(spark, "ratings", N, warehouse)
-    frags = spark.read.parquet(f"{warehouse}/ratings_rr")
+    frags = spark.read.parquet(_live(warehouse, "ratings_rr"))
     assert frags.count() == len(RATINGS_FIXTURE)
     # counts per fragment must be exactly (rownum-1) % N of 20 rows → 4 each
     got = {
@@ -151,12 +156,12 @@ def test_range_insert_routing(spark, loaded):
     df, warehouse = loaded
     api.range_partition(spark, "ratings", N, warehouse)
     api.range_insert(spark, "ratings", 100, 2, 3.0, warehouse)
-    frags = spark.read.parquet(f"{warehouse}/ratings_range")
+    frags = spark.read.parquet(_live(warehouse, "ratings_range"))
     hit = frags.where(
         (F.col("userid") == 100) & (F.col("movieid") == 2) & (F.col("rating") == 3.0)
     ).collect()
     assert len(hit) == 1 and hit[0][FRAGMENT_COL] == 2
-    base = spark.read.parquet(f"{warehouse}/ratings/base")
+    base = spark.read.parquet(_live(warehouse, "ratings/base"))
     assert base.count() == len(RATINGS_FIXTURE) + 1
 
 
@@ -166,12 +171,12 @@ def test_round_robin_insert_routing_and_cursor(spark, loaded):
     df, warehouse = loaded
     api.round_robin_partition(spark, "ratings", N, warehouse)
     api.round_robin_insert(spark, "ratings", 100, 1, 3.0, warehouse)
-    frags = spark.read.parquet(f"{warehouse}/ratings_rr")
+    frags = spark.read.parquet(_live(warehouse, "ratings_rr"))
     hit = frags.where((F.col("userid") == 100) & (F.col("movieid") == 1)).collect()
     assert len(hit) == 1 and hit[0][FRAGMENT_COL] == 0
     api.round_robin_insert(spark, "ratings", 101, 1, 3.0, warehouse)
     hit2 = (
-        spark.read.parquet(f"{warehouse}/ratings_rr")
+        spark.read.parquet(_live(warehouse, "ratings_rr"))
         .where(F.col("userid") == 101)
         .collect()
     )
@@ -203,8 +208,8 @@ def _staged_files(warehouse):
 
 def _stored_rows(spark, warehouse, fragments):
     """(base rows, fragment rows) as a reader sees them now."""
-    base = spark.read.schema(RATINGS_SCHEMA).parquet(f"{warehouse}/ratings/base")
-    frags = read_fragmented(spark, f"{warehouse}/{fragments}")
+    base = spark.read.schema(RATINGS_SCHEMA).parquet(_live(warehouse, "ratings/base"))
+    frags = read_fragmented(spark, _live(warehouse, fragments))
     return base.collect(), frags.collect()
 
 
@@ -268,10 +273,11 @@ def test_racing_round_robin_inserts_each_take_their_own_cursor(tmp_path):
     assert not any(th.is_alive() for th in threads) and not failures, failures
     total = n_threads * per_thread
     per_fragment = {
-        k: len(os.listdir(f"{warehouse}/ratings_rr/{FRAGMENT_COL}={k}")) for k in range(N)
+        k: len(os.listdir(f"{_live(warehouse, 'ratings_rr')}/{FRAGMENT_COL}={k}"))
+        for k in range(N)
     }
     assert per_fragment == dict.fromkeys(range(N), total // N)
-    assert len(os.listdir(f"{warehouse}/ratings/base")) == total
+    assert len(os.listdir(_live(warehouse, "ratings/base"))) == total
     assert FragmentCatalog(warehouse).round_robin_meta().last_inserted == (total - 1) % N
 
 
@@ -354,6 +360,187 @@ def test_insert_failing_before_its_intent_leaves_nothing_visible(
     assert not [r for r in base + frags if r.userid == 100]
 
 
+def _copies(spark, warehouse, fragments, userid):
+    """How many rows of ``userid`` a reader sees now in the base and in
+    the scheme's fragments."""
+    base, frags = _stored_rows(spark, warehouse, fragments)
+    return sum(r.userid == userid for r in base), sum(r.userid == userid for r in frags)
+
+
+def _insert_refused(spark, warehouse) -> bool:
+    """Run a range insert of userid 100; True if the writer lock refused it."""
+    try:
+        api.range_insert(spark, "ratings", 100, 7, 3.0, warehouse)
+    except fslib.LockHeldError:
+        return True
+    return False
+
+
+def test_insert_during_a_partitioning_is_refused_not_lost(spark, loaded, monkeypatch):
+    """An insert that arrives while ``range_partition`` rewrites the
+    range fragments (here: just before their write) used to land in
+    base and in the fragments being replaced, so the rewrite dropped it
+    from the scheme: (in base, in fragment) = (1, 0). The partitioning
+    now holds the writer lock for its whole write, so the insert fails
+    fast with ``LockHeldError`` and changes nothing."""
+    from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag
+
+    _, warehouse = loaded
+    api.range_partition(spark, "ratings", N, warehouse)
+    write, refused = frag.write_fragmented, []
+
+    def insert_then_write(*args, **kwargs):
+        refused.append(_insert_refused(spark, warehouse))
+        write(*args, **kwargs)
+
+    monkeypatch.setattr(frag, "write_fragmented", insert_then_write)
+    api.range_partition(spark, "ratings", N, warehouse)
+    monkeypatch.undo()
+    assert refused == [True]
+    assert _copies(spark, warehouse, "ratings_range", 100) == (0, 0)
+
+
+def test_insert_during_a_compaction_is_refused_not_lost(spark, loaded, monkeypatch):
+    """The same race against ``compact_fragments``: an insert arriving
+    after the compaction listed the fragments, before its commit, used
+    to end (in base, in fragment) = (1, 0), with no intent left for a
+    later ``recover()``. The compaction holds the writer lock for its
+    whole rewrite, so the insert is refused instead."""
+    _, warehouse = loaded
+    api.range_partition(spark, "ratings", N, warehouse)
+    stage, refused = fslib.stage_path, []
+
+    def insert_then_stage(*args, **kwargs):
+        refused.append(_insert_refused(spark, warehouse))
+        return stage(*args, **kwargs)
+
+    monkeypatch.setattr(fslib, "stage_path", insert_then_stage)
+    api.compact_fragments(spark, warehouse, "ratings", "range")
+    monkeypatch.undo()
+    assert refused == [True]
+    assert _copies(spark, warehouse, "ratings_range", 100) == (0, 0)
+    FragmentCatalog(warehouse).recover()
+    assert _copies(spark, warehouse, "ratings_range", 100) == (0, 0)
+
+
+class _ObjectStoreFS(fslib.LocalFS):
+    """A local store that reports no atomic rename, as every s3a:// store does."""
+
+    def __init__(self):
+        super().__init__()
+        self.atomic_rename = False
+
+
+def test_compaction_on_an_object_store_keeps_key_lookups_readable(
+    spark, ratings_file, warehouse, monkeypatch
+):
+    """On a store without atomic rename the compaction once committed a
+    generation directory next to the old ``fragment_id=i/`` ones, which
+    readers did not resolve: the next ``hash_key_lookup`` failed with
+    CONFLICTING_DIRECTORY_STRUCTURES. Every store now commits through
+    the catalog, and the lookup returns the pre-compaction rows."""
+    api.load_ratings(spark, "ratings", ratings_file, warehouse)
+    api.hash_partition(spark, "ratings", 4, warehouse)
+    api.hash_insert(spark, "ratings", 1, 999, 2.5, warehouse)
+    want = sorted(map(tuple, api.hash_key_lookup(spark, 1, warehouse).collect()))
+    assert len(want) == len(RATINGS_FIXTURE) + 1
+    monkeypatch.setattr(fslib, "fs_for", lambda path, spark=None: _ObjectStoreFS())
+    api.compact_fragments(spark, warehouse, "ratings", "hash")
+    assert sorted(map(tuple, api.hash_key_lookup(spark, 1, warehouse).collect())) == want
+
+
+def test_a_query_planned_before_a_repartition_reads_the_old_layout_whole(spark, loaded):
+    """A point query planned against 5 fragments per scheme and executed
+    after both schemes were repartitioned 3 ways returns exactly the old
+    layout's rows: its ``n`` and its generations came from one catalog
+    read, and the replaced generation outlives the flip. A query planned
+    after the flip reads the new layout."""
+    _, warehouse = loaded
+    api.range_partition(spark, "ratings", N, warehouse)
+    api.round_robin_partition(spark, "ratings", N, warehouse)
+    planned = api.point_query(spark, 3.0, warehouse)
+    old = sorted(map(tuple, api.point_query(spark, 3.0, warehouse).collect()))
+    assert {r[0] for r in old} == {"range_ratings_part2", "round_robin_ratings_part4"}
+    api.range_partition(spark, "ratings", 3, warehouse)
+    api.round_robin_partition(spark, "ratings", 3, warehouse)
+    assert sorted(map(tuple, planned.collect())) == old
+    new = api.point_query(spark, 3.0, warehouse).collect()
+    assert {r[0] for r in new} == {"range_ratings_part1", "round_robin_ratings_part1"}
+    assert len(new) == len(old)
+
+
+def test_a_writer_that_lost_its_lock_does_not_commit(spark, loaded, monkeypatch):
+    """A partitioning whose lock was broken and re-taken mid-write (its
+    write outlived the lock's ttl) aborts at the fence before its
+    sidecar write: ``LockHeldError``, the sidecar's bytes unchanged, its
+    unpublished generation deleted, and readers still see the old
+    layout."""
+    import json
+    import time
+
+    from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag
+
+    _, warehouse = loaded
+    api.range_partition(spark, "ratings", N, warehouse)
+    sidecar = os.path.join(warehouse, "_frag_metadata.json")
+    lock = os.path.join(warehouse, fslib.LOCK_FILENAME)
+    with open(sidecar, "rb") as f:
+        before = f.read()
+    generations = sorted(os.listdir(f"{warehouse}/ratings_range"))
+    want = sorted(map(tuple, api.point_query(spark, 3.0, warehouse).collect()))
+    write = frag.write_fragmented
+
+    def write_then_lose_the_lock(*args, **kwargs):
+        write(*args, **kwargs)
+        with open(lock, "w") as f:
+            json.dump({"owner": "successor", "acquired_ns": time.time_ns(), "ttl_sec": 300}, f)
+
+    monkeypatch.setattr(frag, "write_fragmented", write_then_lose_the_lock)
+    with pytest.raises(fslib.LockHeldError, match="successor"):
+        api.range_partition(spark, "ratings", 3, warehouse)
+    monkeypatch.undo()
+    with open(sidecar, "rb") as f:
+        assert f.read() == before
+    assert sorted(os.listdir(f"{warehouse}/ratings_range")) == generations
+    with open(lock) as f:
+        assert json.load(f)["owner"] == "successor"  # the successor's lock stays
+    os.remove(lock)
+    assert sorted(map(tuple, api.point_query(spark, 3.0, warehouse).collect())) == want
+
+
+def test_api_over_a_hadoop_warehouse_matches_a_bare_path_run(spark, ratings_file, tmp_path):
+    """A ``file://`` warehouse goes through HadoopFS (the code path of
+    ``hdfs://`` and ``s3a://``) for the catalog, the publishes and the
+    routed insert, and ends with the rows of a bare-path run."""
+
+    def run(warehouse):
+        api.load_ratings(spark, "ratings", ratings_file, warehouse)
+        api.range_partition(spark, "ratings", N, warehouse)
+        api.round_robin_partition(spark, "ratings", N, warehouse)
+        api.range_insert(spark, "ratings", 100, 7, 3.0, warehouse)
+        return sorted(map(tuple, api.point_query(spark, 3.0, warehouse).collect()))
+
+    uri = "file://" + str(tmp_path / "hadoop")
+    assert isinstance(FragmentCatalog(uri, spark)._fs, fslib.HadoopFS)
+    bare = run(str(tmp_path / "bare"))
+    assert ("range_ratings_part2", 100, 7, 3.0) in bare
+    assert run(uri) == bare
+
+
+def test_delete_tables_unpublishes_and_removes_one_table(spark, loaded):
+    """Dropping one table takes its generations out of the sidecar in
+    one locked write, then deletes its directories; other tables stay."""
+    _, warehouse = loaded
+    api.range_partition(spark, "ratings", N, warehouse)
+    api.load_ratings(spark, "other", os.path.join(os.path.dirname(warehouse), "ratings.txt"), warehouse)
+    api.delete_tables(spark, "ratings", warehouse)
+    cat = FragmentCatalog(warehouse)
+    assert cat.live("ratings/base") is None and cat.live("ratings_range") is None
+    assert not os.path.exists(f"{warehouse}/ratings")
+    assert not os.path.exists(f"{warehouse}/ratings_range")
+    assert spark.read.parquet(cat.live("other/base")).count() == len(RATINGS_FIXTURE)
+
+
 @pytest.mark.parametrize("key", ["userid", "movieid"])
 def test_hash_insert_route_matches_column_expression(spark, loaded, key):
     """The driver routes a hash insert where ``hash_fragment_expr``
@@ -371,7 +558,7 @@ def test_hash_insert_route_matches_column_expression(spark, loaded, key):
     }
     got = {
         (r.userid, r.movieid): r[FRAGMENT_COL]
-        for r in read_fragmented(spark, f"{warehouse}/ratings_hash")
+        for r in read_fragmented(spark, _live(warehouse, "ratings_hash"))
         .where(F.col("userid") >= 900)
         .collect()
     }
@@ -407,7 +594,7 @@ def test_hash_partition_complete_disjoint_and_routed(spark, ratings_file, wareho
     base = api.load_ratings(spark, "ratings", ratings_file, warehouse)
     total = base.count()
     api.hash_partition(spark, "ratings", 4, warehouse)
-    fragged = spark.read.parquet(f"{warehouse}/ratings_hash")
+    fragged = spark.read.parquet(_live(warehouse, "ratings_hash"))
     assert fragged.count() == total
     # disjoint: every (userid, movieid) appears exactly once
     assert fragged.select("userid", "movieid").distinct().count() == total
@@ -471,7 +658,7 @@ def _assert_declared_schemas(spark, warehouse, subdirs=tuple(_DECLARED)):
 
     for sub in subdirs:
         want = [(f.name, f.dataType) for f in _DECLARED[sub].fields]
-        assert names_types(f"{warehouse}/{sub}") == want, sub
+        assert names_types(_live(warehouse, sub)) == want, sub
 
 
 def test_written_schema_matches_declared_schema(spark, loaded):
@@ -531,7 +718,7 @@ def _round_robin_partition_on_path(spark, warehouse, bucketed, caplog):
     if bucketed:
         base_bytes = sum(
             os.path.getsize(os.path.join(d, f))
-            for d, _, files in os.walk(f"{warehouse}/ratings/base")
+            for d, _, files in os.walk(_live(warehouse, "ratings/base"))
             for f in files if f.endswith(".parquet")
         )
         spark.conf.set(key, str(max(-(-base_bytes // 3), 1)))
@@ -549,7 +736,7 @@ def _round_robin_partition_on_path(spark, warehouse, bucketed, caplog):
 def _round_robin_fragments(spark, warehouse):
     """The per-fragment row multisets (nulls first) and the cursor."""
     frags = {}
-    for r in read_fragmented(spark, f"{warehouse}/ratings_rr").collect():
+    for r in read_fragmented(spark, _live(warehouse, "ratings_rr")).collect():
         frags.setdefault(r[FRAGMENT_COL], []).append((r.userid, r.movieid, r.rating))
     cursor = FragmentCatalog(warehouse).round_robin_meta().last_inserted
     nulls_first = lambda row: tuple((v is not None, v) for v in row)  # noqa: E731
@@ -593,7 +780,7 @@ def test_round_robin_partition_of_a_multi_file_base_is_bucketed(spark, tmp_path,
     from database_fragmentation_and_query_processor_spark.operators import scaling
 
     warehouse, want, n_rows = _load_unsorted_ratings(spark, tmp_path)
-    base = f"{warehouse}/ratings/base"
+    base = _live(warehouse, "ratings/base")
     spark.read.schema(RATINGS_SCHEMA).parquet(base).repartition(3).write.parquet(f"{base}.3")
     shutil.rmtree(base)
     os.rename(f"{base}.3", base)

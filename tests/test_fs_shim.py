@@ -1,7 +1,8 @@
 """Warehouse FS shim (fs.py): the driver-side metadata/commit IO must
-work identically through POSIX (LocalFS), the Hadoop FileSystem API
-(HadoopFS over file:// — same code path as hdfs:// / s3a://), and the
-object-store pointer-commit protocol (no atomic rename).
+work identically through POSIX (LocalFS) and the Hadoop FileSystem API
+(HadoopFS over file:// — same code path as hdfs:// / s3a://), and every
+dataset commits by one protocol: a new generation directory made live
+by one atomic pointer write.
 
 Also pins the round-6 invariant that NO bare POSIX mutation remains on
 warehouse paths outside the shim in the four modules the r5 verdict
@@ -57,42 +58,17 @@ def test_fs_for_dispatch(tmp_path):
         fslib.fs_for("s3a://bucket/wh")  # no session → explicit error
 
 
-# ---------------------------------------------------------------------------
-# Commit protocol: rename-swap mode
-# ---------------------------------------------------------------------------
-
 def _write_marker_dir(fs, d, text):
     fs.makedirs(d)
     fs.write_text_atomic(fslib.join(d, "part-0.txt"), text)
 
 
-def test_commit_swap_first_and_replace(tmp_path):
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s1 = fslib.stage_path(fs, target, "v")
-    assert not s1.startswith(target + "/")  # sibling dir, layout unchanged
-    _write_marker_dir(fs, s1, "one")
-    assert fslib.commit_staged(fs, s1, target) == target
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "one"
-    assert fslib.dataset_exists(fs, target)
-    # replace
-    s2 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s2, "two")
-    assert fslib.commit_staged(fs, s2, target) == target
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "two"
-    # no stage/old litter left behind
-    siblings = sorted(os.listdir(tmp_path))
-    assert siblings == ["ds"]
-    # resolve is a no-op in swap mode
-    assert fslib.resolve_dataset(fs, target) == target
-
-
 # ---------------------------------------------------------------------------
-# Commit protocol: pointer mode (object stores without atomic rename)
+# Commit protocol: a generation made live by the _LATEST pointer
 # ---------------------------------------------------------------------------
 
 def test_commit_pointer_flip_and_prune(tmp_path):
-    fs = fslib.LocalFS(atomic_rename=False)
+    fs = fslib.LocalFS()
     target = str(tmp_path / "ds")
     assert not fslib.dataset_exists(fs, target)
     committed = []
@@ -139,18 +115,51 @@ def test_hadoopfs_primitives_file_uri(spark, tmp_path):
     assert not fs.exists(base)
 
 
-def test_hadoopfs_commit_swap_file_uri(spark, tmp_path):
+def test_hadoopfs_commit_file_uri(spark, tmp_path):
     base = "file://" + str(tmp_path)
     fs = fslib.fs_for(base, spark)
     target = fslib.join(base, "ds")
     s1 = fslib.stage_path(fs, target, "v")
     _write_marker_dir(fs, s1, "one")
-    assert fslib.commit_staged(fs, s1, target) == target
+    assert fslib.commit_staged(fs, s1, target) == s1
     s2 = fslib.stage_path(fs, target, "v")
     _write_marker_dir(fs, s2, "two")
     fslib.commit_staged(fs, s2, target)
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "two"
+    cur = fslib.resolve_dataset(fs, target)
+    assert cur == s2 and fs.read_text(fslib.join(cur, "part-0.txt")) == "two"
     assert sorted(os.listdir(tmp_path)) == ["ds"]
+
+
+def test_hadoopfs_atomic_write_never_leaves_the_file_missing(spark, tmp_path):
+    """The sidecar is the warehouse's commit point, so its replacement
+    must be atomic on HadoopFS too: a reader racing 200 rewrites of a
+    file:// sidecar never finds it missing (a delete-then-rename
+    replacement reads as ``{}``, every scheme unpartitioned)."""
+    import threading
+
+    base = "file://" + str(tmp_path / "wh")
+    fs = fslib.fs_for(base, spark)
+    path = fslib.join(base, "meta.json")
+    fslib.write_json_atomic(fs, path, {"n": -1})
+    done, missing, seen = threading.Event(), [], set()
+
+    def read_until_done():
+        while not done.is_set():
+            doc = fslib.read_json(fs, path, default={})
+            if not doc:
+                missing.append(1)
+            seen.add(doc.get("n"))
+
+    reader = threading.Thread(target=read_until_done)
+    reader.start()
+    try:
+        for i in range(200):
+            fslib.write_json_atomic(fs, path, {"n": i})
+    finally:
+        done.set()
+        reader.join()
+    assert missing == []
+    assert len(seen) > 1 and fslib.read_json(fs, path) == {"n": 199}
 
 
 # ---------------------------------------------------------------------------
@@ -409,13 +418,13 @@ def test_writer_lock_readback_rejects_stolen_create(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 hardening: marker-gated swap commits + crash-mid-commit recovery
+# Commit gating and generation GC
 # ---------------------------------------------------------------------------
 
 def test_commit_refuses_unmarked_staged_dir_when_required(tmp_path):
-    """require_marker gates the write-then-swap path: a staged dir
-    without the job-complete _SUCCESS (crashed or still-running write)
-    must never be published over the live dataset."""
+    """require_marker gates the commit: a generation without the
+    job-complete _SUCCESS (crashed or still-running write) must never
+    be published over the live one."""
     import pytest
 
     fs = fslib.LocalFS()
@@ -429,189 +438,14 @@ def test_commit_refuses_unmarked_staged_dir_when_required(tmp_path):
     with pytest.raises(IOError, match="_SUCCESS"):
         fslib.commit_staged(fs, s1, target, require_marker=True)
     # live dataset untouched by the refused commit
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "base"
-
-
-def test_recovery_completes_interrupted_commit_with_marker(tmp_path):
-    """Crash between the two swap renames (old parked, staged never
-    landed): recovery must COMPLETE the commit — the staged sibling
-    carries _SUCCESS, so it is the newest consistent version."""
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    # stage v1 (complete, marked), then simulate the crash exactly as
-    # the protocol leaves the world: intent breadcrumb + first rename
-    # (target -> old) happened, second rename never did
-    s1 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s1, "v1")
-    fs.write_text_atomic(fslib.join(s1, "_SUCCESS"), "")
-    old = fslib.begin_swap(fs, s1, target)
-    assert not fs.exists(target)
-    got = fslib.recover_interrupted_commit(fs, target)
-    assert got == target
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v1"
-    # the completed commit's parked predecessor is superseded, and the
-    # breadcrumb does not leak into the published dataset
-    assert not fs.exists(old)
-    assert not fs.exists(fslib.join(target, fslib.INTENT_FILE))
-
-
-def test_recovery_rolls_back_to_old_without_marker(tmp_path):
-    """Same crash, but the staged dir carries no _SUCCESS (non-Spark
-    content, or itself incomplete): recovery must roll BACK to the
-    parked pre-commit version, never publish the unmarked dir."""
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    s1 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s1, "v1-unmarked")
-    fs.rename(target, f"{target}.{fslib.new_token('old')}")
-    got = fslib.recover_interrupted_commit(fs, target)
-    assert got == target
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v0"
-
-
-def test_recovery_noops_on_healthy_dataset_and_pointer_mode(tmp_path):
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    # healthy: in-flight sibling stages must NOT be touched
-    s1 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s1, "inflight")
-    fs.write_text_atomic(fslib.join(s1, "_SUCCESS"), "")
-    assert fslib.recover_interrupted_commit(fs, target) is None
-    assert fs.exists(s1)
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v0"
-    # pointer mode: commits are single atomic pointer writes
-    pfs = fslib.LocalFS(atomic_rename=False)
-    ptarget = str(tmp_path / "pds")
-    ps = fslib.stage_path(pfs, ptarget, "gen")
-    _write_marker_dir(pfs, ps, "p0")
-    fslib.commit_staged(pfs, ps, ptarget)
-    assert fslib.recover_interrupted_commit(pfs, ptarget) is None
-
-
-def test_recovery_never_promotes_an_abandoned_stage_over_newer_data(
-    tmp_path,
-):
-    """ADVICE r10 (medium): a marked staged dir abandoned before
-    commit_staged was ever called (writer died right after the Spark
-    write) must NOT be promoted over a NEWER committed version parked
-    by a later interrupted commit — that silently reverts the dataset.
-    The abandoned stage has no _COMMIT_INTENT breadcrumb, so recovery
-    rolls back to the parked newer version instead."""
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    # the abandoned stage: complete content + _SUCCESS, its writer died
-    # before ever calling commit_staged (dataset live, so no recovery
-    # pass may consume it)
-    s_dead = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s_dead, "stale-abandoned")
-    fs.write_text_atomic(fslib.join(s_dead, "_SUCCESS"), "")
-    # a NEWER version commits normally over the live dataset
-    s1 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s1, "v1-committed")
-    fs.write_text_atomic(fslib.join(s1, "_SUCCESS"), "")
-    fslib.commit_staged(fs, s1, target)
-    # a subsequent require_marker=False commit (unmarked content)
-    # crashes between its two renames: v1 is parked in old-, the
-    # unmarked stage can't be promoted
-    s2 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s2, "v2-unmarked")
-    fslib.begin_swap(fs, s2, target)
-    got = fslib.recover_interrupted_commit(fs, target)
-    assert got == target
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v1-committed"
-    # the abandoned stage was GC'd by the superseding v1 commit
-    # (token-bounded prune, ADVICE r10-medium closure) — it can never
-    # reappear in a later recovery's candidate set
-    assert not fs.exists(s_dead)
-
-
-def test_commit_prunes_stale_old_siblings(tmp_path):
-    """ADVICE r10 (low): an old- sibling left by a crash after the
-    second rename (before the delete) must not accumulate forever —
-    the next successful commit GCs it."""
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    # crash AFTER rename2, before delete: old- survives, target live
-    stale_old = f"{target}.old-{fslib.new_token('x')[2:]}"
-    fs.makedirs(stale_old)
-    fs.write_text_atomic(fslib.join(stale_old, "part-0.txt"), "parked")
-    s1 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s1, "v1")
-    fs.write_text_atomic(fslib.join(s1, "_SUCCESS"), "")
-    fslib.commit_staged(fs, s1, target, require_marker=True)
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v1"
-    assert not fs.exists(stale_old)
-    # no _COMMIT_INTENT leaks into the live dataset
-    assert not fs.exists(fslib.join(target, fslib.INTENT_FILE))
-
-
-def test_next_commit_self_heals_interrupted_predecessor(tmp_path):
-    """commit_staged runs recovery first: a writer landing after a
-    crashed predecessor finds the dataset healed and replaces it
-    normally (no missing-target surprise, no lost old version)."""
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    fs.rename(target, f"{target}.{fslib.new_token('old')}")  # the crash
-    s2 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s2, "v2")
-    fs.write_text_atomic(fslib.join(s2, "_SUCCESS"), "")
-    assert fslib.commit_staged(fs, s2, target, require_marker=True) == target
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v2"
-
-
-def test_stale_stage_cannot_resurrect_after_target_loss(tmp_path):
-    """Crash-injection repro of the ADVICE r10-medium residue: before
-    the token-bounded stage GC, a marked stage abandoned after the
-    first commit SURVIVED every later successful commit, and any
-    target-missing-no-old state (external loss, a drop that missed
-    siblings) let recovery's first-commit-liveness branch promote it —
-    silently reverting the dataset to stale data. With the GC, the
-    superseding commit removes the abandoned stage, so the same
-    recovery finds nothing to promote and reports the dataset gone."""
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    # abandoned marked stage: writer died after its Spark write,
-    # before commit_staged
-    s_dead = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s_dead, "stale-abandoned")
-    fs.write_text_atomic(fslib.join(s_dead, "_SUCCESS"), "")
-    # a newer version commits normally — this must GC s_dead
-    s1 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s1, "v1-committed")
-    fs.write_text_atomic(fslib.join(s1, "_SUCCESS"), "")
-    fslib.commit_staged(fs, s1, target, require_marker=True)
-    assert not fs.exists(s_dead)
-    # the dataset is lost without an old- park (the no-old state)
-    fs.delete(target, recursive=True)
-    assert fslib.recover_interrupted_commit(fs, target) is None
-    assert not fs.exists(target)
+    live = fslib.resolve_dataset(fs, target)
+    assert live == s0 and fs.read_text(fslib.join(live, "part-0.txt")) == "base"
 
 
 def test_stage_gc_is_token_bounded(tmp_path):
-    """The stage GC must never eat a stage minted AFTER the committing
-    writer's own (a hypothetical in-flight successor): only strictly
-    older staged siblings are pruned."""
+    """The generation GC never eats a generation minted AFTER the
+    committing writer's own (an in-flight successor), nor the live one:
+    only generations older than the newest KEEP_GENERATIONS go."""
     fs = fslib.LocalFS()
     target = str(tmp_path / "ds")
     s0 = fslib.stage_path(fs, target, "v")
@@ -619,35 +453,14 @@ def test_stage_gc_is_token_bounded(tmp_path):
     fslib.commit_staged(fs, s0, target)
     s1 = fslib.stage_path(fs, target, "v")
     _write_marker_dir(fs, s1, "v1")
-    fs.write_text_atomic(fslib.join(s1, "_SUCCESS"), "")
     # an in-flight successor stages AFTER s1 (newer token)
     s_next = fslib.stage_path(fs, target, "v")
     _write_marker_dir(fs, s_next, "v2-in-flight")
-    fslib.commit_staged(fs, s1, target, require_marker=True)
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v1"
+    fslib.commit_staged(fs, s1, target)
+    assert fs.read_text(fslib.join(fslib.resolve_dataset(fs, target), "part-0.txt")) == "v1"
     assert fs.exists(s_next)  # newer stage untouched
+    assert not fs.exists(s0)  # older than the newest two, not live
     # ...and the successor's own commit then lands normally
-    fs.write_text_atomic(fslib.join(s_next, "_SUCCESS"), "")
-    fslib.commit_staged(fs, s_next, target, require_marker=True)
-    assert fs.read_text(fslib.join(target, "part-0.txt")) == "v2-in-flight"
-
-
-def test_drop_purges_siblings(tmp_path):
-    """delete_tables must remove old-/staged siblings with the dataset:
-    a dropped table with a surviving marked stage would otherwise be
-    resurrected by the next reader's recovery pass."""
-    fs = fslib.LocalFS()
-    target = str(tmp_path / "ds")
-    s0 = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s0, "v0")
-    fslib.commit_staged(fs, s0, target)
-    s_dead = fslib.stage_path(fs, target, "v")
-    _write_marker_dir(fs, s_dead, "stale")
-    fs.write_text_atomic(fslib.join(s_dead, "_SUCCESS"), "")
-    stale_old = f"{target}.old-{fslib.new_token('x')[2:]}"
-    fs.makedirs(stale_old)
-    fs.delete(target, recursive=True)
-    fslib.purge_siblings(fs, target)
-    assert not fs.exists(s_dead)
-    assert not fs.exists(stale_old)
-    assert fslib.recover_interrupted_commit(fs, target) is None
+    fslib.commit_staged(fs, s_next, target)
+    assert fs.read_text(fslib.join(fslib.resolve_dataset(fs, target), "part-0.txt")) == "v2-in-flight"
+    assert fs.exists(s1)  # the previous generation stays for in-flight readers

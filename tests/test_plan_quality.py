@@ -180,10 +180,8 @@ def test_round_robin_partition_counts_rows_in_its_numbering_pass(
     numbering and write alone (1 for this one-task base; a separate
     ``count()`` after the write added 2 more)."""
     from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag
-    from database_fragmentation_and_query_processor_spark.schema import RATINGS_SCHEMA
 
-    api.load_ratings(spark, "ratings", ratings_file, warehouse)
-    base = spark.read.schema(RATINGS_SCHEMA).parquet(f"{warehouse}/ratings/base")
+    base = api.load_ratings(spark, "ratings", ratings_file, warehouse)
 
     def number_and_write():
         assigned, _ = frag.assign_round_robin_fragments(base, 5, ["userid", "movieid"])
@@ -263,8 +261,7 @@ def test_round_robin_partition_path_has_no_python_rdd(spark, ratings_file, wareh
     RDD scan barrier (ExistingRDD / PythonEval nodes)."""
     from database_fragmentation_and_query_processor_spark.operators import fragmentation as frag
 
-    api.load_ratings(spark, "ratings", ratings_file, warehouse)
-    df = spark.read.parquet(f"{warehouse}/ratings/base")
+    df = api.load_ratings(spark, "ratings", ratings_file, warehouse)
     assigned, _ = frag.assign_round_robin_fragments(
         df, 5, order_cols=["userid", "movieid"]
     )

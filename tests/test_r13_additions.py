@@ -45,6 +45,7 @@ def test_near_dup_deltas_are_batch_sized(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from database_fragmentation_and_query_processor_spark.operators import dedup as D
+    from database_fragmentation_and_query_processor_spark.streaming.events import read_committed
     from database_fragmentation_and_query_processor_spark.streaming.near_dup import (
         DELTA_SEP,
         near_dup_sink,
@@ -86,7 +87,7 @@ def test_near_dup_deltas_are_batch_sized(spark, tmp_path):
 
     for b, rows in enumerate(batches):
         delta = f"{index_path}{DELTA_SEP}{b:06d}"
-        got = {r["id"] for r in spark.read.parquet(delta).collect()}
+        got = {r["id"] for r in read_committed(spark, delta).collect()}
         assert got == {r[0] for r in rows}, (b, got)
     # and the assembled view is base + deltas, disjoint
     idx = read_near_dup_index(spark, str(index_path))

@@ -80,6 +80,7 @@ def test_foreachbatch_upsert_sink(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from database_fragmentation_and_query_processor_spark.streaming.events import (
+        read_committed,
         read_events_stream,
         upsert_sink,
     )
@@ -90,7 +91,7 @@ def test_foreachbatch_upsert_sink(spark, sf_dir, tmp_path):
     target = str(tmp_path / "events_upserted")
     q = upsert_sink(stream, target, keys=["event_id"], version_col="version", spark=spark)
     q.awaitTermination()
-    out = spark.read.parquet(target)
+    out = read_committed(spark, target)
     n_distinct = out.select("event_id").distinct().count()
     assert out.count() == n_distinct
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -99,11 +100,11 @@ def test_foreachbatch_upsert_sink(spark, sf_dir, tmp_path):
 
 
 def test_upsert_sink_pointer_commit_mode(spark, sf_dir, tmp_path):
-    """Object-store commit path end-to-end: with an injected FS that
-    has NO atomic rename, every micro-batch commit is a generation dir
-    + _LATEST pointer flip. The drained target must (a) resolve through
-    the pointer, (b) hold the same upserted content as swap mode, and
-    (c) keep at most KEEP_GENERATIONS generation dirs."""
+    """The commit path end-to-end with an injected FS: every micro-batch
+    commit is a generation dir + _LATEST pointer flip. The drained
+    target must (a) resolve through the pointer, (b) hold one row per
+    event_id of the source, and (c) keep at most KEEP_GENERATIONS
+    generation dirs."""
     import os
 
     from pyspark.sql import functions as F
@@ -119,7 +120,7 @@ def test_upsert_sink_pointer_commit_mode(spark, sf_dir, tmp_path):
         "event_id", "user_id", "event_type", "value", F.col("tsn").alias("version")
     )
     target = str(tmp_path / "events_upserted_ptr")
-    pointer_fs = fslib.LocalFS(atomic_rename=False)
+    pointer_fs = fslib.LocalFS()
     q = upsert_sink(
         stream, target, keys=["event_id"], version_col="version",
         spark=spark, fs=pointer_fs,
@@ -152,6 +153,7 @@ def test_upsert_sink_crash_resume_exactly_once(spark, tmp_path):
     from pyspark.sql.types import LongType, StructField, StructType
 
     from database_fragmentation_and_query_processor_spark.streaming.events import (
+        read_committed,
         upsert_sink,
     )
 
@@ -218,7 +220,7 @@ def test_upsert_sink_crash_resume_exactly_once(spark, tmp_path):
     assert 0 not in {r["batch"] for r in run2}
     assert sum(r["n"] for r in run2) == 120  # files 1 and 2 only
 
-    out = spark.read.parquet(target)
+    out = read_committed(spark, target)
     expect = (
         spark.read.schema(schema).parquet(str(src))
         .groupBy("k").agg(F.max("version").alias("version"))
@@ -246,6 +248,7 @@ def test_cdc_sink_crash_resume(spark, tmp_path):
 
     from database_fragmentation_and_query_processor_spark.streaming.events import (
         cdc_sink,
+        read_committed,
     )
 
     target = str(tmp_path / "target")
@@ -316,7 +319,7 @@ def test_cdc_sink_crash_resume(spark, tmp_path):
     assert 0 not in {r["batch"] for r in run2}
 
     out = {r["k"]: (r["version"], r["payload"])
-           for r in spark.read.parquet(target).collect()}
+           for r in read_committed(spark, target).collect()}
     # deletes applied, updates latest-win, inserts present
     assert all(k not in out for k in range(10))
     assert all(out[k] == (1, f"u{k}") for k in range(10, 20))
@@ -330,6 +333,10 @@ def test_catalog_report_and_compaction(spark, ratings_file, warehouse):
     import glob
 
     from database_fragmentation_and_query_processor_spark import api
+    from database_fragmentation_and_query_processor_spark.catalog import FragmentCatalog
+
+    def live_hash():
+        return FragmentCatalog(warehouse).live("ratings_hash")
 
     api.load_ratings(spark, "ratings", ratings_file, warehouse)
     api.range_partition(spark, "ratings", 5, warehouse)
@@ -342,15 +349,15 @@ def test_catalog_report_and_compaction(spark, ratings_file, warehouse):
     # trickle inserts create extra files; compaction rewrites to 1/fragment
     for i in range(3):
         api.hash_insert(spark, "ratings", 100 + i, i, 1.0, warehouse)
-    before = len(glob.glob(f"{warehouse}/ratings_hash/fragment_id=*/*.parquet"))
-    total_before = spark.read.parquet(f"{warehouse}/ratings_hash").count()
+    before = len(glob.glob(f"{live_hash()}/fragment_id=*/*.parquet"))
+    total_before = spark.read.parquet(live_hash()).count()
     api.compact_fragments(spark, warehouse, "ratings", "hash")
-    after = len(glob.glob(f"{warehouse}/ratings_hash/fragment_id=*/*.parquet"))
+    after = len(glob.glob(f"{live_hash()}/fragment_id=*/*.parquet"))
     assert after < before
-    frag_dirs = glob.glob(f"{warehouse}/ratings_hash/fragment_id=*")
+    frag_dirs = glob.glob(f"{live_hash()}/fragment_id=*")
     for d in frag_dirs:
         assert len(glob.glob(f"{d}/*.parquet")) == 1
-    assert spark.read.parquet(f"{warehouse}/ratings_hash").count() == total_before
+    assert spark.read.parquet(live_hash()).count() == total_before
 
 
 def test_stream_join_shards_counts_a_parquet_directory(tmp_path):
