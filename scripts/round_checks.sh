@@ -19,6 +19,9 @@ python -m pytest tests/test_registry.py tests/test_bench_contract.py \
     tests/test_fragmentation.py::test_insert_failing_before_its_intent_leaves_nothing_visible \
     tests/test_fragmentation.py::test_insert_during_a_partitioning_is_refused_not_lost \
     tests/test_fragmentation.py::test_insert_during_a_compaction_is_refused_not_lost \
+    tests/test_fragmentation.py::test_each_api_call_makes_its_known_number_of_sidecar_writes \
+    tests/test_fs_shim.py::test_atomic_write_never_leaves_the_file_missing \
+    tests/test_fs_shim.py::test_hadoopfs_file_uri_lock_create_has_one_winner \
     -q -p no:cacheprovider
 
 echo "== driver-invocation dry run (first 50 + next 6, sf0.01) =="

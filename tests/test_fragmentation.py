@@ -527,6 +527,38 @@ def test_api_over_a_hadoop_warehouse_matches_a_bare_path_run(spark, ratings_file
     assert run(uri) == bare
 
 
+def test_each_api_call_makes_its_known_number_of_sidecar_writes(
+    spark, ratings_file, warehouse, monkeypatch
+):
+    """Each sidecar write is a commit on the write path, so the count per
+    call is pinned: the load and each partitioning publish once, a
+    routed insert writes its intent and then clears it, and the reads
+    write nothing. A new write shows up here instead of only as time."""
+    writes = []
+    write_json_atomic = fslib.write_json_atomic
+
+    def counting(fs, path, doc):
+        writes.append(path)
+        write_json_atomic(fs, path, doc)
+
+    monkeypatch.setattr(fslib, "write_json_atomic", counting)
+
+    def count(call, *args):
+        del writes[:]
+        out = call(spark, *args)
+        if out is not None:
+            out.collect()
+        return len(writes)
+
+    assert count(api.load_ratings, "ratings", ratings_file, warehouse) == 1
+    for scheme, (partition, insert, _) in _SCHEMES.items():
+        assert count(partition, "ratings", N, warehouse) == 1, scheme
+        assert count(insert, "ratings", 100, 7, 3.0, warehouse) == 2, scheme
+    assert count(api.point_query, 3.0, warehouse) == 0
+    assert count(api.range_query, 1.5, 3.5, warehouse) == 0
+    assert count(api.hash_key_lookup, 100, warehouse) == 0
+
+
 def test_delete_tables_unpublishes_and_removes_one_table(spark, loaded):
     """Dropping one table takes its generations out of the sidecar in
     one locked write, then deletes its directories; other tables stay."""

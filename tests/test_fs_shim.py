@@ -39,6 +39,13 @@ def test_localfs_text_roundtrip_and_listing(tmp_path):
     # atomic write leaves no tmp litter
     names = [os.path.basename(c[0]) for c in fs.list_status(base)]
     assert names == ["meta.json"]
+    # the empty text (a cleared near-dup manifest: nothing to preallocate)
+    # and non-ASCII text read back byte-exact, as UTF-8
+    for text in ("", "Amélie · 東京 · ☃\n"):
+        fs.write_text_atomic(p, text)
+        assert fs.read_text(p) == text
+        with open(p, "rb") as f:
+            assert f.read() == text.encode("utf-8")
     fs.delete(p)
     assert not fs.exists(p)
 
@@ -130,36 +137,84 @@ def test_hadoopfs_commit_file_uri(spark, tmp_path):
     assert sorted(os.listdir(tmp_path)) == ["ds"]
 
 
-def test_hadoopfs_atomic_write_never_leaves_the_file_missing(spark, tmp_path):
+@pytest.mark.parametrize("store", ["localfs-bare-path", "hadoopfs-file-uri"])
+def test_atomic_write_never_leaves_the_file_missing(store, request, tmp_path):
     """The sidecar is the warehouse's commit point, so its replacement
-    must be atomic on HadoopFS too: a reader racing 200 rewrites of a
-    file:// sidecar never finds it missing (a delete-then-rename
-    replacement reads as ``{}``, every scheme unpartitioned)."""
+    must be atomic on every store: a reader racing 200 rewrites never
+    finds it missing (a delete-then-rename replacement reads as ``{}``,
+    every scheme unpartitioned) nor half-written (every read parses to
+    one of the written documents), and no temp file is left beside it."""
     import threading
 
-    base = "file://" + str(tmp_path / "wh")
-    fs = fslib.fs_for(base, spark)
+    base = str(tmp_path / "wh")
+    if store == "hadoopfs-file-uri":
+        base = "file://" + base
+        fs = fslib.fs_for(base, request.getfixturevalue("spark"))
+        assert isinstance(fs, fslib.HadoopFS)
+    else:
+        fs = fslib.fs_for(base)
+        assert isinstance(fs, fslib.LocalFS)
     path = fslib.join(base, "meta.json")
-    fslib.write_json_atomic(fs, path, {"n": -1})
-    done, missing, seen = threading.Event(), [], set()
+    written = [{"n": -1}] + [{"n": i, "pad": "x" * (i % 7) * 100} for i in range(200)]
+    fslib.write_json_atomic(fs, path, written[0])
+    done, missing, seen, bad = threading.Event(), [], [], []
 
     def read_until_done():
         while not done.is_set():
-            doc = fslib.read_json(fs, path, default={})
+            try:
+                doc = fslib.read_json(fs, path, default={})
+            except ValueError as e:  # a partial document
+                bad.append(repr(e))
+                continue
             if not doc:
                 missing.append(1)
-            seen.add(doc.get("n"))
+            seen.append(doc)
 
     reader = threading.Thread(target=read_until_done)
     reader.start()
     try:
-        for i in range(200):
-            fslib.write_json_atomic(fs, path, {"n": i})
+        for doc in written[1:]:
+            fslib.write_json_atomic(fs, path, doc)
     finally:
         done.set()
         reader.join()
-    assert missing == []
-    assert len(seen) > 1 and fslib.read_json(fs, path) == {"n": 199}
+    assert missing == [] and bad == []
+    assert all(doc in written for doc in seen)
+    assert len({doc["n"] for doc in seen}) > 1
+    assert fslib.read_json(fs, path) == written[-1]
+    assert sorted(os.listdir(tmp_path / "wh")) == ["meta.json"]
+
+
+def test_hadoopfs_file_uri_lock_create_has_one_winner(spark, tmp_path):
+    """``create_exclusive`` is the writer lock's primitive, so on a
+    file:// warehouse it must be O_EXCL, not Hadoop's local
+    check-then-create: 4 threads racing to create each of 100 fresh
+    lock paths leave exactly one winner per path."""
+    import threading
+
+    base = "file://" + str(tmp_path / "wh")
+    fs = fslib.fs_for(base, spark)
+    fs.makedirs(base)
+    paths = [fslib.join(base, f"lock-{i}") for i in range(100)]
+    start = threading.Barrier(4)
+    wins = [[] for _ in range(4)]
+
+    def contend(k):
+        for path in paths:
+            start.wait()
+            if fs.create_exclusive(path, f"writer-{k}"):
+                wins[k].append(path)
+
+    threads = [threading.Thread(target=contend, args=(k,)) for k in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    won = sorted(p for w in wins for p in w)
+    assert won == sorted(paths)
+    for k, w in enumerate(wins):
+        for path in w:
+            assert fs.read_text(path) == f"writer-{k}"
 
 
 # ---------------------------------------------------------------------------
