@@ -495,23 +495,30 @@ def compact_summary(out: dict) -> dict:
     return compact
 
 
-def _current_round(repo_dir: str) -> int:
-    """The round currently being benched = 1 + the highest round whose
-    driver artifact (BENCH_r<N>*.json) is already committed at the repo
-    root. Derived, not configured: the driver writes BENCH_r<N>.json
-    AFTER the round's bench runs, so during round N the max on disk is
-    N-1."""
+def _current_round(repo_dir: str, cpus: int) -> int:
+    """The round currently being benched at ``cpus`` cores = 1 + the
+    highest round whose artifact for that core count is already
+    committed at the repo root: ``BENCH_r<N>.json`` for 32 cores,
+    ``BENCH_r<N>_c<cpus>.json`` otherwise. Derived, not configured: a
+    round's artifact is written AFTER its bench runs, so during round N
+    the max on disk is N-1. The core counts are benched one after the
+    other, so the global maximum would label the second count's round
+    one too high; it is used only when ``cpus`` has no artifact yet."""
     import re
 
-    best = 0
+    mine, best = 0, 0
+    suffix = "" if cpus == 32 else f"_c{cpus}"
     try:
-        for name in os.listdir(repo_dir):
-            m = re.match(r"BENCH_r(\d+)", name)
-            if m:
-                best = max(best, int(m.group(1)))
+        names = os.listdir(repo_dir)
     except OSError:
-        pass
-    return best + 1
+        names = []
+    for name in names:
+        m = re.match(r"BENCH_r(\d+)(_c\d+)?\.json$", name)
+        if m:
+            best = max(best, int(m.group(1)))
+            if (m.group(2) or "") == suffix:
+                mine = max(mine, int(m.group(1)))
+    return (mine or best) + 1
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -707,7 +714,7 @@ def main() -> None:
     # driver runs so rounds stay diffable per query.
     repo = os.path.dirname(os.path.abspath(__file__))
     for fname in ("BENCH_FULL.json",
-                  f"BENCH_FULL_r{_current_round(repo)}_c{cpus}.json"):
+                  f"BENCH_FULL_r{_current_round(repo, cpus)}_c{cpus}.json"):
         full_path = os.path.join(repo, fname)
         try:
             with open(full_path, "w") as f:

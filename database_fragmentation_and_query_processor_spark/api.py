@@ -41,6 +41,21 @@ sees the whole old layout or the whole new one. Each call opens the
 catalog with the caller's session, so a ``file://``, ``hdfs://`` or
 ``s3a://`` warehouse works like a local directory.
 
+The reader rule: one relation per live generation and commit, per
+session. Every reader gets a fragment relation from
+:func:`live_fragments`, which reads a live generation (its directory
+listing included) once per Spark session and catalog commit (the
+sidecar's ``commit`` stamp, which every sidecar write raises) and
+reuses it while the sidecar read for the call names the same
+generation at the same commit. Any commit through the catalog (a
+partitioning, compaction, routed insert, recovery or drop) makes the
+next read resolve the generation again, so it sees the new files or the
+new layout; a relation read while an insert's intent is in the sidecar
+is never kept. The contract: a file added to a live generation outside
+the catalog, with no sidecar write, stays unseen by a session that
+already read that generation, until the next commit. Writers read fresh
+under the writer lock.
+
 A routed insert (``range_insert``, ``round_robin_insert``,
 ``hash_insert``) runs no Spark job, like the reference's one-row
 PostgreSQL transaction (Interface1.py:183-259). Under the writer lock
@@ -77,6 +92,8 @@ the reference (Interface1.py:103-105).
 
 from __future__ import annotations
 
+import logging
+import weakref
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,6 +101,8 @@ from pyspark.sql import functions as F
 
 from . import fs as fslib
 from .catalog import (
+    COMMIT_KEY,
+    INTENT_KEY,
     FragmentCatalog,
     HashMetadata,
     RangeMetadata,
@@ -95,7 +114,20 @@ from .operators import query as q
 from .schema import FRAGMENT_COL, RATINGS_SCHEMA
 from .sources.ratings import read_ratings_text
 
+log = logging.getLogger(__name__)
+
 RATING_DOMAIN = (0.0, 5.0)  # fixed regardless of data (Interface1.py:122-123)
+#: The integer columns a hash scheme routes on the driver:
+#: ``q.hash_owner_fragment`` hashes the text of an integer.
+HASH_ROUTING_KEYS = ("userid", "movieid")
+
+#: session → {(warehouse, dataset): (generation, commit, JVM DataFrame)},
+#: the prepared relations of :func:`live_fragments`. The JVM handle, not
+#: the Python DataFrame (which holds its session), is kept, so an entry
+#: never keeps its session alive. No lock: an entry is reused only at
+#: the generation and commit it was read at, so threads racing on one
+#: key cost at most another resolve.
+_RELATIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _datasets(table: str) -> dict[str, str]:
@@ -114,6 +146,30 @@ def _live(cat: FragmentCatalog, doc: dict, dataset: str) -> str:
     if path is None:
         raise FileNotFoundError(f"{dataset} has no committed data in {cat.warehouse}")
     return path
+
+
+def live_fragments(
+    spark: SparkSession, cat: FragmentCatalog, dataset: str, doc: dict | None = None
+) -> DataFrame:
+    """The live generation of the fragmented ``dataset`` that ``doc``
+    (the sidecar read for this call; read now when None) names, read
+    with the declared schema. Prepared once per ``spark`` session and
+    catalog commit: reused while ``doc`` names the same generation at
+    the same commit stamp, and never kept when read while ``doc``
+    carries an insert's intent (module docstring)."""
+    doc = cat.read() if doc is None else doc
+    gen, commit = _live(cat, doc, dataset), doc.get(COMMIT_KEY, 0)
+    relations = _RELATIONS.setdefault(spark, {})
+    key = (cat.warehouse, dataset)
+    kept = relations.get(key)
+    if kept is not None and kept[:2] == (gen, commit):
+        log.debug("reusing %s generation %s at commit %d", dataset, gen, commit)
+        return DataFrame(kept[2], spark)
+    log.info("resolving %s generation %s at commit %d", dataset, gen, commit)
+    df = frag.read_fragmented(spark, gen)
+    if INTENT_KEY not in doc:
+        relations[key] = (gen, commit, df._jdf)
+    return df
 
 
 def _valid_n(n) -> bool:
@@ -219,12 +275,18 @@ def _route(scheme: str, meta, userid: int, itemid: int, rating: float) -> int:
     if scheme == "round_robin":
         return (meta.last_inserted + 1) % meta.n
     keys = {"userid": userid, "movieid": itemid}
-    if meta.key not in keys:
+    return q.hash_owner_fragment(keys[_routing_key(meta, "hash_insert")], meta.n)
+
+
+def _routing_key(meta: HashMetadata, op: str) -> str:
+    """The hash scheme's key column, checked for ``op``: ``ValueError``
+    unless the driver can route on it (``HASH_ROUTING_KEYS``)."""
+    if meta.key not in HASH_ROUTING_KEYS:
         raise ValueError(
-            f"hash_insert routes on an integer key (userid or movieid); "
+            f"{op} routes on an integer key ({' or '.join(HASH_ROUTING_KEYS)}); "
             f"the hash scheme is keyed on {meta.key!r}"
         )
-    return q.hash_owner_fragment(keys[meta.key], meta.n)
+    return meta.key
 
 
 def _routed_insert(
@@ -280,16 +342,19 @@ def round_robin_insert(
 
 
 def _query_sides(spark: SparkSession, warehouse: str, table: str) -> list:
-    """``[range, round_robin]``: each scheme's ``(metadata, live
-    generation)`` from ONE sidecar read, or None for a scheme without
-    partitions (the arguments of ``q.range_query``/``q.point_query``)."""
+    """``[range, round_robin]``: each scheme's ``(metadata, prepared
+    relation of its live generation)`` from ONE sidecar read, or None
+    for a scheme without partitions (the arguments of
+    ``q.range_query``/``q.point_query``)."""
     cat = FragmentCatalog(warehouse, spark)
     doc = cat.read()
     sides = []
     for scheme in ("range", "round_robin"):
         meta = section(doc, scheme)
-        live = _live(cat, doc, _datasets(table)[scheme]) if meta.n > 0 else None
-        sides.append((meta, live) if live else None)
+        sides.append(
+            (meta, live_fragments(spark, cat, _datasets(table)[scheme], doc))
+            if meta.n > 0 else None
+        )
     return sides
 
 
@@ -350,17 +415,19 @@ def hash_key_lookup(
     reads ONLY that fragment of the live generation named in the same
     sidecar read — partition pruning by construction, the 1-of-n scan
     the reference's pointQuery does for the range scheme
-    (Interface1.py:310-347), here for the hash scheme."""
+    (Interface1.py:310-347), here for the hash scheme. Like
+    ``hash_insert``, it raises ``ValueError`` for a scheme keyed on a
+    column other than userid or movieid, whose owner the driver cannot
+    compute. The plan is one filter on the prepared relation."""
     cat = FragmentCatalog(warehouse, spark)
     doc = cat.read()
     meta = section(doc, "hash")
     if meta.n <= 0:
         raise ValueError("no hash partitions exist")
+    key = q.quote_ident(_routing_key(meta, "hash_key_lookup"))
     owner = q.hash_owner_fragment(key_value, meta.n)
-    df = frag.read_fragmented(spark, _live(cat, doc, _datasets(table)["hash"]))
-    return df.where(
-        (F.col(FRAGMENT_COL) == owner) & (F.col(meta.key) == key_value)
-    )
+    df = live_fragments(spark, cat, _datasets(table)["hash"], doc)
+    return df.where(f"{FRAGMENT_COL} = {owner} AND {key} = {q.sql_literal(key_value)}")
 
 
 def catalog_report(
@@ -375,12 +442,11 @@ def catalog_report(
     doc = cat.read()
     rows = []
     for scheme in ("range", "round_robin", "hash"):
-        n = section(doc, scheme).n
-        live = cat.live(_datasets(table)[scheme], doc)
-        if n <= 0 or live is None:
+        n, dataset = section(doc, scheme).n, _datasets(table)[scheme]
+        if n <= 0 or cat.live(dataset, doc) is None:
             continue
         counts = (
-            frag.read_fragmented(spark, live)
+            live_fragments(spark, cat, dataset, doc)
             .groupBy(FRAGMENT_COL)
             .count()
             .collect()

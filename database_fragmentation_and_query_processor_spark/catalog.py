@@ -56,6 +56,16 @@ insert intent) is fenced: it first checks that the writer still holds
 its lock (``fs.check_writer_lock``). A write that ran past
 ``fs.LOCK_TTL_SEC`` and lost its lock raises ``LockHeldError``; the
 sidecar is left unchanged and the unpublished generation deleted.
+
+Every sidecar write (publish, insert intent, insert clear, recover,
+drop, clear) stamps the document with ``commit``: one more than the
+stamp it read. ``clear()`` keeps the stamp, so it never goes down while
+the sidecar exists. Readers key on it: ``api.live_fragments`` prepares
+the relation of a live generation once per Spark session and commit,
+and reuses it while the generation and the commit stamp of the sidecar
+read for the call both match. A file added to a live generation outside
+the catalog (without a sidecar write) therefore stays unseen by a
+session that already read that generation, until the next commit.
 """
 
 from __future__ import annotations
@@ -75,6 +85,9 @@ INTENT_KEY = "insert_intent"
 #: Sidecar key naming each dataset's live generation:
 #: ``{dataset: "gen-<token>"}``, datasets relative to the warehouse.
 GENERATIONS_KEY = "generations"
+#: Sidecar key of the commit stamp: an integer every sidecar write adds
+#: 1 to, so it never goes down while the sidecar exists.
+COMMIT_KEY = "commit"
 
 
 @dataclass
@@ -128,8 +141,10 @@ class FragmentCatalog:
 
     def _write(self, doc: dict) -> None:
         """(Under :meth:`mutation`.) The fenced sidecar write: raises
-        ``LockHeldError``, writing nothing, once the lock is lost."""
+        ``LockHeldError``, writing nothing, once the lock is lost.
+        Stamps ``doc`` with the next commit number."""
         fslib.check_writer_lock(self._fs, self._lock)
+        doc[COMMIT_KEY] = doc.get(COMMIT_KEY, 0) + 1
         fslib.write_json_atomic(self._fs, self.path, doc)
         live = set(doc.get(GENERATIONS_KEY, {}).values())
         self._minted = [p for p in self._minted if posixpath.basename(p) not in live]
@@ -310,10 +325,12 @@ class FragmentCatalog:
 
     def clear(self, scheme: str | None = None) -> None:
         """Reset ``scheme``'s section, or the whole sidecar (generation
-        names included) when ``scheme`` is None."""
+        names included, the commit stamp kept) when ``scheme`` is None."""
         with self.mutation() as doc:
             if scheme is None:
+                commit = doc.get(COMMIT_KEY, 0)
                 doc.clear()
+                doc[COMMIT_KEY] = commit
             else:
                 doc.pop(scheme, None)
             self._write(doc)

@@ -19,15 +19,20 @@ Spark translation: the manual fragment walk becomes a predicate on the
 pruning; the per-fragment SQL unification becomes a single scan; the
 rating filter is pushed into the parquet scan (row-group min/max skip).
 
-Fragments are read with the declared schema (``read_fragmented``), not
-an inferred one. The relation's schema is fixed (Interface1.py:17), so
-building a plan here needs only the catalog and a directory listing: no
-parquet footer is opened and no Spark job runs until the result is
-executed. The catalog is read by the caller (``api``), once per query:
-the metadata and the live generation each scheme side scans come from
-that one read. A dataset written with other column types is not read under
-its own schema: most mismatches fail at the scan (see
-``read_fragmented`` for the exceptions).
+Each scheme side arrives as a prepared relation: its live generation
+read with the declared schema (``read_fragmented``), resolved by the
+caller (``api``) from one catalog read per query. The reader rule is one
+relation per live generation and commit, per Spark session
+(``api.live_fragments``); a file added to a live generation outside the
+catalog stays unseen by a session that already read it, until the next
+commit. So building a plan here opens no parquet footer, lists no
+directory and starts no Spark job. A side is one filter and one projection, each passed to the
+JVM as SQL text (``sql_literal`` renders the values with their exact
+type), plus the range query's sort: a point query is built in a few
+JVM calls rather than one per column reference and literal. A dataset
+written with other column types is not read under its own schema: most
+mismatches fail at the scan (see ``read_fragmented`` for the
+exceptions).
 """
 
 from __future__ import annotations
@@ -35,12 +40,11 @@ from __future__ import annotations
 import functools
 import hashlib
 import math
+import numbers
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..schema import FRAGMENT_COL, RANGE_PREFIX, RR_PREFIX
-from .fragmentation import read_fragmented
 
 
 def range_owner_fragment(
@@ -63,11 +67,34 @@ def hash_owner_fragment(key: int, n: int) -> int:
     return h % n
 
 
-def provenance(prefix: str) -> F.Column:
-    """The result column naming each row's source fragment, e.g.
-    ``range_ratings_part2`` (Interface1.py:261-347)."""
-    return F.concat(F.lit(prefix), F.col(FRAGMENT_COL).cast("string")).alias(
-        "fragment_name"
+def sql_literal(value) -> str:
+    """``value`` as Spark SQL text of the literal ``F.lit`` would make:
+    an int stays an integer literal, a float becomes a double literal
+    (``2.5D``, not the decimal ``2.5``), and NaN and ±inf, which have no
+    literal syntax, become casts that constant-fold to the same double."""
+    if isinstance(value, numbers.Integral) and not isinstance(value, bool):
+        return str(int(value))
+    if isinstance(value, numbers.Real):
+        value = float(value)
+        if math.isnan(value):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(value):
+            return f"CAST('{'-' if value < 0 else ''}Infinity' AS DOUBLE)"
+        return f"{value!r}D"
+    raise TypeError(f"no SQL literal for {value!r} ({type(value).__name__})")
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _with_provenance(df: DataFrame, prefix: str) -> DataFrame:
+    """The result columns, led by the one naming each row's source
+    fragment, e.g. ``range_ratings_part2`` (Interface1.py:261-347)."""
+    return df.selectExpr(
+        f"concat('{prefix}', CAST({FRAGMENT_COL} AS STRING)) AS fragment_name",
+        "userid", "movieid", "rating",
     )
 
 
@@ -90,35 +117,32 @@ def range_query(
     """Both-scheme range query with provenance + duplicate emission.
 
     ``rng`` / ``rr``: the range and round-robin schemes' ``(metadata,
-    live generation path)``, taken from one catalog read
+    prepared relation)``, taken from one catalog read
     (``api._query_sides``), or None for a scheme without partitions."""
     parts = []
+    in_range = f"rating >= {sql_literal(min_rating)} AND rating <= {sql_literal(max_rating)}"
 
     if rng is not None:
-        rmeta, range_path = rng
+        rmeta, fragments = rng
         lo = range_owner_fragment(min_rating, rmeta.n, rmeta.min_value, rmeta.max_value)
         hi = range_owner_fragment(max_rating, rmeta.n, rmeta.min_value, rmeta.max_value)
-        parts.append(
-            read_fragmented(spark, range_path)
+        parts.append(_with_provenance(
             # fragment_id predicate → partition pruning (dir-level skip),
             # the Spark analogue of the selectMode walk.
-            .where(F.col(FRAGMENT_COL).between(lo, hi))
-            .where(F.col("rating").between(min_rating, max_rating))
+            fragments.where(f"{FRAGMENT_COL} >= {lo} AND {FRAGMENT_COL} <= {hi} AND {in_range}")
             # range side is rating-ascending per fragment; fragment-major
             # then rating reproduces the reference's concatenated order.
-            .orderBy(FRAGMENT_COL, "rating")
-            .select(provenance(RANGE_PREFIX), "userid", "movieid", "rating")
-        )
+            .orderBy(FRAGMENT_COL, "rating"),
+            RANGE_PREFIX,
+        ))
 
     if rr is not None:
-        parts.append(
-            read_fragmented(spark, rr[1])
-            .where(F.col("rating").between(min_rating, max_rating))
+        parts.append(_with_provenance(
             # reference scans RR fragments in ascending order
             # (Interface1.py:293-298); no intra-fragment order.
-            .orderBy(FRAGMENT_COL)
-            .select(provenance(RR_PREFIX), "userid", "movieid", "rating")
-        )
+            rr[1].where(in_range).orderBy(FRAGMENT_COL),
+            RR_PREFIX,
+        ))
 
     return _concat(spark, parts)
 
@@ -136,25 +160,20 @@ def point_query(
     (FIXTURES.md §1), all representable in binary doubles.
     """
     parts = []
+    equal = f"rating = {sql_literal(rating_value)}"
 
     if rng is not None:
-        rmeta, range_path = rng
+        rmeta, fragments = rng
         owner = range_owner_fragment(
             rating_value, rmeta.n, rmeta.min_value, rmeta.max_value
         )
-        parts.append(
-            read_fragmented(spark, range_path)
-            .where(F.col(FRAGMENT_COL) == owner)  # single-partition pruned read
-            .where(F.col("rating") == rating_value)
-            .select(provenance(RANGE_PREFIX), "userid", "movieid", "rating")
-        )
+        # single-partition pruned read
+        parts.append(_with_provenance(
+            fragments.where(f"{FRAGMENT_COL} = {owner} AND {equal}"), RANGE_PREFIX
+        ))
 
     if rr is not None:
-        parts.append(
-            read_fragmented(spark, rr[1])
-            .where(F.col("rating") == rating_value)
-            .select(provenance(RR_PREFIX), "userid", "movieid", "rating")
-        )
+        parts.append(_with_provenance(rr[1].where(equal), RR_PREFIX))
 
     return _concat(spark, parts)
 

@@ -43,7 +43,6 @@ from ..operators.fragmentation import (
     assign_round_robin_fragments,
     hash_fragment_expr,
     range_fragment_expr,
-    read_fragmented,
     round_robin_cursor,
     write_fragmented,
 )
@@ -403,10 +402,10 @@ def _frag_warehouse(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _frag_scheme(spark: SparkSession, sf_dir: str, scheme: str) -> DataFrame:
-    """The ``"range"`` or ``"rr"`` side of ``_frag_warehouse``: its live
-    generation."""
+    """The ``"range"`` or ``"rr"`` side of ``_frag_warehouse``: the
+    prepared relation of its live generation (``api.live_fragments``)."""
     cat = FragmentCatalog(_frag_warehouse(spark, sf_dir))
-    return read_fragmented(spark, cat.live(f"ratings_{scheme}"))
+    return api.live_fragments(spark, cat, f"ratings_{scheme}")
 
 
 def _bucket_sql(col: str = "rating", n: int = RANGE_N) -> str:

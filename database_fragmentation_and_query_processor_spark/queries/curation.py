@@ -1911,7 +1911,6 @@ def q_frag_insert_routing(spark, sf_dir):
     last insert, so a partial build is never served."""
     from .. import api as _api
     from ..catalog import FragmentCatalog as _FragmentCatalog
-    from ..operators.fragmentation import read_fragmented as _read_fragmented
 
     def build(wh):
         _api.write_base(spark, "ratings", _ratings(spark, sf_dir), wh)
@@ -1933,7 +1932,7 @@ def q_frag_insert_routing(spark, sf_dir):
         ("round_robin", "ratings_rr"),
         ("hash", "ratings_hash"),
     ):
-        df = _read_fragmented(spark, cat.live(suffix, doc))
+        df = _api.live_fragments(spark, cat, suffix, doc)
         parts.append(
             df.groupBy("fragment_id").agg(
                 F.count("*").cast("bigint").alias("cnt"),

@@ -20,6 +20,14 @@ python -m pytest tests/test_registry.py tests/test_bench_contract.py \
     tests/test_fragmentation.py::test_insert_during_a_partitioning_is_refused_not_lost \
     tests/test_fragmentation.py::test_insert_during_a_compaction_is_refused_not_lost \
     tests/test_fragmentation.py::test_each_api_call_makes_its_known_number_of_sidecar_writes \
+    tests/test_fragmentation.py::test_a_routed_insert_is_seen_by_the_next_read \
+    tests/test_fragmentation.py::test_the_next_read_sees_a_new_layout_or_raises \
+    tests/test_fragmentation.py::test_a_read_during_an_insert_intent_is_not_kept \
+    tests/test_fragmentation.py::test_a_new_session_reads_through_its_own_session \
+    tests/test_fragmentation.py::test_the_commit_stamp_rises_by_one_with_every_sidecar_write \
+    tests/test_fragmentation.py::test_hash_key_lookup_on_a_non_integer_key_raises \
+    tests/test_fragmentation.py::test_query_literals_keep_their_type_and_special_values \
+    tests/test_plan_quality.py::test_a_repeated_read_reuses_its_relation_and_starts_no_job \
     tests/test_fs_shim.py::test_atomic_write_never_leaves_the_file_missing \
     tests/test_fs_shim.py::test_hadoopfs_file_uri_lock_create_has_one_winner \
     -q -p no:cacheprovider

@@ -183,3 +183,15 @@ def test_artifact_use_reads_hit_and_miss_records(tmp_path, monkeypatch):
     assert len(use.uses) == 2
     assert re.fullmatch(r"miss:t:[0-9]+\.[0-9]{3}", use.uses[0])
     assert use.uses[1] == "hit:t"
+
+
+def test_current_round_counts_the_artifacts_of_its_own_core_count(tmp_path):
+    """Round 15's c8 run came after its c32 artifact was written and was
+    labelled 16: the round comes from the artifacts of the run's own core
+    count, and from every artifact only when that count has none."""
+    for name in ("BENCH_r15.json", "BENCH_r14_c8.json", "BENCH_FULL_r15_c32.json"):
+        (tmp_path / name).write_text("{}")
+    assert bench._current_round(str(tmp_path), 8) == 15
+    assert bench._current_round(str(tmp_path), 32) == 16
+    assert bench._current_round(str(tmp_path), 4) == 16
+    assert bench._current_round(str(tmp_path / "missing"), 8) == 1

@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 
 from database_fragmentation_and_query_processor_spark import api
 from database_fragmentation_and_query_processor_spark import fs as fslib
-from database_fragmentation_and_query_processor_spark.catalog import FragmentCatalog
+from database_fragmentation_and_query_processor_spark.catalog import (
+    COMMIT_KEY,
+    INTENT_KEY,
+    FragmentCatalog,
+)
 from database_fragmentation_and_query_processor_spark.operators.fragmentation import (
     hash_fragment_expr,
     range_fragment_expr,
@@ -21,6 +25,7 @@ from database_fragmentation_and_query_processor_spark.operators.fragmentation im
 )
 from database_fragmentation_and_query_processor_spark.operators.query import (
     hash_owner_fragment,
+    sql_literal,
 )
 from database_fragmentation_and_query_processor_spark.schema import (
     FRAGMENT_COL,
@@ -467,6 +472,209 @@ def test_a_query_planned_before_a_repartition_reads_the_old_layout_whole(spark, 
     new = api.point_query(spark, 3.0, warehouse).collect()
     assert {r[0] for r in new} == {"range_ratings_part1", "round_robin_ratings_part1"}
     assert len(new) == len(old)
+
+
+def _partition_all(spark, warehouse):
+    for partition, _, _ in _SCHEMES.values():
+        partition(spark, "ratings", N, warehouse)
+
+
+def _inserted(spark, warehouse, scheme):
+    """How many rows of userid 100 the scheme's reader returns now: the
+    point query's side for range and round-robin, the key lookup for
+    hash."""
+    if scheme == "hash":
+        return len(api.hash_key_lookup(spark, 100, warehouse).collect())
+    prefix = "range_" if scheme == "range" else "round_robin_"
+    return sum(
+        r.userid == 100 and r.fragment_name.startswith(prefix)
+        for r in api.point_query(spark, 3.0, warehouse).collect()
+    )
+
+
+@pytest.mark.parametrize("scheme", list(_SCHEMES))
+def test_a_routed_insert_is_seen_by_the_next_read(spark, loaded, scheme):
+    """Readers keep one relation per live generation and commit. A
+    routed insert adds a file to the live generation and commits, so the
+    next read, after reads that prepared the relation, returns the row."""
+    _, warehouse = loaded
+    _partition_all(spark, warehouse)
+    assert _inserted(spark, warehouse, scheme) == 0
+    _SCHEMES[scheme][1](spark, "ratings", 100, 7, 3.0, warehouse)
+    assert _inserted(spark, warehouse, scheme) == 1
+
+
+def test_the_next_read_sees_a_new_layout_or_raises(spark, loaded):
+    """After a repartition the next read scans the new fragments, after
+    a compaction the new generation, and after ``delete_tables`` it
+    raises: each is a commit, and a kept relation is reused only at the
+    commit it was read at."""
+    _, warehouse = loaded
+    _partition_all(spark, warehouse)
+
+    def names():
+        return {r[0] for r in api.point_query(spark, 3.0, warehouse).collect()}
+
+    assert names() == {"range_ratings_part2", "round_robin_ratings_part4"}
+    api.range_partition(spark, "ratings", 3, warehouse)
+    assert names() == {"range_ratings_part1", "round_robin_ratings_part4"}
+
+    want = sorted(map(tuple, api.hash_key_lookup(spark, 1, warehouse).collect()))
+    api.compact_fragments(spark, warehouse, "ratings", "hash")
+    after = api.hash_key_lookup(spark, 1, warehouse)
+    live = _live(warehouse, "ratings_hash")
+    assert after.inputFiles() and all(live in f for f in after.inputFiles())
+    assert sorted(map(tuple, after.collect())) == want
+
+    api.delete_tables(spark, "ratings", warehouse)
+    for read in (names, lambda: api.hash_key_lookup(spark, 1, warehouse)):
+        with pytest.raises(FileNotFoundError, match="no committed data"):
+            read()
+
+
+def test_a_read_during_an_insert_intent_is_not_kept(spark, loaded, monkeypatch):
+    """A read taken after an insert wrote its intent and before its
+    renames lists the fragment without the row. That relation is not
+    kept: when the insert then dies before clearing its intent (so the
+    commit stamp stays where the intent put it), the next read still
+    sees the renamed row, as a reader that keeps nothing does."""
+    _, warehouse = loaded
+    _partition_all(spark, warehouse)
+    assert _inserted(spark, warehouse, "range") == 0
+    during, rename = [], fslib.LocalFS.rename
+
+    def read_then_rename(self, src, dst):
+        if not during:
+            during.append(_inserted(spark, warehouse, "range"))
+        rename(self, src, dst)
+
+    writes, write_json_atomic = [], fslib.write_json_atomic
+
+    def fail_the_clear(fs, path, doc):
+        writes.append(path)
+        if len(writes) == 2:
+            raise OSError("injected clear failure")
+        write_json_atomic(fs, path, doc)
+
+    monkeypatch.setattr(fslib.LocalFS, "rename", read_then_rename)
+    monkeypatch.setattr(fslib, "write_json_atomic", fail_the_clear)
+    with pytest.raises(OSError, match="injected"):
+        api.range_insert(spark, "ratings", 100, 7, 3.0, warehouse)
+    monkeypatch.undo()
+    assert INTENT_KEY in FragmentCatalog(warehouse).read()
+    assert during == [0]
+    assert _inserted(spark, warehouse, "range") == 1
+
+
+def test_a_new_session_reads_through_its_own_session(spark, loaded):
+    """Kept relations belong to the session that read them: a read in
+    ``spark.newSession()`` returns a DataFrame of that session, JVM side
+    included, with the rows the first session reads."""
+    _, warehouse = loaded
+    _partition_all(spark, warehouse)
+    want = sorted(map(tuple, api.point_query(spark, 3.0, warehouse).collect()))
+    other = spark.newSession()
+    for session in (other, spark):
+        for df in (api.point_query(session, 3.0, warehouse),
+                   api.hash_key_lookup(session, 1, warehouse)):
+            assert df.sparkSession is session
+            assert df._jdf.sparkSession().equals(session._jsparkSession)
+    assert sorted(map(tuple, api.point_query(other, 3.0, warehouse).collect())) == want
+
+
+def test_the_commit_stamp_rises_by_one_with_every_sidecar_write(
+    spark, loaded, monkeypatch
+):
+    """Readers key their relations on the sidecar's commit stamp, so
+    every sidecar write (publish, insert intent and clear, recovery,
+    clear, drop) raises it by one, and none lowers it, clearing the
+    whole sidecar included."""
+    _, warehouse = loaded
+    stamps, write_json_atomic = [], fslib.write_json_atomic
+
+    def recording(fs, path, doc):
+        write_json_atomic(fs, path, doc)
+        stamps.append(doc[COMMIT_KEY])
+
+    monkeypatch.setattr(fslib, "write_json_atomic", recording)
+    cat = FragmentCatalog(warehouse)
+    api.range_partition(spark, "ratings", N, warehouse)
+    api.range_insert(spark, "ratings", 100, 7, 3.0, warehouse)
+
+    def fail(*_):
+        raise OSError("injected rename failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(fslib.LocalFS, "rename", fail)
+        with pytest.raises(OSError, match="injected"):
+            api.range_insert(spark, "ratings", 101, 7, 3.0, warehouse)
+    cat.recover()
+    cat.clear("range")
+    cat.clear()
+    api.load_ratings(spark, "ratings", os.path.join(os.path.dirname(warehouse), "ratings.txt"), warehouse)
+    api.delete_tables(spark, "ratings", warehouse)
+    # load 1, partition 2, insert 3-4, torn intent 5, recovery 6,
+    # clears 7-8, load 9, drop 10
+    assert stamps == list(range(2, 11))
+    assert cat.read() == {COMMIT_KEY: 10, "generations": {}}
+
+
+def test_hash_key_lookup_on_a_non_integer_key_raises(spark, loaded):
+    """A scheme keyed on rating hashes each row's rating text, but the
+    driver hashes the text of an integer, so a lookup of 2.5 read the
+    fragment owning "2" and silently returned no rows. It now raises,
+    like ``hash_insert``, before reading anything."""
+    _, warehouse = loaded
+    api.hash_partition(spark, "ratings", N, warehouse, key="rating")
+    for call in (
+        lambda: api.hash_key_lookup(spark, 2.5, warehouse),
+        lambda: api.hash_insert(spark, "ratings", 100, 7, 2.5, warehouse),
+    ):
+        with pytest.raises(ValueError, match="keyed on 'rating'"):
+            call()
+
+
+def test_query_literals_keep_their_type_and_special_values(spark, tmp_path):
+    """Query predicates reach the JVM as SQL text. A float is a double
+    literal (1/3 and 1e-300 match exactly, -0.0 equals 0.0), an int
+    stays an int, and NaN and ±inf select what a Column literal does:
+    the rows holding them on a round-robin-only warehouse, while on a
+    range-partitioned one NaN and +inf have no owning fragment and raise
+    as they always have."""
+    types = spark.range(1).selectExpr(
+        *(f"{sql_literal(v)} AS c{i}" for i, v in enumerate((3, 3_000_000_000, 2.5, math.nan)))
+    ).schema
+    assert [f.dataType.simpleString() for f in types] == ["int", "bigint", "double", "double"]
+
+    def warehouse(name, ratings, partitions):
+        rows = [(1, i, r) for i, r in enumerate(ratings)]
+        wh = str(tmp_path / name)
+        api.write_base(spark, "ratings", spark.createDataFrame(rows, RATINGS_SCHEMA), wh)
+        for partition in partitions:
+            partition(spark, "ratings", N, wh)
+        return wh
+
+    def movies(call, *args):
+        return sorted(r.movieid for r in call(spark, *args).collect())
+
+    finite = warehouse("finite", [0.0, -0.0, 2.5, 5.0, 1 / 3, 1e-300],
+                       (api.range_partition, api.round_robin_partition))
+    assert movies(api.point_query, 0.0, finite) == movies(api.point_query, -0.0, finite) == [0, 0, 1, 1]
+    assert movies(api.point_query, 1 / 3, finite) == [4, 4]
+    assert movies(api.point_query, 1e-300, finite) == [5, 5]
+    assert movies(api.point_query, 5, finite) == [3, 3]
+    assert movies(api.point_query, -math.inf, finite) == []
+    assert movies(api.range_query, -math.inf, 0.0, finite) == [0, 0, 1, 1]
+    with pytest.raises(ValueError):
+        api.point_query(spark, math.nan, finite)
+    with pytest.raises(OverflowError):
+        api.point_query(spark, math.inf, finite)
+
+    special = warehouse("special", [0.0, 2.5, math.nan, math.inf, -math.inf],
+                        (api.round_robin_partition,))
+    assert [movies(api.point_query, v, special) for v in (math.nan, math.inf, -math.inf)] == [[2], [3], [4]]
+    assert movies(api.range_query, -math.inf, 0.0, special) == [0, 4]
+    assert movies(api.range_query, math.nan, 5.0, special) == []
 
 
 def test_a_writer_that_lost_its_lock_does_not_commit(spark, loaded, monkeypatch):

@@ -148,6 +148,42 @@ def test_warehouse_plan_build_starts_no_spark_job(spark, ratings_file, warehouse
     assert jobs == dict.fromkeys(builds, 0), jobs
 
 
+def test_a_repeated_read_reuses_its_relation_and_starts_no_job(
+    spark, ratings_file, warehouse, monkeypatch
+):
+    """On an unchanged warehouse a repeated point, range and key-lookup
+    read builds on the relation its first read prepared: no parquet read
+    (no listing, no Hadoop setup) and still no Spark job at build, with
+    the partition and pushed filters of a fresh read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    api.load_ratings(spark, "ratings", ratings_file, warehouse)
+    for scheme in ("range", "round_robin", "hash"):
+        getattr(api, f"{scheme}_partition")(spark, "ratings", 5, warehouse)
+    builds = {
+        "point_query": lambda: api.point_query(spark, 4.5, warehouse),
+        "range_query": lambda: api.range_query(spark, 1.5, 3.5, warehouse),
+        "hash_key_lookup": lambda: api.hash_key_lookup(spark, 1, warehouse),
+    }
+    for build in builds.values():
+        build()
+    reads, parquet = [], DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    jobs = {name: _jobs_started(spark, build) for name, build in builds.items()}
+    assert (jobs, reads) == (dict.fromkeys(builds, 0), [])
+    point, lookup = builds["point_query"](), builds["hash_key_lookup"]()
+    assert "fragment_id = 4" in " ".join(partition_filters(point))
+    assert "fragment_id = " in " ".join(partition_filters(lookup))
+    for df, column in ((point, "rating"), (builds["range_query"](), "rating"), (lookup, "userid")):
+        assert any(column in p for p in pushed_filters(df)), pushed_filters(df)
+    assert reads == []
+
+
 def test_ratings_projection_starts_no_spark_job(spark, sf_dir):
     """The registry's ratings relation is a projection of lineitem:
     building it starts no job beyond reading lineitem."""
